@@ -26,11 +26,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import build  # noqa: E402
 
 RUN_TIMEOUT_S = 170
-# local[2]: the operations are bound by many small single-task Spark jobs
-# (executor busy ratio well under one core), and the spare cores keep the
-# JIT compiler and GC off the measured path; local[4] measured a slower,
-# noisier first pass on a 4-vCPU VM
-CORES = min(2, os.cpu_count() or 1)
 WORKLOADS = ("etl_batch", "commit_stream")
 
 
@@ -95,7 +90,7 @@ def main():
     cmd = build.java_command(classes, jars, work) + [
         "whbench.Main", "--workload", args.workload, "--seed", str(args.seed),
         "--seconds", str(args.seconds), "--trace", str(args.trace), "--work", work,
-        "--cores", str(CORES), "--size", args.size]
+        "--size", args.size]
     if args.corrupt_expected:
         cmd.append("--corrupt-expected")
     try:

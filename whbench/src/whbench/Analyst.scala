@@ -45,12 +45,13 @@ object Analyst {
     ("SELECT count(*) AS n, sum(amount) AS rev FROM %s %s",
       rows => Seq(Seq(rows.size.toLong, sumOrNull(rows.map(_.amount))))))
 
-  /** The mix after load `step`: `now` is the replay after the load, `before`
-    * the replay at version `vBefore`, `nextKey` the first unused key. */
-  def mix(rnd: Random, step: Int, now: Iterable[Sale], before: Iterable[Sale],
+  /** The mix after one load: `now` is the replay after the load, `before`
+    * the replay at version `vBefore`, `nextKey` the first unused key;
+    * `absent` makes the point lookup ask for a key that was never written. */
+  def mix(rnd: Random, absent: Boolean, now: Iterable[Sale], before: Iterable[Sale],
       vBefore: Int, nextKey: Long, corrupt: Boolean): Seq[Query] = {
     val live = now.toIndexedSeq
-    val k = if (step % 8 == 7) nextKey + 17 else live(rnd.nextInt(live.size)).k
+    val k = if (absent) nextKey + 17 else live(rnd.nextInt(live.size)).k
     val point = Query("point", s"SELECT k, product, day, qty, amount FROM $table WHERE k = $k",
       canon(live.filter(_.k == k).map(s => Seq(s.k, s.product, s.day, s.qty, s.amount))),
       prune = Some((k, k)))
@@ -63,12 +64,14 @@ object Analyst {
       canon(Seq(Seq(inRange.size.toLong, sumOrNull(inRange.map(_.amount))))),
       prune = Some((lo, lo + width)))
 
-    // the served shape rotates with the step; the product slice rides as a
-    // residual on an MV group column, which the MV still serves
-    val (shape, eval) = shapes(step % shapes.size)
+    // the served shape is drawn from the seed, independently of the load
+    // kind; the product slice rides as a residual on an MV group column,
+    // which the MV still serves
+    val shapeIdx = rnd.nextInt(shapes.size)
+    val (shape, eval) = shapes(shapeIdx)
     val p = rnd.nextInt(SalesGen.nProducts)
     val (slice, sliced) =
-      if (step % shapes.size == 2) (s"WHERE product = $p", live.filter(_.product == p))
+      if (shapeIdx == 2) (s"WHERE product = $p", live.filter(_.product == p))
       else ("", live)
     val twinPred = if (slice.isEmpty) "WHERE qty >= 2" else s"$slice AND qty >= 2"
     val servedQ = Query("mv_agg", shape.format(table, slice), canon(eval(sliced)))

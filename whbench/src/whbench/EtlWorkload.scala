@@ -4,13 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.pipeline._
 
 /** `etl_batch`: the reference's own job — a seeded dirty January CSV
   * through `Pipeline.runAndSave` into a fresh directory, one operation
-  * per pass. Each pass's seven outputs are read back and checked
+  * per pass. Each pass's six outputs are read back and checked
   * against what the generator injected. */
 final class EtlWorkload(ctx: Ctx) extends Workload {
   import ctx.spark
@@ -39,10 +41,11 @@ final class EtlWorkload(ctx: Ctx) extends Workload {
 
   def op(i: Int, traced: Boolean): (Cost, Boolean) = {
     val out = s"${ctx.work}/etl/pass-$i"
-    val (_, cost) = Cost.of {
-      if (traced) ctx.tracer.op("op.etl_pass")(tracedPass(out))
+    val (result, cost) = Cost.of {
+      if (traced) ctx.tracer.op("op.etl_pass")(Pipeline.runAndSave(spark, csv, out))
       else Pipeline.runAndSave(spark, csv, out)
     }
+    if (traced) stageSpans(out, result)
     bytesPerRow += Fs.du(out).toDouble / input.expect.landing
     val bad = check(out, traced)
     bad.foreach(b => ctx.log(s"pass $i: $b"))
@@ -50,32 +53,48 @@ final class EtlWorkload(ctx: Ctx) extends Workload {
     (cost, bad.isEmpty)
   }
 
-  /** `Pipeline.runAndSave`'s composition, call for call, with a span
-    * around each stage. Each stage span covers the stage's own action
-    * (its `localCheckpoint`); the dense fact is computed by its write,
-    * so `pipeline.fact` is the fact build plus that write, and
-    * `pipeline.save` is the other five writes, in `runAndSave`'s order. */
-  private def tracedPass(out: String): Unit = {
+  /** Split the traced pass just made into stage spans, from its Spark
+    * jobs. A job belongs to the stage whose output its SQL execution
+    * produces: the checkpoint of the cleansed rows or of a dimension (the
+    * execution with a job that computes that checkpoint's RDD), the fact
+    * write (`fact`), or one of the other five writes (`save`). Jobs of an
+    * execution that produces none of these go with the next job that does.
+    * A stage span runs from the end of the previous stage's last job to the
+    * end of its own, the first from the start of the pass and the last to
+    * its end, so the driver work that prepares a stage counts in it and the
+    * spans cover the pass. `Ingest.load` runs no job (its scan is part of
+    * the cleanse stage's jobs); it is timed on its own by [[check]]. */
+  private def stageSpans(out: String, r: Pipeline.Result): Unit = {
     val tr = ctx.tracer
-    val landing = tr.span("pipeline.ingest")(Ingest.load(spark, csv))
-    val (routed, cleansed) = tr.span("pipeline.cleanse") {
-      val seed = landing.agg(coalesce(max(col("order_id").cast("int")), lit(0)).as("__seed"))
-      val r = Cleanse(landing, seedDf = Some(seed))
-      (r, r.cleansed.localCheckpoint())
+    val pass = tr.last("op.etl_pass").get
+    def rddOf(df: DataFrame) = df.queryExecution.logical.collectFirst {
+      case l: LogicalRDD => l.rdd.id
     }
-    val location = tr.span("pipeline.location_dim")(LocationDim(cleansed).localCheckpoint())
-    val time = tr.span("pipeline.time_dim")(TimeDim(cleansed).localCheckpoint())
-    val product = tr.span("pipeline.product_dim")(ProductDim(cleansed).localCheckpoint())
-    tr.span("pipeline.save") {
-      Seq("invalid" -> routed.invalid, "cleansed" -> cleansed,
-        "location_dimension" -> location, "time_dimension" -> time,
-        "product_dimension" -> product).foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$out/$name")
-      }
+    val checkpoints = Seq(r.cleansed -> "cleanse", r.locationDim -> "location_dim",
+      r.timeDim -> "time_dim", r.productDim -> "product_dim")
+      .flatMap { case (df, st) => rddOf(df).map(_ -> st) }.toMap
+    val jobs = tr.jobsIn(pass)
+    val stageOf = jobs.filter(_.execution >= 0).groupBy(_.execution).flatMap { case (e, js) =>
+      val plan = tr.plan(e)
+      val st =
+        if (plan.contains(s"$out/fact_table")) Some("fact")
+        else if (plan.contains(s"$out/")) Some("save")
+        else js.flatMap(j => checkpoints.get(j.outputRdd)).headOption
+      st.map(e -> _)
     }
-    tr.span("pipeline.fact") {
-      FactBuilder(cleansed, product, location, time, dense = true)
-        .write.mode("overwrite").parquet(s"$out/fact_table")
+    val labels = jobs.map(j => stageOf.get(j.execution).orElse(checkpoints.get(j.outputRdd)))
+      .scanRight(Option.empty[String])((l, next) => l.orElse(next)).init
+    val lastLabel = labels.flatten.lastOption.getOrElse("save")
+    val runs = jobs.zip(labels.map(_.getOrElse(lastLabel))).foldLeft(
+      List.empty[(String, Double)]) {
+      case ((st, end) :: rest, (j, l)) if st == l => (st, end max j.end) :: rest
+      case (acc, (j, l)) => (l, j.end) :: acc
+    }.reverse
+    var start = pass.start
+    runs.zipWithIndex.foreach { case ((st, end), k) =>
+      val stop = if (k == runs.size - 1) pass.end else (end max start) min pass.end
+      tr.child(pass, s"pipeline.$st", start, stop)
+      start = stop
     }
   }
 
@@ -97,8 +116,10 @@ final class EtlWorkload(ctx: Ctx) extends Workload {
       "fact_table revenue (cents)" -> (revenueCents("fact_table"), e.factRevenueCents))
     if (traced) {
       val pass = ctx.tracer.last("op.etl_pass")
-      // landing is not saved; its count is a trace-only figure
-      ctx.tracer.attrOn(pass, "landing_rows", Ingest.load(spark, csv).count().toDouble)
+      // landing is not saved: loading and counting it is a trace-only
+      // probe, which also times the ingest step on its own
+      val landing = ctx.tracer.span("pipeline.ingest")(Ingest.load(spark, csv).count())
+      ctx.tracer.attrOn(pass, "landing_rows", landing.toDouble)
       Seq("invalid" -> "invalid_rows", "cleansed" -> "cleansed_rows",
         "fact_table" -> "fact_rows").foreach { case (n, k) =>
         ctx.tracer.attrOn(pass, k, got.find(_._1 == s"$n rows").get._2._1.toDouble)
@@ -116,5 +137,5 @@ final class EtlWorkload(ctx: Ctx) extends Workload {
     Metric("csv_lines", input.lines.size.toDouble, "count"),
     Metric("fact_rows", input.expect.fact.toDouble, "count"))
 
-  def layerMetrics(tr: Tracer): Seq[Metric] = Layers.all(tr, ctx.cores)
+  def layerMetrics(tr: Tracer): Seq[Metric] = Layers.all(tr)
 }

@@ -7,7 +7,8 @@ object Layers {
   val verbs = Seq("upsert_clustered", "upsert_scattered", "cdc_apply", "delete")
   val reads = Seq("point", "range", "scan_agg", "mv_agg", "time_travel")
 
-  def all(tr: Tracer, cores: Int): Seq[Metric] = {
+  def all(tr: Tracer): Seq[Metric] = {
+    val cores = Main.cores
     val spans = tr.spans.toSeq
     def named(n: String) = spans.filter(_.name == n)
     def medMs(n: String) = Stats.median(named(n).map(_.ms))
@@ -16,15 +17,18 @@ object Layers {
     def per(ss: Seq[Span])(f: Span => Double) = Stats.ratio(ss.map(f).sum, ss.size)
     def busy(ss: Seq[Span]) = Stats.ratio(ss.map(_.busyMs).sum, ss.map(_.ms).sum * cores)
 
-    // pipeline: one set of stage spans per traced ETL pass
+    // pipeline: per traced ETL pass, the stage spans that split it and the
+    // ingest probe after it (same op id); medians over passes
     val passes = named("op.etl_pass")
     def inPass(p: Span) = spans.filter(s => s.op == p.op && s.layer == "pipeline")
     def perPass(f: Seq[Span] => Double) = Stats.median(passes.map(p => f(inPass(p))))
+    def stage(st: String)(f: Span => Double) =
+      perPass(_.filter(_.name == s"pipeline.$st").map(f).sum)
     val pipeline =
-      stages.map(st => Metric(s"pipeline.${st}_ms", medMs(s"pipeline.$st"), "ms")) ++
-        stages.map(st => Metric(s"pipeline.$st.jobs",
-          perPass(_.filter(_.name == s"pipeline.$st").map(_.jobs.toDouble).sum), "count")) ++
-        Seq(Metric("pipeline.driver_gap_ms", perPass(_.map(_.driverGapMs).sum), "ms")) ++
+      stages.map(st => Metric(s"pipeline.${st}_ms", stage(st)(_.ms), "ms")) ++
+        stages.map(st => Metric(s"pipeline.$st.jobs", stage(st)(_.jobs.toDouble), "count")) ++
+        Seq(Metric("pipeline.driver_gap_ms", Stats.median(passes.map(p =>
+          tr.subtree(p).filter(_.layer == "pipeline").map(_.driverGapMs).sum)), "ms")) ++
         Seq("landing", "invalid", "cleansed", "fact").map(r =>
           Metric(s"pipeline.${r}_rows", attrMean(passes, s"${r}_rows"), "count"))
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * smoke test). `corrupt` perturbs one expected value so the smoke test
   * can prove the output checks bite. */
 final class Ctx(val spark: SparkSession, val work: String, val seed: Long,
-    val tracer: Tracer, val cores: Int, val tiny: Boolean, val corrupt: Boolean) {
+    val tracer: Tracer, val tiny: Boolean, val corrupt: Boolean) {
   def log(msg: String): Unit = System.err.println(s"[whbench] $msg")
 }
 
@@ -50,9 +50,15 @@ trait Workload {
 
 object Main {
 
+  /** `local[2]`: the operations are bound by many small single-task Spark
+    * jobs (executors stay well under one busy core), and the spare cores
+    * keep the JIT compiler and GC off the measured path; `local[4]`
+    * measured a slower, noisier first ETL pass on a 4-vCPU VM. */
+  val cores: Int = Runtime.getRuntime.availableProcessors() min 2
+
   private def usage(): Nothing = {
     System.err.println("usage: whbench.Main --workload etl_batch|commit_stream " +
-      "--seed N --seconds S --trace 0|1 --work DIR [--cores N] [--size full|tiny] " +
+      "--seed N --seconds S --trace 0|1 --work DIR [--size full|tiny] " +
       "[--corrupt-expected]")
     sys.exit(2)
   }
@@ -70,8 +76,6 @@ object Main {
     val seconds = args.get("seconds").map(_.toDouble).getOrElse(usage())
     val trace = args.getOrElse("trace", "0") == "1"
     val work = new File(args.getOrElse("work", usage())).getAbsolutePath
-    val cores = args.get("cores").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors() min 2)
     val tiny = args.getOrElse("size", "full") == "tiny"
 
     val t0 = System.nanoTime()
@@ -89,7 +93,7 @@ object Main {
     val sessionS = (System.nanoTime() - t0) / 1e9
 
     val tracer = new Tracer(spark, trace)
-    val ctx = new Ctx(spark, work, seed, tracer, cores, tiny, args.contains("corrupt"))
+    val ctx = new Ctx(spark, work, seed, tracer, tiny, args.contains("corrupt"))
     val w: Workload = workload match {
       case "etl_batch" => new EtlWorkload(ctx)
       case "commit_stream" => new CommitWorkload(ctx)
@@ -138,8 +142,8 @@ object Main {
     // makes a fixed number of cycles and traces every other operation,
     // shifting the pattern by one each cycle (so every position in a
     // cycle is measured both ways) and reversing it every other pair of
-    // cycles (so a warm-up trend cancels); the overhead is the
-    // difference between the two halves
+    // cycles; the overhead is the difference between the means of the
+    // two halves, in which a linear warm-up trend cancels
     val latencies = mutable.ArrayBuffer.empty[(Int, Cost, Boolean)]
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
     val (minCycles, maxCycles) = if (trace) (w.traceCycles, w.traceCycles) else (1, w.maxCycles)
@@ -174,7 +178,7 @@ object Main {
       else {
         val tracedOps = latencies.filter(_._3).map(_._2.wallMs).toSeq
         w.layerMetrics(tracer) ++ Seq(
-          Metric("trace.overhead_ms", Stats.median(tracedOps) - Stats.median(ops), "ms"),
+          Metric("trace.overhead_ms", Stats.mean(tracedOps) - Stats.mean(ops), "ms"),
           Metric("trace.traced_ops", tracedOps.size.toDouble, "count"))
       }
 

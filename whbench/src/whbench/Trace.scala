@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One timed call into a layer. Times are epoch milliseconds; `op` is
@@ -42,18 +43,30 @@ final class Tracer(spark: SparkSession, val enabled: Boolean) {
   private var open: List[Span] = Nil
   private var currentOp = 0L
 
-  private val jobStarts = mutable.Map.empty[Int, Double]
+  private val jobStarts = mutable.Map.empty[Int, JobEv]
   private val jobs = mutable.ArrayBuffer.empty[JobEv]
+  private val plans = mutable.Map.empty[Long, String]
   private val stageSubmits = mutable.ArrayBuffer.empty[Double]
   private val tasks = mutable.ArrayBuffer.empty[TaskEv]
   private val phases = mutable.ArrayBuffer.empty[(Double, Double)]
 
   private val sparkListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = Tracer.this.synchronized {
-      jobStarts(e.jobId) = e.time.toDouble
+      val execution = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).fold(-1L)(_.toLong)
+      // the final stage has the highest id; its newest RDD is what the job computes
+      val output = e.stageInfos.maxByOption(_.stageId)
+        .flatMap(_.rddInfos.map(_.id).maxOption).getOrElse(-1)
+      jobStarts(e.jobId) = JobEv(e.time.toDouble, Double.NaN, execution, output)
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = Tracer.this.synchronized {
-      jobStarts.remove(e.jobId).foreach(s => jobs += JobEv(s, e.time.toDouble))
+      jobStarts.remove(e.jobId).foreach(j => jobs += j.copy(end = e.time.toDouble))
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart => Tracer.this.synchronized {
+        plans(x.executionId) = x.physicalPlanDescription
+      }
+      case _ =>
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       Tracer.this.synchronized {
@@ -116,6 +129,26 @@ final class Tracer(spark: SparkSession, val enabled: Boolean) {
   def attrOn(s: Option[Span], key: String, value: Double): Unit =
     s.foreach(_.attrs(key) = value)
   def last(name: String): Option[Span] = spans.reverseIterator.find(_.name == name)
+
+  /** The Spark jobs that started inside `s`, in start order, once every
+    * event posted so far has been delivered. */
+  def jobsIn(s: Span): Seq[JobEv] = {
+    org.apache.spark.WhbenchBus.drain(spark.sparkContext)
+    synchronized(jobs.filter(j => j.start >= s.start && j.start <= s.end).sortBy(_.start).toSeq)
+  }
+
+  /** The physical plan of SQL execution `id` as Spark describes it, or "". */
+  def plan(id: Long): String = synchronized(plans.getOrElse(id, ""))
+
+  /** Add a span after the fact: a child of `parent`, the latest span to
+    * have started (spans are kept in start order). */
+  def child(parent: Span, name: String, start: Double, end: Double): Span = {
+    require(spans.lastOption.forall(_.start <= start), s"$name starts before the last span")
+    val s = new Span(spans.size, name, parent.id, parent.op, start)
+    s.end = end
+    spans += s
+    s
+  }
 
   /** Stop recording and attribute every event to its span. */
   def finish(): Unit = if (enabled) {
@@ -189,6 +222,8 @@ final class Tracer(spark: SparkSession, val enabled: Boolean) {
 }
 
 object Tracer {
-  private final case class JobEv(start: Double, end: Double)
+  /** A Spark job: its interval, the SQL execution it ran under (-1 if
+    * none) and the id of the RDD its final stage computes. */
+  final case class JobEv(start: Double, end: Double, execution: Long, outputRdd: Int)
   private final case class TaskEv(launch: Double, finish: Double, shuffleBytes: Long)
 }
