@@ -877,7 +877,7 @@ case class GraftMvRewrite(session: SparkSession) extends Rule[LogicalPlan] {
                   })
                   if (mapped.forall(_.isDefined) && resOk &&
                       targets.forall(_.isDefined))
-                    Some((mvPlan, mapped, boundResidual,
+                    Some((mvPlan, mapped.flatten, boundResidual,
                       if (exact) None
                       else Some(groupTargets.map(_._2))))
                   else None
@@ -902,7 +902,7 @@ case class GraftMvRewrite(session: SparkSession) extends Rule[LogicalPlan] {
                 mvPlan)
             // re-alias under the Aggregate's exprIds so downstream
             // references stay resolved
-            val outExprs = agg.output.zip(mapped).map { case (out, Some(t)) =>
+            val outExprs = agg.output.zip(mapped).map { case (out, t) =>
               t match {
                 case ne: NamedExpression if ne.exprId == out.exprId => ne
                 case other => Alias(other, out.name)(exprId = out.exprId)

@@ -673,7 +673,12 @@ object GraftTable {
   }
 
   private def loadManifest(
-      spark: SparkSession, root: String, version: Int): Seq[FileEntry] = {
+      spark: SparkSession, root: String, version: Int): Seq[FileEntry] =
+    parseManifest(manifestText(spark, root, version))
+
+  /** The full text of `version`'s manifest (file lines and `#` header). */
+  private def manifestText(
+      spark: SparkSession, root: String, version: Int): String = {
     val (f, _) = fs(root, spark)
     val p = manifestPath(root, version)
     require(f.exists(p), s"version $version does not exist under $root")
@@ -690,7 +695,7 @@ object GraftTable {
               s"(txn ${parts(1)}, uncommitted) — not readable; commit " +
               "or abort the transaction (GraftTxn)")
       }
-    parseManifest(text)
+    text
   }
 
   /** `(version, tokenOption)` for every listed sidecar name of the
@@ -2376,23 +2381,145 @@ object GraftTable {
     }
   }
 
-  /** Copy-on-write upsert: batch rows REPLACE same-key table rows
-    * column-wise (a NULL batch cell falls back to the target's value —
-    * partial-update semantics); unmatched batch keys insert. Only
-    * files whose key interval contains a batch key are rewritten; all
-    * others are carried forward by reference into the new manifest.
-    *
-    * Optimistic concurrency: a racing committer that loses the
-    * manifest rename retries against the WINNER'S snapshot, up to
-    * `maxRetries` times — upsert is last-write-wins per key over the
-    * current snapshot, so the redo is semantically correct whatever
-    * the winner changed, and two concurrent upserts (disjoint or not)
-    * both land as consecutive versions. A losing attempt's staged data
-    * files become unreferenced orphans that [[vacuum]] sweeps — the
-    * same lifecycle as a crashed commit. Set `maxRetries = 0` to get
-    * the raw fail-fast behavior back.
-    *
-    * Returns (newVersion, nFilesRewritten, nFilesCarried). */
+  // ---- COMMIT CORE (the keyed write verbs) ------------------------
+  //
+  // Every keyed write verb is a small plan over two pieces: a
+  // [[TableSnapshot]] resolved once per commit attempt, and ONE
+  // optimistic-concurrency loop ([[occCommit]], with [[batchCommit]]
+  // layering schema alignment and batch-cache ownership on top) — the
+  // Delta `Snapshot` / `OptimisticTransaction` split.
+
+  /** The table head one commit attempt plans over: the version, its
+    * file entries and pending equality deletes (parsed from ONE read
+    * of the manifest), the schema AS OF the version, the key's ledger
+    * mode ([[keyHashMode]]) and the table properties. */
+  private final case class TableSnapshot(version: Int,
+      entries: Seq[FileEntry], schema: StructType, hashKey: Boolean,
+      eqdels: Seq[EqDel], props: Map[String, String]) {
+    def next: Int = version + 1
+  }
+
+  private def resolveSnapshot(spark: SparkSession,
+      root: String): TableSnapshot = {
+    val v = latestVersion(spark, root)
+    require(v >= 0, s"no graft table at $root")
+    val text = manifestText(spark, root, v)
+    TableSnapshot(v, parseManifest(text), tableSchema(spark, root, v),
+      keyHashMode(spark, root), parseEqDels(text),
+      tableProperties(spark, root))
+  }
+
+  /** How long a cross-table staging may sit uncommitted before a
+    * blocked writer reaps it ([[reapStaleStaging]]). */
+  private val StaleTxnMs = 600000L
+
+  /** Retries a keyed write verb takes after losing the publish race. */
+  private val CommitRetries = 2
+
+  /** THE OCC LOOP: run `body` over a freshly resolved snapshot (or
+    * `first`, when the caller already resolved one) until it
+    * publishes. A racing committer that wins the manifest rename makes
+    * the attempt throw [[ConcurrentCommitException]]; up to
+    * `maxRetries` times the verb then redoes its plan against the
+    * WINNER's snapshot — the retrying verbs are per-key over the
+    * current head, so the redo is correct whatever the winner changed.
+    * Before every retry a collision against an ABANDONED cross-table
+    * staging is reaped past [[StaleTxnMs]] (the abort is an atomic
+    * marker race — a live coordinator still wins). ONLY the
+    * commit-race signal retries: a broader catch would silently re-run
+    * a whole distributed merge on unrelated failures and mask the root
+    * cause. A losing attempt's staged files become unreferenced
+    * orphans that [[vacuum]] sweeps, like a crashed commit's. */
+  private def occCommit[T](spark: SparkSession, root: String,
+      maxRetries: Int, first: Option[TableSnapshot] = None)(
+      body: TableSnapshot => T): T = {
+    var snap = first.getOrElse(resolveSnapshot(spark, root))
+    var attempt = 0
+    while (true) {
+      try return body(snap)
+      catch {
+        case _: ConcurrentCommitException if attempt < maxRetries =>
+          attempt += 1
+          reapStaleStaging(spark, root, StaleTxnMs)
+          snap = resolveSnapshot(spark, root)
+      }
+    }
+    sys.error("unreachable")
+  }
+
+  /** [[occCommit]] for a verb that merges a caller's batch. With
+    * `align` (the pass-through columns, e.g. the CDC op column) the
+    * batch is first matched to the table schema ([[autoMergeAlign]]).
+    * It is then persisted once for every attempt — the merge evaluates
+    * it several times (probes, then the join feeding the write), and
+    * the cache runs the caller's plan once — unless `cacheBatch =
+    * false` (trivial-scan batches such as the streaming sink's, where
+    * re-scanning beats the cache materialization; measured, see
+    * OPTIMIZATION_r18.md) or the caller already cached it. A cache
+    * belongs to whoever persisted it: a caller's stays alive after the
+    * commit. */
+  private def batchCommit[T](spark: SparkSession, root: String,
+      batch0: DataFrame, align: Option[Seq[String]], cacheBatch: Boolean,
+      maxRetries: Int)(body: (TableSnapshot, DataFrame) => T): T = {
+    val (snap, aligned) = align match {
+      case Some(keep) => autoMergeAlign(spark, root, batch0, keep)
+      case None => (resolveSnapshot(spark, root), batch0)
+    }
+    val owned = cacheBatch &&
+      aligned.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val batch =
+      if (owned)
+        aligned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else aligned
+    try occCommit(spark, root, maxRetries, Some(snap))(body(_, batch))
+    finally if (owned) { batch.unpersist(); () }
+  }
+
+  private val NoWrite = Written(Seq.empty, Seq.empty)
+
+  /** Publish `carried` plus the files `w` wrote (with their stats
+    * sidecar lines) as version `v`. */
+  private def commitWritten(spark: SparkSession, root: String, v: Int,
+      carried: Seq[FileEntry], w: Written, txn: Option[TxnRef] = None,
+      note: Option[String] = None,
+      eqdels: Option[Seq[EqDel]] = None): Unit = {
+    val (f, _) = fs(root, spark)
+    commitManifest(f, root, v, carried ++ w.entries, statLines = w.statLines,
+      kmvLines = w.kmvLines, txn = txn, note = note, eqdels = eqdels)
+  }
+
+  /** The data file name of an entry — the key DV sidecars and the
+    * masked reads' `__graft_dv_file` column use. */
+  private def nameOf(e: FileEntry): String =
+    new org.apache.hadoop.fs.Path(e.relPath).getName
+
+  /** Fold newly deleted positions into DELETION VECTORS for `files`:
+    * each file's fresh sidecar holds its rows of `newPos`
+    * (`__graft_dv_file`, `__graft_dv_pos`) ∪ its EXISTING DV positions
+    * — a sidecar fully describes its file's deletions, readers never
+    * chain DVs (the superseded sidecar is vacuum-swept). All sidecars
+    * land under one `dv-v{N}` dir of version `v`. `newRows` holds each
+    * file's newly deleted row count by name. Returns the updated
+    * entries. */
+  private def foldDvs(spark: SparkSession, root: String, v: Int,
+      files: Seq[FileEntry], newPos: DataFrame,
+      newRows: Map[String, Long]): Seq[FileEntry] =
+    if (files.isEmpty) Seq.empty
+    else {
+      val pos0 = newPos.filter(col(DvNameCol).isin(files.map(nameOf): _*))
+      val prior = files.filter(_.hasDv)
+      val allPos =
+        if (prior.isEmpty) pos0
+        else pos0.unionByName(
+          dvPositions(spark, root, prior, forJoin = false)
+            .select(col(DvNameCol), col(DvPosCol)))
+      val dvRel = f"data/dv-v$v%05d-" +
+        java.util.UUID.randomUUID().toString.take(8)
+      writeDvSidecars(spark, s"$root/$dvRel", allPos)
+      files.map(e => e.copy(dvPath = s"$dvRel/${nameOf(e)}.dv",
+        dvRows = e.dvRows + newRows.getOrElse(nameOf(e), 0L)))
+    }
+
   /** SCHEMA AUTO-MERGE (`graft.schema.autoMerge = true`, the Delta
     * `mergeSchema` idiom): when the property is on, a batch whose
     * schema drifts from the table's is ALIGNED instead of refused —
@@ -2410,15 +2537,17 @@ object GraftTable {
     * added a field, the ingest stream keeps flowing" and "every
     * consumer pages someone to run a migration": the evolve commit is
     * O(metadata) and the very next micro-batch lands with the new
-    * column populated. */
+    * column populated. Returns the snapshot the aligned batch matches
+    * (re-resolved after an evolve commit) and the aligned batch. */
   private def autoMergeAlign(spark: SparkSession, root: String,
-      batch: DataFrame, keep: Seq[String]): DataFrame = {
-    val tbl = tableSchema(spark, root, latestVersion(spark, root))
+      batch: DataFrame, keep: Seq[String]): (TableSnapshot, DataFrame) = {
+    val snap = resolveSnapshot(spark, root)
+    val tbl = snap.schema
     val dataFields = batch.schema.fields.filterNot(f => keep.contains(f.name))
     val sameSet = dataFields.map(_.name).sorted
       .sameElements(tbl.fieldNames.sorted)
-    if (sameSet) return batch // the normal path: zero overhead
-    val on = tableProperties(spark, root)
+    if (sameSet) return (snap, batch) // the normal path: zero overhead
+    val on = snap.props
       .get("graft.schema.autoMerge").exists(_.equalsIgnoreCase("true"))
     require(on, {
       val extra = dataFields.map(_.name).filterNot(tbl.fieldNames.contains)
@@ -2430,52 +2559,39 @@ object GraftTable {
         "the table and NULL-fill narrow batches automatically"
     })
     val extra = dataFields.filterNot(f => tbl.fieldNames.contains(f.name))
-    if (extra.nonEmpty)
-      evolveAddColumns(spark, root, extra.map(f =>
-        org.apache.spark.sql.types.StructField(f.name, f.dataType,
-          nullable = true)).toSeq)
-    val evolved = tableSchema(spark, root, latestVersion(spark, root))
-    batch.select(evolved.fields.map(f =>
+    val evolved =
+      if (extra.isEmpty) snap
+      else {
+        evolveAddColumns(spark, root, extra.map(f =>
+          org.apache.spark.sql.types.StructField(f.name, f.dataType,
+            nullable = true)).toSeq)
+        resolveSnapshot(spark, root)
+      }
+    (evolved, batch.select(evolved.schema.fields.map(f =>
       if (batch.schema.fieldNames.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)) ++ keep.map(col): _*)
+      else lit(null).cast(f.dataType).as(f.name)) ++ keep.map(col): _*))
   }
 
-  def upsert(spark: SparkSession, root: String, batch0: DataFrame,
-      key: String, nBuckets: Int = 8, maxRetries: Int = 2,
-      staleTxnMs: Long = 600000L,
-      cacheBatch: Boolean = true): (Int, Int, Int) = {
-    // persisted by default: the merge evaluates the batch twice
-    // (file-hit probe, then the full-outer merge feeding the write) —
-    // cache it so the caller's batch plan runs once, not per
-    // evaluation. `cacheBatch = false` for trivial-scan batches (the
-    // streaming sink), same trade as [[applyCdcBatch]].
-    val aligned = autoMergeAlign(spark, root, batch0, Seq.empty)
-    val batch =
-      if (cacheBatch)
-        aligned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else aligned
-    try {
-    var attempt = 0
-    while (true) {
-      try return upsertOnce(spark, root, batch, key, nBuckets)
-      catch {
-        // ONLY the dedicated commit-race signal retries: a broader
-        // IllegalStateException catch would silently re-run the whole
-        // distributed merge on unrelated failures (corrupted log state,
-        // missing key column) and mask the root cause
-        case e: ConcurrentCommitException if attempt < maxRetries =>
-          attempt += 1 // loser: re-read the new latest and redo
-          // a collision against an ABANDONED cross-table staging is
-          // not a liveness sentence: past the staleness horizon the
-          // blocked writer aborts the dead transaction (atomic
-          // marker race — a live coordinator still wins) and retries
-          if (staleTxnMs > 0) reapStaleStaging(spark, root, staleTxnMs)
-        case e: Throwable => throw e
-      }
-    }
-    sys.error("unreachable")
-    } finally if (cacheBatch) { batch.unpersist(); () }
-  }
+  /** Copy-on-write upsert: batch rows REPLACE same-key table rows
+    * column-wise (a NULL batch cell falls back to the target's value —
+    * partial-update semantics); unmatched batch keys insert. Only
+    * files whose key interval contains a batch key are rewritten; all
+    * others are carried forward by reference into the new manifest.
+    *
+    * Optimistic concurrency through the commit core
+    * ([[occCommit]]): a racing committer that loses the manifest
+    * rename retries against the WINNER'S snapshot — upsert is
+    * last-write-wins per key over the current snapshot, so two
+    * concurrent upserts (disjoint or not) both land as consecutive
+    * versions. The batch is persisted for the commit unless
+    * `cacheBatch = false` or the caller cached it ([[batchCommit]]).
+    *
+    * Returns (newVersion, nFilesRewritten, nFilesCarried). */
+  def upsert(spark: SparkSession, root: String, batch: DataFrame,
+      key: String, nBuckets: Int = 8,
+      cacheBatch: Boolean = true): (Int, Int, Int) =
+    batchCommit(spark, root, batch, Some(Seq.empty), cacheBatch,
+      CommitRetries)(upsertAttempt(spark, root, _, _, key, nBuckets))
 
   /** FILE-HIT PROBE shared by the merge commits: which manifest files
     * could contain a batch key — the batch's key stats interval-joined
@@ -2504,24 +2620,44 @@ object GraftTable {
     (hit, rows.exists(r => r.getLong(1) > 0L))
   }
 
+  /** The (rel_path, mn, mx) key-interval ledger [[probeHitFiles]]
+    * probes. */
+  private def hitLedger(spark: SparkSession,
+      entries: Seq[FileEntry]): DataFrame = {
+    import spark.implicits._
+    entries.map(e => (e.relPath, e.minKey, e.maxKey))
+      .toDF("rel_path", "mn", "mx")
+  }
+
+  /** One single-attempt upsert of `batch` as it stands (no alignment,
+    * no cache) — the staging primitive of [[GraftTxn]], whose `txn`
+    * reference keeps the manifest invisible until the coordinator
+    * commits. */
   private[sources] def upsertOnce(spark: SparkSession, root: String,
       batch: DataFrame, key: String, nBuckets: Int,
-      txn: Option[TxnRef] = None): (Int, Int, Int) = {
-    val base = latestVersion(spark, root)
-    val entries = loadManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
+      txn: Option[TxnRef] = None): (Int, Int, Int) =
+    occCommit(spark, root, maxRetries = 0)(
+      upsertAttempt(spark, root, _, batch, key, nBuckets, txn))
+
+  /** Thrown by an audited upsert attempt whose staged rows fail a
+    * check — never a retry signal. */
+  private final class AuditRejected(val violations: Map[String, Long])
+    extends RuntimeException(s"write audit rejected: $violations")
+
+  private def upsertAttempt(spark: SparkSession, root: String,
+      snap: TableSnapshot, batch: DataFrame, key: String, nBuckets: Int,
+      txn: Option[TxnRef] = None,
+      checks: Seq[(String, org.apache.spark.sql.Column)] = Seq.empty)
+      : (Int, Int, Int) = {
+    val schema = snap.schema
     require(batch.schema.fieldNames.sorted.sameElements(schema.fieldNames.sorted),
       "batch schema must match table schema")
     // file-level pruning: interval-probe the batch's keys against the
     // broadcast (metadata-sized) ledger — one pass, one exchange
-    import spark.implicits._
-    val ledger = entries.map(e => (e.relPath, e.minKey, e.maxKey))
-      .toDF("rel_path", "mn", "mx")
     val (hit, _) = probeHitFiles(batch,
-      keyStatExpr(col(key), keyHashMode(spark, root)), ledger)
-    val (rewrite, carry) = entries.partition(e => hit(e.relPath))
-    val current = readEntries(spark, root, schema, rewrite,
-      pendingEqDels(spark, root, base))
+      keyStatExpr(col(key), snap.hashKey), hitLedger(spark, snap.entries))
+    val (rewrite, carry) = snap.entries.partition(e => hit(e.relPath))
+    val current = readEntries(spark, root, schema, rewrite, snap.eqdels)
     // MERGE: one hash full-outer join on the key (q204's shape) —
     // batch wins where matched, inserts where not
     val cols = schema.fieldNames
@@ -2529,12 +2665,26 @@ object GraftTable {
     val merged = t.join(b, col(s"t.$key") === col(s"b.$key"), "full_outer")
       .select(cols.map(c =>
         coalesce(col(s"b.$c"), col(s"t.$c")).as(c)): _*)
-    val v = base + 1
+    val v = snap.next
+    // WRITE (stage): files land under an attempt-unique dir, reachable
+    // only through a manifest that may never be published
     val w = writeDataFiles(spark, root, v, merged, key,
-      writeBuckets(spark, root, base, nBuckets, rewrite.size))
-    val (f, _) = fs(root, spark)
-    commitManifest(f, root, v, carry ++ w.entries,
-      statLines = w.statLines, kmvLines = w.kmvLines, txn = txn)
+      writeBuckets(spark, root, snap.version, nBuckets, rewrite.size))
+    if (checks.nonEmpty) {
+      // AUDIT: every check in one aggregation over the staged files
+      val staged = readEntriesNoEq(spark, root, schema, w.entries)
+      val aggs = checks.map { case (name, pred) =>
+        sum(when(pred.isNull || !pred, 1L).otherwise(0L)).as(name)
+      }
+      val counts = staged.agg(aggs.head, aggs.tail: _*).collect()(0)
+      val violations = checks.zipWithIndex.collect {
+        case ((name, _), i) if counts.getLong(i) > 0 =>
+          name -> counts.getLong(i)
+      }.toMap
+      if (violations.nonEmpty) throw new AuditRejected(violations)
+    }
+    // PUBLISH: the create-if-absent manifest rename, as every commit
+    commitWritten(spark, root, v, carry, w, txn = txn)
     (v, rewrite.size, carry.size)
   }
 
@@ -2552,53 +2702,32 @@ object GraftTable {
     * Iceberg v2 equality deletes / Paimon's changelog inserts.
     *
     * Semantics: rows land VERBATIM (full-row replace per key — the
-    * Debezium-style full-image CDC contract). `opCol`, when given,
-    * must hold `replace` or `delete` per row; column-wise
+    * Debezium-style full-image CDC contract), so a narrow batch is
+    * refused rather than NULL-filled (no schema auto-merge here: a
+    * NULL-filled column would overwrite the target's value). `opCol`,
+    * when given, must hold `replace` or `delete` per row; column-wise
     * partial-update "upsert" is deliberately NOT offered here — it
     * needs the old row, which this path never reads (use
     * [[applyCdcBatch]] for that). A batch may carry AT MOST ONE row
     * per key: two same-batch rows with one key would both survive
-    * (both postdate the batch's own eqdel).
+    * (both postdate the batch's own eqdel). The batch is persisted for
+    * the commit — it is evaluated up to four times (op/separator
+    * probes, the eqdel key projection, the data write).
     *
     * Returns (newVersion, nEqDelKeysRecorded). */
-  def appendUpsert(spark: SparkSession, root: String, batch0: DataFrame,
-      key: String, opCol: Option[String] = None, nBuckets: Int = 8,
-      maxRetries: Int = 2, cacheBatch: Boolean = true): (Int, Long) = {
-    // persisted by default: the commit evaluates the batch up to four
-    // times (op/separator probes, the eqdel key projection, the data
-    // write). `cacheBatch = false` for trivial-scan batches (the
-    // streaming sink's eqdel branch) — re-scanning beats the cache
-    // materialization + bookkeeping there, the same trade as
-    // [[insertBatch]] (OPTIMIZATION_r18.md measured it on the sink).
-    val batch =
-      if (cacheBatch) batch0
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else batch0
-    try {
-      var attempt = 0
-      while (true) {
-        try return appendUpsertOnce(spark, root, batch, key, opCol, nBuckets)
-        catch {
-          case e: ConcurrentCommitException if attempt < maxRetries =>
-            attempt += 1 // redo against the winner's snapshot; our
-            // staged data/eqdel files orphan and vacuum sweeps them
-          case e: Throwable => throw e
-        }
-      }
-      sys.error("unreachable")
-    } finally if (cacheBatch) { batch.unpersist(); () }
-  }
+  def appendUpsert(spark: SparkSession, root: String, batch: DataFrame,
+      key: String, opCol: Option[String] = None,
+      nBuckets: Int = 8): (Int, Long) =
+    batchCommit(spark, root, batch, None, cacheBatch = true,
+      CommitRetries)(appendUpsertAttempt(spark, root, _, _, key, opCol,
+        nBuckets))
 
-  private def appendUpsertOnce(spark: SparkSession, root: String,
-      batch: DataFrame, key: String, opCol: Option[String],
-      nBuckets: Int): (Int, Long) = {
-    val base = latestVersion(spark, root)
-    require(base >= 0, s"no graft table at $root (appendUpsert needs " +
-      "an existing table — create() the first batch)")
+  private def appendUpsertAttempt(spark: SparkSession, root: String,
+      snap: TableSnapshot, batch: DataFrame, key: String,
+      opCol: Option[String], nBuckets: Int): (Int, Long) = {
     require(keyColumn(spark, root).nonEmpty,
       s"appendUpsert needs the table's recorded key column at $root")
-    val entries = loadManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
+    val schema = snap.schema
     opCol match {
       case Some(oc) =>
         require((batch.columns.toSet - oc) == schema.fieldNames.toSet,
@@ -2615,9 +2744,9 @@ object GraftTable {
           .sameElements(schema.fieldNames.sorted),
           "batch schema must match table schema")
     }
-    val v = base + 1
+    val v = snap.next
     import spark.implicits._
-    val hashKey = keyHashMode(spark, root)
+    val hashKey = snap.hashKey
     // the eqdel sidecar is tab-separated `key\tversion` text — a
     // string key carrying the separator or a newline would corrupt
     // the list silently, so refuse up front (CDC keys are UUIDs and
@@ -2636,7 +2765,7 @@ object GraftTable {
     // zero keys, and a zero-key batch commits as a plain append.
     // The sidecar stores the RAW key (row-level masking compares it
     // exactly); the probe runs on the ledger's stat domain.
-    val ledger = broadcast(entries.map(e => (e.minKey, e.maxKey))
+    val ledger = broadcast(snap.entries.map(e => (e.minKey, e.maxKey))
       .toDF("mn", "mx"))
     val eqRel = f"data/eqdel-v$v%05d-" +
       java.util.UUID.randomUUID().toString.take(8)
@@ -2650,23 +2779,21 @@ object GraftTable {
       .select(concat_ws("\t", col("__rawk"), lit(v)).as("value"))
       .observe(eqObs, count(lit(1)).as("n"))
       .write.mode("overwrite").text(s"$root/$eqRel")
-    val (f, _) = fs(root, spark)
     val nKeys = eqObs.get("n").asInstanceOf[Long]
     val rows = opCol.fold(batch)(oc =>
       batch.filter(col(oc) =!= "delete").drop(oc))
     val w = writeDataFiles(spark, root, v, rows.select(
       schema.fieldNames.map(col): _*), key,
-      writeBuckets(spark, root, base, nBuckets, 0))
+      writeBuckets(spark, root, snap.version, nBuckets, 0))
     if (w.entries.isEmpty && nKeys == 0L) {
       // nothing inserted, nothing retired: leave the table untouched
+      val (f, _) = fs(root, spark)
       f.delete(new org.apache.hadoop.fs.Path(root, eqRel), true)
-      return (base, 0L)
+      return (snap.version, 0L)
     }
-    val pend = pendingEqDels(spark, root, base) ++
+    val pend = snap.eqdels ++
       (if (nKeys > 0) Seq(EqDel(v, eqRel, nKeys)) else Seq.empty)
-    commitManifest(f, root, v, entries ++ w.entries,
-      statLines = w.statLines, kmvLines = w.kmvLines,
-      eqdels = Some(pend))
+    commitWritten(spark, root, v, snap.entries, w, eqdels = Some(pend))
     (v, nKeys)
   }
 
@@ -2680,48 +2807,51 @@ object GraftTable {
     * list clears. Content is logically unchanged — reads lose the
     * key anti-join tax, and [[absorbDvs]]/OPTIMIZE then retire the
     * DVs on their own schedule (the two-tier debt ladder:
-    * eqdel → DV → rewrite). Returns (newVersion, filesTouched,
-    * keysResolved); a table with nothing pending no-ops. */
+    * eqdel → DV → rewrite). Single attempt. Returns (newVersion,
+    * filesTouched, keysResolved); a table with nothing pending
+    * no-ops. */
   def resolveEqDels(spark: SparkSession, root: String, key: String)
-    : (Int, Int, Long) = {
-    val base = latestVersion(spark, root)
-    val eq = pendingEqDels(spark, root, base)
-    if (eq.isEmpty) return (base, 0, 0L)
-    val entries = loadManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
+    : (Int, Int, Long) =
+    occCommit(spark, root, maxRetries = 0)(
+      resolveEqDelsAttempt(spark, root, _, key))
+
+  private def resolveEqDelsAttempt(spark: SparkSession, root: String,
+      snap: TableSnapshot, key: String): (Int, Int, Long) = {
+    val eq = snap.eqdels
+    if (eq.isEmpty) return (snap.version, 0, 0L)
+    val entries = snap.entries
     val subject = entries.filter(e => eqDelsApplying(e, eq).nonEmpty)
-    val v = base + 1
-    val (f, _) = fs(root, spark)
+    val v = snap.next
     if (subject.isEmpty) { // stale pending list (e.g. full rewrite
       // since) — clear it with a metadata-only commit
-      commitManifest(f, root, v, entries, eqdels = Some(Seq.empty))
+      commitWritten(spark, root, v, entries, NoWrite, eqdels = Some(Seq.empty))
       return (v, 0, 0L)
     }
     import spark.implicits._
-    val hashMode = keyHashMode(spark, root)
+    val hashMode = snap.hashKey
     val keys = eqDelKeys(spark, root, eq, hashMode) // (__eq_k, __eq_v max)
     // interval-prune: a subject file is HIT iff some retired key (of
     // a NEWER eqdel than the file) falls in its key interval — probed
     // in the ledger's STAT domain (the raw key hashes for string keys)
     val ledger = subject.map(e =>
-      (nameOfEntry(e), e.minKey, e.maxKey, addedVersion(e.relPath)))
+      (nameOf(e), e.minKey, e.maxKey, addedVersion(e.relPath)))
       .toDF("__f", "mn", "mx", "av")
     val probeK = keyStatExpr(col("__eq_k"), hashMode)
     val hitNames = keys.join(broadcast(ledger),
         probeK >= col("mn") && probeK <= col("mx") &&
           col("__eq_v") > col("av"))
       .select("__f").distinct().collect().map(_.getString(0)).toSet
-    val hit = subject.filter(e => hitNames(nameOfEntry(e)))
+    val hit = subject.filter(e => hitNames(nameOf(e)))
     if (hit.isEmpty) {
-      commitManifest(f, root, v, entries, eqdels = Some(Seq.empty))
+      commitWritten(spark, root, v, entries, NoWrite, eqdels = Some(Seq.empty))
       return (v, 0, 0L)
     }
     // positions of doomed rows in hit files: raw read with per-file
     // name/position/added-version, existing DV positions excluded
     // (they are already dead — re-recording them would double-count
     // dvRows and break the exact liveRows ledger)
-    val phys = physicalSchema(schema)
-    val keyPhys = toPhys(spark, root, base, key)
+    val phys = physicalSchema(snap.schema)
+    val keyPhys = physMap(snap.schema).getOrElse(key, key)
     val raw = spark.read.schema(phys)
       .parquet(hit.map(e => dataPath(root, e.relPath)): _*)
       .select(
@@ -2747,25 +2877,16 @@ object GraftTable {
     try {
       val counts = doomed.groupBy(col(DvNameCol)).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val allPos =
-        if (priorDvd.isEmpty) doomed
-        else doomed.unionByName(
-          dvPositions(spark, root, priorDvd, forJoin = false)
-            .select(col(DvNameCol), col(DvPosCol)))
-      val dvRel = f"data/dv-v$v%05d-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      writeDvSidecars(spark, s"$root/$dvRel", allPos)
-      val untouched = entries.filterNot(e => hitNames(nameOfEntry(e)))
-      val updated = hit.flatMap { e =>
-        val n = counts.getOrElse(nameOfEntry(e), 0L)
-        val dvRows = e.dvRows + n
-        if (dvRows >= e.nRows) None // fully dead: drop from manifest
-        else if (n == 0 && !e.hasDv) Some(e) // probed, nothing matched
-        else Some(e.copy(dvPath = s"$dvRel/${nameOfEntry(e)}.dv",
-          dvRows = dvRows))
-      }
-      commitManifest(f, root, v, untouched ++ updated,
-        eqdels = Some(Seq.empty))
+      // fully dead files drop from the manifest; a probed file nothing
+      // matched keeps its entry unless it carries a DV to re-fold
+      val alive = hit.filter(e =>
+        e.dvRows + counts.getOrElse(nameOf(e), 0L) < e.nRows)
+      val (refold, kept) =
+        alive.partition(e => e.hasDv || counts.contains(nameOf(e)))
+      val untouched = entries.filterNot(e => hitNames(nameOf(e)))
+      commitWritten(spark, root, v,
+        untouched ++ kept ++ foldDvs(spark, root, v, refold, doomed, counts),
+        NoWrite, eqdels = Some(Seq.empty))
       (v, hit.size, counts.values.sum)
     } finally doomed.unpersist()
   }
@@ -2799,9 +2920,6 @@ object GraftTable {
     else None
   }
 
-  private def nameOfEntry(e: FileEntry): String =
-    new org.apache.hadoop.fs.Path(e.relPath).getName
-
   /** Apply a CDC batch in ONE commit — the full MERGE shape (matched
     * delete + matched update + unmatched insert): `batch` carries the
     * table's columns plus an `opCol` ∈ upsert | replace | delete.
@@ -2816,41 +2934,19 @@ object GraftTable {
     * only the files whose key interval contains a batch key. This is
     * the consumer half of [[changes]]: applying a table's feed to a
     * replica reproduces it version for version (gated by q239).
-    * Retries like [[upsert]] when racing committers collide (the op
-    * semantics are per-key against the current snapshot, so a redo
-    * against the winner's snapshot is correct).
+    * Schema auto-merge applies (the op column rides through the
+    * alignment untouched), and the batch is persisted for the commit
+    * (op-domain probe, file-hit probe, the merge join) — both through
+    * [[batchCommit]]. Retries like [[upsert]] when racing committers
+    * collide (the op semantics are per-key against the current
+    * snapshot, so a redo against the winner's snapshot is correct).
     * Returns (newVersion, nFilesRewritten, nFilesCarried). */
-  def applyCdcBatch(spark: SparkSession, root: String, batch0: DataFrame,
+  def applyCdcBatch(spark: SparkSession, root: String, batch: DataFrame,
       key: String, opCol: String = "_op", nBuckets: Int = 8,
-      maxRetries: Int = 2, cacheBatch: Boolean = true): (Int, Int, Int) = {
-    // schema auto-merge applies to the CDC path too — the op column
-    // rides through the alignment untouched (see [[autoMergeAlign]])
-    // persisted by default: the apply evaluates the batch three times
-    // (op-domain probe, file-hit probe, the merge join) — without the
-    // cache each evaluation re-runs the caller's full batch plan.
-    // `cacheBatch = false` is for callers whose batch is a trivial
-    // scan (the streaming sink's micro-batches): re-scanning beats the
-    // cache materialization + bookkeeping there (measured, see
-    // OPTIMIZATION_r18.md).
-    val aligned = autoMergeAlign(spark, root, batch0, Seq(opCol))
-    val batch =
-      if (cacheBatch)
-        aligned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else aligned
-    try {
-      var attempt = 0
-      while (true) {
-        try return applyCdcBatchOnce(spark, root, batch, key, opCol, nBuckets)
-        catch {
-          // narrowed to the commit-race signal, same as [[upsert]]
-          case e: ConcurrentCommitException if attempt < maxRetries =>
-            attempt += 1
-          case e: Throwable => throw e
-        }
-      }
-      sys.error("unreachable")
-    } finally if (cacheBatch) { batch.unpersist(); () }
-  }
+      maxRetries: Int = CommitRetries,
+      cacheBatch: Boolean = true): (Int, Int, Int) =
+    batchCommit(spark, root, batch, Some(Seq(opCol)), cacheBatch,
+      maxRetries)(applyCdcAttempt(spark, root, _, _, key, opCol, nBuckets))
 
   /** [[applyCdcBatch]] PINNED at exactly `pinVersion` with a `#note`
     * commit marker — single attempt, NO retry: if any commit (racer
@@ -2863,37 +2959,28 @@ object GraftTable {
     * window (success) or a foreign commit stole the slot (recompute
     * and re-pin). */
   private[sources] def applyCdcBatchAt(spark: SparkSession, root: String,
-      batch0: DataFrame, key: String, opCol: String, nBuckets: Int,
-      pinVersion: Int, note: String): (Int, Int, Int) = {
-    // persisted for the same three-evaluation reason as [[applyCdcBatch]]
-    val batch = autoMergeAlign(spark, root, batch0, Seq(opCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try applyCdcBatchOnce(spark, root, batch, key, opCol, nBuckets,
-      pin = Some(pinVersion), note = Some(note))
-    finally batch.unpersist()
-  }
+      batch: DataFrame, key: String, opCol: String, nBuckets: Int,
+      pinVersion: Int, note: String): (Int, Int, Int) =
+    batchCommit(spark, root, batch, Some(Seq(opCol)), cacheBatch = true,
+      maxRetries = 0) { (snap, b) =>
+      // refuse before any work if anything landed since the pin was
+      // chosen (the batch was computed against pre-pin state; the
+      // manifest rename arbitrates the exact race for the pinned slot)
+      if (snap.next != pinVersion)
+        throw new ConcurrentCommitException(
+          s"pinned CDC apply at $root: version $pinVersion no longer " +
+            s"next (head is ${snap.version})")
+      applyCdcAttempt(spark, root, snap, b, key, opCol, nBuckets,
+        Some(note))
+    }
 
-  private def applyCdcBatchOnce(spark: SparkSession, root: String,
-      batch: DataFrame, key: String, opCol: String,
-      nBuckets: Int, pin: Option[Int] = None,
-      note: Option[String] = None): (Int, Int, Int) = {
-    val base = latestVersion(spark, root)
-    // PINNED apply: the caller demands to commit EXACTLY `pin` — if
-    // anything landed since the pin was chosen, refuse before any work
-    // (the batch was computed against pre-pin state; the manifest
-    // rename below arbitrates the exact race for the pinned slot)
-    pin.foreach(pv => if (base + 1 != pv)
-      throw new ConcurrentCommitException(
-        s"pinned CDC apply at $root: version $pv no longer next " +
-          s"(head is $base)"))
-    val entries = loadManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
+  private def applyCdcAttempt(spark: SparkSession, root: String,
+      snap: TableSnapshot, batch: DataFrame, key: String, opCol: String,
+      nBuckets: Int, note: Option[String] = None): (Int, Int, Int) = {
+    val schema = snap.schema
     require(batch.columns.contains(opCol), s"batch must carry $opCol")
     require((batch.columns.toSet - opCol) == schema.fieldNames.toSet,
       "batch schema must be table schema + the op column")
-    import spark.implicits._
-    val ledger = entries.map(e => (e.relPath, e.minKey, e.maxKey))
-      .toDF("rel_path", "mn", "mx")
     // ONE action probes both planes: the file-hit interval join AND
     // the op-domain validation (a NULL op would silently drop the row
     // from both branches, a typo'd op would silently apply as an
@@ -2903,7 +2990,7 @@ object GraftTable {
     // fused op check costs no extra pass where the old limit(1) probe
     // was a second action per commit.
     val (hit, anyBadOp) = probeHitFiles(batch,
-      keyStatExpr(col(key), keyHashMode(spark, root)), ledger,
+      keyStatExpr(col(key), snap.hashKey), hitLedger(spark, snap.entries),
       badRow = Some(col(opCol).isNull ||
         !col(opCol).isin("upsert", "replace", "delete")))
     if (anyBadOp) {
@@ -2918,18 +3005,16 @@ object GraftTable {
         s"applyCdcBatch: unknown $opCol value ${badOp.headOption.map(_.get(0))
           .orNull} — every row must carry 'upsert', 'replace' or 'delete'")
     }
-    val (rewrite, carry) = entries.partition(e => hit(e.relPath))
+    val (rewrite, carry) = snap.entries.partition(e => hit(e.relPath))
     // policy routing (`graft.dml.mode`, see [[dmlMode]]): `dv` / `auto`
     // take the merge-on-read path — deletes and update PREIMAGES become
     // position sidecars, postimages and inserts land in fresh files,
     // zero barely-touched data files rewritten
-    val (mode, maxDirty) = dmlMode(spark, root)
+    val (mode, maxDirty) = dmlMode(snap.props)
     if (mode != "cow")
-      return applyCdcBatchMoR(spark, root, batch, key, opCol, nBuckets,
-        schema, rewrite, carry, base,
-        if (mode == "dv") 1.0 else maxDirty, note)
-    val current = readEntries(spark, root, schema, rewrite,
-      pendingEqDels(spark, root, base))
+      return applyCdcBatchMoR(spark, root, snap, batch, key, opCol,
+        nBuckets, rewrite, carry, if (mode == "dv") 1.0 else maxDirty, note)
+    val current = readEntries(spark, root, schema, rewrite, snap.eqdels)
     val cols = schema.fieldNames
     // 'upsert' merges column-wise (NULL batch cell keeps the target's
     // value — the partial-update CDC contract); 'replace' writes the
@@ -2950,17 +3035,15 @@ object GraftTable {
         when(col(rep) === true, col(s"b.$c"))
           .otherwise(coalesce(col(s"b.$c"), col(s"t.$c"))).as(c)): _*)
       .join(dels, col(key) === col("__delkey"), "left_anti")
-    val v = base + 1
+    val v = snap.next
     val w = writeDataFiles(spark, root, v, merged, key,
-      writeBuckets(spark, root, base, nBuckets, rewrite.size))
-    val (f, _) = fs(root, spark)
-    commitManifest(f, root, v, carry ++ w.entries,
-      statLines = w.statLines, kmvLines = w.kmvLines, note = note)
+      writeBuckets(spark, root, snap.version, nBuckets, rewrite.size))
+    commitWritten(spark, root, v, carry, w, note = note)
     (v, rewrite.size, carry.size)
   }
 
   /** MERGE-ON-READ CDC apply (the `dv`/`auto` half of
-    * [[applyCdcBatchOnce]]): matched rows retire their OLD POSITION
+    * [[applyCdcAttempt]]): matched rows retire their OLD POSITION
     * via a deletion-vector sidecar (delete and update alike — an
     * update is delete + insert, the Iceberg MoR shape); postimages,
     * column-wise upsert merges, and plain inserts land in FRESH data
@@ -2970,18 +3053,13 @@ object GraftTable {
     * drops. ONE commit; at 100 TB a k-row MERGE writes O(k) positions
     * + O(k) fresh rows, never the touched files' bytes. */
   private def applyCdcBatchMoR(spark: SparkSession, root: String,
-      batch: DataFrame, key: String, opCol: String, nBuckets: Int,
-      schema: StructType, hit: Seq[FileEntry], carry: Seq[FileEntry],
-      base: Int, maxDirty: Double,
-      note: Option[String] = None): (Int, Int, Int) = {
-    val v = base + 1
-    val (f, _) = fs(root, spark)
-    def nameOf(e: FileEntry) =
-      new org.apache.hadoop.fs.Path(e.relPath).getName
-    val cols = schema.fieldNames
+      snap: TableSnapshot, batch: DataFrame, key: String, opCol: String,
+      nBuckets: Int, hit: Seq[FileEntry], carry: Seq[FileEntry],
+      maxDirty: Double, note: Option[String]): (Int, Int, Int) = {
+    val v = snap.next
+    val cols = snap.schema.fieldNames
     val tMark = "__graft_t"; val bMark = "__graft_b"
-    val old = readMaskedWithName(spark, root, schema, hit,
-      pendingEqDels(spark, root, base))
+    val old = readMaskedWithName(spark, root, snap.schema, hit, snap.eqdels)
       .withColumn(tMark, lit(true)).as("t")
     val b = batch.withColumn(bMark, lit(true)).as("b")
     // ONE evaluation feeds the counts, the sidecars, AND the written
@@ -3035,28 +3113,12 @@ object GraftTable {
       // an all-delete batch writes zero data files and the schema-
       // pinned read-back yields an empty ledger (readBack contract)
       val w = writeDataFiles(spark, root, v, writeRows, key,
-        writeBuckets(spark, root, base, nBuckets, nRetired))
-      val dvUpdated: Seq[FileEntry] =
-        if (dv.isEmpty) Seq.empty
-        else {
-          val dvNames = dv.map(nameOf)
-          val pos0 = j.filter(matched && col(DvNameCol).isin(dvNames: _*))
-            .select(col(DvNameCol), col(DvPosCol)).distinct()
-          val priorDvd = dv.filter(_.hasDv)
-          val allPos =
-            if (priorDvd.isEmpty) pos0
-            else pos0.unionByName(
-              dvPositions(spark, root, priorDvd, forJoin = false)
-                .select(col(DvNameCol), col(DvPosCol)))
-          val dvRel = f"data/dv-v$v%05d-" +
-            java.util.UUID.randomUUID().toString.take(8)
-          writeDvSidecars(spark, s"$root/$dvRel", allPos)
-          dv.map(e => e.copy(dvPath = s"$dvRel/${nameOf(e)}.dv",
-            dvRows = e.dvRows + touched(nameOf(e))))
-        }
-      commitManifest(f, root, v,
-        carry ++ hitClean ++ dvUpdated ++ w.entries,
-        statLines = w.statLines, kmvLines = w.kmvLines, note = note)
+        writeBuckets(spark, root, snap.version, nBuckets, nRetired))
+      val dvUpdated = foldDvs(spark, root, v, dv,
+        j.filter(matched).select(col(DvNameCol), col(DvPosCol)).distinct(),
+        touched)
+      commitWritten(spark, root, v, carry ++ hitClean ++ dvUpdated, w,
+        note = note)
       (v, cow.size, carry.size + hitClean.size + dv.size)
     } finally j.unpersist()
   }
@@ -3073,89 +3135,33 @@ object GraftTable {
     * the rewritten files (the WAP granularity that stays batch-sized
     * at 100 TB — table-wide invariants belong in a scheduled audit,
     * not the write path), and all checks fold into ONE aggregation
-    * pass. Returns Right((version, rewritten, carried)) on publish,
-    * Left(violations per failing check) on rejection. */
+    * pass. It is [[upsert]]'s attempt with that audit before the
+    * publish, under the same commit core. Returns
+    * Right((version, rewritten, carried)) on publish, Left(violations
+    * per failing check) on rejection. */
   def auditedUpsert(spark: SparkSession, root: String, batch: DataFrame,
       key: String, checks: Seq[(String, org.apache.spark.sql.Column)],
       nBuckets: Int = 8): Either[Map[String, Long], (Int, Int, Int)] = {
     require(checks.nonEmpty, "auditedUpsert without checks is upsert")
-    val base = latestVersion(spark, root)
-    val entries = loadManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
-    require(batch.schema.fieldNames.sorted.sameElements(schema.fieldNames.sorted),
-      "batch schema must match table schema")
-    import spark.implicits._
-    val ledger = entries.map(e => (e.relPath, e.minKey, e.maxKey))
-      .toDF("rel_path", "mn", "mx")
-    val (hit, _) = probeHitFiles(batch,
-      keyStatExpr(col(key), keyHashMode(spark, root)), ledger)
-    val (rewrite, carry) = entries.partition(e => hit(e.relPath))
-    val current = readEntries(spark, root, schema, rewrite,
-      pendingEqDels(spark, root, base))
-    val cols = schema.fieldNames
-    val t = current.as("t"); val b = batch.as("b")
-    val merged = t.join(b, col(s"t.$key") === col(s"b.$key"), "full_outer")
-      .select(cols.map(c =>
-        coalesce(col(s"b.$c"), col(s"t.$c")).as(c)): _*)
-    val v = base + 1
-    // WRITE (stage): files land under an attempt-unique dir, reachable
-    // only through a manifest that may never be published
-    val w = writeDataFiles(spark, root, v, merged, key,
-      writeBuckets(spark, root, base, nBuckets, rewrite.size))
-    val fresh = w.entries
-    // AUDIT: every check in one aggregation over the staged files
-    val staged = readEntriesNoEq(spark, root, schema, fresh)
-    val aggs = checks.map { case (name, pred) =>
-      sum(when(pred.isNull || !pred, 1L).otherwise(0L)).as(name)
-    }
-    val counts = staged.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val violations = checks.zipWithIndex.collect {
-      case ((name, _), i) if counts.getLong(i) > 0 => name -> counts.getLong(i)
-    }.toMap
-    if (violations.nonEmpty) Left(violations)
-    else {
-      // PUBLISH: the create-if-absent manifest rename, as every commit
-      val (f, _) = fs(root, spark)
-      commitManifest(f, root, v, carry ++ fresh,
-        statLines = w.statLines, kmvLines = w.kmvLines)
-      Right((v, rewrite.size, carry.size))
-    }
+    try Right(batchCommit(spark, root, batch, Some(Seq.empty),
+      cacheBatch = true, CommitRetries)(
+      upsertAttempt(spark, root, _, _, key, nBuckets, checks = checks)))
+    catch { case r: AuditRejected => Left(r.violations) }
   }
 
   /** Copy-on-write delete: rewrite only the files that CONTAIN a
     * matching row (found with one snapshot scan grouped by
-    * `input_file_name` — metadata-sized result), carry the rest.
-    * Returns (newVersion, nFilesRewritten, nFilesCarried). */
+    * `input_file_name` — metadata-sized result), carry the rest. It
+    * is [[deleteWhereHybrid]] at `maxDirty = 0.0`: every touched file
+    * that keeps a live row rewrites, none takes a DV. Single attempt.
+    * Returns (newVersion, nFilesRewritten, nFilesCarried); a fully
+    * emptied file counts as rewritten. */
   def deleteWhere(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column,
       key: String): (Int, Int, Int) = {
-    val base = latestVersion(spark, root)
-    val entries = loadManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
-    // hit detection over the MASKED rows: a row already deleted by a
-    // DV must neither trigger a rewrite nor — worse — survive the
-    // keep-filter below and resurrect
-    val hit: Set[String] =
-      if (entries.isEmpty) Set.empty
-      else readMaskedWithName(spark, root, schema, entries,
-          pendingEqDels(spark, root, base))
-        .filter(predicate)
-        .select(col(DvNameCol)).distinct()
-        .collect().map(_.getString(0)).toSet
-    val (rewrite, carry) =
-      entries.partition(e => hit(new org.apache.hadoop.fs.Path(e.relPath).getName))
-    val v = base + 1
-    val w =
-      if (rewrite.isEmpty) Written(Seq.empty, Seq.empty)
-      else writeDataFiles(spark, root, v,
-        readEntries(spark, root, schema, rewrite,
-          pendingEqDels(spark, root, base))
-          .filter(!predicate || predicate.isNull),
-        key, math.max(1, rewrite.size))
-    val (f, _) = fs(root, spark)
-    commitManifest(f, root, v, carry ++ w.entries,
-      statLines = w.statLines, kmvLines = w.kmvLines)
-    (v, rewrite.size, carry.size)
+    val (v, _, rewritten, dead, carried) =
+      deleteWhereHybrid(spark, root, predicate, key, maxDirty = 0.0)
+    (v, rewritten + dead, carried)
   }
 
   /** MERGE-ON-READ delete: commit DELETION VECTORS for the rows
@@ -3174,72 +3180,16 @@ object GraftTable {
     * rewrites. Metadata-exact aggregate serving degrades honestly on
     * DV'd files (count stays exact from `nRows − dvRows`; min/max/
     * null/sum answers refuse and fall back to the scan).
-    * Returns (newVersion, nFilesDvd, nFilesCarried). */
+    * It is [[deleteWhereHybrid]] at `maxDirty = 1.0`: a live file's
+    * dirty ratio is always below 1, so nothing rewrites (and no key is
+    * needed).
+    * Returns (newVersion, nFilesDvd, nFilesCarried); a fully emptied
+    * file counts as DV'd. */
   def deleteWhereDv(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column): (Int, Int, Int) = {
-    val base = latestVersion(spark, root)
-    val entries = loadManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
-    val v = base + 1
-    val (f, _) = fs(root, spark)
-    if (entries.isEmpty) {
-      commitManifest(f, root, v, entries)
-      return (v, 0, 0)
-    }
-    val byName = entries.map(e =>
-      new org.apache.hadoop.fs.Path(e.relPath).getName -> e).toMap
-    // the NEW deletions: masked rows (already-deleted positions can't
-    // re-delete) matching the predicate, as (fileName, position) —
-    // FALSE-or-NULL rows survive, the SQL DELETE rule
-    val masked = readMaskedWithName(spark, root, schema, entries,
-      pendingEqDels(spark, root, base))
-    // persist: ONE evaluation must feed both the per-file counts and
-    // the sidecar contents — with a nondeterministic predicate (e.g.
-    // rand()-sampled erasure) two runs could diverge, committing
-    // manifest dvRows that disagree with the sidecars' actual
-    // positions, which would corrupt the metadata-exact count(*)
-    // (liveRows) pushdown
-    val newDel = masked.filter(predicate)
-      .select(col(DvNameCol), col(DvPosCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // per-file deletion counts: metadata-sized (≤ one row per file)
-      val newCounts = newDel.groupBy(DvNameCol).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (newCounts.isEmpty) { // nothing matched: metadata-only commit
-        commitManifest(f, root, v, entries)
-        return (v, 0, entries.size)
-      }
-      val hitEntries = entries.filter(e =>
-        newCounts.contains(new org.apache.hadoop.fs.Path(e.relPath).getName))
-      // fresh DV = new positions ∪ the hit files' EXISTING DV positions
-      // (a sidecar fully describes its file's deletions — readers never
-      // chain DVs)
-      val priorDvd = hitEntries.filter(_.hasDv)
-      val allPos =
-        if (priorDvd.isEmpty) newDel
-        else newDel.unionByName(
-          dvPositions(spark, root, priorDvd, forJoin = false)
-            .select(col(DvNameCol), col(DvPosCol)))
-      val dvRel = f"data/dv-v$v%05d-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      writeDvSidecars(spark, s"$root/$dvRel", allPos)
-      val totals = hitEntries.map { e =>
-        val name = new org.apache.hadoop.fs.Path(e.relPath).getName
-        name -> (newCounts(name) + e.dvRows)
-      }.toMap
-      val updated = entries.flatMap { e =>
-        val name = new org.apache.hadoop.fs.Path(e.relPath).getName
-        totals.get(name) match {
-          case None => Some(e)
-          case Some(total) if total >= e.nRows => None // fully dead file
-          case Some(total) =>
-            Some(e.copy(dvPath = s"$dvRel/$name.dv", dvRows = total))
-        }
-      }
-      commitManifest(f, root, v, updated)
-      (v, hitEntries.size, entries.size - hitEntries.size)
-    } finally newDel.unpersist()
+    val (v, dvd, _, dead, carried) =
+      deleteWhereHybrid(spark, root, predicate, key = "", maxDirty = 1.0)
+    (v, dvd + dead, carried)
   }
 
   /** POLICY-ROUTED delete — what SQL `DELETE FROM` actually hits
@@ -3254,7 +3204,7 @@ object GraftTable {
   def deleteWhereAuto(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column, key: String)
     : (Int, Int, Int, Int) =
-    dmlMode(spark, root) match {
+    dmlMode(tableProperties(spark, root)) match {
       case ("cow", _) =>
         val (v, rw, ca) = deleteWhere(spark, root, predicate, key)
         (v, 0, rw, ca)
@@ -3262,74 +3212,64 @@ object GraftTable {
         val (v, dvd, ca) = deleteWhereDv(spark, root, predicate)
         (v, dvd, 0, ca)
       case (_, maxDirty) =>
-        deleteWhereHybrid(spark, root, predicate, key, maxDirty)
+        val (v, dvd, rw, _, ca) =
+          deleteWhereHybrid(spark, root, predicate, key, maxDirty)
+        (v, dvd, rw, ca)
     }
 
+  /** The per-file dirty-ratio delete, single attempt: drop the fully
+    * dead files, rewrite the files past `maxDirty`, DV the barely
+    * touched. Returns (newVersion, nFilesDvd, nFilesRewritten,
+    * nFilesDropped, nFilesCarried). */
   private def deleteWhereHybrid(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column, key: String,
-      maxDirty: Double): (Int, Int, Int, Int) = {
-    val base = latestVersion(spark, root)
-    val entries = loadManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
-    val v = base + 1
-    val (f, _) = fs(root, spark)
+      maxDirty: Double): (Int, Int, Int, Int, Int) =
+    occCommit(spark, root, maxRetries = 0)(
+      hybridDeleteAttempt(spark, root, _, predicate, key, maxDirty))
+
+  private def hybridDeleteAttempt(spark: SparkSession, root: String,
+      snap: TableSnapshot, predicate: org.apache.spark.sql.Column,
+      key: String, maxDirty: Double): (Int, Int, Int, Int, Int) = {
+    val entries = snap.entries
+    val v = snap.next
     if (entries.isEmpty) {
-      commitManifest(f, root, v, entries)
-      return (v, 0, 0, 0)
+      commitWritten(spark, root, v, entries, NoWrite)
+      return (v, 0, 0, 0, 0)
     }
-    def nameOf(e: FileEntry) =
-      new org.apache.hadoop.fs.Path(e.relPath).getName
-    // ONE evaluation of the predicate feeds the counts, the sidecars,
-    // AND the rewrite survivors (anti-join below) — the
-    // nondeterministic-predicate consistency rule of [[deleteWhereDv]]
-    val newDel = readMaskedWithName(spark, root, schema, entries,
-      pendingEqDels(spark, root, base))
+    // the NEW deletions: masked rows (already-deleted positions can't
+    // re-delete) matching the predicate, as (fileName, position) —
+    // FALSE-or-NULL rows survive, the SQL DELETE rule. Persisted: ONE
+    // evaluation of the predicate feeds the counts, the sidecars, AND
+    // the rewrite survivors (anti-join below) — with a
+    // nondeterministic predicate (e.g. rand()-sampled erasure) two
+    // runs could diverge, committing manifest dvRows that disagree
+    // with the sidecars' actual positions, which would corrupt the
+    // metadata-exact count(*) (liveRows) pushdown
+    val newDel = readMaskedWithName(spark, root, snap.schema, entries,
+        snap.eqdels)
       .filter(predicate)
       .select(col(DvNameCol), col(DvPosCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // per-file deletion counts: metadata-sized (≤ one row per file)
       val newCounts = newDel.groupBy(DvNameCol).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (newCounts.isEmpty) { // nothing matched: metadata-only commit
-        commitManifest(f, root, v, entries)
-        return (v, 0, 0, entries.size)
-      }
       val (hit, carried) =
         entries.partition(e => newCounts.contains(nameOf(e)))
-      // classify per file: drop the fully dead, rewrite the mostly
-      // dead, DV the barely touched
       val (dead, alive) = hit.partition(e =>
         newCounts(nameOf(e)) + e.dvRows >= e.nRows)
       val (cow, dv) = alive.partition(e =>
         (newCounts(nameOf(e)) + e.dvRows).toDouble / e.nRows > maxDirty)
-      val dvUpdated: Seq[FileEntry] =
-        if (dv.isEmpty) Seq.empty
-        else {
-          val dvNames = dv.map(nameOf)
-          val pos0 = newDel.filter(col(DvNameCol).isin(dvNames: _*))
-          val priorDvd = dv.filter(_.hasDv)
-          val allPos =
-            if (priorDvd.isEmpty) pos0
-            else pos0.unionByName(
-              dvPositions(spark, root, priorDvd, forJoin = false)
-                .select(col(DvNameCol), col(DvPosCol)))
-          val dvRel = f"data/dv-v$v%05d-" +
-            java.util.UUID.randomUUID().toString.take(8)
-          writeDvSidecars(spark, s"$root/$dvRel", allPos)
-          dv.map(e => e.copy(dvPath = s"$dvRel/${nameOf(e)}.dv",
-            dvRows = e.dvRows + newCounts(nameOf(e))))
-        }
+      val dvUpdated = foldDvs(spark, root, v, dv, newDel, newCounts)
       val w =
-        if (cow.isEmpty) Written(Seq.empty, Seq.empty)
+        if (cow.isEmpty) NoWrite
         else writeDataFiles(spark, root, v,
-          readMaskedWithName(spark, root, schema, cow,
-            pendingEqDels(spark, root, base))
+          readMaskedWithName(spark, root, snap.schema, cow, snap.eqdels)
             .join(newDel, Seq(DvNameCol, DvPosCol), "left_anti")
             .drop(DvNameCol, DvPosCol),
           key, math.max(1, cow.size))
-      commitManifest(f, root, v, carried ++ dvUpdated ++ w.entries,
-        statLines = w.statLines, kmvLines = w.kmvLines)
-      (v, dv.size, cow.size, carried.size)
+      commitWritten(spark, root, v, carried ++ dvUpdated, w)
+      (v, dv.size, cow.size, dead.size, carried.size)
     } finally newDel.unpersist()
   }
 
@@ -3604,7 +3544,7 @@ object GraftTable {
     * (column-wise coalesce merge). */
   def insertBatch(spark: SparkSession, root: String, batch: DataFrame,
       key: String, nBuckets: Int = 8): Unit = {
-    val (mode, _) = dmlMode(spark, root)
+    val (mode, _) = dmlMode(tableProperties(spark, root))
     // micro-batch batches are trivial scans of the trigger's files —
     // re-scanning them per probe beats caching them per commit
     // (measured on the sink gates, see OPTIMIZATION_r18.md)
@@ -3955,8 +3895,7 @@ object GraftTable {
     * copy-on-write everywhere — REQUIRED for right-to-erasure
     * workflows (q249), where physically removing the bytes is the
     * point and a DV would leave them readable in the data file. */
-  private def dmlMode(spark: SparkSession, root: String): (String, Double) = {
-    val props = tableProperties(spark, root)
+  private def dmlMode(props: Map[String, String]): (String, Double) = {
     val mode = props.getOrElse("graft.dml.mode", "auto").toLowerCase
     require(Set("cow", "dv", "auto")(mode),
       s"graft.dml.mode must be cow | dv | auto, got '$mode'")
@@ -5194,8 +5133,7 @@ object GraftTable {
       .agg(min(col(c1).cast("long")).as("mn1"), max(col(c1).cast("long")).as("mx1"),
         min(col(c2).cast("long")).as("mn2"), max(col(c2).cast("long")).as("mx2"))
       .collect()
-    val byName = fresh.map(e =>
-      new org.apache.hadoop.fs.Path(e.relPath).getName -> e.relPath).toMap
+    val byName = fresh.map(e => nameOf(e) -> e.relPath).toMap
     val lines = stats.flatMap { r =>
       val rel = byName(new org.apache.hadoop.fs.Path(
         new java.net.URI(r.getString(0)).getPath).getName)

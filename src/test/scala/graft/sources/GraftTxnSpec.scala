@@ -16,6 +16,20 @@ class GraftTxnSpec extends SparkSpec {
     (s"$base/dim", s"$base/fact", s"$base/txn")
   }
 
+  /** Age the staged manifest at `v` past the default reap horizon by
+    * back-dating its durable `#commit-ts` header by an hour — what a
+    * coordinator that crashed long ago leaves behind. */
+  private def backdateStaging(root: String, v: Int): Unit = {
+    val p = java.nio.file.Paths.get(root, f"_log/v$v%05d.manifest")
+    val text = new String(Files.readAllBytes(p), "UTF-8")
+    val ts = text.linesIterator.next().split('\t')(1).toLong
+    val aged = text.replaceFirst(s"#commit-ts\t$ts",
+      s"#commit-ts\t${ts - 3600000L}")
+    Files.write(p, aged.getBytes("UTF-8"))
+    // the local filesystem checksums its files: drop the stale .crc
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+  }
+
   private def dim(n: Int) = spark.range(1, n + 1).select(
     $"id".as("k"), concat(lit("p"), $"id").as("name"))
   private def fact(n: Int) = spark.range(1, n + 1).select(
@@ -129,11 +143,10 @@ class GraftTxnSpec extends SparkSpec {
         spark.range(1, 3).select($"id".as("k"), lit(0L).as("product"),
           lit(-9L).as("cents")), "k", 1)))
     // an abandoned staging BLOCKS ordinary writers (serialization, not
-    // silent interleaving)
+    // silent interleaving): a FRESH one survives every retry's reap
     intercept[GraftTable.ConcurrentCommitException] {
       GraftTable.upsert(spark, dimRoot,
-        spark.range(5, 6).select($"id".as("k"), lit("X").as("name")),
-        "k", maxRetries = 0)
+        spark.range(5, 6).select($"id".as("k"), lit("X").as("name")), "k")
     }
     // vacuum during the in-flight window spares the staged files
     GraftTable.vacuum(spark, factRoot, retainVersions = 1)
@@ -187,11 +200,12 @@ class GraftTxnSpec extends SparkSpec {
       GraftTxn.TableWrite(factRoot,
         spark.range(1, 3).select($"id".as("k"), lit(0L).as("product"),
           lit(-1L).as("cents")), "k", 1)))
-    Thread.sleep(50) // age the staging past the (tiny) horizon below
+    backdateStaging(dimRoot, 1)
+    backdateStaging(factRoot, 1)
     // a blocked writer reaps the dead txn itself and lands its commit
     val (v, _, _) = GraftTable.upsert(spark, dimRoot,
       spark.range(1, 2).select($"id".as("k"), lit("MINE").as("name")),
-      "k", nBuckets = 1, staleTxnMs = 1L)
+      "k", nBuckets = 1)
     assert(v === 1)
     assert(GraftTable.read(spark, dimRoot)
       .filter($"name" === "MINE").count() === 1)
@@ -205,8 +219,39 @@ class GraftTxnSpec extends SparkSpec {
     // the txn's OTHER table reaps with the same rule on its next write
     val (fv, _, _) = GraftTable.upsert(spark, factRoot,
       spark.range(1, 2).select($"id".as("k"), lit(9L).as("product"),
-        lit(900L).as("cents")), "k", nBuckets = 1, staleTxnMs = 1L)
+        lit(900L).as("cents")), "k", nBuckets = 1)
     assert(fv === 1)
+    assert(GraftTable.read(spark, factRoot)
+      .filter($"cents" === -1L).count() === 0)
+  }
+
+  test("reapStaleStaging: applyCdcBatch and appendUpsert reap a dead " +
+    "staging before retrying, then land their commits") {
+    val (dimRoot, factRoot, txnDir) = fresh()
+    GraftTable.create(spark, dimRoot, dim(20), "k", nBuckets = 1)
+    GraftTable.create(spark, factRoot, fact(20), "k", nBuckets = 1)
+    GraftTxn.stageAll(spark, txnDir, Seq(
+      GraftTxn.TableWrite(dimRoot,
+        spark.range(1, 3).select($"id".as("k"), lit("GHOST").as("name")),
+        "k", 1),
+      GraftTxn.TableWrite(factRoot,
+        spark.range(1, 3).select($"id".as("k"), lit(0L).as("product"),
+          lit(-1L).as("cents")), "k", 1)))
+    backdateStaging(dimRoot, 1)
+    backdateStaging(factRoot, 1)
+    val (v, _, _) = GraftTable.applyCdcBatch(spark, dimRoot,
+      Seq((1L, "CDC", "replace")).toDF("k", "name", "_op"), "k",
+      nBuckets = 1)
+    assert(v === 1)
+    assert(GraftTable.read(spark, dimRoot)
+      .filter($"name" === "CDC").count() === 1)
+    assert(GraftTable.read(spark, dimRoot)
+      .filter($"name" === "GHOST").count() === 0)
+    val (fv, _) = GraftTable.appendUpsert(spark, factRoot,
+      Seq((1L, 9L, 12345L)).toDF("k", "product", "cents"), "k", nBuckets = 1)
+    assert(fv === 1)
+    assert(GraftTable.read(spark, factRoot)
+      .filter($"cents" === 12345L).count() === 1)
     assert(GraftTable.read(spark, factRoot)
       .filter($"cents" === -1L).count() === 0)
   }
