@@ -35,11 +35,15 @@ object GlobalRank {
   def rowNumber(df: DataFrame, outCol: String, keys: Column*): DataFrame =
     twoPhase(df, outCol, keys, count(lit(1)), row_number())
 
-  /** `dense_rank().over(Window.orderBy(keys))` at scale: offsets count
-    * distinct keys per partition (equal keys never straddle a range
-    * boundary). Output column is LongType. */
+  /** `dense_rank().over(Window.orderBy(keys))` at scale: a partition's
+    * offset contribution is its distinct-key count, which is the
+    * largest local dense rank (equal keys never straddle a range
+    * boundary). Reading it off the pid-clustered local frame costs no
+    * distinct aggregation over the range exchange. Output column is
+    * LongType. */
   def denseRank(df: DataFrame, outCol: String, keys: Column*): DataFrame =
-    twoPhase(df, outCol, keys, count_distinct(struct(keys: _*)), dense_rank())
+    twoPhase(df, outCol, keys, max(col("__local")), dense_rank(),
+      totalOverLocal = true)
 
   /** `rank().over(Window.orderBy(keys))` at scale. The offset for a
     * partition is its preceding ROW count (not distinct keys): rank =
@@ -134,14 +138,18 @@ object GlobalRank {
       .drop("__pid", "__local", "__off")
   }
 
+  /** @param totalOverLocal aggregate `perPartitionTotal` over the
+    *   ranked local frame (it may then read `__local`) instead of over
+    *   the range-partitioned input. */
   private def twoPhase(df: DataFrame, outCol: String, keys: Seq[Column],
-                       perPartitionTotal: Column, localRank: Column): DataFrame = {
+                       perPartitionTotal: Column, localRank: Column,
+                       totalOverLocal: Boolean = false): DataFrame = {
     requireExchangeReuse(df)
     val parted = df.repartitionByRange(keys: _*)
       .withColumn("__pid", spark_partition_id())
     val local = parted.withColumn("__local",
       localRank.over(Window.partitionBy(col("__pid")).orderBy(keys: _*)))
-    val offsets = parted
+    val offsets = (if (totalOverLocal) local else parted)
       .groupBy(col("__pid")).agg(perPartitionTotal.cast("long").as("__cnt"))
       // unpartitioned Window over one row per shuffle partition — the
       // log's "No Partition Defined" warning here is expected; see

@@ -97,4 +97,35 @@ class GlobalRankSpec extends SparkSpec {
     // sorts the full input on a single partition
     assert(windowLines.forall(_.contains("__pid")), windowLines.mkString("\n"))
   }
+
+  test("AQE-coalesced range partitions: local ranks and offsets agree") {
+    // a few hundred rows over 64 range partitions: AQE coalesces the
+    // reads, so the local branch and the offsets branch must see the
+    // same (coalesced) partition ids
+    val small = rows.take(300).toDF("id", "key", "v").repartition(4)
+    // collects `d` itself, so its executed plan is the final one
+    def byId(d: org.apache.spark.sql.DataFrame, c: String) =
+      d.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long](c)).toMap
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try {
+      val rn = GlobalRank.rowNumber(small, "x", col("key"), col("id"))
+      assert(byId(rn, "x") === byId(small.withColumn("x",
+        row_number().over(Window.orderBy("key", "id")).cast("long")), "x"))
+      assert(rn.queryExecution.executedPlan.toString.contains("coalesced"),
+        rn.queryExecution.executedPlan.toString)
+      assert(byId(GlobalRank.denseRank(small, "x", col("key")), "x") ===
+        byId(small.withColumn("x",
+          dense_rank().over(Window.orderBy("key")).cast("long")), "x"))
+      assert(byId(GlobalRank.rank(small, "x", col("key")), "x") ===
+        byId(small.withColumn("x",
+          rank().over(Window.orderBy("key")).cast("long")), "x"))
+      assert(byId(GlobalRank.exclusiveCumSum(small, "x", col("v"),
+          col("key"), col("id")), "x") ===
+        byId(small.withColumn("x", coalesce(sum("v").over(
+          Window.orderBy("key", "id")
+            .rowsBetween(Window.unboundedPreceding, -1)).cast("long"),
+          lit(0L))), "x"))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+  }
 }

@@ -492,4 +492,40 @@ class PlanAuditSpec extends SparkSpec {
       assert(p.contains("rangepartitioning"), s"$q:\n$p")
     }
   }
+
+  test("LocationDim: three flat level ranks, none over street_id, every " +
+    "window on __pid") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val in = Seq(
+      ("1 Main St", "Portland", "OR", "97035"),
+      ("1 Main St", "Portland", "ME", "04101"),
+      ("2 Elm St", "Portland", "ME", "04102"),
+      ("1 Main St", "Austin", "TX", "73301"),
+      ("9 Oak Ave", "Boston", "MA", "02215")
+    ).toDF("street", "city", "state", "postal")
+    val out = graft.pipeline.LocationDim(in)
+    out.collect()
+    val helper = new AdaptiveSparkPlanHelper {}
+    def ranges(plan: SparkPlan): Seq[ShuffleExchangeExec] = helper.collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    val exchanges = ranges(out.queryExecution.executedPlan)
+    val keyLists = exchanges.map(_.outputPartitioning
+      .asInstanceOf[RangePartitioning].ordering
+      .map(_.child.asInstanceOf[Attribute].name)).toSet
+    // the old fourth rank ranged over street_id
+    assert(keyLists === Set(Seq("state", "postal"),
+      Seq("city", "state", "postal"), Seq("street", "city", "state", "postal")))
+    // a nested rank range-partitions a plan that holds the level below
+    exchanges.foreach(e => assert(ranges(e.child).isEmpty, e.treeString))
+    val p = out.queryExecution.executedPlan.toString
+    val windows = p.linesIterator.filter(_.contains("Window")).toSeq
+    assert(windows.nonEmpty, p)
+    assert(windows.forall(_.contains("__pid")), windows.mkString("\n"))
+  }
 }
