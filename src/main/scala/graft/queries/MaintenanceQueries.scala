@@ -2517,7 +2517,7 @@ object MaintenanceQueries {
       val merge = s.range(lo + n - 10, lo + n).select(col("id").as("k"),
         lit(null).cast("string").as("name"), lit(-1L).as("cents"))
       val (v, rewritten, carried) = GraftTable.optimizeWithHook(s, root,
-        "k", targetRows = 2 * block, maxRebases = 2,
+        "k", targetRows = 2 * block,
         beforeCommit = () => {
           GraftTable.upsert(s, root, merge, "k", nBuckets = 1); () })
       GraftTable.read(s, root)

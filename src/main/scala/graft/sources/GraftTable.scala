@@ -298,24 +298,37 @@ object GraftTable {
     * on the spot; vacuum reaps crash orphans). This replaces the old
     * sweep-then-quarantine machinery, whose pre-delete let a losing
     * DDL writer replace a winner's already-staged sidecar in the
-    * window before the winner's manifest rename. */
-  private def commitManifest(f: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Int, entries: Seq[FileEntry],
+    * window before the winner's manifest rename.
+    *
+    * `eqdels` is the pending equality-delete set the new version
+    * carries — the caller's snapshot's, unless the commit changes it
+    * (appendUpsert adds, resolveEqDels clears, a full rewrite drops):
+    * a plain upsert/OPTIMIZE between an eqdel ingest and its resolve
+    * must not silently un-delete keys. `branch` publishes into that
+    * branch's own lineage directory instead of `_log` — same names,
+    * same protocol. */
+  private def commitManifest(spark: SparkSession,
+      root: String, v: Int, entries: Seq[FileEntry], eqdels: Seq[EqDel],
       schemaJson: Option[String] = None,
       statLines: Seq[String] = Seq.empty,
       kmvLines: Seq[String] = Seq.empty,
       partitionJson: Option[String] = None,
       txn: Option[TxnRef] = None,
       beforePublish: () => Unit = () => (),
-      eqdels: Option[Seq[EqDel]] = None,
       layoutJson: Option[String] = None,
-      note: Option[String] = None): Unit = {
+      note: Option[String] = None,
+      branch: Option[String] = None): Unit = {
     require(note.forall(n => !n.exists(c => c == '\t' || c == '\n') &&
       n.length <= 120), "manifest note must be one short tab-free line")
+    val (f, _) = fs(root, spark)
+    val log = branch.fold(new org.apache.hadoop.fs.Path(root, "_log"))(
+      branchDir(root, _))
+    def in(p: org.apache.hadoop.fs.Path) =
+      new org.apache.hadoop.fs.Path(log, p.getName)
     val tok = newToken()
     val staged = scala.collection.mutable.ListBuffer[org.apache.hadoop.fs.Path]()
     def stage(p: org.apache.hadoop.fs.Path, content: String): Unit = {
-      writeAtomic(f, p, content); staged += p
+      writeAtomic(f, in(p), content); staged += in(p)
     }
     try {
       schemaJson.foreach(s => stage(schemaSidecarPath(root, v, Some(tok)), s))
@@ -342,21 +355,14 @@ object GraftTable {
       // otherwise let a later version record an earlier instant and
       // make the search resolve the wrong snapshot. v−1 always exists
       // here (we commit latest+1 and vacuum keeps a contiguous tail).
-      val prevInstant =
-        if (v == 0 || !f.exists(manifestPath(root, v - 1))) Long.MinValue
-        else commitInstant(f, root, v - 1)
-      val instant = math.max(prevInstant + 1, System.currentTimeMillis())
-      // pending EQUALITY DELETES carry forward by default (None): a
-      // plain upsert/OPTIMIZE between an eqdel ingest and its resolve
-      // must not silently un-delete keys. Writers that change the set
-      // (appendUpsert adds, resolveEqDels clears) pass it explicitly.
-      val eqLines = eqdels.getOrElse {
-        if (v == 0 || !f.exists(manifestPath(root, v - 1))) Seq.empty
-        else parseEqDels(readFully(f, manifestPath(root, v - 1)))
-      }.map(e => s"#eqdel\t${e.version}\t${e.relDir}\t${e.nKeys}\n")
-        .mkString
+      val prev = if (v == 0) None
+        else Some(in(manifestPath(root, v - 1))).filter(f.exists)
+      val instant = math.max(prev.fold(Long.MinValue)(commitInstant(f, _) + 1),
+        System.currentTimeMillis())
       // eqdel lines go LAST: #sidecar/#txn are resolved via bounded
       // readHead probes and must stay within the first bytes
+      val eqLines = eqdels
+        .map(e => s"#eqdel\t${e.version}\t${e.relDir}\t${e.nKeys}\n").mkString
       // `#note` is a free-form single-line marker readers skip like
       // any # line; writers use it to RECOGNIZE their own commit after
       // losing a version race (the MV refresh window id) — kept short
@@ -364,7 +370,7 @@ object GraftTable {
       val header = s"#commit-ts\t$instant\n#sidecar\t$tok\n" +
         note.map(n => s"#note\t$n\n").getOrElse("") +
         txn.map(t => s"#txn\t${t.id}\t${t.dir}\n").getOrElse("") + eqLines
-      writeAtomic(f, manifestPath(root, v), header + renderManifest(entries))
+      writeAtomic(f, in(manifestPath(root, v)), header + renderManifest(entries))
       commitEpoch.incrementAndGet()
     } catch {
       case e: Throwable =>
@@ -488,7 +494,7 @@ object GraftTable {
       txnOf(readHead(f, manifestPath(root, v), 512)).foreach {
         case (id, dir) =>
           if (!txnCommitted(f, root, id, dir) &&
-            commitInstantOpt(f, root, v)
+            commitInstantOpt(f, manifestPath(root, v))
               .exists(ts => nowMillis - ts > staleMs)) {
             beforeMarkerRace()
             val marker = new org.apache.hadoop.fs.Path(dir, s"txn-$id.commit")
@@ -578,9 +584,8 @@ object GraftTable {
     * pre-header tables (there the publish rename's mtime WAS the
     * instant). Reads only the first line, never the file ledger. */
   private def commitInstant(f: org.apache.hadoop.fs.FileSystem,
-      root: String, version: Int): Long =
-    commitInstantOpt(f, root, version).getOrElse(
-      f.getFileStatus(manifestPath(root, version)).getModificationTime)
+      p: org.apache.hadoop.fs.Path): Long =
+    commitInstantOpt(f, p).getOrElse(f.getFileStatus(p).getModificationTime)
 
   /** The manifest's first `max` bytes, read with a FILL LOOP: a single
     * `in.read(buf)` may legally return fewer bytes than requested
@@ -605,8 +610,7 @@ object GraftTable {
     * header line that is PRESENT but not fully read (no newline inside
     * the head window) is an error, never a silent mtime fallback. */
   private def commitInstantOpt(f: org.apache.hadoop.fs.FileSystem,
-      root: String, version: Int): Option[Long] = {
-    val p = manifestPath(root, version)
+      p: org.apache.hadoop.fs.Path): Option[Long] = {
     val head = readHead(f, p)
     val nl = head.indexOf('\n')
     if (head.startsWith("#commit-ts\t")) {
@@ -630,7 +634,8 @@ object GraftTable {
     * [[resolveTimestamp]]'s binary search instead). */
   def commitTimestamps(spark: SparkSession, root: String): Seq[(Int, Long)] = {
     val (f, _) = fs(root, spark)
-    committedVersions(f, root).map(v => v -> commitInstant(f, root, v))
+    committedVersions(f, root)
+      .map(v => v -> commitInstant(f, manifestPath(root, v)))
   }
 
   /** `TIMESTAMP AS OF` resolution: the LARGEST version committed at or
@@ -646,6 +651,7 @@ object GraftTable {
     val (f, _) = fs(root, spark)
     val versions = committedVersions(f, root).toIndexedSeq
     if (versions.isEmpty) return None
+    def instant(v: Int) = commitInstant(f, manifestPath(root, v))
     // The binary search is sound only if instants are monotone over
     // versions — guaranteed for header-bearing manifests (commit-time
     // clamp in commitManifest), NOT for legacy pre-header manifests
@@ -654,19 +660,19 @@ object GraftTable {
     // and written by every commit since, so if the OLDEST retained
     // manifest has a header, all of them do; if it doesn't, take the
     // skew-robust linear max-filter instead of the search.
-    if (commitInstantOpt(f, root, versions.head).isEmpty) {
+    if (commitInstantOpt(f, manifestPath(root, versions.head)).isEmpty) {
       return versions
-        .map(v => v -> commitInstant(f, root, v))
+        .map(v => v -> instant(v))
         .filter(_._2 <= tsMillis)
         .maxByOption(_._1).map(_._1)
     }
     var lo = 0
     var hi = versions.length - 1
-    if (commitInstant(f, root, versions(lo)) > tsMillis) return None
+    if (instant(versions(lo)) > tsMillis) return None
     // invariant: instant(versions(lo)) <= tsMillis
     while (lo < hi) {
       val mid = (lo + hi + 1) / 2
-      if (commitInstant(f, root, versions(mid)) <= tsMillis) lo = mid
+      if (instant(versions(mid)) <= tsMillis) lo = mid
       else hi = mid - 1
     }
     Some(versions(lo))
@@ -1038,26 +1044,21 @@ object GraftTable {
     * per-file value ranges — the Iceberg partition-evolution
     * contract. Returns the new version. */
   def setPartitioning(spark: SparkSession, root: String,
-      transform: PartitionTransform): Int = {
-    val base = latestVersion(spark, root)
-    require(base >= 0, s"no graft table at $root")
-    // a hash-layout table may ADOPT a transform (and vice versa): the
-    // composed layout keeps files mono-bucket while splitting each
-    // bucket along the transform value (Iceberg's multi-field spec)
-    require(tableSchema(spark, root, base).fieldNames
-        .contains(transformColumn(transform)),
-      s"partition column '${transformColumn(transform)}' is not in the " +
-        "table schema")
-    val entries = loadManifest(spark, root, base)
-    val v = base + 1
-    val (f, _) = fs(root, spark)
-    // the spec stages inside commitManifest under this attempt's token
-    // name — a race loser's file is self-deleted and could never have
-    // resolved anyway (token-verified resolution)
-    commitManifest(f, root, v, entries,
-      partitionJson = Some(transform.render))
-    v
-  }
+      transform: PartitionTransform): Int =
+    occCommit(spark, root, maxRetries = 0) { snap =>
+      // a hash-layout table may ADOPT a transform (and vice versa): the
+      // composed layout keeps files mono-bucket while splitting each
+      // bucket along the transform value (Iceberg's multi-field spec)
+      require(snap.schema.fieldNames.contains(transformColumn(transform)),
+        s"partition column '${transformColumn(transform)}' is not in the " +
+          "table schema")
+      // the spec stages inside commitManifest under this attempt's token
+      // name — a race loser's file is self-deleted and could never have
+      // resolved anyway (token-verified resolution)
+      commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
+        partitionJson = Some(transform.render))
+      snap.next
+    }
 
   private[sources] def transformColumn(t: PartitionTransform): String = t match {
     case DaysPartition(c) => c
@@ -1895,7 +1896,7 @@ object GraftTable {
     // spec sidecar only publishes WITH v0's manifest below)
     val w = writeDataFiles(spark, root, 0, df, key, nBuckets,
       specOverride = partitioning.map(Some(_)))
-    commitManifest(f, root, 0, w.entries,
+    commitManifest(spark, root, 0, w.entries, Seq.empty,
       statLines = w.statLines, kmvLines = w.kmvLines,
       partitionJson = partitioning.map(_.render))
   }
@@ -1979,7 +1980,7 @@ object GraftTable {
     val cloned = entries.map(e => e.copy(
       relPath = dataPath(srcRoot, e.relPath),
       dvPath = if (e.hasDv) dataPath(srcRoot, e.dvPath) else ""))
-    commitManifest(f, dstRoot, 0, cloned,
+    commitManifest(spark, dstRoot, 0, cloned, Seq.empty,
       statLines = statLines,
       partitionJson = partitionSpec(spark, srcRoot, v).map(_.render))
   }
@@ -2381,13 +2382,24 @@ object GraftTable {
     }
   }
 
-  // ---- COMMIT CORE (the keyed write verbs) ------------------------
+  // ---- COMMIT CORE (every write verb on a live table) -------------
   //
-  // Every keyed write verb is a small plan over two pieces: a
-  // [[TableSnapshot]] resolved once per commit attempt, and ONE
-  // optimistic-concurrency loop ([[occCommit]], with [[batchCommit]]
-  // layering schema alignment and batch-cache ownership on top) — the
-  // Delta `Snapshot` / `OptimisticTransaction` split.
+  // Every verb that publishes a new version of an existing table is a
+  // small plan over two pieces: a [[TableSnapshot]] resolved once per
+  // commit attempt, and ONE optimistic-concurrency loop ([[occCommit]])
+  // — the Delta `Snapshot` / `OptimisticTransaction` split:
+  //   - [[batchCommit]] (schema alignment + batch-cache ownership):
+  //     upsert, auditedUpsert, appendUpsert, applyCdcBatch(At);
+  //   - [[rewriteCommit]] (re-encode inputs once, rebase over a
+  //     disjoint race): optimize, absorbDvs, optimizeZOrder;
+  //   - a retrying body over one snapshot: mergeBranch;
+  //   - single attempt: upsertOnce, resolveEqDels, the delete verbs,
+  //     setPartitioning, setHashBuckets, restore, evolveAddColumns,
+  //     renameColumn, dropColumn — a retry of the layout and schema
+  //     verbs would carry files written under another era.
+  // Only create/cloneTable (version 0), fastForward (a branch replay)
+  // and upsertBranch (a branch lineage) call [[commitManifest]]
+  // directly.
 
   /** The table head one commit attempt plans over: the version, its
     * file entries and pending equality deletes (parsed from ONE read
@@ -2422,7 +2434,9 @@ object GraftTable {
     * the attempt throw [[ConcurrentCommitException]]; up to
     * `maxRetries` times the verb then redoes its plan against the
     * WINNER's snapshot — the retrying verbs are per-key over the
-    * current head, so the redo is correct whatever the winner changed.
+    * current head, or re-check against it what their plan depends on
+    * ([[rewriteCommit]], [[mergeBranch]]), so the redo is correct
+    * whatever the winner changed.
     * Before every retry a collision against an ABANDONED cross-table
     * staging is reaped past [[StaleTxnMs]] (the abort is an atomic
     * marker race — a live coordinator still wins). ONLY the
@@ -2478,14 +2492,55 @@ object GraftTable {
   private val NoWrite = Written(Seq.empty, Seq.empty)
 
   /** Publish `carried` plus the files `w` wrote (with their stats
-    * sidecar lines) as version `v`. */
-  private def commitWritten(spark: SparkSession, root: String, v: Int,
-      carried: Seq[FileEntry], w: Written, txn: Option[TxnRef] = None,
-      note: Option[String] = None,
-      eqdels: Option[Seq[EqDel]] = None): Unit = {
-    val (f, _) = fs(root, spark)
-    commitManifest(f, root, v, carried ++ w.entries, statLines = w.statLines,
-      kmvLines = w.kmvLines, txn = txn, note = note, eqdels = eqdels)
+    * sidecar lines) as `snap`'s next version, carrying `snap`'s pending
+    * eqdels unless `eqdels` replaces them. */
+  private def commitWritten(spark: SparkSession, root: String,
+      snap: TableSnapshot, carried: Seq[FileEntry], w: Written,
+      txn: Option[TxnRef] = None, note: Option[String] = None,
+      eqdels: Option[Seq[EqDel]] = None): Unit =
+    commitManifest(spark, root, snap.next, carried ++ w.entries,
+      eqdels.getOrElse(snap.eqdels), statLines = w.statLines,
+      kmvLines = w.kmvLines, txn = txn, note = note)
+
+  /** THE REWRITE COMMIT of the maintenance verbs ([[optimize]],
+    * [[absorbDvs]], [[optimizeZOrder]]): `write` re-encodes the masked
+    * rows of `inputs` (files of `snap`) ONCE, `beforeCommit` runs (the
+    * test seam a concurrent committer races into), and the commit
+    * publishes `head − inputs + written`. A rewrite only re-encodes its
+    * inputs' rows, so a racing commit is resolved by overlap (the Delta
+    * conflict matrix, compaction row):
+    *   - every input `(relPath, dvPath)` still live at the new head and
+    *     the head's pending eqdels equal to `snap`'s → REBASE onto the
+    *     head, zero data re-I/O (the stats sidecar re-pins at the
+    *     rebased version);
+    *   - otherwise the staged output is STALE: an input was rewritten
+    *     or DV'd, or an eqdel landed that the output was written
+    *     without (the fresh files are named after `snap`'s next
+    *     version, so an eqdel committed AT that version never masks
+    *     them) → clean [[ConcurrentCommitException]], head untouched,
+    *     staged files left as vacuum-swept orphans.
+    * The racer's update is never lost in either arm. Returns
+    * (newVersion, nFilesWritten, nFilesCarried). */
+  private def rewriteCommit(spark: SparkSession, root: String,
+      snap: TableSnapshot, inputs: Seq[FileEntry],
+      beforeCommit: () => Unit = () => ())(
+      write: DataFrame => Written): (Int, Int, Int) = {
+    val w = write(readEntries(spark, root, snap.schema, inputs, snap.eqdels))
+    beforeCommit()
+    val ids = inputs.map(e => (e.relPath, e.dvPath)).toSet
+    occCommit(spark, root, CommitRetries, Some(snap)) { head =>
+      val live = head.entries.map(e => (e.relPath, e.dvPath)).toSet
+      if (!ids.forall(live) || head.eqdels != snap.eqdels)
+        throw new ConcurrentCommitException(
+          s"OPTIMIZE conflicts with a concurrent commit at $root: " +
+            "compaction input files were rewritten or removed, or new " +
+            "equality deletes landed — aborting cleanly (head " +
+            "unchanged; staged files are vacuum-swept orphans). Re-run " +
+            "OPTIMIZE against the new snapshot.")
+      val carried = head.entries.filterNot(e => ids((e.relPath, e.dvPath)))
+      commitWritten(spark, root, head, carried, w)
+      (head.next, w.entries.size, carried.size)
+    }
   }
 
   /** The data file name of an entry — the key DV sidecars and the
@@ -2684,7 +2739,7 @@ object GraftTable {
       if (violations.nonEmpty) throw new AuditRejected(violations)
     }
     // PUBLISH: the create-if-absent manifest rename, as every commit
-    commitWritten(spark, root, v, carry, w, txn = txn)
+    commitWritten(spark, root, snap, carry, w, txn = txn)
     (v, rewrite.size, carry.size)
   }
 
@@ -2793,7 +2848,7 @@ object GraftTable {
     }
     val pend = snap.eqdels ++
       (if (nKeys > 0) Seq(EqDel(v, eqRel, nKeys)) else Seq.empty)
-    commitWritten(spark, root, v, snap.entries, w, eqdels = Some(pend))
+    commitWritten(spark, root, snap, snap.entries, w, eqdels = Some(pend))
     (v, nKeys)
   }
 
@@ -2824,7 +2879,7 @@ object GraftTable {
     val v = snap.next
     if (subject.isEmpty) { // stale pending list (e.g. full rewrite
       // since) — clear it with a metadata-only commit
-      commitWritten(spark, root, v, entries, NoWrite, eqdels = Some(Seq.empty))
+      commitWritten(spark, root, snap, entries, NoWrite, eqdels = Some(Seq.empty))
       return (v, 0, 0L)
     }
     import spark.implicits._
@@ -2843,7 +2898,7 @@ object GraftTable {
       .select("__f").distinct().collect().map(_.getString(0)).toSet
     val hit = subject.filter(e => hitNames(nameOf(e)))
     if (hit.isEmpty) {
-      commitWritten(spark, root, v, entries, NoWrite, eqdels = Some(Seq.empty))
+      commitWritten(spark, root, snap, entries, NoWrite, eqdels = Some(Seq.empty))
       return (v, 0, 0L)
     }
     // positions of doomed rows in hit files: raw read with per-file
@@ -2884,7 +2939,7 @@ object GraftTable {
       val (refold, kept) =
         alive.partition(e => e.hasDv || counts.contains(nameOf(e)))
       val untouched = entries.filterNot(e => hitNames(nameOf(e)))
-      commitWritten(spark, root, v,
+      commitWritten(spark, root, snap,
         untouched ++ kept ++ foldDvs(spark, root, v, refold, doomed, counts),
         NoWrite, eqdels = Some(Seq.empty))
       (v, hit.size, counts.values.sum)
@@ -2943,10 +2998,10 @@ object GraftTable {
     * Returns (newVersion, nFilesRewritten, nFilesCarried). */
   def applyCdcBatch(spark: SparkSession, root: String, batch: DataFrame,
       key: String, opCol: String = "_op", nBuckets: Int = 8,
-      maxRetries: Int = CommitRetries,
       cacheBatch: Boolean = true): (Int, Int, Int) =
     batchCommit(spark, root, batch, Some(Seq(opCol)), cacheBatch,
-      maxRetries)(applyCdcAttempt(spark, root, _, _, key, opCol, nBuckets))
+      CommitRetries)(applyCdcAttempt(spark, root, _, _, key, opCol,
+        nBuckets))
 
   /** [[applyCdcBatch]] PINNED at exactly `pinVersion` with a `#note`
     * commit marker — single attempt, NO retry: if any commit (racer
@@ -3038,7 +3093,7 @@ object GraftTable {
     val v = snap.next
     val w = writeDataFiles(spark, root, v, merged, key,
       writeBuckets(spark, root, snap.version, nBuckets, rewrite.size))
-    commitWritten(spark, root, v, carry, w, note = note)
+    commitWritten(spark, root, snap, carry, w, note = note)
     (v, rewrite.size, carry.size)
   }
 
@@ -3117,7 +3172,7 @@ object GraftTable {
       val dvUpdated = foldDvs(spark, root, v, dv,
         j.filter(matched).select(col(DvNameCol), col(DvPosCol)).distinct(),
         touched)
-      commitWritten(spark, root, v, carry ++ hitClean ++ dvUpdated, w,
+      commitWritten(spark, root, snap, carry ++ hitClean ++ dvUpdated, w,
         note = note)
       (v, cow.size, carry.size + hitClean.size + dv.size)
     } finally j.unpersist()
@@ -3233,7 +3288,7 @@ object GraftTable {
     val entries = snap.entries
     val v = snap.next
     if (entries.isEmpty) {
-      commitWritten(spark, root, v, entries, NoWrite)
+      commitWritten(spark, root, snap, entries, NoWrite)
       return (v, 0, 0, 0, 0)
     }
     // the NEW deletions: masked rows (already-deleted positions can't
@@ -3268,7 +3323,7 @@ object GraftTable {
             .join(newDel, Seq(DvNameCol, DvPosCol), "left_anti")
             .drop(DvNameCol, DvPosCol),
           key, math.max(1, cow.size))
-      commitWritten(spark, root, v, carried ++ dvUpdated, w)
+      commitWritten(spark, root, snap, carried ++ dvUpdated, w)
       (v, dv.size, cow.size, dead.size, carried.size)
     } finally newDel.unpersist()
   }
@@ -3580,33 +3635,28 @@ object GraftTable {
   def setHashBuckets(spark: SparkSession, root: String, key: String,
       n: Int): Int = {
     require(n >= 1, s"hash layout needs >= 1 bucket, got $n")
-    val base = latestVersion(spark, root)
-    require(base >= 0, s"no table at $root")
-    val schema = tableSchema(spark, root, base)
-    val kt = schema.fields.find(_.name == key).map(_.dataType)
-    require(kt.exists {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }, s"hash layout needs an integral or string key column (got " +
-      s"$key: ${kt.map(_.simpleString).getOrElse("missing")})")
-    val entries = loadManifest(spark, root, base)
-    val rows = readEntries(spark, root, schema, entries,
-      pendingEqDels(spark, root, base))
-    val v = base + 1
-    // an active partition transform composes: the rewrite re-lands
-    // every row mono-bucket AND transform-split (writeDataFiles'
-    // composed arrangement resolves the spec at this version)
-    val w = writeDataFiles(spark, root, v, rows, key, nBuckets = n,
-      layoutOverride = Some(Some(n)))
-    val (f, _) = fs(root, spark)
-    commitManifest(f, root, v, w.entries, statLines = w.statLines,
-      kmvLines = w.kmvLines, eqdels = Some(Seq.empty),
-      layoutJson = Some(s"hash\t$n"))
-    v
+    occCommit(spark, root, maxRetries = 0) { snap =>
+      val kt = snap.schema.fields.find(_.name == key).map(_.dataType)
+      require(kt.exists {
+        case org.apache.spark.sql.types.LongType |
+             org.apache.spark.sql.types.IntegerType |
+             org.apache.spark.sql.types.ShortType |
+             org.apache.spark.sql.types.ByteType |
+             org.apache.spark.sql.types.StringType => true
+        case _ => false
+      }, s"hash layout needs an integral or string key column (got " +
+        s"$key: ${kt.map(_.simpleString).getOrElse("missing")})")
+      // an active partition transform composes: the rewrite re-lands
+      // every row mono-bucket AND transform-split (writeDataFiles'
+      // composed arrangement resolves the spec at this version)
+      val w = writeDataFiles(spark, root, snap.next, readEntries(spark, root,
+        snap.schema, snap.entries, snap.eqdels), key, nBuckets = n,
+        layoutOverride = Some(Some(n)))
+      commitManifest(spark, root, snap.next, w.entries, Seq.empty,
+        statLines = w.statLines, kmvLines = w.kmvLines,
+        layoutJson = Some(s"hash\t$n"))
+      snap.next
+    }
   }
 
   /** OPTIMIZE: bin-pack small files into ~`targetRows`-sized rewrites
@@ -3619,29 +3669,17 @@ object GraftTable {
     * metadata+rewrite operation: logical content is identical before
     * and after, which is exactly what the q221 gate checksums.
     *
-    * CONCURRENCY (the Delta conflict matrix, compaction row): a
-    * commit that lands between our snapshot read and our manifest
-    * publish raises the OCC race. The resolution is decided by FILE
-    * OVERLAP — compaction only re-encodes the rows of its input
-    * files, so:
-    *   - if every input file is STILL LIVE at the new head (the
-    *     concurrent DML touched disjoint files), the staged output is
-    *     still byte-equivalent to live content → REBASE: re-publish
-    *     against the new head (new head's ledger minus our inputs plus
-    *     our outputs; the stats sidecar re-pins at the rebased
-    *     version), zero data re-I/O, up to `maxRebases` times;
-    *   - if any input was rewritten or removed (the DML changed rows
-    *     we compacted), our output is STALE → clean
-    *     [[ConcurrentCommitException]], table head untouched, staged
-    *     files left as vacuum-swept orphans. The DML's update is never
-    *     lost in either arm — compaction either re-expresses live
-    *     bytes or gets out of the way.
+    * CONCURRENCY: a commit that lands between the snapshot read and
+    * the manifest publish is resolved by [[rewriteCommit]] — the
+    * compaction REBASES onto the new head when its input files are all
+    * still live (and no equality delete landed), and aborts with a
+    * clean [[ConcurrentCommitException]] otherwise. The racer's update
+    * is never lost in either arm.
     * Returns (newVersion, nFilesRewritten, nFilesCarried). */
   def optimize(spark: SparkSession, root: String,
-      key: String, targetRows: Long, maxRebases: Int = 2,
+      key: String, targetRows: Long,
       keyRange: Option[(Long, Long)] = None): (Int, Int, Int) =
-    optimizeWithHook(spark, root, key, targetRows, maxRebases, () => (),
-      keyRange)
+    optimizeWithHook(spark, root, key, targetRows, () => (), keyRange)
 
   /** [[optimize]] with a test seam: `beforeCommit` runs after the
     * compacted files are staged and before the manifest publish — the
@@ -3649,20 +3687,16 @@ object GraftTable {
     * interleaving for the concurrency spec/gate; production calls the
     * public form (no-op hook). */
   private[graft] def optimizeWithHook(spark: SparkSession, root: String,
-      key: String, targetRows: Long, maxRebases: Int,
-      beforeCommit: () => Unit,
+      key: String, targetRows: Long, beforeCommit: () => Unit,
       keyRange: Option[(Long, Long)] = None): (Int, Int, Int) = {
-    val base = latestVersion(spark, root)
-    val all = loadManifest(spark, root, base).sortBy(e => (e.minKey, e.relPath))
-    val schema = tableSchema(spark, root, base)
+    val snap = resolveSnapshot(spark, root)
+    val all = snap.entries.sortBy(e => (e.minKey, e.relPath))
     // SCOPED compaction (`keyRange`): only files whose key interval
     // intersects the range participate — the operational shape at
     // 100 TB, where maintenance compacts yesterday's key span, never
     // the table. Everything outside the scope carries untouched.
-    val (entries, outOfScope) = keyRange match {
-      case Some((lo, hi)) =>
-        all.partition(e => e.maxKey >= lo && e.minKey <= hi)
-      case None => (all, Seq.empty[FileEntry])
+    val entries = keyRange.fold(all) { case (lo, hi) =>
+      all.filter(e => e.maxKey >= lo && e.minKey <= hi)
     }
     // contiguous cumulative-row binning (the q186 rule): a file's group
     // is floor(rowsBefore / targetRows). Binning weighs LIVE rows, so
@@ -3674,54 +3708,17 @@ object GraftTable {
     }.groupBy(_._1).values.map(_.map(_._2)).toSeq
     // a group rewrites if it has ≥2 files (bin-packing) OR any DV to
     // ABSORB — merge-on-read deletes materialize here, returning the
-    // file to the clean fast read path and freeing the masked bytes
-    val (compactGroups, singletons) =
-      grouped.partition(g => g.size >= 2 || g.exists(_.hasDv))
-    val carry = singletons.flatten.toSeq ++ outOfScope
-    val rewrite = compactGroups.flatten.toSeq
-    // conflict identity includes the DV: a concurrent merge-on-read
-    // DELETE on one of our inputs makes our staged rewrite stale
-    // exactly like a CoW rewrite of it would
-    val rewriteSet = rewrite.map(e => (e.relPath, e.dvPath)).toSet
-    val v = base + 1
-    val w =
-      if (rewrite.isEmpty) Written(Seq.empty, Seq.empty)
-      else writeDataFiles(spark, root, v,
-        readEntries(spark, root, schema, rewrite,
-          pendingEqDels(spark, root, base)),
-        key, compactGroups.size)
-    beforeCommit()
-    val (f, _) = fs(root, spark)
-    var commitBase = base
-    var carryNow = carry
-    var rebases = 0
-    while (true) {
-      val cv = commitBase + 1
-      try {
-        // commitManifest stages the stat/digest lines fresh at EVERY
-        // attempt (token-named, self-cleaned on loss) — a rebased
-        // commit naturally re-pins them at its version
-        commitManifest(f, root, cv, carryNow ++ w.entries,
-          statLines = w.statLines, kmvLines = w.kmvLines)
-        return (cv, rewrite.size, carryNow.size)
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (rebases >= maxRebases) throw e
-          rebases += 1
-          val nb = latestVersion(spark, root)
-          val ne = loadManifest(spark, root, nb)
-          val live = ne.map(e => (e.relPath, e.dvPath)).toSet
-          if (!rewriteSet.forall(live)) throw new ConcurrentCommitException(
-            s"OPTIMIZE conflicts with a concurrent commit at $root: " +
-              "compaction input files were rewritten or removed — " +
-              "aborting cleanly (head unchanged; staged files are " +
-              "vacuum-swept orphans). Re-run OPTIMIZE against the new " +
-              "snapshot.")
-          commitBase = nb
-          carryNow = ne.filterNot(en => rewriteSet((en.relPath, en.dvPath)))
+    // file to the clean fast read path and freeing the masked bytes;
+    // every other file carries by reference
+    val compactGroups = grouped.filter(g => g.size >= 2 || g.exists(_.hasDv))
+    val rewrite = compactGroups.flatten
+    val (v, _, carried) =
+      rewriteCommit(spark, root, snap, rewrite, beforeCommit) { rows =>
+        if (rewrite.isEmpty) NoWrite
+        else writeDataFiles(spark, root, snap.next, rows, key,
+          compactGroups.size)
       }
-    }
-    sys.error("unreachable")
+    (v, rewrite.size, carried)
   }
 
   /** Version history: (version, nFiles, nRows) from manifests only —
@@ -3756,41 +3753,38 @@ object GraftTable {
     * commit, visible in `history()` and the change feed like any
     * other. Requires the target's manifest to still exist (vacuum's
     * live-set invariant then guarantees its data files do too). */
-  def restore(spark: SparkSession, root: String, toVersion: Int): Int = {
-    val base = latestVersion(spark, root)
-    require(base >= 0, s"no table at $root")
-    require(toVersion >= 0 && toVersion <= base,
-      s"cannot restore to $toVersion: table is at version $base")
-    val (f, _) = fs(root, spark)
-    require(f.exists(manifestPath(root, toVersion)),
-      s"cannot restore to $toVersion: manifest gone (vacuumed) — tag " +
-        "versions you may need to restore to")
-    val entries = loadManifest(spark, root, toVersion)
-    val v = base + 1
-    val restored = tableSchema(spark, root, toVersion)
-    val head = tableSchema(spark, root, base)
-    val wroteSchema = restored != head
-    // LAYOUT drift mirrors schema drift: if a bucket-count evolution
-    // (setHashBuckets) landed between toVersion and head, the restored
-    // entries are mono-bucket files of the OLD count — a head that kept
-    // resolving the NEW count would bucket-prune point probes to the
-    // wrong file ids (silently missing rows) and report a false
-    // outputPartitioning to storage-partitioned joins. Re-pin the
-    // restored era's count as this commit's layout sidecar.
-    val restoredLayout = hashLayout(spark, root, toVersion)
-    val headLayout = hashLayout(spark, root, base)
-    commitManifest(f, root, v, entries,
-      schemaJson = if (wroteSchema) Some(restored.json) else None,
-      // `none` expresses "restored era had NO hash layout" (layout was
-      // ADOPTED after toVersion): it masks both newer sidecars and the
-      // create-time fallback — hashLayout parses any non-`hash` payload
-      // as None, so the head neither bucket-prunes nor reports a
-      // partitioning over the unbucketed restored files
-      layoutJson = if (restoredLayout != headLayout)
-        Some(restoredLayout.map(n => s"hash\t$n").getOrElse("none"))
-      else None)
-    v
-  }
+  def restore(spark: SparkSession, root: String, toVersion: Int): Int =
+    occCommit(spark, root, maxRetries = 0) { snap =>
+      require(toVersion >= 0 && toVersion <= snap.version,
+        s"cannot restore to $toVersion: table is at version ${snap.version}")
+      val (f, _) = fs(root, spark)
+      require(f.exists(manifestPath(root, toVersion)),
+        s"cannot restore to $toVersion: manifest gone (vacuumed) — tag " +
+          "versions you may need to restore to")
+      // the restored version's pending eqdels come back with its files:
+      // the head's would retire keys the restored content still holds
+      val text = manifestText(spark, root, toVersion)
+      val restored = tableSchema(spark, root, toVersion)
+      // LAYOUT drift mirrors schema drift: if a bucket-count evolution
+      // (setHashBuckets) landed between toVersion and head, the restored
+      // entries are mono-bucket files of the OLD count — a head that kept
+      // resolving the NEW count would bucket-prune point probes to the
+      // wrong file ids (silently missing rows) and report a false
+      // outputPartitioning to storage-partitioned joins. Re-pin the
+      // restored era's count as this commit's layout sidecar.
+      val restoredLayout = hashLayout(spark, root, toVersion)
+      commitManifest(spark, root, snap.next, parseManifest(text),
+        parseEqDels(text),
+        schemaJson = if (restored != snap.schema) Some(restored.json) else None,
+        // `none` expresses "restored era had NO hash layout" (layout was
+        // ADOPTED after toVersion): it masks both newer sidecars and the
+        // create-time fallback — hashLayout parses any non-`hash` payload
+        // as None, so the head neither bucket-prunes nor reports a
+        // partitioning over the unbucketed restored files
+        layoutJson = if (restoredLayout == hashLayout(spark, root, snap.version))
+          None else Some(restoredLayout.map(n => s"hash\t$n").getOrElse("none")))
+      snap.next
+    }
 
   /** Named immutable reference to a version (an Iceberg-style TAG):
     * `_log/tag-<name>.json` holds the version number. Tagged versions
@@ -3912,23 +3906,17 @@ object GraftTable {
     * carries by reference. Logical content is unchanged; the payoffs
     * compound — reads lose the anti-join tax, columnar scans return
     * to zero-copy, and metadata answers (exact aggregates, NDV
-    * exactness) sharpen back up. Returns (version, filesAbsorbed,
+    * exactness) sharpen back up. A racing commit is resolved like
+    * OPTIMIZE's ([[rewriteCommit]]). Returns (version, filesAbsorbed,
     * filesCarried); a DV-free table no-ops at the current version. */
   def absorbDvs(spark: SparkSession, root: String, key: String)
     : (Int, Int, Int) = {
-    val base = latestVersion(spark, root)
-    val all = loadManifest(spark, root, base)
-    val (dvd, clean) = all.partition(_.hasDv)
-    if (dvd.isEmpty) return (base, 0, all.size)
-    val schema = tableSchema(spark, root, base)
-    val v = base + 1
-    val w = writeDataFiles(spark, root, v,
-      readEntries(spark, root, schema, dvd,
-        pendingEqDels(spark, root, base)), key, math.max(1, dvd.size))
-    val (f, _) = fs(root, spark)
-    commitManifest(f, root, v, clean ++ w.entries,
-      statLines = w.statLines, kmvLines = w.kmvLines)
-    (v, dvd.size, clean.size)
+    val snap = resolveSnapshot(spark, root)
+    val dvd = snap.entries.filter(_.hasDv)
+    if (dvd.isEmpty) return (snap.version, 0, snap.entries.size)
+    val (v, _, carried) = rewriteCommit(spark, root, snap, dvd)(
+      writeDataFiles(spark, root, snap.next, _, key, dvd.size))
+    (v, dvd.size, carried)
   }
 
   /** AUTOMATED DV ABSORPTION — the table analog of the broker log's
@@ -4141,14 +4129,10 @@ object GraftTable {
     require(batch.schema.fieldNames.sorted
       .sameElements(schema.fieldNames.sorted),
       "batch schema must match the branch's (base-version) schema")
-    val (f, _) = fs(root, spark)
     val bvPrev = branchHeadVersion(spark, root, name)
     val entries = branchEntries(spark, root, name, bvPrev)
-    import spark.implicits._
-    val ledger = entries.map(e => (e.relPath, e.minKey, e.maxKey))
-      .toDF("rel_path", "mn", "mx")
     val (hit, _) = probeHitFiles(batch,
-      keyStatExpr(col(key), keyHashMode(spark, root)), ledger)
+      keyStatExpr(col(key), keyHashMode(spark, root)), hitLedger(spark, entries))
     val (rewrite, carry) = entries.partition(e => hit(e.relPath))
     val current = readEntriesNoEq(spark, root, schema, rewrite)
     val cols = schema.fieldNames
@@ -4161,47 +4145,18 @@ object GraftTable {
     // at `base` — resolving them at base+1 would pick up a rebucket /
     // re-spec that landed as MAIN's first post-fork commit, making
     // branch fresh files bucket mod-NEW while branch reads prune with
-    // the base era (silently missed rows on point lookups). Sidecar
-    // lines stay branch-local (the writeDataFiles contract leaves
-    // staging to the committer — here the branch manifest write below)
+    // the base era (silently missed rows on point lookups)
     val w = writeDataFiles(spark, root, base + 1, merged, key,
       math.max(1, math.min(nBuckets, rewrite.size + 1)),
       specOverride = Some(partitionSpec(spark, root, base)),
       layoutOverride = Some(hashLayout(spark, root, base)))
     val bv = bvPrev + 1
-    f.mkdirs(branchDir(root, name))
-    // the branch commit follows the main-log token protocol: sidecars
-    // stage under THIS attempt's token name (never colliding with a
-    // crashed or racing attempt's), the branch manifest header records
-    // the token, and a loser deletes its own staged files
-    val tok = newToken()
-    val stagedB = scala.collection.mutable.ListBuffer[org.apache.hadoop.fs.Path]()
-    def stageSidecar(kind: String, lines: Seq[String]): Unit =
-      if (lines.nonEmpty) {
-        val p = new org.apache.hadoop.fs.Path(branchDir(root, name),
-          f"$kind-v$bv%05d-$tok.tsv")
-        writeAtomic(f, p, lines.mkString("", "\n", "\n"))
-        stagedB += p
-      }
-    try {
-      stageSidecar("colstats", w.statLines)
-      stageSidecar("kmv", w.kmvLines)
-      // branch commit point: create-if-absent rename, instants clamped
-      // monotone within the branch (same TIMESTAMP-resolution rule)
-      val prevInstant =
-        if (bv <= 1) Long.MinValue
-        else readHead(f, branchManifestPath(root, name, bv - 1), 128)
-          .linesIterator.find(_.startsWith("#commit-ts\t"))
-          .map(_.split('\t')(1).toLong).getOrElse(Long.MinValue)
-      val instant = math.max(prevInstant + 1, System.currentTimeMillis())
-      writeAtomic(f, branchManifestPath(root, name, bv),
-        s"#commit-ts\t$instant\n#sidecar\t$tok\n" +
-          renderManifest(carry ++ w.entries))
-    } catch {
-      case e: Throwable =>
-        stagedB.foreach(p => f.delete(p, false))
-        throw e
-    }
+    fs(root, spark)._1.mkdirs(branchDir(root, name))
+    // the main-log commit protocol, published into the branch's lineage
+    // directory: sidecars stay branch-local, instants monotone within
+    // the branch
+    commitManifest(spark, root, bv, carry ++ w.entries, Seq.empty,
+      statLines = w.statLines, kmvLines = w.kmvLines, branch = Some(name))
     bv
   }
 
@@ -4250,6 +4205,9 @@ object GraftTable {
           "with commits that are not this branch's — rebase the branch " +
           "(or publish through a MERGE) instead")
     }
+    // branches fork without live eqdels; a stale pending list of the
+    // base rides every published version, as any commit's would
+    val baseEq = pendingEqDels(spark, root, base)
     bvs.foreach { bv =>
       val v = base + bv
       val entries = branchEntries(spark, root, name, bv)
@@ -4270,7 +4228,7 @@ object GraftTable {
           if (!f.exists(p)) Seq.empty
           else readFully(f, p).linesIterator.filter(_.nonEmpty).toSeq
         }
-        try commitManifest(f, root, v, entries,
+        try commitManifest(spark, root, v, entries, baseEq,
           statLines = branchLines("colstats"), kmvLines = branchLines("kmv"))
         catch {
           case e: ConcurrentCommitException =>
@@ -4331,10 +4289,14 @@ object GraftTable {
     * the merge refuses with the conflicting-key count — a silent
     * last-writer-wins would lose one side's update. The check (and the
     * deltas) are file-pruned snapshot diffs: O(diverged files), never
-    * a table scan. A main commit racing the merge itself re-checks
-    * conflicts against the new head before retrying (the TOCTOU the
-    * plain OCC retry would miss). Schema divergence (DDL on main since
-    * the base) refuses — the branch writes base-era columns.
+    * a table scan. Each commit attempt checks the schema, derives
+    * main's delta and counts conflicts against ONE snapshot, and
+    * publishes over that same snapshot: a main commit landing after
+    * the snapshot makes the publish lose the race, and the retry
+    * re-checks against the new head ([[occCommit]]) — no conflict
+    * committed during the check can slip through. Schema divergence
+    * (DDL on main since the base) refuses — the branch writes base-era
+    * columns.
     *
     * Returns Left(conflictingKeyCount) on refusal,
     * Right((newMainVersion, changedKeys)) on publish. The clean
@@ -4342,7 +4304,7 @@ object GraftTable {
     * metadata, history preserved); merge collapses the branch into
     * one commit. */
   def mergeBranch(spark: SparkSession, root: String, name: String,
-      nBuckets: Int = 8, maxRetries: Int = 2,
+      nBuckets: Int = 8,
       strategy: String = "refuse"): Either[Long, (Int, Long)] = {
     // `overwrite`: the deliberate escape hatch for a CONFLICTED merge
     // — branch wins on every key it changed (Iceberg cherry-pick
@@ -4380,37 +4342,24 @@ object GraftTable {
       val kStat = keyStatExpr(col(key), keyHashMode(spark, root))
       val branchKeys = batch.select(kStat.as("__k")).distinct()
       val nChanged = branchKeys.count()
-      if (nChanged == 0L)
-        return Right((latestVersion(spark, root), 0L))
-      var attempt = 0
-      while (true) {
-        val mainV = latestVersion(spark, root)
-        require(tableSchema(spark, root, mainV) == schema,
+      if (nChanged == 0L) Right((latestVersion(spark, root), 0L))
+      else occCommit(spark, root, CommitRetries) { snap =>
+        require(snap.schema == schema,
           s"cannot MERGE branch '$name': main's schema changed since " +
             s"base $base — recreate the branch from the current head")
-        // main's own post-base changes: the conflict set
+        // main's own post-base changes up to THIS snapshot: the conflict
+        // set the apply below publishes over
         val (mUps, mDel) = snapshotDelta(spark, root, schema, key,
-          baseEntries, loadManifest(spark, root, mainV),
-          pendingEqDels(spark, root, base),
-          pendingEqDels(spark, root, mainV))
+          baseEntries, snap.entries, pendingEqDels(spark, root, base),
+          snap.eqdels)
         val mainKeys = mUps.select(kStat.as("__k"))
           .unionByName(mDel.select(kStat.as("__k")))
           .distinct()
         val conflicts = branchKeys.join(mainKeys, Seq("__k"), "inner").count()
-        if (conflicts > 0 && strategy != "overwrite") return Left(conflicts)
-        try {
-          val (v, _, _) = applyCdcBatch(spark, root, batch, key, op,
-            nBuckets, maxRetries = 0)
-          return Right((v, nChanged))
-        } catch {
-          // a main commit raced the apply: re-derive main's delta and
-          // RE-CHECK conflicts against the new head before retrying
-          case e: ConcurrentCommitException =>
-            if (attempt >= maxRetries) throw e
-            attempt += 1
-        }
+        if (conflicts > 0 && strategy != "overwrite") Left(conflicts)
+        else Right((applyCdcAttempt(spark, root, snap, batch, key, op,
+          nBuckets)._1, nChanged))
       }
-      sys.error("unreachable")
     } finally batch.unpersist()
   }
 
@@ -4647,49 +4596,36 @@ object GraftTable {
     * column set. Added fields must be nullable (there is no backfill).
     * Returns the new version. */
   def evolveAddColumns(spark: SparkSession, root: String,
-      added: Seq[org.apache.spark.sql.types.StructField]): Int = {
-    val base = latestVersion(spark, root)
-    require(base >= 0, s"no table at $root")
-    val schema = tableSchema(spark, root, base)
-    require(added.nonEmpty && added.forall(_.nullable),
-      "added columns must be nullable")
-    require(added.forall(a => !schema.fieldNames.contains(a.name)),
-      "added column name collides with an existing column")
-    val (f, _) = fs(root, spark)
-    // PHYSICAL-NAME hygiene: a new column whose name matches a DROPPED
-    // column's physical name (or a surviving physical name behind a
-    // rename) must get a FRESH physical name — otherwise reading old
-    // files under the new schema would resurrect pre-drop bytes (or
-    // duplicate a renamed column's storage). Delta's column-mapping
-    // id/physical-name rule, name-mode form.
-    val taken = schema.fields.map(physName).toSet ++ droppedPhysicals(f, root)
-    val mapped = added.map { a =>
-      if (!taken(a.name)) a
-      else a.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(a.metadata)
-        .putString(PhysicalKey,
-          s"${a.name}__${java.util.UUID.randomUUID().toString.take(8)}")
-        .build())
+      added: Seq[org.apache.spark.sql.types.StructField]): Int =
+    occCommit(spark, root, maxRetries = 0) { snap =>
+      val schema = snap.schema
+      require(added.nonEmpty && added.forall(_.nullable),
+        "added columns must be nullable")
+      require(added.forall(a => !schema.fieldNames.contains(a.name)),
+        "added column name collides with an existing column")
+      // PHYSICAL-NAME hygiene: a new column whose name matches a DROPPED
+      // column's physical name (or a surviving physical name behind a
+      // rename) must get a FRESH physical name — otherwise reading old
+      // files under the new schema would resurrect pre-drop bytes (or
+      // duplicate a renamed column's storage). Delta's column-mapping
+      // id/physical-name rule, name-mode form.
+      val taken = schema.fields.map(physName).toSet ++
+        droppedPhysicals(fs(root, spark)._1, root)
+      val mapped = added.map { a =>
+        if (!taken(a.name)) a
+        else a.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(a.metadata)
+          .putString(PhysicalKey,
+            s"${a.name}__${java.util.UUID.randomUUID().toString.take(8)}")
+          .build())
+      }
+      // the schema stages inside commitManifest under this attempt's
+      // token — a race-losing DDL writer can never replace the winner's
+      // staged schema (the round-14 corruption)
+      commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
+        schemaJson = Some(StructType(schema.fields ++ mapped).json))
+      snap.next
     }
-    val v = base + 1
-    commitSchema(f, spark, root, v, StructType(schema.fields ++ mapped))
-    v
-  }
-
-  /** Publish `newSchema` as a METADATA-ONLY commit at `v` (versioned
-    * schema file + manifest carrying every data file of v−1 by
-    * reference) — the shared tail of ADD/RENAME/DROP COLUMN. */
-  private def commitSchema(f: org.apache.hadoop.fs.FileSystem,
-      spark: SparkSession, root: String, v: Int,
-      newSchema: StructType,
-      beforePublish: () => Unit = () => ()): Unit = {
-    // the schema stages inside commitManifest under this attempt's
-    // token — a race-losing DDL writer can no longer replace the
-    // winner's staged schema (the round-14 corruption), because no
-    // two attempts ever share a sidecar file name
-    commitManifest(f, root, v, loadManifest(spark, root, v - 1),
-      schemaJson = Some(newSchema.json), beforePublish = beforePublish)
-  }
 
   /** Physical names of every column ever dropped — the tombstone list
     * that keeps a later ADD of the same name from resurrecting old
@@ -4748,27 +4684,25 @@ object GraftTable {
     * (key, bloom, partition transform, CHECK constraints) refuse — see
     * [[refuseMappedUse]]. Returns the new version. */
   def renameColumn(spark: SparkSession, root: String,
-      oldName: String, newName: String): Int = {
-    val base = latestVersion(spark, root)
-    require(base >= 0, s"no table at $root")
-    val schema = tableSchema(spark, root, base)
-    require(schema.fieldNames.contains(oldName), s"no such column: $oldName")
-    require(!schema.fieldNames.contains(newName),
-      s"column '$newName' already exists")
-    refuseMappedUse(spark, root, base, oldName, "rename")
-    val (f, _) = fs(root, spark)
-    val renamed = StructType(schema.fields.map { fld =>
-      if (fld.name != oldName) fld
-      else fld.copy(name = newName,
-        metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(fld.metadata)
-          .putString(PhysicalKey, physName(fld)) // freeze the birth name
-          .build())
-    })
-    val v = base + 1
-    commitSchema(f, spark, root, v, renamed)
-    v
-  }
+      oldName: String, newName: String): Int =
+    occCommit(spark, root, maxRetries = 0) { snap =>
+      val schema = snap.schema
+      require(schema.fieldNames.contains(oldName), s"no such column: $oldName")
+      require(!schema.fieldNames.contains(newName),
+        s"column '$newName' already exists")
+      refuseMappedUse(spark, root, snap.version, oldName, "rename")
+      val renamed = StructType(schema.fields.map { fld =>
+        if (fld.name != oldName) fld
+        else fld.copy(name = newName,
+          metadata = new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(fld.metadata)
+            .putString(PhysicalKey, physName(fld)) // freeze the birth name
+            .build())
+      })
+      commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
+        schemaJson = Some(renamed.json))
+      snap.next
+    }
 
   /** DROP COLUMN as a METADATA-ONLY commit: the field leaves the
     * schema (reads at or after this version never see it; time travel
@@ -4788,29 +4722,26 @@ object GraftTable {
     * full racing DROP inside the hook to prove a loser can neither
     * replace nor leak into the winner's staged sidecar. */
   private[graft] def dropColumnWithHook(spark: SparkSession, root: String,
-      name: String, beforePublish: () => Unit): Int = {
-    val base = latestVersion(spark, root)
-    require(base >= 0, s"no table at $root")
-    val schema = tableSchema(spark, root, base)
-    require(schema.fieldNames.contains(name), s"no such column: $name")
-    require(schema.fields.length > 1, "cannot drop the only column")
-    refuseMappedUse(spark, root, base, name, "drop")
-    val (f, _) = fs(root, spark)
-    // tombstone BEFORE the commit: a crash in between leaves a stray
-    // tombstone (a later re-add just gets a needlessly-fresh physical
-    // name — safe), where the reverse order could resurrect bytes.
-    // One WRITE-ONCE file per drop (no read-modify-write): concurrent
-    // DROPs can never lose each other's tombstones — see
-    // [[droppedPhysicals]].
-    val dp = new org.apache.hadoop.fs.Path(root,
-      s"_log/dropped-${java.util.UUID.randomUUID().toString.take(8)}.json")
-    writeAtomic(f, dp,
-      physName(schema.fields.find(_.name == name).get) + "\n")
-    val v = base + 1
-    commitSchema(f, spark, root, v,
-      StructType(schema.fields.filterNot(_.name == name)), beforePublish)
-    v
-  }
+      name: String, beforePublish: () => Unit): Int =
+    occCommit(spark, root, maxRetries = 0) { snap =>
+      val schema = snap.schema
+      require(schema.fieldNames.contains(name), s"no such column: $name")
+      require(schema.fields.length > 1, "cannot drop the only column")
+      refuseMappedUse(spark, root, snap.version, name, "drop")
+      // tombstone BEFORE the commit: a crash in between leaves a stray
+      // tombstone (a later re-add just gets a needlessly-fresh physical
+      // name — safe), where the reverse order could resurrect bytes.
+      // One WRITE-ONCE file per drop (no read-modify-write): concurrent
+      // DROPs can never lose each other's tombstones — see
+      // [[droppedPhysicals]].
+      writeAtomic(fs(root, spark)._1, new org.apache.hadoop.fs.Path(root,
+        s"_log/dropped-${java.util.UUID.randomUUID().toString.take(8)}.json"),
+        physName(schema.fields.find(_.name == name).get) + "\n")
+      commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
+        schemaJson = Some(StructType(schema.fields.filterNot(_.name == name))
+          .json), beforePublish = beforePublish)
+      snap.next
+    }
 
   /** Point-lookup snapshot read with BLOOM-FILTER file skipping: only
     * data files whose `.bloom` sidecar MAY contain `value` in the
@@ -5096,63 +5027,61 @@ object GraftTable {
     * written. Key-range pruning coarsens after z-ordering (per-file
     * key intervals widen) — that trade is the feature, and point
     * upserts on a z-ordered table should re-OPTIMIZE periodically.
+    * Every file is an input, so only a commit that adds files without
+    * touching one rebases ([[rewriteCommit]]).
     * Returns (newVersion, nFilesWritten). */
   def optimizeZOrder(spark: SparkSession, root: String, key: String,
       c1: String, c2: String, targetRows: Long, bits: Int = 16): (Int, Int) = {
-    val base = latestVersion(spark, root)
-    val entries = loadManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
-    val snap = read(spark, root, Some(base))
-    val nRows = entries.map(_.nRows).sum
+    val snap = resolveSnapshot(spark, root)
+    val nRows = snap.entries.map(_.nRows).sum
     require(nRows > 0, "optimizeZOrder on an empty table has nothing to lay out")
     val nBuckets = math.max(1, math.ceil(nRows.toDouble /
       math.max(1L, targetRows)).toInt)
-    // 4 scalars to the driver: the quantization frame
-    val b = snap.agg(
-      min(col(c1).cast("long")), max(col(c1).cast("long")),
-      min(col(c2).cast("long")), max(col(c2).cast("long"))).collect()(0)
-    // an entirely-NULL dimension has no quantization frame: fail with a
-    // clear message instead of the NPE Row.getLong would throw
-    require(!b.isNullAt(0) && !b.isNullAt(2),
-      s"optimizeZOrder: column ${if (b.isNullAt(0)) c1 else c2} is NULL in " +
-        "every row — a z-order dimension needs at least one non-NULL value")
-    val (mn1, mx1, mn2, mx2) = (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    val buckets = 1 << bits
-    val z = graft.operators.ZOrder.zvalue(
-      graft.operators.ZOrder.quantize(col(c1).cast("long") - mn1,
-        lit(mx1 - mn1 + 1), buckets),
-      graft.operators.ZOrder.quantize(col(c2).cast("long") - mn2,
-        lit(mx2 - mn2 + 1), buckets),
-      bits)
-    val v = base + 1
-    val w = writeDataFiles(spark, root, v, snap, key, nBuckets, Some(z))
-    val fresh = w.entries
-    val freshDf = readLogical(spark, schema,
-      fresh.map(e => dataPath(root, e.relPath)))
-    val stats = freshDf.groupBy(input_file_name().as("file"))
-      .agg(min(col(c1).cast("long")).as("mn1"), max(col(c1).cast("long")).as("mx1"),
-        min(col(c2).cast("long")).as("mn2"), max(col(c2).cast("long")).as("mx2"))
-      .collect()
-    val byName = fresh.map(e => nameOf(e) -> e.relPath).toMap
-    val lines = stats.flatMap { r =>
-      val rel = byName(new org.apache.hadoop.fs.Path(
-        new java.net.URI(r.getString(0)).getPath).getName)
-      // a file whose column is all-NULL has no min/max: write no stats
-      // line for that (file, col) — readRange2D keeps stats-less files
-      def line(c: String, mnIdx: Int): Option[String] =
-        if (r.isNullAt(mnIdx) || r.isNullAt(mnIdx + 1)) None
-        else Some(s"$rel\t$c\t${r.getLong(mnIdx)}\t${r.getLong(mnIdx + 1)}")
-      // ledger keys are physical (rename-invariant), like every sidecar
-      line(toPhys(spark, root, base, c1), 1).toSeq ++
-        line(toPhys(spark, root, base, c2), 3).toSeq
-    }.toSeq
-    val (f, _) = fs(root, spark)
-    // z-order ranges merge with the write's own stat lines in memory;
-    // commitManifest stages the union under its attempt token
-    commitManifest(f, root, v, fresh,
-      statLines = (w.statLines ++ lines).sorted,
-      kmvLines = w.kmvLines)
-    (v, fresh.size)
+    val (v, nWritten, _) =
+      rewriteCommit(spark, root, snap, snap.entries) { rows =>
+        // 4 scalars to the driver: the quantization frame
+        val b = rows.agg(
+          min(col(c1).cast("long")), max(col(c1).cast("long")),
+          min(col(c2).cast("long")), max(col(c2).cast("long"))).collect()(0)
+        // an entirely-NULL dimension has no quantization frame: fail with
+        // a clear message instead of the NPE Row.getLong would throw
+        require(!b.isNullAt(0) && !b.isNullAt(2),
+          s"optimizeZOrder: column ${if (b.isNullAt(0)) c1 else c2} is NULL in " +
+            "every row — a z-order dimension needs at least one non-NULL value")
+        val (mn1, mx1, mn2, mx2) = (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
+        val buckets = 1 << bits
+        val z = graft.operators.ZOrder.zvalue(
+          graft.operators.ZOrder.quantize(col(c1).cast("long") - mn1,
+            lit(mx1 - mn1 + 1), buckets),
+          graft.operators.ZOrder.quantize(col(c2).cast("long") - mn2,
+            lit(mx2 - mn2 + 1), buckets),
+          bits)
+        val w = writeDataFiles(spark, root, snap.next, rows, key, nBuckets, Some(z))
+        val freshDf = readLogical(spark, snap.schema,
+          w.entries.map(e => dataPath(root, e.relPath)))
+        val stats = freshDf.groupBy(input_file_name().as("file"))
+          .agg(min(col(c1).cast("long")).as("mn1"), max(col(c1).cast("long")).as("mx1"),
+            min(col(c2).cast("long")).as("mn2"), max(col(c2).cast("long")).as("mx2"))
+          .collect()
+        val byName = w.entries.map(e => nameOf(e) -> e.relPath).toMap
+        val phys = physMap(snap.schema)
+        val lines = stats.flatMap { r =>
+          val rel = byName(new org.apache.hadoop.fs.Path(
+            new java.net.URI(r.getString(0)).getPath).getName)
+          // a file whose column is all-NULL has no min/max: write no stats
+          // line for that (file, col) — readRange2D keeps stats-less files
+          def line(c: String, mnIdx: Int): Option[String] =
+            if (r.isNullAt(mnIdx) || r.isNullAt(mnIdx + 1)) None
+            else Some(s"$rel\t${phys.getOrElse(c, c)}\t${r.getLong(mnIdx)}\t" +
+              r.getLong(mnIdx + 1))
+          // ledger keys are physical (rename-invariant), like every sidecar
+          line(c1, 1).toSeq ++ line(c2, 3).toSeq
+        }.toSeq
+        // z-order ranges merge with the write's own stat lines in memory;
+        // commitManifest stages the union under its attempt token
+        w.copy(statLines = (w.statLines ++ lines).sorted)
+      }
+    (v, nWritten)
   }
 
   /** Two-column box read with colstats FILE SKIPPING: only data files

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.Files
 
-/** Contracts of the keyed write verbs' shared commit core: who owns a
-  * batch cache, and that every delete verb (and every DML mode) lands
-  * the same content and reports the same file counts it always has. */
+/** Contracts of the write verbs' shared commit core: who owns a batch
+  * cache; that every delete verb (and every DML mode), and every other
+  * verb on the core, lands the same content and reports the same
+  * counts it always has; and how the rewrite and merge verbs resolve a
+  * commit that lands after their snapshot. */
 class CommitCoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -90,5 +92,155 @@ class CommitCoreSpec extends SparkSpec {
     feeds.tail.foreach { case (name, feed) =>
       assert(feed === feeds.head._2, s"$name vs ${feeds.head._1}")
     }
+  }
+
+  // ---- the rest of the write verbs on the core --------------------
+
+  // the parity table: fourFiles plus a v4 deletion vector over every
+  // tenth key of file 1
+  private val dvPred = $"k" <= 100 && $"k" % 10 === 0
+
+  private def parityTable(): String = {
+    val root = fourFiles(None)
+    GraftTable.deleteWhereDv(spark, root, dvPred)
+    root
+  }
+
+  private def live = rows(1, 400).filter(!dvPred)
+
+  /** (minKey, maxKey, nRows, dvRows) per manifest line, in file order. */
+  private def ledger(manifest: String): Seq[(Long, Long, Long, Long)] = {
+    val src = scala.io.Source.fromFile(manifest)
+    try src.getLines().filter(l => l.nonEmpty && !l.startsWith("#"))
+      .map { l =>
+        val p = l.split('\t')
+        (p(1).toLong, p(2).toLong, p(3).toLong,
+          if (p.length > 6) p(6).toLong else 0L)
+      }.toList
+    finally src.close()
+  }
+
+  /** Kinds of the token-named sidecars staged with version `v` in `dir`. */
+  private def sidecarKinds(dir: String, v: Int): Set[String] = {
+    val rx = f"([a-z]+)-v$v%05d-[0-9a-f]{8}\\.(json|tsv)".r
+    new java.io.File(dir).list().toSeq.collect { case rx(kind, _) => kind }
+      .toSet
+  }
+
+  /** Run `verb` on a fresh parity table and pin what it returns, the
+    * manifest ledger of version `v` in the table's `dir`, the sidecar
+    * kinds staged with that version, and the rows `read` reads back. */
+  private def pin(name: String, verb: String => Any, result: Any,
+      ledger0: Seq[(Long, Long, Long, Long)], sidecars: Set[String],
+      want: org.apache.spark.sql.DataFrame, v: Int = 5, dir: String = "_log",
+      read: String => org.apache.spark.sql.DataFrame =
+        GraftTable.read(spark, _)): Unit = {
+    val root = parityTable()
+    assert(verb(root) === result, name)
+    assert(ledger(f"$root/$dir/v$v%05d.manifest") === ledger0, name)
+    assert(sidecarKinds(s"$root/$dir", v) === sidecars, name)
+    assert(sorted(read(root)) === sorted(want), name)
+  }
+
+  test("parity: every verb on the commit core returns, lays out, stages " +
+    "and reads back what it always has") {
+    val four = Seq((1L, 100L, 100L, 10L), (101L, 200L, 100L, 0L),
+      (201L, 300L, 100L, 0L), (301L, 400L, 100L, 0L))
+    val stats = Set("colstats", "kmv")
+    pin("optimize", GraftTable.optimize(spark, _, "k", targetRows = 250),
+      (5, 3, 1), Seq((301L, 400L, 100L, 0L), (1L, 300L, 290L, 0L)), stats,
+      live)
+    pin("absorbDvs", GraftTable.absorbDvs(spark, _, "k"), (5, 1, 3),
+      four.tail :+ ((1L, 99L, 90L, 0L)), stats, live)
+    pin("optimizeZOrder", GraftTable.optimizeZOrder(spark, _, "k", "k", "v",
+      targetRows = 200), (5, 2),
+      Seq((1L, 205L, 195L, 0L), (206L, 400L, 195L, 0L)), stats, live)
+    pin("restore", GraftTable.restore(spark, _, 1), 5,
+      Seq((1L, 100L, 100L, 0L), (101L, 200L, 100L, 0L)), Set.empty,
+      rows(1, 200))
+    pin("setPartitioning", GraftTable.setPartitioning(spark, _,
+      TruncatePartition(100, "k")), 5, four, Set("partition"), live)
+    pin("setHashBuckets", GraftTable.setHashBuckets(spark, _, "k", 3), 5,
+      Seq((2L, 399L, 139L, 0L), (1L, 388L, 118L, 0L), (5L, 400L, 133L, 0L)),
+      stats + "layout", live)
+    pin("evolveAddColumns", GraftTable.evolveAddColumns(spark, _,
+      Seq(org.apache.spark.sql.types.StructField("extra",
+        org.apache.spark.sql.types.StringType))), 5, four, Set("schema"),
+      live.withColumn("extra", lit(null).cast("string")))
+    pin("renameColumn", GraftTable.renameColumn(spark, _, "name", "label"),
+      5, four, Set("schema"), live)
+    pin("dropColumn", GraftTable.dropColumn(spark, _, "name"), 5, four,
+      Set("schema"), live.drop("name"))
+    val branched = live.filter($"k" =!= 5).unionByName(branchBatch)
+    def branch(root: String): Int = {
+      GraftTable.createBranch(spark, root, "wip")
+      GraftTable.upsertBranch(spark, root, "wip", branchBatch, "k")
+    }
+    pin("upsertBranch", branch, 1,
+      four.tail ++ Seq((1L, 51L, 46L, 0L), (52L, 405L, 45L, 0L)), stats,
+      branched, v = 1, dir = "_log/branch-wip",
+      read = GraftTable.readBranch(spark, _, "wip"))
+    pin("mergeBranch", { root =>
+      branch(root)
+      GraftTable.upsert(spark, root, rows(305, 305)
+        .withColumn("name", lit("main")), "k", nBuckets = 1)
+      GraftTable.mergeBranch(spark, root, "wip")
+    }, Right((6, 2L)), four.updated(0, (1L, 100L, 100L, 11L)) :+
+      ((5L, 405L, 2L, 0L)), stats, branched.filter($"k" =!= 305)
+      .unionByName(rows(305, 305).withColumn("name", lit("main"))), v = 6)
+  }
+
+  // the branch change of the parity spec: update key 5, insert key 405
+  private def branchBatch = rows(5, 5).withColumn("name", lit("branch"))
+    .unionByName(rows(405, 405))
+
+  /** Run `verb` with a copy-on-write upsert of `racer` rows committed
+    * just before its first manifest publish. */
+  private def racedBy[T](root: String, racer: org.apache.spark.sql.DataFrame)(
+      verb: => T): T =
+    GraftTable.withLogStore(new RaceOnceLogStore(() => {
+      GraftTable.upsert(spark, root, racer, "k", nBuckets = 1); ()
+    }))(verb)
+
+  test("absorbDvs rebases over a disjoint copy-on-write upsert that " +
+    "landed after its snapshot") {
+    val root = parityTable()
+    // rewrites file 4; the absorb's only input is file 1
+    val racer = rows(305, 305).withColumn("name", lit("racer"))
+    assert(racedBy(root, racer)(GraftTable.absorbDvs(spark, root, "k")) ===
+      ((6, 1, 3)))
+    assert(!GraftTable.hasDeletionVectors(spark, root, 6))
+    assert(sorted(GraftTable.read(spark, root)) === sorted(
+      live.filter($"k" =!= 305).unionByName(racer)))
+  }
+
+  test("optimizeZOrder rebases over a disjoint copy-on-write upsert " +
+    "that landed after its snapshot") {
+    val root = parityTable()
+    // inserts key 500: a new file, every z-order input stays live
+    val racer = rows(500, 500)
+    assert(racedBy(root, racer)(GraftTable.optimizeZOrder(spark, root, "k",
+      "k", "v", targetRows = 200)) === ((6, 2)))
+    // the racer's and the rewrite's files share one version directory
+    // prefix, so their manifest order is random: compare as a set
+    assert(ledger(s"$root/_log/v00006.manifest").toSet === Set(
+      (500L, 500L, 1L, 0L), (1L, 205L, 195L, 0L), (206L, 400L, 195L, 0L)))
+    assert(sorted(GraftTable.read(spark, root)) ===
+      sorted(live.unionByName(racer)))
+  }
+
+  test("mergeBranch: a conflicting main commit that lands after the " +
+    "merge's snapshot refuses the merge and keeps main's value") {
+    val root = freshRoot()
+    GraftTable.create(spark, root, rows(1, 50), "k", nBuckets = 2)
+    GraftTable.createBranch(spark, root, "b")
+    GraftTable.upsertBranch(spark, root, "b",
+      rows(5, 5).withColumn("name", lit("branch")), "k")
+    val main = rows(5, 5).withColumn("name", lit("main"))
+    assert(racedBy(root, main)(GraftTable.mergeBranch(spark, root, "b")) ===
+      Left(1L))
+    assert(GraftTable.latestVersion(spark, root) === 1)
+    assert(GraftTable.read(spark, root).filter($"k" === 5)
+      .select("name").as[String].collect().toSeq === Seq("main"))
   }
 }

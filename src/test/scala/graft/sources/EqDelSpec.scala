@@ -327,4 +327,19 @@ class EqDelSpec extends SparkSpec {
     assert(got.filter($"k" === 30).select("name").as[String].head() === "b3")
     assert(got.filter($"k" === 12).select("name").as[String].head() === "b1")
   }
+
+  test("restore carries the RESTORED version's pending eqdels, not the " +
+      "head's: a key retired after the target version comes back") {
+    val root = freshRoot()
+    GraftTable.create(spark, root, base(10), "k", nBuckets = 1)
+    GraftTable.appendUpsert(spark, root, spark.range(5, 6).select(
+      $"id".as("k"), lit("upd").as("name"), lit(-1L).as("v")), "k")
+    assert(GraftTable.restore(spark, root, 0) === 2)
+    val got = GraftTable.read(spark, root)
+    assert(got.count() === 10)
+    assert(got.filter($"k" === 5).select("name").as[String].collect()
+      .toSeq === Seq("row5"))
+    assert(!manifestText(root, 2).linesIterator
+      .exists(_.startsWith("#eqdel\t")))
+  }
 }

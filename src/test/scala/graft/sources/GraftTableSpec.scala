@@ -1380,7 +1380,7 @@ class GraftTableSpec extends SparkSpec {
     val merge = spark.range(650, 661).select($"id".as("k"),
       lit(null).cast("string").as("name"), lit(-7L).as("v"))
     val (v, rewritten, carried) = GraftTable.optimizeWithHook(spark, root,
-      "k", targetRows = 300, maxRebases = 2,
+      "k", targetRows = 300,
       beforeCommit = () => { GraftTable.upsert(spark, root, merge, "k"); () })
     // v7 = the interleaved merge, v8 = the rebased compaction
     assert(v === 8 && rewritten === 6)
@@ -1412,7 +1412,6 @@ class GraftTableSpec extends SparkSpec {
       lit(null).cast("string").as("name"), lit(-7L).as("v"))
     val e = intercept[GraftTable.ConcurrentCommitException] {
       GraftTable.optimizeWithHook(spark, root, "k", targetRows = 300,
-        maxRebases = 2,
         beforeCommit = () => { GraftTable.upsert(spark, root, merge, "k"); () })
     }
     assert(e.getMessage.contains("OPTIMIZE conflicts"))
@@ -1429,23 +1428,41 @@ class GraftTableSpec extends SparkSpec {
     assert(GraftTable.read(spark, root).filter($"v" === -7L).count() === 11)
   }
 
-  test("OPTIMIZE retries through a conflicting TAG-style metadata " +
-    "commit and aborts past maxRebases") {
+  test("OPTIMIZE vs a concurrent appendUpsert on an INPUT key: clean " +
+    "ConcurrentCommitException, the retired row stays retired") {
     val root = freshRoot()
     sevenBlockTable(root)
-    // a hook that keeps committing metadata-only versions exhausts the
-    // rebase budget — the loop must abort, not spin
+    // the eqdel for key 150 lands at v7 — the version the staged
+    // compaction's files are named after, so it could never mask them
     val e = intercept[GraftTable.ConcurrentCommitException] {
       GraftTable.optimizeWithHook(spark, root, "k", targetRows = 300,
-        maxRebases = 0,
         beforeCommit = () => {
-          GraftTable.upsert(spark, root,
-            spark.range(650, 652).select($"id".as("k"),
-              lit(null).cast("string").as("name"), lit(-1L).as("v")), "k")
+          GraftTable.appendUpsert(spark, root, Seq((150L, "eq", -5L))
+            .toDF("k", "name", "v"), "k")
           ()
         })
     }
+    assert(e.getMessage.contains("OPTIMIZE conflicts"))
+    assert(GraftTable.latestVersion(spark, root) === 7)
+    val head = GraftTable.read(spark, root)
+    assert(head.count() === 700)
+    assert(head.filter($"k" === 150).select("v").as[Long].collect().toSeq
+      === Seq(-5L))
+  }
+
+  test("OPTIMIZE whose every publish loses the race aborts after a " +
+    "bounded number of attempts instead of spinning") {
+    val root = freshRoot()
+    sevenBlockTable(root)
+    val store = new RefuseManifestsLogStore
+    val e = intercept[GraftTable.ConcurrentCommitException] {
+      GraftTable.withLogStore(store)(
+        GraftTable.optimize(spark, root, "k", targetRows = 300))
+    }
     assert(e.getMessage.contains("concurrent commit"))
+    // the first attempt plus the commit core's two retries
+    assert(store.attempts.get() === 3)
+    assert(GraftTable.latestVersion(spark, root) === 6)
   }
 
   test("RENAME COLUMN is metadata-only: same files, head reads the new " +
