@@ -66,11 +66,11 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // The "No Partition Defined for Window operation" warnings here are
     // AUDITED-BENIGN: every unpartitioned window in the registry is
-    // O(#partitions) (GlobalRank's offsets) or dim-sized (calendar
-    // spines) — see GlobalRank.scala and PlanAuditSpec, which asserts
-    // every data-sized window keys on the range-partition id. Silence
-    // the logger so the driver log isn't flooded with ~100 known-false
-    // positives per run.
+    // dim-sized (calendar spines); global ranks run as GlobalRankExec,
+    // which has no window at all — see GlobalRank.scala and
+    // PlanAuditSpec, which asserts no window or sort reads data-sized
+    // input through a single partition. Silence the logger so the
+    // log isn't flooded with known-false positives per run.
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window",
       org.apache.logging.log4j.Level.ERROR)

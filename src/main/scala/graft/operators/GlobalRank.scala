@@ -1,49 +1,50 @@
 package graft.operators
 
+import graft.plans.{GlobalRankNode, RankKind}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.LongType
 
-/** Scalable global sequence assignment: the two-phase replacement for
+/** Scalable global sequence assignment: the replacement for
   * `rank().over(Window.orderBy(...))`, whose empty partitionBy funnels
   * every row through ONE partition (a single-partition exchange +
   * sort — fine for dim-sized inputs, fatal at 10⁹ rows; the classic
   * surrogate-ID scale cliff).
   *
-  * Phase 1: range-repartition by the key — partitions are globally
-  * ordered and equal keys are co-located — and rank *within* each
-  * partition (`partitionBy(spark_partition_id())`), so all window
-  * sorts run in parallel. Phase 2: per-partition totals (row count
-  * for row_number, distinct-key count for dense_rank) are turned into
-  * cumulative offsets and broadcast back; the global value is
-  * `local + offset of preceding partitions`. Output is identical to
-  * the single-partition window (pinned by `GlobalRankSpec`).
+  * Each rank is one Catalyst operator, [[graft.plans.GlobalRankExec]]
+  * (planned by [[graft.plans.GlobalRankStrategy]], so the session
+  * needs [[graft.plans.GraftExtensions]]): one range exchange on the
+  * keys — partitions are globally ordered and equal keys are
+  * co-located — and a local sort, then one totals job over that
+  * materialization (rows, distinct peers or Σ value per partition)
+  * whose prefix sums are each partition's offset, and a pass over the
+  * SAME materialization that emits `offset + local value`. The two
+  * passes read one shuffle output through the same partitions, so the
+  * offsets match the rows by construction, under AQE coalescing too.
+  * The totals job re-runs the local sort; that is the one remaining
+  * second pass. Output is identical to the single-partition window
+  * (pinned by `GlobalRankSpec`).
   *
-  * The offsets window itself is a single-partition sort — over ONE ROW
-  * PER PARTITION, i.e. O(number of shuffle partitions), which does not
-  * grow with the data. Catalyst's exchange reuse evaluates the phase-1
-  * shuffle once for both the ranking and the counting subtree.
-  *
-  * Keys rank ascending (the only order surrogate-ID assignment needs);
-  * ties within equal keys are broken arbitrarily, exactly like the
-  * single-partition form.
+  * Keys rank ascending unless a key says otherwise (the only order
+  * surrogate-ID assignment needs); ties within equal keys are broken
+  * arbitrarily, exactly like the single-partition form.
   */
 object GlobalRank {
 
   /** `row_number().over(Window.orderBy(keys))` at scale. Output column
     * is LongType. */
   def rowNumber(df: DataFrame, outCol: String, keys: Column*): DataFrame =
-    twoPhase(df, outCol, keys, count(lit(1)), row_number())
+    ranked(df, outCol, RankKind.RowNumber, None, keys)
 
   /** `dense_rank().over(Window.orderBy(keys))` at scale: a partition's
-    * offset contribution is its distinct-key count, which is the
-    * largest local dense rank (equal keys never straddle a range
-    * boundary). Reading it off the pid-clustered local frame costs no
-    * distinct aggregation over the range exchange. Output column is
-    * LongType. */
+    * offset contribution is its distinct-key count, counted in the
+    * sorted partition (equal keys never straddle a range boundary).
+    * Output column is LongType. */
   def denseRank(df: DataFrame, outCol: String, keys: Column*): DataFrame =
-    twoPhase(df, outCol, keys, max(col("__local")), dense_rank(),
-      totalOverLocal = true)
+    ranked(df, outCol, RankKind.DenseRank, None, keys)
 
   /** `rank().over(Window.orderBy(keys))` at scale. The offset for a
     * partition is its preceding ROW count (not distinct keys): rank =
@@ -51,8 +52,7 @@ object GlobalRank {
     * range partitioning co-locates equal keys, that is exactly
     * `preceding-partition rows + local rank()`. Output is LongType. */
   def rank(df: DataFrame, outCol: String, keys: Column*): DataFrame =
-    twoPhase(df, outCol, keys, count(lit(1)),
-      org.apache.spark.sql.functions.rank())
+    ranked(df, outCol, RankKind.Rank, None, keys)
 
   /** `percent_rank().over(Window.orderBy(keys))` at scale:
     * `(rank − 1) / (n − 1)` with the SQL-standard `n == 1 → 0.0`
@@ -69,7 +69,7 @@ object GlobalRank {
   }
 
   /** `ntile(buckets).over(Window.orderBy(keys))` at scale, from the
-    * two-phase row number plus a broadcast total: with `q = n / B`,
+    * global row number plus a broadcast total: with `q = n / B`,
     * `r = n % B`, the first `r` tiles carry `q + 1` rows — integer
     * arithmetic reproduces the SQL-standard split exactly (including
     * `n < B`, where tile = row number). Ties follow the row-number
@@ -96,70 +96,31 @@ object GlobalRank {
       .drop("__grn", "__gn")
   }
 
-  /** Both subtrees (local ranks, offsets) read the SAME range
-    * exchange; correctness of the broadcast offsets requires that
-    * exchange to be materialized ONCE (two independent
-    * materializations could sample different range boundaries on a
-    * nondeterministic source, silently corrupting global ids).
-    * Catalyst's exchange reuse guarantees it — so its conf must be on,
-    * and we fail fast rather than corrupt if a session disabled it. */
-  private def requireExchangeReuse(df: DataFrame): Unit = {
-    val reuse = df.sparkSession.conf.get("spark.sql.exchange.reuse", "true")
-    require(reuse.toBoolean,
-      "GlobalRank requires spark.sql.exchange.reuse=true: local ranks and " +
-        "partition offsets must read one shared materialization of the range " +
-        "exchange, or global ids can silently mismatch")
-  }
-
   /** Exclusive global running sum of `value` in `keys` order (the
-    * sequence-packing offset), two-phase like the ranks: per-range
-    * local cumsum + broadcast partition offsets — no single-partition
-    * window at any input size. Output column is LongType. */
+    * sequence-packing offset), like the ranks: per-partition sums are
+    * the offsets, no single-partition window at any input size. Each
+    * value counts as a long (NULL adds 0). Output column is LongType. */
   def exclusiveCumSum(df: DataFrame, outCol: String, value: Column,
-                      keys: Column*): DataFrame = {
-    requireExchangeReuse(df)
-    val parted = df.repartitionByRange(keys: _*)
-      .withColumn("__pid", spark_partition_id())
-    val local = parted.withColumn("__local",
-      coalesce(sum(value).over(Window.partitionBy(col("__pid")).orderBy(keys: _*)
-        .rowsBetween(Window.unboundedPreceding, -1)).cast("long"), lit(0L)))
-    val offsets = parted
-      .groupBy(col("__pid")).agg(sum(value).cast("long").as("__cnt"))
-      // this unpartitioned Window triggers Spark's "No Partition
-      // Defined" warning in the logs — EXPECTED and benign: its input
-      // is one row per shuffle partition (O(#partitions), never
-      // O(data)), the only single-partition state this operator keeps
-      .withColumn("__off", coalesce(
-        sum(col("__cnt")).over(Window.orderBy(col("__pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(outCol, col("__off") + col("__local"))
-      .drop("__pid", "__local", "__off")
-  }
+                      keys: Column*): DataFrame =
+    ranked(df, outCol, RankKind.CumSum, Some(value.cast("long")), keys)
 
-  /** @param totalOverLocal aggregate `perPartitionTotal` over the
-    *   ranked local frame (it may then read `__local`) instead of over
-    *   the range-partitioned input. */
-  private def twoPhase(df: DataFrame, outCol: String, keys: Seq[Column],
-                       perPartitionTotal: Column, localRank: Column,
-                       totalOverLocal: Boolean = false): DataFrame = {
-    requireExchangeReuse(df)
-    val parted = df.repartitionByRange(keys: _*)
-      .withColumn("__pid", spark_partition_id())
-    val local = parted.withColumn("__local",
-      localRank.over(Window.partitionBy(col("__pid")).orderBy(keys: _*)))
-    val offsets = (if (totalOverLocal) local else parted)
-      .groupBy(col("__pid")).agg(perPartitionTotal.cast("long").as("__cnt"))
-      // unpartitioned Window over one row per shuffle partition — the
-      // log's "No Partition Defined" warning here is expected; see
-      // exclusiveCumSum above
-      .withColumn("__off", coalesce(
-        sum(col("__cnt")).over(Window.orderBy(col("__pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__off"))
-    local.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(outCol, col("__off") + col("__local"))
-      .drop("__pid", "__local", "__off")
+  /** Appends `outCol` from a [[GlobalRankNode]] over `df`. The keys and
+    * the summand resolve through the analyzer on throwaway plans over
+    * `df`, so the node holds plain serializable catalyst trees (see
+    * [[graft.plans.TopK.topKPerGroup]]). */
+  private def ranked(df: DataFrame, outCol: String, kind: RankKind,
+                     value: Option[Column], keys: Seq[Column]): DataFrame = {
+    val sort = bridge.analyzed(df.sortWithinPartitions(keys: _*)).asInstanceOf[Sort]
+    val summand = value.map { v =>
+      bridge.analyzed(df.select(v)).asInstanceOf[Project].projectList.head match {
+        case a: Alias => a.child
+        case e => e
+      }
+    }
+    val out = AttributeReference(outCol, LongType, nullable = false)()
+    // re-aliased in a Project: a self-join can renew a Project's aliases,
+    // never a custom node's own output
+    bridge.ofRows(df.sparkSession, Project(sort.child.output :+ Alias(out, outCol)(),
+      GlobalRankNode(kind, sort.order, summand, out, sort.child)))
   }
 }

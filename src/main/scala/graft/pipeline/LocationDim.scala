@@ -43,10 +43,17 @@ import org.apache.spark.sql.functions._
   *    `location_id` here keeps the natural-key order instead, so
   *    `location_id` and `street_id` always carry the same digits.
   *
-  * Scale: no data-sized single-partition window; every rank is the
-  * two-phase range-partitioned form, so ID assignment survives 10⁹
-  * distinct addresses. Output columns exactly match location_dimension
-  * (ref: LocationDimension.sql:62-72).
+  * Row order: each partition comes out sorted by (state_id, city_id,
+  * location_id), i.e. in hierarchy order — a dimension-sized local
+  * sort, no exchange. The dense fact's cross join iterates the
+  * broadcast dim in the order it has, so this order fixes the fact's
+  * file bytes for a given input, and it compresses better than the
+  * street order the last rank leaves behind.
+  *
+  * Scale: no data-sized single-partition window; every rank is a
+  * range-partitioned [[graft.plans.GlobalRankExec]], so ID assignment
+  * survives 10⁹ distinct addresses. Output columns exactly match
+  * location_dimension (ref: LocationDimension.sql:62-72).
   */
 object LocationDim {
 
@@ -84,5 +91,6 @@ object LocationDim {
         col("postal"),
         concat_ws("", col("street"), lit(", "), col("city"), lit(", "),
           col("state"), lit(" "), col("postal")).as("full_address"))
+      .sortWithinPartitions("state_id", "city_id", "location_id")
   }
 }

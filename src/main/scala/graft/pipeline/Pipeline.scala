@@ -14,10 +14,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Spark jobs of one pass over the warehouse benchmark's `etl_batch`
   * CSV (`whbench/run.py --trace 1`, local[2]): the `cleansed`
-  * checkpoint 10, location 24, time 2, product 12, the fact write 9
-  * and the other five writes 5 — 62 in all. The dimensions are small
-  * in rows, not in jobs: each two-phase rank in them costs several
-  * jobs (see [[graft.operators.GlobalRank]]).
+  * checkpoint 7, location 15, time 2, product 6, the fact write 8
+  * and the other five writes 5 — 43 in all. The dimensions are small
+  * in rows, not in jobs: each global rank in them costs a range
+  * sample, a range shuffle, a totals job and the pass that emits it
+  * (see [[graft.operators.GlobalRank]]). The product dim comes out
+  * range-partitioned by `product_name`, so the fact's per-name price
+  * window reads it without a shuffle.
   */
 object Pipeline {
 
@@ -57,7 +60,7 @@ object Pipeline {
     val cleansed = routed.cleansed.localCheckpoint()
     // dims are dimension-sized (tens of rows per distinct attribute)
     // and each is consumed TWICE (its own output + the fact build) —
-    // checkpointing runs each dim's jobs once (38 across the three,
+    // checkpointing runs each dim's jobs once (23 across the three,
     // see above) and stops the fact plan re-embedding every dim's
     // window/rank lineage
     val location = LocationDim(cleansed).localCheckpoint()

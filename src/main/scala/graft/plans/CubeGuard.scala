@@ -101,6 +101,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectParser((_, delegate) =>
       new graft.sources.GraftMaintenanceParser(delegate))
     ext.injectPlannerStrategy(_ => TopKStrategy)
+    ext.injectPlannerStrategy(_ => GlobalRankStrategy)
     // graft scan statistics need no hook here: GraftBatchScan is a
     // native DSv2 Batch, so DataSourceV2ScanRelation.computeStats
     // consumes its SupportsReportStatistics directly

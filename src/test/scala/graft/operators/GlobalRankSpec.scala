@@ -77,25 +77,87 @@ class GlobalRankSpec extends SparkSpec {
     }
   }
 
-  test("fails fast when exchange reuse is disabled (offset-consistency guard)") {
-    spark.conf.set("spark.sql.exchange.reuse", "false")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        GlobalRank.rowNumber(df, "rn", col("key"), col("id"))
-      }
-      assert(e.getMessage.contains("exchange.reuse"))
-    } finally spark.conf.set("spark.sql.exchange.reuse", "true")
+  /** Each of the four ranks over `in` (columns id, key, v) returns
+    * every input row, with the single-partition window's value. Whole
+    * rows are collected: pruning to (id, rank) would let the ranked
+    * rows and a key-only read of them share one exchange. */
+  private def assertFourRanksMatchWindow(in: org.apache.spark.sql.DataFrame): Unit = {
+    def byId(d: org.apache.spark.sql.DataFrame, c: String) = {
+      val rows = d.collect()
+      assert(rows.length === in.count(), s"$c lost or duplicated rows")
+      rows.map(r => r.getAs[Long]("id") -> r.getAs[Long](c)).toMap
+    }
+    val cumsum = coalesce(sum("v").over(Window.orderBy("key", "id")
+      .rowsBetween(Window.unboundedPreceding, -1)).cast("long"), lit(0L))
+    assert(byId(GlobalRank.rowNumber(in, "x", col("key"), col("id")), "x") ===
+      byId(in.withColumn("x", row_number().over(Window.orderBy("key", "id")).cast("long")), "x"))
+    assert(byId(GlobalRank.denseRank(in, "x", col("key")), "x") ===
+      byId(in.withColumn("x", dense_rank().over(Window.orderBy("key")).cast("long")), "x"))
+    assert(byId(GlobalRank.rank(in, "x", col("key")), "x") ===
+      byId(in.withColumn("x", rank().over(Window.orderBy("key")).cast("long")), "x"))
+    assert(byId(GlobalRank.exclusiveCumSum(in, "x", col("v"), col("key"), col("id")), "x") ===
+      byId(in.withColumn("x", cumsum), "x"))
   }
 
-  test("ranking windows are pid-partitioned (no full-input single-partition sort)") {
+  private def withConf(k: String, v: String)(body: => Unit): Unit = {
+    val prior = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body
+    finally prior.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  test("exchange reuse off: every rank still matches the single-partition window") {
+    withConf("spark.sql.exchange.reuse", "false")(assertFourRanksMatchWindow(df))
+  }
+
+  test("wide rows coalesced by AQE: every rank returns every row") {
+    // The ranked rows carry a 200-char payload, so AQE coalesces their
+    // range partitions at a different count than a key-only read of
+    // the same data would; offsets must come from the partitions the
+    // rows are actually read through.
+    val payloadRnd = new scala.util.Random(7)
+    val wide = (1 to 20000).map { i =>
+      (i.toLong, f"k${payloadRnd.nextInt(5000)}%04d", payloadRnd.nextInt(100),
+        payloadRnd.alphanumeric.take(200).mkString)
+    }.toDF("id", "key", "v", "payload").repartition(4)
+    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "262144") {
+      withConf("spark.sql.shuffle.partitions", "8")(assertFourRanksMatchWindow(wide))
+    }
+  }
+
+  test("a ranked frame joins with itself") {
+    // the rank column is an attribute the node itself produces; a
+    // self-join must still tell the two sides' columns apart
+    val ranked = GlobalRank.rowNumber(df, "rn", col("key"), col("id"))
+    val rnOf = ranked.select("id", "rn").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val pairs = ranked.alias("a").join(ranked.alias("b"), col("a.rn") === col("b.rn") - 1)
+      .select(col("a.id"), col("b.id")).collect()
+    assert(pairs.length === 19999)
+    pairs.foreach(r => assert(rnOf(r.getLong(1)) === rnOf(r.getLong(0)) + 1))
+  }
+
+  test("each rank is one GlobalRankExec over one range exchange (no full-input " +
+    "single-partition sort)") {
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
     val out = GlobalRank.rowNumber(df, "rn", col("key"), col("id"))
     out.collect()
-    val plan = out.queryExecution.executedPlan.toString
-    val windowLines = plan.linesIterator.filter(_.contains("Window")).toSeq
-    assert(windowLines.nonEmpty)
-    // every window (local rank + offsets cumsum) involves __pid — none
-    // sorts the full input on a single partition
-    assert(windowLines.forall(_.contains("__pid")), windowLines.mkString("\n"))
+    val plan = out.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val ranks = helper.collect(plan) { case r: graft.plans.GlobalRankExec => r }
+    assert(ranks.size === 1, plan.treeString)
+    // the input's own round-robin exchange aside, one range exchange on
+    // the keys and nothing single-partition
+    val exchanges = helper.collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    val ranges = exchanges.collect { case r: RangePartitioning => r }
+    assert(ranges.map(_.ordering.map(_.child.toString.takeWhile(_ != '#'))) ===
+      Seq(Seq("key", "id")), plan.treeString)
+    assert(!exchanges.contains(SinglePartition), plan.treeString)
+    assert(helper.collect(plan) { case w: WindowExec => w }.isEmpty, plan.treeString)
+    assert(helper.collect(plan) { case s: SortExec => s }.forall(!_.global), plan.treeString)
   }
 
   test("AQE-coalesced range partitions: local ranks and offsets agree") {

@@ -75,4 +75,13 @@ class LocationDimSpec extends SparkSpec {
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
   }
+
+  test("rows come out in hierarchy order (state_id, city_id, location_id) " +
+    "within each partition") {
+    val got = LocationDim(addresses(7))
+    val parts = got.select("state_id", "city_id", "location_id").rdd.glom().collect()
+      .map(_.map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq)
+    assert(parts.exists(_.map(_._1).distinct.size > 1), parts.toSeq)
+    parts.foreach(p => assert(p === p.sorted))
+  }
 }

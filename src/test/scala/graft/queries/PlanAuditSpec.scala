@@ -1,22 +1,80 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.plans.GlobalRankExec
+import org.apache.spark.sql.catalyst.expressions.SortOrder
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Physical-plan regression audit (SURVEY §4 / the 100 TB checklist):
   * the properties that make these plans survive scale-up must not
   * silently regress — filters reach the parquet scan, projections
   * prune columns, dimension joins broadcast, hot paths stay inside
   * whole-stage codegen. */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
 
   /** Final adaptive plan — AQE only materializes join strategies and
     * codegen spans after execution. */
-  private def plan(name: String): String = {
-    val df = graft.SparkEntry.queries(name)(spark, dir)
+  private def plan(name: String): String = executed(name).toString
+
+  /** The executed plan of `df` after collecting it. */
+  private def executed(df: org.apache.spark.sql.DataFrame): SparkPlan = {
     df.collect() // must execute THIS plan (count() would build another)
-    df.queryExecution.executedPlan.toString
+    df.queryExecution.executedPlan
+  }
+
+  private def executed(name: String): SparkPlan =
+    executed(graft.SparkEntry.queries(name)(spark, dir))
+
+  /** The exchanges a node reads: the first exchange down each input path. */
+  private def feeding(p: SparkPlan): Seq[Exchange] = p match {
+    case e: Exchange => Seq(e)
+    case s: QueryStageExec => feeding(s.plan)
+    case r: ReusedExchangeExec => feeding(r.child)
+    case a: AdaptiveSparkPlanExec => feeding(a.executedPlan)
+    case o => o.children.flatMap(feeding)
+  }
+
+  private def keyNames(order: Seq[SortOrder]): Seq[String] =
+    order.map(_.child.toString.replaceAll("#\\d+L?", ""))
+
+  /** What a scalable global rank looks like in `p`, returning the ranks:
+    *  - each is a [[GlobalRankExec]] whose input is one range exchange
+    *    on its own keys — or on a prefix of them, which already orders
+    *    the partitions (a rank over another rank's output reuses its
+    *    exchange that way);
+    *  - no Window or Sort reads a single-partition exchange that
+    *    carries data-sized input (more rows than there are shuffle
+    *    partitions — the old offsets window read one row per range
+    *    partition, and nothing may read more). */
+  private def assertScalableRanks(q: String, p: SparkPlan): Seq[GlobalRankExec] = {
+    val ranks = collect(p) { case r: GlobalRankExec => r }
+    ranks.foreach { r =>
+      val ranges = feeding(r.child).collect { case e: ShuffleExchangeExec =>
+        e.outputPartitioning match {
+          case rp: RangePartitioning => keyNames(rp.ordering)
+          case other => Seq(other.toString)
+        }
+      }
+      assert(ranges.size === 1 && ranges.head.nonEmpty &&
+        keyNames(r.order).startsWith(ranges.head), s"$q: rank input\n${r.treeString}")
+    }
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    collect(p) { case n @ (_: WindowExec | _: SortExec) => n }.foreach { n =>
+      feeding(n).foreach {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
+          val rows = e.metrics("shuffleRecordsWritten").value
+          assert(rows <= parts,
+            s"$q: ${n.nodeName} over a $rows-row single-partition exchange\n${n.treeString}")
+        case _ =>
+      }
+    }
+    ranks
   }
 
   test("q05: quantity filter is pushed into the parquet scan") {
@@ -53,14 +111,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q04: surrogate ranks are two-phase (no full-input single-partition window)") {
-    val p = plan("q04_surrogate_ids")
-    // every window node (local rank + offsets cumsum) is keyed by the
-    // range-partition id — the old Window.orderBy(empty partitionBy)
-    // form would show windows without __pid
-    val windows = p.linesIterator.filter(_.contains("Window")).toSeq
-    assert(windows.nonEmpty)
-    assert(windows.forall(_.contains("__pid")), windows.mkString("\n"))
-    assert(p.contains("rangepartitioning"))
+    val p = executed("q04_surrogate_ids")
+    // the old Window.orderBy(empty partitionBy) form would sort the
+    // full input on one partition
+    assert(assertScalableRanks("q04", p).nonEmpty, p.toString)
   }
 
   test("q32: LSH bucket projection is constant-folded (vec_dot, no HOFs)") {
@@ -134,10 +188,10 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q92: quantile binning ranks two-phase (all windows pid-keyed)") {
-    val p = plan("q92_quantile_binning")
-    val windows = p.linesIterator.filter(_.contains("Window")).toSeq
-    assert(windows.nonEmpty)
-    assert(windows.forall(_.contains("__pid")), windows.mkString("\n"))
+    // (the name predates GlobalRankExec: "pid-keyed" now reads "each
+    // rank over one range exchange on its keys")
+    val p = executed("q92_quantile_binning")
+    assert(assertScalableRanks("q92", p).nonEmpty, p.toString)
   }
 
   test("q94: collocation totals ride broadcasts, not shuffled joins") {
@@ -448,31 +502,28 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q257: global percent_rank/ntile ride two-phase ranks + broadcast totals") {
-    val p = plan("q257_global_ntile_prank")
-    // every window keys on the range-partition id (the offsets window
-    // sorts one row per partition); the n-row totals join as broadcasts
-    val windows = p.linesIterator.filter(_.contains("Window")).toSeq
-    assert(windows.nonEmpty, p)
-    assert(windows.forall(_.contains("__pid")), windows.mkString("\n"))
-    assert(p.contains("rangepartitioning"), p)
-    assert(!p.contains("CartesianProduct"), p)
+    // both ranks are GlobalRankExecs over range exchanges; the n-row
+    // totals join as broadcasts
+    val p = executed("q257_global_ntile_prank")
+    assert(assertScalableRanks("q257", p).size >= 2, p.toString)
+    assert(!p.toString.contains("CartesianProduct"), p.toString)
   }
 
   test("q260/q262/q268: round-9 windows are group-keyed or pid-keyed " +
     "(no data-sized single-partition window)") {
     // q260 windows by the prompt group (data-sized cardinality);
-    // q262/q268 ride GlobalRank (every window keys on __pid). The one
-    // allowed unpartitioned window is GlobalRank's offsets sort over
-    // one row per partition — it orders by __pid, so the same
-    // assertion covers it.
+    // q262/q268 rank through GlobalRankExec ("pid-keyed" in the name
+    // predates it). No window or sort reads data-sized input through a
+    // single partition.
     Seq("q260_grpo_advantage", "q262_sft_loss_mask",
       "q268_reproducible_shuffle").foreach { q =>
-      val p = plan(q)
-      val windows = p.linesIterator.filter(_.contains("Window")).toSeq
-      assert(windows.nonEmpty, s"$q:\n$p")
-      assert(windows.forall(w => w.contains("__pid") || w.contains("grp")),
-        s"$q has a suspect window:\n" + windows.mkString("\n"))
-      assert(!p.contains("CartesianProduct"), s"$q:\n$p")
+      val p = executed(q)
+      val ranks = assertScalableRanks(q, p)
+      val windows = collect(p) { case w: WindowExec => w }
+      assert(windows.forall(_.partitionSpec.nonEmpty),
+        s"$q has an unpartitioned window:\n" + windows.mkString("\n"))
+      assert(windows.nonEmpty || ranks.nonEmpty, s"$q:\n$p")
+      assert(!p.toString.contains("CartesianProduct"), s"$q:\n$p")
     }
   }
 
@@ -481,26 +532,19 @@ class PlanAuditSpec extends SparkSpec {
     // o_totalprice is near-unique (the 'distinct score grain' is ~99.8%
     // of rows at sf0.1), so any window keyed only by score — or by the
     // 5-value segment — is a full-table sort in O(1) tasks at scale.
-    // Both queries must route through GlobalRank.exclusiveCumSum: every
-    // surviving Window node keys on the range-partition id.
+    // Both queries must route through GlobalRank.exclusiveCumSum: a
+    // GlobalRankExec over a range exchange, and no window at all.
     Seq("q245_calibration_brier", "q179_grouped_auc").foreach { q =>
-      val p = plan(q)
-      val windows = p.linesIterator.filter(_.contains("Window")).toSeq
-      assert(windows.nonEmpty, s"$q: expected two-phase cumsum windows\n$p")
-      assert(windows.forall(_.contains("__pid")),
-        s"$q has a window not keyed by __pid:\n" + windows.mkString("\n"))
-      assert(p.contains("rangepartitioning"), s"$q:\n$p")
+      val p = executed(q)
+      assert(assertScalableRanks(q, p).nonEmpty, s"$q: expected a global cumsum\n$p")
+      assert(collect(p) { case w: WindowExec => w }.isEmpty, s"$q:\n$p")
     }
   }
 
-  test("LocationDim: three flat level ranks, none over street_id, every " +
-    "window on __pid") {
+  test("LocationDim: three flat level ranks, none over street_id, each one " +
+    "GlobalRankExec") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val in = Seq(
       ("1 Main St", "Portland", "OR", "97035"),
       ("1 Main St", "Portland", "ME", "04101"),
@@ -508,13 +552,11 @@ class PlanAuditSpec extends SparkSpec {
       ("1 Main St", "Austin", "TX", "73301"),
       ("9 Oak Ave", "Boston", "MA", "02215")
     ).toDF("street", "city", "state", "postal")
-    val out = graft.pipeline.LocationDim(in)
-    out.collect()
-    val helper = new AdaptiveSparkPlanHelper {}
-    def ranges(plan: SparkPlan): Seq[ShuffleExchangeExec] = helper.collect(plan) {
+    val plan = executed(graft.pipeline.LocationDim(in))
+    def ranges(plan: SparkPlan): Seq[ShuffleExchangeExec] = collect(plan) {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }
-    val exchanges = ranges(out.queryExecution.executedPlan)
+    val exchanges = ranges(plan)
     val keyLists = exchanges.map(_.outputPartitioning
       .asInstanceOf[RangePartitioning].ordering
       .map(_.child.asInstanceOf[Attribute].name)).toSet
@@ -523,9 +565,6 @@ class PlanAuditSpec extends SparkSpec {
       Seq("city", "state", "postal"), Seq("street", "city", "state", "postal")))
     // a nested rank range-partitions a plan that holds the level below
     exchanges.foreach(e => assert(ranges(e.child).isEmpty, e.treeString))
-    val p = out.queryExecution.executedPlan.toString
-    val windows = p.linesIterator.filter(_.contains("Window")).toSeq
-    assert(windows.nonEmpty, p)
-    assert(windows.forall(_.contains("__pid")), windows.mkString("\n"))
+    assert(assertScalableRanks("LocationDim", plan).size === 3, plan.toString)
   }
 }
