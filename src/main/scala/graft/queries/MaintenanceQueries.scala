@@ -388,6 +388,23 @@ object MaintenanceQueries {
     (ra, Await.result(fb, scala.concurrent.duration.Duration.Inf))
   }
 
+  /** Whether `df`'s executed plan scans the table at `mvRoot` — the
+    * MV-served check of the rewrite gates. Matched on each file scan's
+    * relation (its root paths under `mvRoot/`), never on the plan
+    * text: a file index prints its path list elided past
+    * `spark.sql.maxMetadataStringLength`, so a text match depends on
+    * how long the temp path is. Walks adaptive stages and subqueries. */
+  private def scansMv(df: org.apache.spark.sql.DataFrame,
+      mvRoot: String): Boolean = {
+    val prefix = new org.apache.hadoop.fs.Path(mvRoot).toUri.getPath + "/"
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(_.toUri.getPath
+            .startsWith(prefix))
+      }.contains(true)
+  }
+
   /** Versioned-table time travel through [[GraftTable]] — the full
     * lakehouse write path exercised END TO END against a logical
     * replay: create v0 from `customer`, copy-on-write UPSERT a batch
@@ -4241,8 +4258,7 @@ object MaintenanceQueries {
           "SELECT cust, count(*) AS n_orders, sum(cents) AS cents_sum, " +
             "round(avg(cents), 4) AS cents_avg " +
             "FROM gmvrw.src GROUP BY cust")
-        val servedFromMv =
-          q.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedFromMv = scansMv(q, base + "/mv")
         val rows = q.filter(col("cust") % 10 === 4).orderBy("cust")
           .collect().toSeq
         // staleness control: one more source commit, same query text —
@@ -4251,8 +4267,7 @@ object MaintenanceQueries {
           orders.limit(1).withColumn("k", lit(99999999L)), "k")
         val q2 = s.sql(
           "SELECT cust, count(*) AS n FROM gmvrw.src GROUP BY cust")
-        val staleLeftAlone =
-          !q2.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val staleLeftAlone = !scansMv(q2, base + "/mv")
         val ok = servedFromMv && staleLeftAlone
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, org.apache.spark.sql.types
@@ -4509,21 +4524,18 @@ object MaintenanceQueries {
         val q = s.sql(s"SELECT cust, $grain AS day, count(*) AS n_ord, " +
           s"sum(cents) AS cents_sum FROM gmvrg.src " +
           s"WHERE cust % 9 = 4 GROUP BY cust, $grain")
-        val servedWidened =
-          q.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedWidened = scansMv(q, base + "/mv")
         val rows = q.orderBy("cust", "day").collect().toSeq
         // a residual on a NON-group column must leave the plan alone
         val q2 = s.sql(s"SELECT cust, count(*) AS n FROM gmvrg.src " +
           s"WHERE cents > 1000 GROUP BY cust, $grain")
-        val refusedNonGroup = !q2.queryExecution.executedPlan.toString
-          .contains(base + "/mv")
+        val refusedNonGroup = !scansMv(q2, base + "/mv")
         // stale: one more commit, same widened query — left alone
         GraftTable.upsert(s, src,
           orders.limit(1).withColumn("k", lit(88888888L)), "k")
         val q3 = s.sql(s"SELECT cust, count(*) AS n FROM gmvrg.src " +
           s"WHERE cust % 9 = 4 GROUP BY cust, $grain")
-        val staleLeftAlone = !q3.queryExecution.executedPlan.toString
-          .contains(base + "/mv")
+        val staleLeftAlone = !scansMv(q3, base + "/mv")
         val ok = servedWidened && refusedNonGroup && staleLeftAlone
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.asJava, org.apache.spark.sql.types
@@ -4918,14 +4930,12 @@ object MaintenanceQueries {
         val q = s.sql("SELECT cust, count(*) AS n_ord, " +
           "sum(cents) AS cents_sum, round(avg(cents), 4) AS avg_cents " +
           "FROM gmvru.src GROUP BY cust")
-        val servedRollup =
-          q.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedRollup = scansMv(q, base + "/mv")
         val rows = q.filter(col("cust") % 6 === 1)
           .orderBy("cust").collect().toSeq
         val g = s.sql(
           "SELECT count(*) AS c, sum(cents) AS s FROM gmvru.src")
-        val servedGlobal =
-          g.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedGlobal = scansMv(g, base + "/mv")
         val globalRow = g.collect()(0)
         val wantGlobal = GraftTable.read(s, src)
           .agg(count(lit(1)), sum("cents")).collect()(0)
@@ -4934,8 +4944,7 @@ object MaintenanceQueries {
           orders.limit(1).withColumn("k", lit(77777777L)), "k")
         val q3 = s.sql(
           "SELECT cust, count(*) AS n FROM gmvru.src GROUP BY cust")
-        val staleLeftAlone = !q3.queryExecution.executedPlan.toString
-          .contains(base + "/mv")
+        val staleLeftAlone = !scansMv(q3, base + "/mv")
         val ok = servedRollup && servedGlobal && staleLeftAlone &&
           globalRow.getLong(0) == wantGlobal.getLong(0) &&
           globalRow.getLong(1) == wantGlobal.getLong(1)
@@ -5025,21 +5034,18 @@ object MaintenanceQueries {
         val q = s.sql("SELECT nation, count(*) AS n_ord, " +
           "sum(cents) AS cents_sum FROM gmvsj.fact f " +
           "JOIN gmvsj.cust c ON f.cust = c.ck GROUP BY nation")
-        val servedStar =
-          q.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedStar = scansMv(q, base + "/mv")
         val rows = q.orderBy("nation").collect().toSeq
         val g = s.sql("SELECT count(*) AS c, sum(cents) AS sc " +
           "FROM gmvsj.fact f JOIN gmvsj.cust c ON f.cust = c.ck")
-        val servedGlobal =
-          g.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedGlobal = scansMv(g, base + "/mv")
         val globalRow = g.collect()(0)
         // a DIM commit alone must disable the rewrite
         GraftTable.upsert(s, dim,
           customer.limit(1).withColumn("ck", lit(99999999L)), "ck")
         val q2 = s.sql("SELECT nation, count(*) AS n FROM gmvsj.fact f " +
           "JOIN gmvsj.cust c ON f.cust = c.ck GROUP BY nation")
-        val staleDim = !q2.queryExecution.executedPlan.toString
-          .contains(base + "/mv")
+        val staleDim = !scansMv(q2, base + "/mv")
         val ok = dirty > 0 && noop && servedStar && servedGlobal &&
           staleDim &&
           globalRow.getLong(0) == rows.map(_.getLong(1)).sum &&
@@ -5200,22 +5206,17 @@ object MaintenanceQueries {
            |  AND o_orderdate < DATE '1995-07-01'""".stripMargin))
 
 
-  /** CONCURRENT MV REFRESH (round 17, the r16 verdict's item 5): two
-    * LIVE refreshers could previously interleave — B dropping A's
-    * pending intent mid-apply and double-applying a delta window. The
-    * cursor now lives in CAS-versioned def files (every transition
-    * arbitrated through the commit-log store), the intent records the
-    * exact window plus the MV version it expects, and the apply
-    * commits PINNED at that version carrying the window's `#note`
-    * marker — racing refreshers replay the same deterministic window
-    * into the same pinned slot (one lands; the loser recognizes the
-    * note), and a FOREIGN commit stealing the slot re-pins instead of
-    * losing or doubling the delta. No leases, no clocks. The gate
-    * races 4 refresher threads over 2 mutation rounds, then stages
-    * the foreign-steal (a planted intent + a restore-to-head taking
-    * the pinned slot), and hash-compares the MV's final content
-    * against DuckDB's direct replay — a double-apply would double the
-    * counts. */
+  /** CONCURRENT MV REFRESH: a refresh is one commit on the MV table
+    * that publishes the window's rows together with the advanced
+    * cursor (the `#cursor` manifest header) — racing refreshers each
+    * plan the window; one publish lands and the losers find the cursor
+    * at the heads, and a FOREIGN commit on the MV table carries the
+    * old cursor forward, so a later refresh applies the window once
+    * instead of losing or doubling the delta. No leases, no clocks.
+    * The gate races 4 refresher threads over 2 mutation rounds, then
+    * lands a restore-to-head on the MV between a source upsert and the
+    * refresh, and hash-compares the MV's final content against
+    * DuckDB's direct replay — a double-apply would double the counts. */
   val q341ConcurrentMvRefresh = GraftQuery(
     "q341_concurrent_mv_refresh",
     (s, dir) => {
@@ -5251,26 +5252,13 @@ object MaintenanceQueries {
         racersOk &&= pool.awaitTermination(180,
           java.util.concurrent.TimeUnit.SECONDS) && errs.isEmpty
       }
-      // FOREIGN STEAL: plant a crashed refresher's intent for the next
-      // source window, let a restore-to-head take the pinned slot,
-      // then refresh — the window must still apply exactly once
+      // FOREIGN COMMIT: a restore-to-head on the MV lands between the
+      // next source window and its refresh — the window must still
+      // apply exactly once
       GraftTable.upsert(s, src,
         orders.limit(50).withColumn("cents", lit(12345L)), "k")
-      val srcHead = GraftTable.latestVersion(s, src)
-      val mvHead = GraftTable.latestVersion(s, base + "/mv")
-      val log = new java.io.File(base + "/mv/_log")
-      val vs = log.listFiles().map(_.getName)
-        .collect { case n if n.matches("mvdef-v\\d+\\.def") =>
-          n.stripPrefix("mvdef-v").stripSuffix(".def").toInt }.sorted
-      val curSrc = scala.io.Source.fromFile(
-        new java.io.File(log, f"mvdef-v${vs.last}%05d.def"))
-      val txt = try curSrc.mkString finally curSrc.close()
-      val next = f"mvdef-v${vs.last + 1}%05d.def"
-      java.nio.file.Files.writeString(new java.io.File(log, next).toPath,
-        txt + s"pending\t${srcHead - 1}\t$srcHead\t${mvHead + 1}\t\n")
-      new java.io.File(log, s".$next.crc").delete()
-      // (refresh reads the def directly — no memo to invalidate here)
-      GraftTable.restore(s, base + "/mv", mvHead) // steals the slot
+      GraftTable.restore(s, base + "/mv",
+        GraftTable.latestVersion(s, base + "/mv"))
       val (_, stealDirty) = GraftMv.refresh(s, base + "/mv")
       val stealOk = stealDirty > 0
       val ok = racersOk && stealOk
@@ -5351,14 +5339,12 @@ object MaintenanceQueries {
           .parse("years(ts)").valueCol
         val q = t.groupBy(col("cust"), months.as("mon"))
           .agg(count(lit(1)).as("n_ord"), sum("cents").as("cents_sum"))
-        val servedMon =
-          q.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedMon = scansMv(q, base + "/mv")
         val rows = q.filter(col("cust") % 7 === 1)
           .orderBy("cust", "mon").collect().toSeq
         val g = t.groupBy(years.as("yr"))
           .agg(count(lit(1)).as("c"), sum("cents").as("sc"))
-        val servedYr =
-          g.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedYr = scansMv(g, base + "/mv")
         val gotYr = g.orderBy("yr").collect().toSeq
         val wantYr = GraftTable.read(s, src)
           .groupBy(years.as("yr"))
@@ -5448,8 +5434,7 @@ object MaintenanceQueries {
       try {
         val q = s.sql("SELECT cust, count(*) AS n, sum(cents) AS sc " +
           "FROM gmvaf.src GROUP BY cust")
-        val served =
-          q.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val served = scansMv(q, base + "/mv")
         val ok = noop && served
         GraftMv.read(s, base + "/mv")
           .filter(col("cust") % 4 === 1)
@@ -5552,8 +5537,7 @@ object MaintenanceQueries {
         // reconstructs sum's DECIMAL(22,2)
         val q = s.sql("SELECT cust, count(*) AS n_ord, " +
           "sum(price) AS rev FROM gmvdec.src GROUP BY cust")
-        val servedRollup =
-          q.queryExecution.executedPlan.toString.contains(base + "/mv_ds")
+        val servedRollup = scansMv(q, base + "/mv_ds")
         val ok = refused && servedRollup && noop && typed &&
           dirtyDs > 0 && dirtyMm > 0
         q.join(GraftMv.read(s, base + "/mv_mm"), Seq("cust"))
@@ -5643,8 +5627,7 @@ object MaintenanceQueries {
         val q = s.sql("SELECT cust, count(cents) AS nv, " +
           "count(*) AS n_ord, sum(cents) AS sv " +
           "FROM gmvnn.src GROUP BY cust")
-        val servedRollup =
-          q.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedRollup = scansMv(q, base + "/mv")
         val ok = servedRollup && noop && dirty > 0
         q.filter(col("cust") % 6 === 1)
           .select(col("cust"), col("nv"), col("n_ord"),
@@ -5743,8 +5726,7 @@ object MaintenanceQueries {
           "sum(cents) AS cents_sum FROM gmvsn.fact f " +
           "JOIN gmvsn.cust c ON f.cust = c.ck " +
           "JOIN gmvsn.nat n ON c.nk = n.nkey GROUP BY region")
-        val servedChain =
-          q.queryExecution.executedPlan.toString.contains(base + "/mv")
+        val servedChain = scansMv(q, base + "/mv")
         val ok = servedChain && noop && dirty > 0
         q.select(col("region"), col("n_ord"),
             col("cents_sum").cast("long").as("cents_sum"))

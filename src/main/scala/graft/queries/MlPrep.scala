@@ -301,7 +301,8 @@ object MlPrep {
           col("l_linenumber"))
       val ranked = graft.operators.GlobalRank.rowNumber(li, "rn",
         col("price"), col("l_orderkey"), col("l_linenumber"))
-      val total = ranked.agg(count(lit(1)).as("n"))
+      // count the input, not `ranked`: the rank would run twice
+      val total = li.agg(count(lit(1)).as("n"))
       ranked.crossJoin(broadcast(total))
         .withColumn("bucket", ((col("rn") - 1) * 10 / col("n")).cast("long"))
         .groupBy("bucket")

@@ -504,7 +504,7 @@ case class GraftMvRefreshCommand(parts: Seq[String])
 
 /** `DROP MATERIALIZED VIEW cat.mv` — remove the MV: its definition,
   * refresh cursor, and backing graft table (log + data). Refuses on a
-  * plain table (no `_log/mv.def`) — dropping a base table through the
+  * plain table (no MV definition file) — dropping a base table through the
   * MV verb would be a category error; this verb completes the MV
   * lifecycle (create → refresh → read/rewrite → drop). A registered
   * rewrite candidate simply stops resolving (`defFor` → None). */

@@ -74,10 +74,10 @@ final case class MvJoin(dim: String, fk: String, dimKey: String,
 /** INCREMENTAL MATERIALIZED VIEWS over a graft table — the engine's
   * answer to "keep this GROUP BY fresh without recomputing it": the
   * MV is itself a graft table (keyed by the group tuple — every
-  * read/time-travel/SQL capability applies), its definition and
-  * refresh cursor live next to its log, and [[refresh]] advances it
-  * by reading the SOURCE's change feed ([[GraftTable.changes]] in
-  * retraction form) instead of the source:
+  * read/time-travel/SQL capability applies), its definition lives
+  * next to its log and its refresh cursor in it, and [[refresh]]
+  * advances it by reading the SOURCE's change feed
+  * ([[GraftTable.changes]] in retraction form) instead of the source:
   *
   *  - count/sum MVs refresh by PURE DELTA MERGE: the feed's ±
   *    contributions fold into the stored values per dirty group —
@@ -101,16 +101,15 @@ final case class MvJoin(dim: String, fk: String, dimKey: String,
   *
   * A hidden `__mv_n` live-row count rides every MV (delta-able group
   * death is `__mv_n → 0` — those groups DELETE from the MV rather
-  * than linger as zeros). Refresh is CRASH-SAFE **and CONCURRENT-SAFE**
-  * (round 17): the cursor lives in CAS-versioned def files (every
-  * transition arbitrated through the commit-log store — see
-  * [[GraftLogStore]]), a write-ahead intent records the exact delta
-  * window plus the MV version it expects to commit at, and the apply
-  * is PINNED at that version carrying the window's `#note` marker.
-  * Racing refreshers replay the same deterministic window into the
-  * same pinned slot — exactly one lands; crashes recover by the note
-  * scan; a foreign commit stealing the slot re-pins and recomputes.
-  * No leases, no clocks.
+  * than linger as zeros). Refresh is CRASH-SAFE **and CONCURRENT-SAFE**:
+  * the refresh cursor (the source and dim versions the rows reflect)
+  * lives IN the MV table's log, as the `#cursor` header of each MV
+  * manifest — Delta's `SetTransaction(appId, version)`. A refresh is
+  * one commit that publishes the window's rows and the advanced cursor
+  * together, so rows and cursor can never disagree; every other
+  * commit on the MV table (OPTIMIZE, auto-maintenance, restore)
+  * carries the cursor forward. The definition itself is one static
+  * file written once at create. No intents, leases or clocks.
   *
   * Refs: the reference's rollup relations are rebuilt wholesale — the
   * `fact_staging1..3` CTAS chain (FactTable.sql:15-110) recomputes
@@ -118,47 +117,25 @@ final case class MvJoin(dim: String, fk: String, dimKey: String,
   * scale-path replacement. */
 object GraftMv {
 
+  /** The static definition: one file, written once at create. */
   private def defPath(mvRoot: String) =
-    new org.apache.hadoop.fs.Path(mvRoot, "_log/mv.def")
+    new org.apache.hadoop.fs.Path(mvRoot, "_log/mvdef.tsv")
 
-  /** CAS-VERSIONED definition/cursor files (round 17):
-    * `_log/mvdef-v{N}.def`, each published create-if-absent through
-    * the table's [[GraftLogStore]] seam — every cursor advance,
-    * crash intent, and recovery decision is an ARBITRATED transition
-    * (exactly one writer wins each def version; losers re-read and
-    * re-decide), which is what makes concurrent refreshers safe. The
-    * legacy overwrite-in-place `_log/mv.def` is still READ when no
-    * versioned file exists (pre-round-17 MVs migrate on their next
-    * write). */
-  private def defVPath(mvRoot: String, n: Int) =
-    new org.apache.hadoop.fs.Path(mvRoot, f"_log/mvdef-v$n%05d.def")
-
-  private val DefVName = """mvdef-v(\d+)\.def""".r
-
-  private def defVersions(f: org.apache.hadoop.fs.FileSystem,
-      mvRoot: String): Seq[Int] = {
-    val log = new org.apache.hadoop.fs.Path(mvRoot, "_log")
-    if (!f.exists(log)) Seq.empty
-    else f.listStatus(log).map(_.getPath.getName).collect {
-      case DefVName(n) => n.toInt
-    }.sorted.toSeq
-  }
-
-  /** Whether an MV definition lives at `mvRoot` — versioned def files
-    * (round 17+) or the legacy overwrite file. */
+  /** Whether an MV definition lives at `mvRoot`. */
   private[sources] def defExists(f: org.apache.hadoop.fs.FileSystem,
       mvRoot: String): Boolean =
-    defVersions(f, mvRoot).nonEmpty || f.exists(defPath(mvRoot))
+    f.exists(defPath(mvRoot))
 
   /** Definition facts as the rewrite rule and tooling consume them. */
   final case class MvFacts(source: String, groups: Seq[MvGroup],
       aggs: Seq[MvAgg], lastV: Int, filter: Option[String],
       joins: Seq[MvJoin] = Seq.empty)
 
+  /** `lastV` and each join's `lastV` are the refresh cursor, set from
+    * the MV head's `#cursor` by [[atCursor]] (the def file itself only
+    * records the create-time dim versions). */
   private final case class MvDef(source: String, sourceKey: String,
       groups: Seq[MvGroup], aggs: Seq[MvAgg], lastV: Int,
-      // (fromFactV, toFactV, expectedMvVersion, target dim versions)
-      pending: Option[(Int, Int, Int, Seq[Int])],
       filter: Option[String] = None, // row predicate (SQL expression)
       // whether the MV table is keyed by the synthesized __mv_g string
       // (None on legacy defs → derive from the group shape)
@@ -193,61 +170,30 @@ object GraftMv {
         b ++= s"agg\t${a.kind}\t${a.col}\t${a.alias}\n"
       else b ++= s"agg\t${a.kind}\t${a.col}\t${a.alias}\t${a.prec}\t" +
         s"${a.scale}\n")
-    b ++= s"lastv\t${d.lastV}\n"
-    d.pending.foreach { case (f, t, e, dv) =>
-      // legacy 3-field form when there are no joins (older readers)
-      if (dv.isEmpty) b ++= s"pending\t$f\t$t\t$e\n"
-      else b ++= s"pending\t$f\t$t\t$e\t${dv.mkString(",")}\n"
-    }
     b.result()
   }
 
-  /** Publish the def at version `prev + 1` — a CAS transition: throws
-    * [[GraftTable.ConcurrentCommitException]] when another writer
-    * advanced the def first (the caller re-reads and re-decides;
-    * every refresh-protocol def write goes through here). `prev = -1`
-    * migrates a legacy overwrite-file MV to its first versioned def. */
-  /** Def versions retained behind the head — enough that any racer
-    * still mid-decision on a recent version can re-read it; only the
-    * LATEST is authoritative, so older files are pure history. */
-  private val DefRetain = 16
-
-  private def writeDefCas(spark: SparkSession, mvRoot: String,
-      d: MvDef, prev: Int): Unit = {
-    val p = defVPath(mvRoot, prev + 1)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    GraftTable.writeAtomic(f, p, render(d))
-    // a cursor advance changes rewrite-visible freshness exactly like
-    // a table commit — invalidate same-session planning memos
-    GraftTable.commitEpoch.incrementAndGet()
-    // RETENTION: a per-minute refresher writes ~2 def versions per
-    // window — without pruning the _log would grow thousands of tiny
-    // files a day. Old versions are sweep-safe (readers take the max;
-    // the CAS arbitrates only on the NEXT version), best-effort (a
-    // failed delete retries on the next write).
-    val doomed = prev + 1 - DefRetain
-    if (doomed >= 0 && doomed % 4 == 0) // amortized: sweep every 4th
-      (math.max(0, doomed - 8) to doomed).foreach { n =>
-        try { f.delete(defVPath(mvRoot, n), false); () }
-        catch { case _: Exception => () }
-      }
-  }
-
-  private def readDef(spark: SparkSession, mvRoot: String): MvDef =
-    readDefV(spark, mvRoot)._1
-
-  /** The newest def plus its version (−1 when only the legacy
-    * overwrite file exists — its pendings predate the note protocol). */
-  private def readDefV(spark: SparkSession, mvRoot: String): (MvDef, Int) = {
+  private def readDef(spark: SparkSession, mvRoot: String): MvDef = {
     val p = defPath(mvRoot)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (text, dv) = defVersions(f, mvRoot).lastOption match {
-      case Some(n) => (readFullyText(f, defVPath(mvRoot, n)), n)
-      case None =>
-        require(f.exists(p), s"no materialized view at $mvRoot")
-        (readFullyText(f, p), -1)
-    }
-    (parseDef(text), dv)
+    require(f.exists(p), s"no materialized view at $mvRoot")
+    parseDef(readFullyText(f, p))
+  }
+
+  /** The refresh cursor as the MV table's `#cursor` header: the source
+    * version, then each join's dim version. */
+  private def renderCursor(to: Int, dimVs: Seq[Int]): String =
+    (to +: dimVs).mkString(",")
+
+  /** `d` at `cursor` (the MV head's, see [[renderCursor]]); a missing
+    * cursor reads as never refreshed (-1). */
+  private def atCursor(d: MvDef, cursor: Option[String]): MvDef = {
+    val vs = cursor.map(_.split(',').map(_.toInt).toSeq)
+      .getOrElse(Seq.fill(d.joins.size + 1)(-1))
+    require(vs.size == d.joins.size + 1,
+      s"MV cursor '${cursor.get}' does not match ${d.joins.size} joins")
+    d.copy(lastV = vs.head, joins = d.joins.zip(vs.tail).map {
+      case (j, v) => j.copy(lastV = v) })
   }
 
   private def readFullyText(f: org.apache.hadoop.fs.FileSystem,
@@ -265,7 +211,6 @@ object GraftMv {
     val groups = Seq.newBuilder[MvGroup]
     val aggs = Seq.newBuilder[MvAgg]
     val joins = Seq.newBuilder[MvJoin]
-    var lastV = -1; var pending: Option[(Int, Int, Int, Seq[Int])] = None
     var filt: Option[String] = None
     var keymode: Option[Boolean] = None
     text.linesIterator.filter(_.nonEmpty).foreach { l =>
@@ -287,17 +232,11 @@ object GraftMv {
         case Array("agg", k, c, a) => aggs += MvAgg(k, c, a)
         case Array("agg", k, c, a, p, s) =>
           aggs += MvAgg(k, c, a, p.toInt, s.toInt)
-        case Array("lastv", v) => lastV = v.toInt
-        case Array("pending", f0, t, e) =>
-          pending = Some((f0.toInt, t.toInt, e.toInt, Seq.empty))
-        case Array("pending", f0, t, e, dv) =>
-          pending = Some((f0.toInt, t.toInt, e.toInt,
-            dv.split(',').filter(_.nonEmpty).map(_.toInt).toSeq))
         case _ => () // forward compatibility
       }
     }
-    MvDef(source, sourceKey, groups.result(), aggs.result(), lastV,
-      pending, filt, keymode, joins.result())
+    MvDef(source, sourceKey, groups.result(), aggs.result(), -1, filt,
+      keymode, joins.result())
   }
 
   private val HiddenN = "__mv_n"
@@ -669,10 +608,18 @@ object GraftMv {
     val (full, key) =
       if (enc) (full0.withColumn(HiddenG, gidCol(groups)), HiddenG)
       else (full0, groups.head.alias)
-    GraftTable.create(spark, mvRoot, full, key, nBuckets)
-    writeDefCas(spark, mvRoot,
-      MvDef(sourceRoot, srcKey, groups, aggsR, srcV, None, filter,
-        keymode = Some(enc), joins = joins), prev = -1)
+    // version 0 carries the create-time cursor; the def lands after
+    // it, so a crash in between leaves a plain table, never an MV
+    // without rows
+    GraftTable.createWithCursor(spark, mvRoot, full, key, nBuckets, None,
+      None, false, Some(renderCursor(srcV, joins.map(_.lastV))))
+    val p = defPath(mvRoot)
+    GraftTable.writeAtomic(p.getFileSystem(
+      spark.sparkContext.hadoopConfiguration), p, render(MvDef(sourceRoot,
+      srcKey, groups, aggsR, srcV, filter, Some(enc), joins)))
+    // the MV appearing changes what the rewrite may serve — invalidate
+    // same-session planning memos
+    GraftTable.commitEpoch.incrementAndGet()
     srcV
   }
 
@@ -684,12 +631,11 @@ object GraftMv {
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!defExists(f, mvRoot)) None
     else {
-      val d = readDef(spark, mvRoot)
-      // an UNRESOLVED crash intent means the cursor may understate
-      // lastV — the conservative read for freshness is "not fresh";
-      // refresh() recovery will settle it
-      val lastV = if (d.pending.isDefined) -1 else d.lastV
-      Some(MvFacts(d.source, d.groups, d.aggs, lastV, d.filter, d.joins))
+      // rows and cursor publish in one manifest, so the head's cursor
+      // is exactly what the head's rows reflect
+      val d = atCursor(readDef(spark, mvRoot),
+        GraftTable.headCursor(spark, mvRoot))
+      Some(MvFacts(d.source, d.groups, d.aggs, d.lastV, d.filter, d.joins))
     }
   }
 
@@ -743,143 +689,69 @@ object GraftMv {
     removed
   }
 
-  /** The `#note` identity of one refresh window — what lets a racer
-    * (or a recovery) RECOGNIZE whether a specific delta window already
-    * landed on the MV table, independent of who applied it. */
-  private def windowNote(from: Int, to: Int, dimTargets: Seq[Int]): String =
-    s"mvwindow $from $to ${dimTargets.mkString(",")}"
+  /** Attempts a refresh takes after losing the MV publish race. */
+  private val RefreshRetries = 10
 
   /** Advance the MV to the source's (and every dim's) current head by
     * change-feed delta. Returns (sourceVersionCaughtUpTo, dirtyGroups)
     * — (lastV, 0) when already fresh.
     *
-    * CONCURRENT-SAFE and CRASH-SAFE (round 17): every cursor
-    * transition is a CAS def publish, the window intent records the
-    * exact (fact, dims) version window plus the MV version it expects
-    * to commit at, and the apply is PINNED at that version with the
-    * window's `#note` marker. Two live refreshers therefore replay the
-    * SAME deterministic window racing the SAME pinned slot — exactly
-    * one manifest lands, the loser recognizes the winner's note and
-    * treats it as success; a FOREIGN commit stealing the slot (an
-    * OPTIMIZE on the MV table) carries no matching note, so the
-    * protocol re-pins and recomputes rather than wrongly advancing the
-    * cursor. A crashed refresher leaves an intent any later refresh
-    * settles by the same note scan — never by wall clocks or leases. */
+    * ONE COMMIT on the MV table ([[GraftTable.occCommit]]): the attempt
+    * reads the head's cursor, plans the window cursor → heads against
+    * the stored rows AT that head, and publishes the window's rows and
+    * the advanced cursor in one manifest. CRASH-SAFE: nothing is
+    * written before that publish, so a crash leaves head, cursor and
+    * rows as they were. CONCURRENT-SAFE: a racer that lands first
+    * makes the publish lose, and the retry re-plans on the new head —
+    * a twin that applied the same window shows up as a cursor already
+    * at the heads (success, nothing to do); a foreign commit
+    * (OPTIMIZE, auto-maintenance) carried the old cursor forward, so
+    * the retry is an ordinary rebase. */
   def refresh(spark: SparkSession, mvRoot: String,
       nBuckets: Int = 8): (Int, Long) = {
-    var attempts = 0
-    while (true) {
-      try {
-        val out = refreshOnce(spark, mvRoot, nBuckets)
-        // AUTO-MAINTENANCE of the BACKING TABLE: a per-minute
-        // refresher lands ~1 small commit per window — with
-        // `graft.maintenance.auto` on the MV table, the free probe
-        // ladder bounds its file count with no manual verbs (the
-        // ladder's commits are "foreign" to any racing refresher,
-        // which the steal protocol re-pins around).
-        if (out._2 > 0 && GraftTable.tableProperties(spark, mvRoot)
-            .get("graft.maintenance.auto").contains("true")) {
-          GraftTable.maintainIfDue(spark, mvRoot,
-            keyOf(readDef(spark, mvRoot)))
-          ()
-        }
-        return out
-      } catch {
-        // a lost CAS (def publish or pinned apply): a twin moved the
-        // protocol forward — re-read and re-decide from its state
-        case _: GraftTable.ConcurrentCommitException if attempts < 10 =>
-          attempts += 1
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  private def refreshOnce(spark: SparkSession, mvRoot: String,
-      nBuckets: Int): (Int, Long) = {
-    val (d, dv) = readDefV(spark, mvRoot)
-    d.pending match {
-      case Some((from, to, expectV, dimTargets)) =>
-        val head = GraftTable.latestVersion(spark, mvRoot)
-        val note = windowNote(from, to, dimTargets)
-        val applied = (expectV to head).exists(v =>
-          GraftTable.manifestNote(spark, mvRoot, v).contains(note)) ||
-          // a LEGACY (overwrite-file) pending predates the note
-          // protocol: fall back to its original single-refresher rule
-          (dv == -1 && head >= expectV)
-        if (applied) {
-          // finalize the cursor(s); a racing finalize loses the CAS
-          // and re-reads the advanced def (exactly-once either way)
-          writeDefCas(spark, mvRoot, d.copy(lastV = to, pending = None,
-            joins = if (dimTargets.size == d.joins.size)
-              d.joins.zip(dimTargets).map { case (j, v) => j.copy(lastV = v) }
-            else d.joins), dv)
-          refreshOnce(spark, mvRoot, nBuckets)
-        } else if (head + 1 > expectV) {
-          // the pinned slot was STOLEN by a foreign commit (no note):
-          // re-pin the SAME window at the new head — CAS'd so only one
-          // refresher moves the pin, and the replay below recomputes
-          // against post-steal state
-          writeDefCas(spark, mvRoot,
-            d.copy(pending = Some((from, to, head + 1, dimTargets))), dv)
-          refreshOnce(spark, mvRoot, nBuckets)
-        } else {
-          // head + 1 == expectV: REPLAY the recorded window, pinned.
-          // The window is version-pinned on the source side and the
-          // pin guarantees the MV-side inputs were read below expectV,
-          // so any twin computing this window lands identical content
-          // — whoever wins the slot, the delta applies exactly once.
-          val dirty = applyWindow(spark, mvRoot, d, from, to, dimTargets,
-            expectV, nBuckets, note)
-          writeDefCas(spark, mvRoot, d.copy(lastV = to, pending = None,
-            joins = if (dimTargets.size == d.joins.size)
-              d.joins.zip(dimTargets).map { case (j, v) => j.copy(lastV = v) }
-            else d.joins), dv)
-          val (v2, more) = refreshOnce(spark, mvRoot, nBuckets)
-          (v2, dirty + more)
-        }
-      case None =>
-        val srcHead = GraftTable.latestVersion(spark, d.source)
-        val dimHeads = d.joins.map(j =>
-          GraftTable.latestVersion(spark, j.dim))
-        if (srcHead == d.lastV && dimHeads == d.joins.map(_.lastV))
-          return (d.lastV, 0L)
+    val d0 = readDef(spark, mvRoot)
+    val out = GraftTable.occCommit(spark, mvRoot, RefreshRetries) { snap =>
+      val d = atCursor(d0, snap.cursor)
+      require(d.lastV >= 0, s"MV table at $mvRoot carries no cursor")
+      val srcHead = GraftTable.latestVersion(spark, d.source)
+      val dimHeads = d.joins.map(j => GraftTable.latestVersion(spark, j.dim))
+      if (srcHead == d.lastV && dimHeads == d.joins.map(_.lastV))
+        (d.lastV, 0L)
+      else {
         require(srcHead >= d.lastV,
           s"source at ${d.source} went backwards ($srcHead < ${d.lastV})")
         d.joins.zip(dimHeads).foreach { case (j, h) =>
           require(h >= j.lastV,
             s"dim at ${j.dim} went backwards ($h < ${j.lastV})")
         }
-        // WRITE-AHEAD INTENT (CAS): record the exact window and the
-        // pinned MV slot before any work — a racer publishing first
-        // wins the window; we re-read and JOIN its replay
-        val expectV = GraftTable.latestVersion(spark, mvRoot) + 1
-        writeDefCas(spark, mvRoot,
-          d.copy(pending = Some((d.lastV, srcHead, expectV, dimHeads))),
-          dv)
-        refreshOnce(spark, mvRoot, nBuckets)
+        (srcHead, applyWindow(spark, mvRoot, snap, d, srcHead, dimHeads,
+          nBuckets))
+      }
     }
+    // AUTO-MAINTENANCE of the BACKING TABLE: a per-minute refresher
+    // lands ~1 small commit per window — with `graft.maintenance.auto`
+    // on the MV table, the free probe ladder bounds its file count
+    // with no manual verbs (its commits carry the cursor forward)
+    if (out._2 > 0 && GraftTable.tableProperties(spark, mvRoot)
+        .get("graft.maintenance.auto").contains("true")) {
+      GraftTable.maintainIfDue(spark, mvRoot, keyOf(d0))
+      ()
+    }
+    out
   }
 
-  /** Compute and apply ONE recorded delta window — fact feed
-    * (from → to) and dim feeds (each join's cursor → its recorded
-    * target) — committed to the MV table PINNED at `expectV` with the
-    * window's note. Throws [[GraftTable.ConcurrentCommitException]]
-    * when the slot is taken (the caller's retry re-reads the def and
-    * decides applied/stolen from the note). Returns the dirty-group
-    * count. */
-  private def applyWindow(spark: SparkSession, mvRoot: String, d: MvDef,
-      from: Int, to: Int, dimTargets: Seq[Int], expectV: Int,
-      nBuckets: Int, note: String): Long = {
-    val dimHeads =
-      if (dimTargets.size == d.joins.size) dimTargets
-      else d.joins.map(_.lastV)
-    require(from == d.lastV && d.joins.map(_.lastV).size ==
-      dimHeads.size,
-      s"refresh window [$from -> $to] must start at the cursor " +
-        s"(${d.lastV}) — a drifted intent would replay the wrong delta")
+  /** Compute ONE delta window — fact feed (the cursor `d.lastV` → `to`)
+    * and dim feeds (each join's cursor → its `dimHeads` target) —
+    * against the MV rows at `snap`, and apply it over `snap`,
+    * publishing the cursor (`to`, `dimHeads`) with it. Throws
+    * [[GraftTable.ConcurrentCommitException]] when another commit
+    * takes the version first. Returns the dirty-group count. */
+  private def applyWindow(spark: SparkSession, mvRoot: String,
+      snap: GraftTable.TableSnapshot, d: MvDef, to: Int,
+      dimHeads: Seq[Int], nBuckets: Int): Long = {
     val feed0 =
       if (d.joins.isEmpty)
-        GraftTable.changes(spark, d.source, from, to,
+        GraftTable.changes(spark, d.source, d.lastV, to,
           d.sourceKey, withPreimages = true)
       else starFeed(spark, d, to, dimHeads)
     val feed = withGroups(
@@ -942,7 +814,7 @@ object GraftMv {
           // semi-join probe REUSES the deltas aggregate (its key set IS
           // the dirty-group set: grpKeys determine joinKeys) instead of
           // paying a separate distinct exchange over the feed
-          val old = GraftTable.read(spark, mvRoot)
+          val old = GraftTable.read(spark, mvRoot, Some(snap.version))
             .join(deltas.select(joinKeys.map(col): _*),
               joinKeys, "left_semi").as("o")
           def merged(c: String) =
@@ -1008,6 +880,7 @@ object GraftMv {
             .otherwise("replace"))
         .select(((if (comp) Seq(col(HiddenG)) else Seq.empty)
           ++ gCols ++ mvCols.map(col) :+ col(op)): _*)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // apply FIRST, count after: the apply's hit probe is the action
       // that materializes the persisted feed (and the batch cache), so
       // the dirty-group distinct then runs over warm caches — counting
@@ -1015,11 +888,12 @@ object GraftMv {
       // INVARIANT the post-commit count relies on: `dirty`'s lineage is
       // VERSION-PINNED on the source side (changes(from, to) /
       // starFeed read explicit versions, never the head), so a
-      // cache-evicted recompute after the commit below still reads the
+      // cache-evicted recompute after the commit still reads the
       // same window — a feed built from an unpinned head read would
       // silently count post-commit state here
-      GraftTable.applyCdcBatchAt(spark, mvRoot, batch, mvKey, op,
-        nBuckets, expectV, note)
+      try GraftTable.applyCdcAttempt(spark, mvRoot, snap, batch, mvKey, op,
+        nBuckets, Some(renderCursor(to, dimHeads)))
+      finally batch.unpersist()
       dirty.count()
     } finally feed.unpersist()
   }

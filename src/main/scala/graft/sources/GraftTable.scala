@@ -85,12 +85,9 @@ object GraftTable {
   final class ConstraintViolationException(msg: String)
     extends IllegalStateException(msg)
 
-  /** One manifest line. `nBytes` is the data file's on-disk size —
-    * recorded at write time since round 10 so scan statistics
-    * ([[snapshotStats]], the DSv2 `SupportsReportStatistics` surface)
-    * are a pure metadata pass; −1 on lines from older manifests (the
-    * parse is format-tolerant), where stats fall back to one
-    * `getFileStatus` per unknown file.
+  /** One manifest line. `nBytes` is the data file's on-disk size,
+    * recorded at write time so scan statistics ([[snapshotStats]], the
+    * DSv2 `SupportsReportStatistics` surface) are a pure metadata pass.
     *
     * `dvPath`/`dvRows` (round 13): a DELETION VECTOR reference — a
     * sidecar of this file's DELETED row positions (merge-on-read DML:
@@ -100,9 +97,9 @@ object GraftTable {
     * Key min/max remain SUPERSET bounds under a DV (pruning stays
     * sound, metadata min/max answers degrade — see
     * [[snapshotKeyStats]]). */
-  private final case class FileEntry(
+  private[sources] final case class FileEntry(
       relPath: String, minKey: Long, maxKey: Long, nRows: Long,
-      nBytes: Long = -1L, dvPath: String = "", dvRows: Long = 0L) {
+      nBytes: Long, dvPath: String = "", dvRows: Long = 0L) {
     def liveRows: Long = nRows - dvRows
     def hasDv: Boolean = dvPath.nonEmpty
   }
@@ -273,16 +270,24 @@ object GraftTable {
       root: String, v: Int): Option[String] =
     sidecarTokenOf(f, manifestPath(root, v))
 
-  /** The `#note` marker of `v`'s manifest, if present and if the
-    * manifest exists — the commit-identity probe refresh protocols key
-    * on (bounded header read, no body parse). */
-  private[sources] def manifestNote(spark: SparkSession, root: String,
-      v: Int): Option[String] = {
-    val (f, _) = fs(root, spark)
-    val p = manifestPath(root, v)
-    if (!f.exists(p)) None
-    else readHead(f, p, 512).linesIterator
-      .find(_.startsWith("#note\t")).map(_.split('\t')(1))
+  /** Parse the `#cursor` header line: the position of the one writer
+    * that keeps its progress IN this table's log — an MV refresh
+    * records the source/dim versions its rows reflect
+    * ([[GraftMv.refresh]]), Delta's `SetTransaction(appId, version)`.
+    * Every commit carries the caller's snapshot's cursor forward, so
+    * foreign commits (OPTIMIZE, auto-maintenance, restore) keep it. */
+  private def parseCursor(text: String): Option[String] =
+    text.linesIterator.takeWhile(_.startsWith("#"))
+      .find(_.startsWith("#cursor\t")).map(_.split('\t')(1))
+
+  /** The `#cursor` of `root`'s head (None before the first commit or
+    * on a table no cursor-keeping writer owns). One bounded header
+    * read. */
+  private[sources] def headCursor(spark: SparkSession,
+      root: String): Option[String] = {
+    val v = latestVersion(spark, root)
+    if (v < 0) None
+    else parseCursor(readHead(fs(root, spark)._1, manifestPath(root, v), 512))
   }
 
   /** Publish `version`'s manifest — the commit point of every write
@@ -304,11 +309,13 @@ object GraftTable {
     * carries — the caller's snapshot's, unless the commit changes it
     * (appendUpsert adds, resolveEqDels clears, a full rewrite drops):
     * a plain upsert/OPTIMIZE between an eqdel ingest and its resolve
-    * must not silently un-delete keys. `branch` publishes into that
-    * branch's own lineage directory instead of `_log` — same names,
-    * same protocol. */
+    * must not silently un-delete keys. `cursor` is likewise the
+    * caller's snapshot's `#cursor` unless the commit advances it (the
+    * MV refresh). `branch` publishes into that branch's own lineage
+    * directory instead of `_log` — same names, same protocol. */
   private def commitManifest(spark: SparkSession,
       root: String, v: Int, entries: Seq[FileEntry], eqdels: Seq[EqDel],
+      cursor: Option[String],
       schemaJson: Option[String] = None,
       statLines: Seq[String] = Seq.empty,
       kmvLines: Seq[String] = Seq.empty,
@@ -316,10 +323,9 @@ object GraftTable {
       txn: Option[TxnRef] = None,
       beforePublish: () => Unit = () => (),
       layoutJson: Option[String] = None,
-      note: Option[String] = None,
       branch: Option[String] = None): Unit = {
-    require(note.forall(n => !n.exists(c => c == '\t' || c == '\n') &&
-      n.length <= 120), "manifest note must be one short tab-free line")
+    require(cursor.forall(n => !n.exists(c => c == '\t' || c == '\n') &&
+      n.length <= 120), "manifest cursor must be one short tab-free line")
     val (f, _) = fs(root, spark)
     val log = branch.fold(new org.apache.hadoop.fs.Path(root, "_log"))(
       branchDir(root, _))
@@ -345,8 +351,7 @@ object GraftTable {
       // the commit instant is recorded INSIDE the manifest (header
       // line), not left to the file's mtime: an rsync/restore that
       // doesn't preserve mtimes must not silently shift every
-      // TIMESTAMP AS OF resolution. Readers of pre-header manifests
-      // fall back to mtime (see commitInstant).
+      // TIMESTAMP AS OF resolution.
       //
       // The instant is CLAMPED to strictly exceed the previous
       // version's (Delta's in-commit-timestamp rule): resolveTimestamp
@@ -363,12 +368,10 @@ object GraftTable {
       // readHead probes and must stay within the first bytes
       val eqLines = eqdels
         .map(e => s"#eqdel\t${e.version}\t${e.relDir}\t${e.nKeys}\n").mkString
-      // `#note` is a free-form single-line marker readers skip like
-      // any # line; writers use it to RECOGNIZE their own commit after
-      // losing a version race (the MV refresh window id) — kept short
-      // so the bounded readHead probes (#sidecar/#txn) stay in window
+      // `#cursor` is kept short so the bounded readHead probes
+      // (#sidecar/#txn) stay in window
       val header = s"#commit-ts\t$instant\n#sidecar\t$tok\n" +
-        note.map(n => s"#note\t$n\n").getOrElse("") +
+        cursor.map(n => s"#cursor\t$n\n").getOrElse("") +
         txn.map(t => s"#txn\t${t.id}\t${t.dir}\n").getOrElse("") + eqLines
       writeAtomic(f, in(manifestPath(root, v)), header + renderManifest(entries))
       commitEpoch.incrementAndGet()
@@ -385,8 +388,6 @@ object GraftTable {
     text.linesIterator.filter(l => l.nonEmpty && !l.startsWith("#"))
       .map { line =>
         line.split('\t') match {
-          case Array(p, mn, mx, n) => // pre-round-10 manifest: no bytes
-            FileEntry(p, mn.toLong, mx.toLong, n.toLong)
           case Array(p, mn, mx, n, b) =>
             FileEntry(p, mn.toLong, mx.toLong, n.toLong, b.toLong)
           case Array(p, mn, mx, n, b, dv, dvN) => // deletion-vector line
@@ -579,13 +580,12 @@ object GraftTable {
 
   /** The commit instant of `version`, epoch millis: the `#commit-ts`
     * header the commit wrote INTO its manifest — durable across
-    * rsync/restore/object-store copies that rewrite mtimes — with the
-    * manifest file's modification time as the legacy fallback for
-    * pre-header tables (there the publish rename's mtime WAS the
-    * instant). Reads only the first line, never the file ledger. */
+    * rsync/restore/object-store copies that rewrite mtimes. Reads only
+    * the first line, never the file ledger. */
   private def commitInstant(f: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Long =
-    commitInstantOpt(f, p).getOrElse(f.getFileStatus(p).getModificationTime)
+    commitInstantOpt(f, p).getOrElse(throw new IllegalStateException(
+      s"manifest without a #commit-ts header: $p"))
 
   /** The manifest's first `max` bytes, read with a FILL LOOP: a single
     * `in.read(buf)` may legally return fewer bytes than requested
@@ -605,10 +605,9 @@ object GraftTable {
     } finally in.close()
   }
 
-  /** The durable `#commit-ts` header instant of `version`, or None for
-    * a legacy pre-header manifest (caller falls back to mtime). A
-    * header line that is PRESENT but not fully read (no newline inside
-    * the head window) is an error, never a silent mtime fallback. */
+  /** The durable `#commit-ts` header instant of `version`, or None if
+    * the manifest has none. A header line that is PRESENT but not fully
+    * read (no newline inside the head window) is an error. */
   private def commitInstantOpt(f: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Option[Long] = {
     val head = readHead(f, p)
@@ -625,9 +624,8 @@ object GraftTable {
   }
 
   /** (version, commit time in epoch millis) for every retained
-    * version, ascending by version — header instants (durable), mtime
-    * fallback for legacy manifests. The mapping survives exactly as
-    * long as the manifest does (vacuumed history is not
+    * version, ascending by version, from the header instants. The
+    * mapping survives exactly as long as the manifest does (vacuumed history is not
     * timestamp-resolvable, the Delta/Iceberg contract). One
     * `listStatus` + one header read per retained version (a history
     * listing is already O(versions); point resolution uses
@@ -651,21 +649,9 @@ object GraftTable {
     val (f, _) = fs(root, spark)
     val versions = committedVersions(f, root).toIndexedSeq
     if (versions.isEmpty) return None
+    // sound because instants are monotone over versions (the
+    // commit-time clamp in commitManifest)
     def instant(v: Int) = commitInstant(f, manifestPath(root, v))
-    // The binary search is sound only if instants are monotone over
-    // versions — guaranteed for header-bearing manifests (commit-time
-    // clamp in commitManifest), NOT for legacy pre-header manifests
-    // whose mtime fallback an rsync'd restore can set to "now", above
-    // every later header instant. Headers were adopted at one point
-    // and written by every commit since, so if the OLDEST retained
-    // manifest has a header, all of them do; if it doesn't, take the
-    // skew-robust linear max-filter instead of the search.
-    if (commitInstantOpt(f, manifestPath(root, versions.head)).isEmpty) {
-      return versions
-        .map(v => v -> instant(v))
-        .filter(_._2 <= tsMillis)
-        .maxByOption(_._1).map(_._1)
-    }
     var lo = 0
     var hi = versions.length - 1
     if (instant(versions(lo)) > tsMillis) return None
@@ -1056,6 +1042,7 @@ object GraftTable {
       // name — a race loser's file is self-deleted and could never have
       // resolved anyway (token-verified resolution)
       commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
+        snap.cursor,
         partitionJson = Some(transform.render))
       snap.next
     }
@@ -1847,7 +1834,17 @@ object GraftTable {
   def create(spark: SparkSession, root: String, df: DataFrame, key: String,
       nBuckets: Int = 8, bloomCol: Option[String] = None,
       partitioning: Option[PartitionTransform] = None,
-      hashLayout: Boolean = false): Unit = {
+      hashLayout: Boolean = false): Unit =
+    createWithCursor(spark, root, df, key, nBuckets, bloomCol, partitioning,
+      hashLayout, None)
+
+  /** [[create]] publishing version 0 with a `#cursor` header (the MV
+    * create: the backing table's rows and the refresh cursor they
+    * reflect land in one manifest). */
+  private[sources] def createWithCursor(spark: SparkSession, root: String,
+      df: DataFrame, key: String, nBuckets: Int, bloomCol: Option[String],
+      partitioning: Option[PartitionTransform], hashLayout: Boolean,
+      cursor: Option[String]): Unit = {
     val (f, rootP) = fs(root, spark)
     require(!f.exists(new org.apache.hadoop.fs.Path(root, "_log")),
       s"table already exists at $root")
@@ -1896,7 +1893,7 @@ object GraftTable {
     // spec sidecar only publishes WITH v0's manifest below)
     val w = writeDataFiles(spark, root, 0, df, key, nBuckets,
       specOverride = partitioning.map(Some(_)))
-    commitManifest(spark, root, 0, w.entries, Seq.empty,
+    commitManifest(spark, root, 0, w.entries, Seq.empty, cursor,
       statLines = w.statLines, kmvLines = w.kmvLines,
       partitionJson = partitioning.map(_.render))
   }
@@ -1968,9 +1965,11 @@ object GraftTable {
       writeAtomic(f, new org.apache.hadoop.fs.Path(dstRoot,
         s"_log/check-$name.json"), ex) }
     val (sf, _) = fs(srcRoot, spark)
+    // the source's tombstones as ONE write-once file, the form a DROP
+    // COLUMN writes (see [[droppedPhysicals]])
     val dropped = droppedPhysicals(sf, srcRoot)
-    if (dropped.nonEmpty) writeAtomic(f,
-      new org.apache.hadoop.fs.Path(dstRoot, "_log/dropped.json"),
+    if (dropped.nonEmpty) writeAtomic(f, new org.apache.hadoop.fs.Path(
+      dstRoot, s"_log/dropped-${newToken()}.json"),
       dropped.toSeq.sorted.mkString("", "\n", "\n"))
     // re-key the referenced files' stats ledger onto the absolute refs
     val rels = entries.map(_.relPath).toSet
@@ -1980,7 +1979,7 @@ object GraftTable {
     val cloned = entries.map(e => e.copy(
       relPath = dataPath(srcRoot, e.relPath),
       dvPath = if (e.hasDv) dataPath(srcRoot, e.dvPath) else ""))
-    commitManifest(spark, dstRoot, 0, cloned, Seq.empty,
+    commitManifest(spark, dstRoot, 0, cloned, Seq.empty, None,
       statLines = statLines,
       partitionJson = partitionSpec(spark, srcRoot, v).map(_.render))
   }
@@ -2003,9 +2002,7 @@ object GraftTable {
     * `VERSION AS OF` read with a range predicate reports the PRUNED
     * size, which is what lets Catalyst choose a broadcast join for a
     * selective read of a huge table). Bytes come from the manifest's
-    * per-file sizes; lines from pre-round-10 manifests (no recorded
-    * size) fall back to one `getFileStatus` each — metadata RPCs
-    * proportional to manifest length, never data I/O. */
+    * per-file sizes — zero filesystem RPCs. */
   def snapshotStats(spark: SparkSession, root: String, version: Int,
       keyRange: Option[(Long, Long)] = None): (Long, Long) = {
     val all = loadManifest(spark, root, version)
@@ -2014,12 +2011,7 @@ object GraftTable {
         all.filter(e => e.maxKey >= lo && e.minKey <= hi)
       case None => all
     }
-    val (f, _) = fs(root, spark)
-    val bytes = entries.map { e =>
-      if (e.nBytes >= 0) e.nBytes
-      else f.getFileStatus(
-        new org.apache.hadoop.fs.Path(dataPath(root, e.relPath))).getLen
-    }.sum
+    val bytes = entries.map(_.nBytes).sum
     // LIVE rows (physical − DV'd): what the scan will actually emit.
     // Bytes stay the physical file sizes — an over-estimate on DV'd
     // files that errs AGAINST broadcasting, the safe direction.
@@ -2031,10 +2023,8 @@ object GraftTable {
     * so building a scan costs zero filesystem metadata RPCs (the 100 TB
     * concern: a listing of 100k files on an object store is seconds of
     * planning; the manifest already recorded every length at commit
-    * time). Same file-intersection rule as [[readRange]]. Legacy
-    * manifest lines without a recorded size (pre-byte-ledger tables)
-    * fall back to one `getFileStatus` each. Block size is nominal —
-    * split planning uses `maxPartitionBytes`, not the block size. */
+    * time). Same file-intersection rule as [[readRange]]. Block size
+    * is nominal — split planning uses `maxPartitionBytes`. */
   private[sources] def snapshotFileStatuses(spark: SparkSession, root: String,
       version: Int, keyRange: Option[(Long, Long)] = None)
     : Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -2046,10 +2036,8 @@ object GraftTable {
     val (f, _) = fs(root, spark)
     entries.map { e =>
       val p = f.makeQualified(new org.apache.hadoop.fs.Path(dataPath(root, e.relPath)))
-      if (e.nBytes >= 0)
-        new org.apache.hadoop.fs.FileStatus(e.nBytes, false, 1,
-          128L * 1024 * 1024, 0L, p)
-      else f.getFileStatus(p)
+      new org.apache.hadoop.fs.FileStatus(e.nBytes, false, 1,
+        128L * 1024 * 1024, 0L, p)
     }
   }
 
@@ -2199,11 +2187,8 @@ object GraftTable {
     entries.map { e =>
       val p = f.makeQualified(
         new org.apache.hadoop.fs.Path(dataPath(root, e.relPath)))
-      val st =
-        if (e.nBytes >= 0)
-          new org.apache.hadoop.fs.FileStatus(e.nBytes, false, 1,
-            128L * 1024 * 1024, 0L, p)
-        else f.getFileStatus(p)
+      val st = new org.apache.hadoop.fs.FileStatus(e.nBytes, false, 1,
+        128L * 1024 * 1024, 0L, p)
       (st, if (e.hasDv) dataPath(root, e.dvPath) else "", e.dvRows)
     }
   }
@@ -2288,19 +2273,11 @@ object GraftTable {
   }
 
   /** The pruned snapshot's file ledger for the `$files` metadata table:
-    * (relPath, minKey, maxKey, rows, bytes) straight from the manifest
-    * (legacy unknown sizes resolve with one getFileStatus each). */
+    * (relPath, minKey, maxKey, rows, bytes) straight from the manifest. */
   private[graft] def snapshotFileLedger(spark: SparkSession, root: String,
-      version: Int): Seq[(String, Long, Long, Long, Long)] = {
-    val (f, _) = fs(root, spark)
-    loadManifest(spark, root, version).map { e =>
-      val bytes =
-        if (e.nBytes >= 0) e.nBytes
-        else f.getFileStatus(
-          new org.apache.hadoop.fs.Path(dataPath(root, e.relPath))).getLen
-      (e.relPath, e.minKey, e.maxKey, e.nRows, bytes)
-    }
-  }
+      version: Int): Seq[(String, Long, Long, Long, Long)] =
+    loadManifest(spark, root, version).map(e =>
+      (e.relPath, e.minKey, e.maxKey, e.nRows, e.nBytes))
 
   /** Exact snapshot NULL count of `column` from colstats alone: Some
     * iff EVERY live file at `version` carries a recorded `#nulls.<col>`
@@ -2389,10 +2366,12 @@ object GraftTable {
   // commit attempt, and ONE optimistic-concurrency loop ([[occCommit]])
   // — the Delta `Snapshot` / `OptimisticTransaction` split:
   //   - [[batchCommit]] (schema alignment + batch-cache ownership):
-  //     upsert, auditedUpsert, appendUpsert, applyCdcBatch(At);
+  //     upsert, auditedUpsert, appendUpsert, applyCdcBatch;
   //   - [[rewriteCommit]] (re-encode inputs once, rebase over a
   //     disjoint race): optimize, absorbDvs, optimizeZOrder;
-  //   - a retrying body over one snapshot: mergeBranch;
+  //   - a retrying body over one snapshot: mergeBranch, and the MV
+  //     refresh ([[GraftMv.refresh]], a CDC apply that advances the
+  //     MV table's `#cursor`);
   //   - single attempt: upsertOnce, resolveEqDels, the delete verbs,
   //     setPartitioning, setHashBuckets, restore, evolveAddColumns,
   //     renameColumn, dropColumn — a retry of the layout and schema
@@ -2402,12 +2381,13 @@ object GraftTable {
   // directly.
 
   /** The table head one commit attempt plans over: the version, its
-    * file entries and pending equality deletes (parsed from ONE read
-    * of the manifest), the schema AS OF the version, the key's ledger
-    * mode ([[keyHashMode]]) and the table properties. */
-  private final case class TableSnapshot(version: Int,
+    * file entries, pending equality deletes and `#cursor` (parsed from
+    * ONE read of the manifest), the schema AS OF the version, the
+    * key's ledger mode ([[keyHashMode]]) and the table properties. */
+  private[sources] final case class TableSnapshot(version: Int,
       entries: Seq[FileEntry], schema: StructType, hashKey: Boolean,
-      eqdels: Seq[EqDel], props: Map[String, String]) {
+      eqdels: Seq[EqDel], cursor: Option[String],
+      props: Map[String, String]) {
     def next: Int = version + 1
   }
 
@@ -2417,7 +2397,7 @@ object GraftTable {
     require(v >= 0, s"no graft table at $root")
     val text = manifestText(spark, root, v)
     TableSnapshot(v, parseManifest(text), tableSchema(spark, root, v),
-      keyHashMode(spark, root), parseEqDels(text),
+      keyHashMode(spark, root), parseEqDels(text), parseCursor(text),
       tableProperties(spark, root))
   }
 
@@ -2444,7 +2424,7 @@ object GraftTable {
     * a whole distributed merge on unrelated failures and mask the root
     * cause. A losing attempt's staged files become unreferenced
     * orphans that [[vacuum]] sweeps, like a crashed commit's. */
-  private def occCommit[T](spark: SparkSession, root: String,
+  private[sources] def occCommit[T](spark: SparkSession, root: String,
       maxRetries: Int, first: Option[TableSnapshot] = None)(
       body: TableSnapshot => T): T = {
     var snap = first.getOrElse(resolveSnapshot(spark, root))
@@ -2493,14 +2473,14 @@ object GraftTable {
 
   /** Publish `carried` plus the files `w` wrote (with their stats
     * sidecar lines) as `snap`'s next version, carrying `snap`'s pending
-    * eqdels unless `eqdels` replaces them. */
+    * eqdels and cursor unless `eqdels` / `cursor` replace them. */
   private def commitWritten(spark: SparkSession, root: String,
       snap: TableSnapshot, carried: Seq[FileEntry], w: Written,
-      txn: Option[TxnRef] = None, note: Option[String] = None,
+      txn: Option[TxnRef] = None, cursor: Option[String] = None,
       eqdels: Option[Seq[EqDel]] = None): Unit =
     commitManifest(spark, root, snap.next, carried ++ w.entries,
-      eqdels.getOrElse(snap.eqdels), statLines = w.statLines,
-      kmvLines = w.kmvLines, txn = txn, note = note)
+      eqdels.getOrElse(snap.eqdels), cursor.orElse(snap.cursor),
+      statLines = w.statLines, kmvLines = w.kmvLines, txn = txn)
 
   /** THE REWRITE COMMIT of the maintenance verbs ([[optimize]],
     * [[absorbDvs]], [[optimizeZOrder]]): `write` re-encodes the masked
@@ -3003,35 +2983,11 @@ object GraftTable {
       CommitRetries)(applyCdcAttempt(spark, root, _, _, key, opCol,
         nBuckets))
 
-  /** [[applyCdcBatch]] PINNED at exactly `pinVersion` with a `#note`
-    * commit marker — single attempt, NO retry: if any commit (racer
-    * replay, compaction, anything) takes the pinned slot first, this
-    * throws [[ConcurrentCommitException]] without applying. The pin +
-    * note pair is what makes a DETERMINISTIC replay protocol (the MV
-    * refresh) exactly-once under concurrency: a batch only ever lands
-    * at the version its inputs were computed against, and a loser can
-    * tell from the slot's note whether its twin applied the same
-    * window (success) or a foreign commit stole the slot (recompute
-    * and re-pin). */
-  private[sources] def applyCdcBatchAt(spark: SparkSession, root: String,
-      batch: DataFrame, key: String, opCol: String, nBuckets: Int,
-      pinVersion: Int, note: String): (Int, Int, Int) =
-    batchCommit(spark, root, batch, Some(Seq(opCol)), cacheBatch = true,
-      maxRetries = 0) { (snap, b) =>
-      // refuse before any work if anything landed since the pin was
-      // chosen (the batch was computed against pre-pin state; the
-      // manifest rename arbitrates the exact race for the pinned slot)
-      if (snap.next != pinVersion)
-        throw new ConcurrentCommitException(
-          s"pinned CDC apply at $root: version $pinVersion no longer " +
-            s"next (head is ${snap.version})")
-      applyCdcAttempt(spark, root, snap, b, key, opCol, nBuckets,
-        Some(note))
-    }
-
-  private def applyCdcAttempt(spark: SparkSession, root: String,
+  /** One [[applyCdcBatch]] attempt over `snap`, publishing `cursor`
+    * with it when given (the MV refresh) and `snap`'s otherwise. */
+  private[sources] def applyCdcAttempt(spark: SparkSession, root: String,
       snap: TableSnapshot, batch: DataFrame, key: String, opCol: String,
-      nBuckets: Int, note: Option[String] = None): (Int, Int, Int) = {
+      nBuckets: Int, cursor: Option[String] = None): (Int, Int, Int) = {
     val schema = snap.schema
     require(batch.columns.contains(opCol), s"batch must carry $opCol")
     require((batch.columns.toSet - opCol) == schema.fieldNames.toSet,
@@ -3068,7 +3024,7 @@ object GraftTable {
     val (mode, maxDirty) = dmlMode(snap.props)
     if (mode != "cow")
       return applyCdcBatchMoR(spark, root, snap, batch, key, opCol,
-        nBuckets, rewrite, carry, if (mode == "dv") 1.0 else maxDirty, note)
+        nBuckets, rewrite, carry, if (mode == "dv") 1.0 else maxDirty, cursor)
     val current = readEntries(spark, root, schema, rewrite, snap.eqdels)
     val cols = schema.fieldNames
     // 'upsert' merges column-wise (NULL batch cell keeps the target's
@@ -3093,7 +3049,7 @@ object GraftTable {
     val v = snap.next
     val w = writeDataFiles(spark, root, v, merged, key,
       writeBuckets(spark, root, snap.version, nBuckets, rewrite.size))
-    commitWritten(spark, root, snap, carry, w, note = note)
+    commitWritten(spark, root, snap, carry, w, cursor = cursor)
     (v, rewrite.size, carry.size)
   }
 
@@ -3110,7 +3066,7 @@ object GraftTable {
   private def applyCdcBatchMoR(spark: SparkSession, root: String,
       snap: TableSnapshot, batch: DataFrame, key: String, opCol: String,
       nBuckets: Int, hit: Seq[FileEntry], carry: Seq[FileEntry],
-      maxDirty: Double, note: Option[String]): (Int, Int, Int) = {
+      maxDirty: Double, cursor: Option[String]): (Int, Int, Int) = {
     val v = snap.next
     val cols = snap.schema.fieldNames
     val tMark = "__graft_t"; val bMark = "__graft_b"
@@ -3173,7 +3129,7 @@ object GraftTable {
         j.filter(matched).select(col(DvNameCol), col(DvPosCol)).distinct(),
         touched)
       commitWritten(spark, root, snap, carry ++ hitClean ++ dvUpdated, w,
-        note = note)
+        cursor = cursor)
       (v, cow.size, carry.size + hitClean.size + dv.size)
     } finally j.unpersist()
   }
@@ -3542,8 +3498,8 @@ object GraftTable {
     // path (comma-separated; `graft.mv.refreshEveryBatches` sets the
     // cadence, default every batch — the delta is O(feed), so
     // per-trigger freshness is affordable). Safe under concurrent
-    // sinks and racing refreshers: refresh windows are CAS-arbitrated
-    // and pinned (exactly-once). A listed root WITHOUT an MV
+    // sinks and racing refreshers: each refresh is one commit on the
+    // MV table that advances its cursor (exactly-once). A listed root WITHOUT an MV
     // definition is skipped (a dropped MV must not wedge the sink);
     // a real refresh failure propagates — silently serving a stale
     // MV forever would be worse than a loud sink error.
@@ -3653,6 +3609,7 @@ object GraftTable {
         snap.schema, snap.entries, snap.eqdels), key, nBuckets = n,
         layoutOverride = Some(Some(n)))
       commitManifest(spark, root, snap.next, w.entries, Seq.empty,
+        snap.cursor,
         statLines = w.statLines, kmvLines = w.kmvLines,
         layoutJson = Some(s"hash\t$n"))
       snap.next
@@ -3774,7 +3731,7 @@ object GraftTable {
       // restored era's count as this commit's layout sidecar.
       val restoredLayout = hashLayout(spark, root, toVersion)
       commitManifest(spark, root, snap.next, parseManifest(text),
-        parseEqDels(text),
+        parseEqDels(text), parseCursor(text),
         schemaJson = if (restored != snap.schema) Some(restored.json) else None,
         // `none` expresses "restored era had NO hash layout" (layout was
         // ADOPTED after toVersion): it masks both newer sidecars and the
@@ -4155,7 +4112,7 @@ object GraftTable {
     // the main-log commit protocol, published into the branch's lineage
     // directory: sidecars stay branch-local, instants monotone within
     // the branch
-    commitManifest(spark, root, bv, carry ++ w.entries, Seq.empty,
+    commitManifest(spark, root, bv, carry ++ w.entries, Seq.empty, None,
       statLines = w.statLines, kmvLines = w.kmvLines, branch = Some(name))
     bv
   }
@@ -4206,8 +4163,10 @@ object GraftTable {
           "(or publish through a MERGE) instead")
     }
     // branches fork without live eqdels; a stale pending list of the
-    // base rides every published version, as any commit's would
-    val baseEq = pendingEqDels(spark, root, base)
+    // base rides every published version, as any commit's would, and
+    // so does the base's cursor
+    val baseText = readFully(f, manifestPath(root, base))
+    val (baseEq, baseCursor) = (parseEqDels(baseText), parseCursor(baseText))
     bvs.foreach { bv =>
       val v = base + bv
       val entries = branchEntries(spark, root, name, bv)
@@ -4228,7 +4187,7 @@ object GraftTable {
           if (!f.exists(p)) Seq.empty
           else readFully(f, p).linesIterator.filter(_.nonEmpty).toSeq
         }
-        try commitManifest(spark, root, v, entries, baseEq,
+        try commitManifest(spark, root, v, entries, baseEq, baseCursor,
           statLines = branchLines("colstats"), kmvLines = branchLines("kmv"))
         catch {
           case e: ConcurrentCommitException =>
@@ -4623,18 +4582,18 @@ object GraftTable {
       // token — a race-losing DDL writer can never replace the winner's
       // staged schema (the round-14 corruption)
       commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
+        snap.cursor,
         schemaJson = Some(StructType(schema.fields ++ mapped).json))
       snap.next
     }
 
   /** Physical names of every column ever dropped — the tombstone list
     * that keeps a later ADD of the same name from resurrecting old
-    * bytes. The UNION of the legacy `_log/dropped.json` (complete-set
-    * snapshots from older drops / clones) and every per-drop
-    * `_log/dropped-<uuid>.json` (one WRITE-ONCE file per DROP COLUMN,
-    * newline-separated physical names). Per-drop files make the ledger
-    * append-only with no read-modify-write: two concurrent DROPs each
-    * create their own uniquely-named tombstone, so neither can lose
+    * bytes: the union of every `_log/dropped-<token>.json` (one
+    * WRITE-ONCE file per DROP COLUMN, or per clone for the source's
+    * set; newline-separated physical names). Per-drop files make the
+    * ledger append-only with no read-modify-write: two concurrent DROPs
+    * each create their own uniquely-named tombstone, so neither can lose
     * the other's entry whatever order their manifest commits land in.
     * A tombstone whose drop commit lost the version race is harmless
     * over-approximation (a later ADD of that name just gets a
@@ -4644,8 +4603,8 @@ object GraftTable {
     val log = new org.apache.hadoop.fs.Path(root, "_log")
     if (!f.exists(log)) return Set.empty
     f.listStatus(log).map(_.getPath)
-      .filter(p => p.getName == "dropped.json" ||
-        (p.getName.startsWith("dropped-") && p.getName.endsWith(".json")))
+      .filter(p => p.getName.startsWith("dropped-") &&
+        p.getName.endsWith(".json"))
       .flatMap(p => readFully(f, p).linesIterator.filter(_.nonEmpty))
       .toSet
   }
@@ -4700,6 +4659,7 @@ object GraftTable {
             .build())
       })
       commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
+        snap.cursor,
         schemaJson = Some(renamed.json))
       snap.next
     }
@@ -4735,9 +4695,10 @@ object GraftTable {
       // DROPs can never lose each other's tombstones — see
       // [[droppedPhysicals]].
       writeAtomic(fs(root, spark)._1, new org.apache.hadoop.fs.Path(root,
-        s"_log/dropped-${java.util.UUID.randomUUID().toString.take(8)}.json"),
+        s"_log/dropped-${newToken()}.json"),
         physName(schema.fields.find(_.name == name).get) + "\n")
       commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
+        snap.cursor,
         schemaJson = Some(StructType(schema.fields.filterNot(_.name == name))
           .json), beforePublish = beforePublish)
       snap.next

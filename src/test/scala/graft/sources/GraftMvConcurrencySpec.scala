@@ -4,11 +4,11 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** CONCURRENT MV refresh (round 17): the CAS-versioned cursor + the
-  * pinned, note-marked window apply make refresh exactly-once under
-  * races — twin refreshers replay the same deterministic window into
-  * the same pinned slot (one lands, the loser recognizes the note);
-  * a FOREIGN commit stealing the slot re-pins instead of losing or
+/** CONCURRENT MV refresh: a refresh is one commit on the MV table
+  * that publishes the window's rows with the advanced cursor, so it is
+  * exactly-once under races — a twin refresher that loses the publish
+  * finds the cursor at the heads; a FOREIGN commit that wins it
+  * carried the old cursor, so the refresh rebases instead of losing or
   * double-applying the delta. No leases, no clocks. */
 class GraftMvConcurrencySpec extends SparkSpec {
   import spark.implicits._
@@ -65,47 +65,33 @@ class GraftMvConcurrencySpec extends SparkSpec {
     }
   }
 
-  test("a FOREIGN commit stealing the pinned slot: refresh re-pins " +
-      "and applies the window once — never 'applied' by mistake, " +
-      "never doubled") {
+  test("a FOREIGN commit winning the MV publish race: the refresh " +
+      "rebases on it and applies the window once — never doubled, the " +
+      "cursor carried through the foreign commit") {
     val d = freshDir()
     GraftTable.create(spark, s"$d/src", src(400), "k", nBuckets = 2)
     GraftMv.create(spark, s"$d/mv", s"$d/src", "g",
       Seq(MvAgg("count", "", "n"), MvAgg("sum", "v", "sv")))
     GraftTable.upsert(spark, s"$d/src",
       src(400).filter($"k" % 13 === 5).withColumn("v", lit(-77L)), "k")
-    // plant refresher A's intent (crashed after publishing it): the
-    // window [0 -> 1] expects the MV's next version
+    // a FOREIGN content-preserving commit (restore-to-head always
+    // commits a fresh manifest) lands just before the refresh's publish
     val mvHead = GraftTable.latestVersion(spark, s"$d/mv")
-    val log = new java.io.File(s"$d/mv/_log")
-    val vs = log.listFiles().map(_.getName)
-      .collect { case n if n.matches("mvdef-v\\d+\\.def") =>
-        n.stripPrefix("mvdef-v").stripSuffix(".def").toInt }.sorted
-    val cur = scala.io.Source.fromFile(
-      new java.io.File(log, f"mvdef-v${vs.last}%05d.def"))
-    val txt = try cur.mkString finally cur.close()
-    val next = f"mvdef-v${vs.last + 1}%05d.def"
-    java.nio.file.Files.writeString(new java.io.File(log, next).toPath,
-      txt + s"pending\t0\t1\t${mvHead + 1}\t\n")
-    new java.io.File(log, s".$next.crc").delete()
-    GraftTable.commitEpoch.incrementAndGet()
-    // a FOREIGN content-preserving commit takes the pinned slot
-    // (restore-to-head always commits a fresh manifest, no note)
-    GraftTable.restore(spark, s"$d/mv", mvHead)
-    assert(GraftTable.latestVersion(spark, s"$d/mv") === mvHead + 1)
-    assert(GraftTable.manifestNote(spark, s"$d/mv", mvHead + 1).isEmpty)
-    // refresh must see the stolen slot (no matching note), RE-PIN the
-    // window, and apply it exactly once
-    val (v, dirty) = GraftMv.refresh(spark, s"$d/mv")
-    assert(v === 1 && dirty > 0,
-      "the stolen slot must not read as 'applied'")
+    val (v, dirty) = GraftTable.withLogStore(new RaceOnceLogStore(() => {
+      GraftTable.restore(spark, s"$d/mv", mvHead); ()
+    }))(GraftMv.refresh(spark, s"$d/mv"))
+    assert(v === 1 && dirty > 0, "the window must apply after the race")
     assert(got(d) === want(d))
-    // and the re-pinned apply carries the window's note
+    // the racer carried the old cursor; the rebased refresh published
+    // the new one on top of it
     val head = GraftTable.latestVersion(spark, s"$d/mv")
-    assert(GraftTable.manifestNote(spark, s"$d/mv", head)
-      .exists(_.startsWith("mvwindow 0 1")))
+    assert(head === mvHead + 2)
+    val racer = scala.io.Source.fromFile(
+      f"$d/mv/_log/v${mvHead + 1}%05d.manifest")
+    try assert(racer.getLines().contains("#cursor\t0")) finally racer.close()
+    assert(GraftTable.headCursor(spark, s"$d/mv") === Some("1"))
+    assert(GraftMv.refresh(spark, s"$d/mv")._2 === 0L)
   }
-
 
   test("auto-fresh MVs on the ingest path: graft.mv.autorefresh " +
       "advances the MV every committed batch, replays stay idempotent, " +
@@ -141,9 +127,10 @@ class GraftMvConcurrencySpec extends SparkSpec {
   }
 
 
-  test("metadata stays BOUNDED under a long refresh chain: def-version " +
-      "retention sweeps old cursors; graft.maintenance.auto on the MV " +
-      "table bounds its file count; content stays exact throughout") {
+  test("metadata stays BOUNDED under a long refresh chain: one def " +
+      "file, the cursor rides the MV manifests; graft.maintenance.auto " +
+      "on the MV table bounds its file count; content stays exact " +
+      "throughout") {
     val d = freshDir()
     GraftTable.create(spark, s"$d/src", src(400), "k", nBuckets = 2)
     GraftMv.create(spark, s"$d/mv", s"$d/src", "g",
@@ -160,9 +147,10 @@ class GraftMvConcurrencySpec extends SparkSpec {
     }
     assert(got(d) === want(d), "25 windows must stay exact")
     val log = new java.io.File(s"$d/mv/_log")
-    val nDefs = log.listFiles().count(_.getName.matches("mvdef-v\\d+\\.def"))
-    assert(nDefs <= 30,
-      s"def versions must be retention-bounded, found $nDefs")
+    assert(log.listFiles().map(_.getName).filter(_.startsWith("mv"))
+      .toSeq === Seq("mvdef.tsv"), "the definition is one static file")
+    assert(GraftTable.headCursor(spark, s"$d/mv") ===
+      Some(GraftTable.latestVersion(spark, s"$d/src").toString))
     val nFiles = GraftTable.snapshotFileLedger(spark, s"$d/mv",
       GraftTable.latestVersion(spark, s"$d/mv")).size
     assert(nFiles <= 12,

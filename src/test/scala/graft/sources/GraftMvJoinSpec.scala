@@ -214,49 +214,37 @@ class GraftMvJoinSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.mv.rewrite.views")
   }
 
-  test("crash-safe refresh: a torn cursor with dim targets recovers " +
-      "exactly once (applied finalizes, unapplied redoes)") {
+  test("crash-safe refresh: a refused publish with dim targets " +
+      "changes nothing; the retry applies once and the cursor reaches " +
+      "every head") {
     val d = setup()
     GraftMv.createJoined(spark, s"$d/mv", s"$d/fact",
       Seq(s"$d/dim1" -> "fk1"),
       Seq(MvGroup("grp", "grp")),
       Seq(MvAgg("count", "", "n"), MvAgg("sum", "v", "sv")))
+    val before = want1(d)
     GraftTable.upsert(spark, s"$d/dim1",
       spark.range(0, 10).select($"id".as("d1k"), (($"id" + 1) % 6).as("grp")),
       "d1k")
     GraftTable.upsert(spark, s"$d/fact",
       GraftTable.read(spark, s"$d/fact").filter($"k" % 29 === 7)
         .withColumn("v", lit(-9L)), "k")
-    // simulate a crash AFTER the apply, BEFORE the cursor finalize:
-    // run a full refresh, then plant the pending form as the NEXT
-    // CAS def version (what a died-mid-finalize refresher leaves)
-    val log = new java.io.File(s"$d/mv/_log")
-    def defVersions(): Seq[Int] = log.listFiles().map(_.getName)
-      .collect { case n if n.matches("mvdef-v\\d+\\.def") =>
-        n.stripPrefix("mvdef-v").stripSuffix(".def").toInt }.sorted.toSeq
-    def readDefAt(v: Int): String = {
-      val sc = scala.io.Source.fromFile(
-        new java.io.File(log, f"mvdef-v$v%05d.def"))
-      try sc.mkString finally sc.close()
+    val mvHead = GraftTable.latestVersion(spark, s"$d/mv")
+    intercept[GraftTable.ConcurrentCommitException] {
+      GraftTable.withLogStore(new RefuseManifestsLogStore)(
+        GraftMv.refresh(spark, s"$d/mv"))
     }
-    val before = readDefAt(defVersions().last)
-    val mvV0 = GraftTable.latestVersion(spark, s"$d/mv")
-    GraftMv.refresh(spark, s"$d/mv")
-    val after = want1(d)
-    // rewind: pending says the window [0->heads] expected mvV0+1
-    val torn = before.replaceAll("(?m)^lastv\t.*$",
-      s"lastv\t0") + s"pending\t0\t1\t${mvV0 + 1}\t1\n"
-    val nextV = defVersions().last + 1
-    val next = f"mvdef-v$nextV%05d.def"
-    java.nio.file.Files.writeString(
-      new java.io.File(log, next).toPath, torn)
-    new java.io.File(log, s".$next.crc").delete()
-    GraftTable.commitEpoch.incrementAndGet()
-    // recovery must see the MV AT the expected version -> applied ->
-    // finalize the cursor WITHOUT double-applying
+    assert(GraftTable.latestVersion(spark, s"$d/mv") === mvHead)
+    assert(GraftTable.headCursor(spark, s"$d/mv") === Some("0,0"))
+    assert(want1(d) === before)
     val (v, dirty) = GraftMv.refresh(spark, s"$d/mv")
-    assert(dirty === 0L, "recovery of an APPLIED window must not redo it")
-    assert(want1(d) === after)
+    assert(v === 1 && dirty > 0L)
+    assert(want1(d) === enrichNow(d).groupBy($"grp")
+      .agg(count(lit(1)).as("n"), sum($"v").as("sv"))
+      .as[(Long, Long, Long)].collect().toSeq.sorted)
+    assert(GraftTable.headCursor(spark, s"$d/mv") === Some("1,1"))
+    assert(GraftMv.refresh(spark, s"$d/mv")._2 === 0L,
+      "a refresh at the cursor must not redo the window")
   }
 
   private def want1(d: String): Seq[(Long, Long, Long)] =

@@ -7,8 +7,8 @@ import java.nio.file.Files
 /** Incremental materialized-view contracts: a [[GraftMv]] refresh
   * converges to the full GROUP BY recompute by CHANGE-FEED DELTA
   * (count/sum: source never read; min/max: dirty groups re-agg), and
-  * the write-ahead cursor makes an interrupted refresh impossible to
-  * double-apply. */
+  * the cursor publishing with the rows makes an interrupted refresh
+  * impossible to double-apply. */
 class GraftMvSpec extends SparkSpec {
   import spark.implicits._
 
@@ -103,50 +103,35 @@ class GraftMvSpec extends SparkSpec {
     assert(got === want)
   }
 
-  test("crash-safety: an intent whose apply COMMITTED is finalized, " +
-      "never re-applied; one that didn't is redone") {
+  test("crash-safety: a refused MV publish leaves head, cursor and " +
+      "rows unchanged; the next refresh applies the window once") {
     val d = freshDir()
     GraftTable.create(spark, s"$d/src", src(200), "k", nBuckets = 2)
     GraftMv.create(spark, s"$d/mv", s"$d/src", "g",
       Seq(MvAgg("count", "", "n"), MvAgg("sum", "v", "sv")))
+    val before = GraftMv.read(spark, s"$d/mv").orderBy("g").collect().toSeq
     GraftTable.upsert(spark, s"$d/src",
       Seq((5L, 0L, 777L)).toDF("k", "g", "v"), "k")
     val want = fullAgg(s"$d/src").orderBy("g").collect().toSeq
-    // the def/cursor is CAS-versioned (round 17): a "crash" plants the
-    // torn state as the NEXT def version — exactly what a writer that
-    // published its intent and then died leaves behind
-    def rewrite(f: String => String): Unit = {
-      val log = new java.io.File(s"$d/mv/_log")
-      val vs = log.listFiles().map(_.getName)
-        .collect { case n if n.matches("mvdef-v\\d+\\.def") =>
-          n.stripPrefix("mvdef-v").stripSuffix(".def").toInt }.sorted
-      val cur = new java.io.File(log, f"mvdef-v${vs.last}%05d.def")
-      val sc = scala.io.Source.fromFile(cur)
-      val txt = try sc.mkString finally sc.close()
-      val next = f"mvdef-v${vs.last + 1}%05d.def"
-      java.nio.file.Files.writeString(
-        new java.io.File(log, next).toPath, f(txt))
-      new java.io.File(log, s".$next.crc").delete()
-      GraftTable.commitEpoch.incrementAndGet()
-    }
-    // CASE 1: crash BEFORE the apply commit — the intent is planted
-    // (expecting MV v1) but the window never landed; recovery drops
-    // the intent and redoes the window exactly once
+    // the refresh's one write is the MV manifest publish: refuse it
+    // (a crash at the commit point leaves the same state)
     val mvHead = GraftTable.latestVersion(spark, s"$d/mv")
-    rewrite(txt => txt + s"pending\t0\t1\t${mvHead + 1}\n")
+    intercept[GraftTable.ConcurrentCommitException] {
+      GraftTable.withLogStore(new RefuseManifestsLogStore)(
+        GraftMv.refresh(spark, s"$d/mv"))
+    }
+    assert(GraftTable.latestVersion(spark, s"$d/mv") === mvHead)
+    assert(GraftTable.headCursor(spark, s"$d/mv") === Some("0"))
+    assert(GraftMv.read(spark, s"$d/mv").orderBy("g").collect().toSeq
+      === before)
     val (v1, dirty1) = GraftMv.refresh(spark, s"$d/mv")
-    assert(v1 === 1 && dirty1 > 0L, "uncommitted window must redo")
+    assert(v1 === 1 && dirty1 > 0L, "the refused window must apply")
     assert(GraftMv.read(spark, s"$d/mv").orderBy("g").collect().toSeq
       === want)
-    // CASE 2: crash AFTER the apply commit, BEFORE cursor finalize —
-    // rewind lastv and plant an intent expecting the version that IS
-    // now the head: recovery must finalize WITHOUT re-applying (a
-    // redo would double-count the delta)
-    val applied = GraftTable.latestVersion(spark, s"$d/mv")
-    rewrite(txt => txt.replaceAll("(?m)^lastv\t1$", "lastv\t0") +
-      s"pending\t0\t1\t$applied\n")
-    val (v2, dirty2) = GraftMv.refresh(spark, s"$d/mv")
-    assert(v2 === 1 && dirty2 === 0L, "committed window must not redo")
+    // rows and cursor publish together: the head's cursor IS the
+    // source head, so a second refresh has nothing to apply
+    assert(GraftTable.headCursor(spark, s"$d/mv") === Some("1"))
+    assert(GraftMv.refresh(spark, s"$d/mv") === ((1, 0L)))
     assert(GraftMv.read(spark, s"$d/mv").orderBy("g").collect().toSeq
       === want)
   }

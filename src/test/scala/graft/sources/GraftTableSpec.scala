@@ -1548,6 +1548,27 @@ class GraftTableSpec extends SparkSpec {
     assert(head.filter($"v".isNotNull).count() === 3)
   }
 
+  test("SHALLOW CLONE carries the tombstones: a column dropped on the " +
+    "source and re-added on the clone surfaces NULLs") {
+    val tmp = Files.createTempDirectory("graft_clone_drop_spec").toString
+    val src = s"$tmp/src"; val dst = s"$tmp/dst"
+    GraftTable.create(spark, src, base(100), "k", nBuckets = 2)
+    GraftTable.dropColumn(spark, src, "v")
+    GraftTable.cloneTable(spark, src, dst)
+    // one write-once tombstone file, the form DROP COLUMN writes
+    assert(new java.io.File(s"$dst/_log").list().toSeq
+      .count(_.matches("dropped-[0-9a-f]{8}\\.json")) === 1)
+    // the clone references the source's files, which still store the
+    // old 'v' bytes: the re-added column must not resurrect them
+    GraftTable.evolveAddColumns(spark, dst, Seq(
+      org.apache.spark.sql.types.StructField("v",
+        org.apache.spark.sql.types.LongType, nullable = true)))
+    val readded = GraftTable.read(spark, dst)
+    assert(readded.columns.toSeq === Seq("k", "name", "v"))
+    assert(readded.count() === 100)
+    assert(readded.filter($"v".isNotNull).count() === 0)
+  }
+
   test("rename + drop compose: changes() and CDF replay stay coherent " +
     "across the mapping commits") {
     val root = freshRoot()
