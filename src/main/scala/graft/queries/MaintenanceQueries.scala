@@ -3945,7 +3945,7 @@ object MaintenanceQueries {
   /** STORAGE-PARTITIONED JOIN over HASH-LAYOUT tables (round 15): the
     * orders and lineitem slices land as co-bucketed graft tables
     * (`hashLayout = true`, 8 buckets on the order key — mono-bucket
-    * files, `_log/layout.json`), the DSv2 scans report
+    * files, `#layout 8` in each manifest header), the DSv2 scans report
     * `KeyGroupedPartitioning(bucket(8, k))` resolved through the
     * catalog's V2 `bucket` function, and the fact⋈fact join executes
     * with ZERO exchanges under either side (pinned by walking the

@@ -136,40 +136,26 @@ object GraftMv {
     * records the create-time dim versions). */
   private final case class MvDef(source: String, sourceKey: String,
       groups: Seq[MvGroup], aggs: Seq[MvAgg], lastV: Int,
-      filter: Option[String] = None, // row predicate (SQL expression)
+      filter: Option[String], // row predicate (SQL expression)
       // whether the MV table is keyed by the synthesized __mv_g string
-      // (None on legacy defs → derive from the group shape)
-      keymode: Option[Boolean] = None,
-      joins: Seq[MvJoin] = Seq.empty) {
-    /** Whether this MV keys on the encoded `__mv_g` tuple string. */
-    def encodedKey: Boolean = keymode.getOrElse(composite(groups))
-  }
+      encodedKey: Boolean,
+      joins: Seq[MvJoin])
 
+  /** One line per fact, one form per line kind: `group alias expr`,
+    * `join dim fk dimKey lastV cols via` (empty `cols`/`via` fields
+    * stay in place — [[parseDef]] splits keeping them), `keymode`,
+    * `filter` and `agg kind col alias prec scale`. */
   private def render(d: MvDef): String = {
     val b = new StringBuilder
     b ++= s"source\t${d.source}\n"
     b ++= s"sourceKey\t${d.sourceKey}\n"
-    // legacy 2-field form for a single bare column (older readers keep
-    // working); 3-field `group\talias\texpr` for grains/composites
-    d.groups.foreach { g =>
-      if (d.groups.size == 1 && g.isBare) b ++= s"group\t${g.alias}\n"
-      else b ++= s"group\t${g.alias}\t${g.expr}\n"
-    }
-    // legacy 6-field join line for flat-star spokes (older readers
-    // keep working); 7-field with the fk-holder for snowflake chains
+    d.groups.foreach(g => b ++= s"group\t${g.alias}\t${g.expr}\n")
     d.joins.foreach(j => b ++= s"join\t${j.dim}\t${j.fk}\t${j.dimKey}\t" +
-      s"${j.lastV}\t${j.cols.mkString(",")}" +
-      (if (j.via.isEmpty) "" else s"\t${j.via}") + "\n")
-    d.keymode.foreach(e =>
-      b ++= s"keymode\t${if (e) "encoded" else "direct"}\n")
+      s"${j.lastV}\t${j.cols.mkString(",")}\t${j.via}\n")
+    b ++= s"keymode\t${if (d.encodedKey) "encoded" else "direct"}\n"
     d.filter.foreach(f => b ++= s"filter\t$f\n")
-    // legacy 4-field agg line for integral measures (older readers
-    // keep working); 6-field with precision/scale for decimals
-    d.aggs.foreach(a =>
-      if (a.scale == 0 && a.prec == 0)
-        b ++= s"agg\t${a.kind}\t${a.col}\t${a.alias}\n"
-      else b ++= s"agg\t${a.kind}\t${a.col}\t${a.alias}\t${a.prec}\t" +
-        s"${a.scale}\n")
+    d.aggs.foreach(a => b ++= s"agg\t${a.kind}\t${a.col}\t${a.alias}\t" +
+      s"${a.prec}\t${a.scale}\n")
     b.result()
   }
 
@@ -212,31 +198,24 @@ object GraftMv {
     val aggs = Seq.newBuilder[MvAgg]
     val joins = Seq.newBuilder[MvJoin]
     var filt: Option[String] = None
-    var keymode: Option[Boolean] = None
+    var encoded = false
     text.linesIterator.filter(_.nonEmpty).foreach { l =>
-      l.split('\t') match {
+      l.split("\t", -1) match {
         case Array("source", v) => source = v
         case Array("sourceKey", v) => sourceKey = v
-        case Array("group", v) => groups += MvGroup(v, v)
         case Array("group", a, e) => groups += MvGroup(a, e)
-        case Array("join", dim, fk, dk, v, cols) =>
-          joins += MvJoin(dim, fk, dk, v.toInt,
-            cols.split(',').filter(_.nonEmpty).toSeq)
-        case Array("join", dim, fk, dk, v) => // zero projected columns
-          joins += MvJoin(dim, fk, dk, v.toInt, Seq.empty)
         case Array("join", dim, fk, dk, v, cols, via) =>
           joins += MvJoin(dim, fk, dk, v.toInt,
             cols.split(',').filter(_.nonEmpty).toSeq, via)
-        case Array("keymode", v) => keymode = Some(v == "encoded")
+        case Array("keymode", v) => encoded = v == "encoded"
         case Array("filter", v) => filt = Some(v)
-        case Array("agg", k, c, a) => aggs += MvAgg(k, c, a)
         case Array("agg", k, c, a, p, s) =>
           aggs += MvAgg(k, c, a, p.toInt, s.toInt)
         case _ => () // forward compatibility
       }
     }
     MvDef(source, sourceKey, groups.result(), aggs.result(), -1, filt,
-      keymode, joins.result())
+      encoded, joins.result())
   }
 
   private val HiddenN = "__mv_n"
@@ -616,7 +595,7 @@ object GraftMv {
     val p = defPath(mvRoot)
     GraftTable.writeAtomic(p.getFileSystem(
       spark.sparkContext.hadoopConfiguration), p, render(MvDef(sourceRoot,
-      srcKey, groups, aggsR, srcV, filter, Some(enc), joins)))
+      srcKey, groups, aggsR, srcV, filter, enc, joins)))
     // the MV appearing changes what the rewrite may serve — invalidate
     // same-session planning memos
     GraftTable.commitEpoch.incrementAndGet()

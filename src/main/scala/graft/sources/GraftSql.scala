@@ -219,8 +219,14 @@ class GraftSqlTable(val root: String, val snapshotVersion: Int,
 
   override def version(): String = snapshotVersion.toString
 
-  override def schema(): StructType =
-    GraftTable.tableSchema(SparkSession.active, root, snapshotVersion)
+  /** The pinned version's definition, read once: it never changes, and
+    * Spark re-validates a captured table's columns when the query
+    * executes — after a VACUUM in between may have removed the
+    * version's manifest. */
+  private lazy val meta =
+    GraftTable.tableMeta(SparkSession.active, root, snapshotVersion)
+
+  override def schema(): StructType = meta.schema
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE)
@@ -233,8 +239,7 @@ class GraftSqlTable(val root: String, val snapshotVersion: Int,
     val m = new util.HashMap[String, String]()
     GraftTable.keyColumn(spark, root).foreach(m.put("key", _))
     if (snapshotVersion >= 0)
-      GraftTable.partitionSpec(spark, root, snapshotVersion)
-        .foreach(t => m.put("partitioning", t.render))
+      meta.spec.foreach(t => m.put("partitioning", t.render))
     GraftTable.constraints(spark, root)
       .foreach { case (n, e) => m.put(s"check.$n", e) }
     GraftTable.tableProperties(spark, root)
@@ -1425,9 +1430,8 @@ private[sources] case class GraftEqPartition(
     keyOrdinal: Int, keyAppended: Boolean, keyTypeName: String,
     hconf: Map[String, String],
     // hash-ledgered (string) key: the sidecar stores the RAW key and
-    // masking compares it exactly; legacy numeric-string tables keep
-    // the parse-to-long path (false)
-    rawStringKey: Boolean = false)
+    // masking compares it exactly; integral keys parse to longs
+    rawStringKey: Boolean)
   extends org.apache.spark.sql.connector.read.InputPartition
 
 /** A split of a HASH-LAYOUT table, carrying its bucket id as the
@@ -1480,10 +1484,9 @@ private[sources] object GraftEqKeySets {
     String, java.util.HashMap[AnyRef, java.lang.Integer]]()
 
   /** `rawString` = hash-ledgered table: keys stay the raw sidecar
-    * strings (exact masking); otherwise they parse to longs (the
-    * integral and legacy numeric-string key modes). The mode rides
-    * the cache key so two tables sharing an executor can't cross
-    * contaminate. */
+    * strings (exact masking); otherwise they parse to longs (integral
+    * keys). The mode rides the cache key so two tables sharing an
+    * executor can't cross contaminate. */
   def get(dirs: Seq[(Int, String)], hconf: Map[String, String],
       rawString: Boolean)
     : java.util.HashMap[AnyRef, java.lang.Integer] =
@@ -1719,11 +1722,6 @@ private[sources] class GraftDvAwareReaderFactory(
                 java.lang.Long.valueOf(r.getShort(ep.keyOrdinal).toLong)
               case "byte" =>
                 java.lang.Long.valueOf(r.getByte(ep.keyOrdinal).toLong)
-              case "string" =>
-                // legacy numeric-string key (pre-hash-ledger tables)
-                val s = r.getUTF8String(ep.keyOrdinal).toString
-                try java.lang.Long.valueOf(s.trim)
-                catch { case _: NumberFormatException => null }
               case other => throw new UnsupportedOperationException(
                 s"eqdel masking over a '$other'-typed key")
             }
@@ -2132,9 +2130,8 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
     * literal as MICROseconds since epoch; resolution is the largest
     * version whose manifest was committed at or before it
     * ([[GraftTable.resolveTimestamp]] over the `#commit-ts` header
-    * each commit writes into its manifest; manifest mtime is the
-    * legacy fallback). Vacuumed history is not resolvable, exactly
-    * like Delta. */
+    * each commit writes into its manifest). Vacuumed history is not
+    * resolvable, exactly like Delta. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val root = rootOf(ident)
     if (!exists(root)) throw new NoSuchTableException(ident)

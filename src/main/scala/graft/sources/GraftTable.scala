@@ -19,23 +19,31 @@ import org.apache.spark.sql.types.StructType
   *   data/v00000-x/part-*.parquet   immutable; never rewritten in place
   *   data/v00000-x/part-*.parquet.bloom  per-file bloom sidecar (opt-in)
   *   data/v00001-y/part-*.parquet   only files CHANGED by commit 1
-  *   _log/schema.json               create-time Spark schema
-  *   _log/schema-v00002-ab12cd34.json  schema AS OF an evolution commit
+  *   _log/key.json                  the key column (`hash` marks a string key)
   *   _log/bloom.json                the declared bloom column (opt-in)
-  *   _log/v00000.manifest           snapshot 0: one line per live file
+  *   _log/v00000.manifest           snapshot 0: header + one line per live file
   *   _log/v00001.manifest           snapshot 1: carried + new files
+  *   _log/colstats-v00001-ab12cd34.tsv  per-file stats staged with commit 1
   * }}}
   *
-  * Versioned SIDECARS (schema / colstats / NDV digests / partition
-  * spec) are staged under ATTEMPT-UNIQUE token names recorded in the
-  * owning manifest's `#sidecar <tok>` header and resolved only through
-  * it — two racing commits can never touch each other's staged files,
-  * and a loser's (or crashed attempt's) leftovers are unreachable junk
-  * that vacuum reaps. Legacy un-suffixed sidecar names remain readable
-  * for manifests without the header.
+  * A manifest starts with `#` HEADER lines: the commit instant, the
+  * sidecar token, the MV cursor and the cross-table txn reference
+  * (each optional past the first two), then the version's DEFINITION —
+  * `#schema <json>`, `#partition <transform>` (partitioned tables) and
+  * `#layout <n>` (hash-bucket tables) — and last the pending equality
+  * deletes. So one manifest read says what a version looks like, and
+  * every commit carries the definition forward or replaces it.
   *
-  * A manifest line is `relPath<TAB>minKey<TAB>maxKey<TAB>nRows` — the
-  * per-file key-range statistics that make MERGE prune: a commit
+  * Per-file stats SIDECARS (colstats / NDV digests) are staged under
+  * ATTEMPT-UNIQUE token names recorded in the owning manifest's
+  * `#sidecar <tok>` header — two racing commits can never touch each
+  * other's staged files, and a loser's (or crashed attempt's)
+  * leftovers are unreachable junk that vacuum reaps.
+  *
+  * A manifest line has 5 fields, `relPath minKey maxKey nRows nBytes`
+  * (tab-separated), or 7 with a deletion vector (DV): `dvPath dvRows`
+  * follow. The key intervals are the per-file statistics that make
+  * MERGE prune: a commit
   * rewrites ONLY the files whose [minKey, maxKey] interval contains a
   * batch key (everything else is carried forward by reference), which
   * is what bounds a 1,000-row upsert against a 100 TB table to
@@ -134,7 +142,67 @@ object GraftTable {
       version: Int): Seq[EqDel] = {
     val (f, _) = fs(root, spark)
     val p = manifestPath(root, version)
-    if (!f.exists(p)) Seq.empty else parseEqDels(readFully(f, p))
+    if (!f.exists(p)) Seq.empty else parseEqDels(readHeader(f, p))
+  }
+
+  /** A version's DEFINITION, carried in its manifest header: the
+    * schema (`#schema <json>`), the partition transform (`#partition
+    * <render>`, absent when unpartitioned) and the hash-bucket count
+    * (`#layout <n>`, absent without a hash layout). A commit carries
+    * its snapshot's definition forward unless the commit changes it,
+    * so time travel reads each version with the column set, pruning
+    * transform and bucket count its files were written under — the
+    * Delta `metaData` action, kept in the commit itself. */
+  private[sources] final case class TableMeta(schema: StructType,
+      spec: Option[PartitionTransform], layout: Option[Int]) {
+    def header: String = {
+      val cols = schema
+      s"#schema\t${cols.json}\n" +
+        spec.map(p => s"#partition\t${p.render}\n").getOrElse("") +
+        layout.map(n => s"#layout\t$n\n").getOrElse("")
+    }
+  }
+
+  /** Parse the definition lines of a manifest header. Every column reads
+    * NULLABLE whatever the create-time batch promised: the format's DML
+    * can legally write NULL into any non-key column (UPDATE SET col =
+    * NULL, MERGE INSERT with unassigned columns), so a non-null flag
+    * would let codegen skip null checks and NPE on a later read — the
+    * Delta contract (columns nullable absent an explicit constraint). */
+  private def parseMeta(header: String): TableMeta = {
+    val lines = header.linesIterator.takeWhile(_.startsWith("#"))
+      .map(l => l.span(_ != '\t')).filter(_._2.nonEmpty)
+      .map { case (k, v) => k -> v.tail }.toMap
+    val raw = org.apache.spark.sql.types.DataType.fromJson(lines.getOrElse(
+      "#schema", throw new IllegalStateException(
+        "manifest without a #schema header"))).asInstanceOf[StructType]
+    TableMeta(StructType(raw.fields.map(_.copy(nullable = true))),
+      lines.get("#partition").map(PartitionTransform.parse),
+      lines.get("#layout").map(_.toInt))
+  }
+
+  /** The `#` header of the manifest at `p`, streamed up to the first
+    * entry line — the file list is never read. */
+  private def readHeader(f: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      f.open(p), java.nio.charset.StandardCharsets.UTF_8))
+    try Iterator.continually(in.readLine())
+      .takeWhile(l => l != null && l.startsWith("#")).mkString("", "\n", "\n")
+    finally in.close()
+  }
+
+  /** The definition of `version`: one streamed header read. */
+  private[sources] def tableMeta(spark: SparkSession, root: String,
+      version: Int): TableMeta = {
+    val (f, _) = fs(root, spark)
+    val header =
+      try readHeader(f, manifestPath(root, version))
+      catch { case _: java.io.FileNotFoundException =>
+        throw new IllegalArgumentException(
+          s"version $version does not exist under $root")
+      }
+    parseMeta(header)
   }
 
   /** The commit version a data file was ADDED at, parsed from its
@@ -258,17 +326,14 @@ object GraftTable {
   private def newToken(): String =
     java.util.UUID.randomUUID().toString.take(8)
 
-  /** The `#sidecar <token>` header of the manifest at `p`, if present
-    * (absent on pre-token manifests — their sidecars use the legacy
-    * un-suffixed names). */
+  /** The `#sidecar <token>` header of the manifest at `p` (every
+    * manifest [[commitManifest]] writes has one). */
   private def sidecarTokenOf(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
+      p: org.apache.hadoop.fs.Path): String =
     readHead(f, p, 512).linesIterator.takeWhile(_.startsWith("#"))
       .find(_.startsWith("#sidecar\t")).map(_.split('\t')(1).trim)
-
-  private def sidecarToken(f: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Int): Option[String] =
-    sidecarTokenOf(f, manifestPath(root, v))
+      .getOrElse(throw new IllegalStateException(
+        s"manifest without a #sidecar header: $p"))
 
   /** Parse the `#cursor` header line: the position of the one writer
     * that keeps its progress IN this table's log — an MV refresh
@@ -291,38 +356,34 @@ object GraftTable {
   }
 
   /** Publish `version`'s manifest — the commit point of every write
-    * path — together with its sidecars (versioned schema / colstats /
-    * NDV digests / partition spec), staged here under ATTEMPT-UNIQUE
-    * token names (`schema-v{N}-<tok>.json`, …) recorded in the
-    * manifest header as `#sidecar <tok>`. The token protocol is what
-    * makes concurrent DDL safe: staging can never collide with —
-    * let alone replace — another attempt's files, and version-keyed
-    * resolution ([[tableSchema]] / [[partitionSpec]]) only accepts the
-    * file the WINNING manifest names, so a race loser's or crashed
+    * path — together with its per-file stats sidecars (colstats / NDV
+    * digests), staged here under ATTEMPT-UNIQUE token names
+    * (`colstats-v{N}-<tok>.tsv`, …) recorded in the manifest header as
+    * `#sidecar <tok>`: staging can never collide with — let alone
+    * replace — another attempt's files, and a race loser's or crashed
     * attempt's leftovers are invisible junk (the loser deletes its own
-    * on the spot; vacuum reaps crash orphans). This replaces the old
-    * sweep-then-quarantine machinery, whose pre-delete let a losing
-    * DDL writer replace a winner's already-staged sidecar in the
-    * window before the winner's manifest rename.
+    * on the spot; vacuum reaps crash orphans).
     *
+    * The header carries everything else a version is, so it commits in
+    * the one create-if-absent rename: `meta` (the schema, partition
+    * transform and hash layout — [[TableMeta]]) is the caller's
+    * snapshot's unless the commit changes it (create, clone, the
+    * schema and layout verbs; restore copies the restored version's).
     * `eqdels` is the pending equality-delete set the new version
-    * carries — the caller's snapshot's, unless the commit changes it
+    * carries — likewise the snapshot's unless the commit changes it
     * (appendUpsert adds, resolveEqDels clears, a full rewrite drops):
     * a plain upsert/OPTIMIZE between an eqdel ingest and its resolve
-    * must not silently un-delete keys. `cursor` is likewise the
-    * caller's snapshot's `#cursor` unless the commit advances it (the
-    * MV refresh). `branch` publishes into that branch's own lineage
-    * directory instead of `_log` — same names, same protocol. */
+    * must not silently un-delete keys. `cursor` is the snapshot's
+    * `#cursor` unless the commit advances it (the MV refresh). `branch`
+    * publishes into that branch's own lineage directory instead of
+    * `_log` — same names, same protocol. */
   private def commitManifest(spark: SparkSession,
       root: String, v: Int, entries: Seq[FileEntry], eqdels: Seq[EqDel],
-      cursor: Option[String],
-      schemaJson: Option[String] = None,
+      cursor: Option[String], meta: TableMeta,
       statLines: Seq[String] = Seq.empty,
       kmvLines: Seq[String] = Seq.empty,
-      partitionJson: Option[String] = None,
       txn: Option[TxnRef] = None,
       beforePublish: () => Unit = () => (),
-      layoutJson: Option[String] = None,
       branch: Option[String] = None): Unit = {
     require(cursor.forall(n => !n.exists(c => c == '\t' || c == '\n') &&
       n.length <= 120), "manifest cursor must be one short tab-free line")
@@ -337,13 +398,10 @@ object GraftTable {
       writeAtomic(f, in(p), content); staged += in(p)
     }
     try {
-      schemaJson.foreach(s => stage(schemaSidecarPath(root, v, Some(tok)), s))
-      if (statLines.nonEmpty) stage(colStatsPath(root, v, Some(tok)),
+      if (statLines.nonEmpty) stage(colStatsPath(root, v, tok),
         statLines.mkString("", "\n", "\n"))
-      if (kmvLines.nonEmpty) stage(kmvPath(root, v, Some(tok)),
+      if (kmvLines.nonEmpty) stage(kmvPath(root, v, tok),
         kmvLines.mkString("", "\n", "\n"))
-      partitionJson.foreach(s => stage(partitionSpecPath(root, v, Some(tok)), s))
-      layoutJson.foreach(s => stage(layoutSidecarPath(root, v, Some(tok)), s))
       // test seam: the window between sidecar staging and the manifest
       // rename — where a concurrent committer of the same version can
       // land first (the interleaving behind the round-14 corruption)
@@ -364,15 +422,16 @@ object GraftTable {
         else Some(in(manifestPath(root, v - 1))).filter(f.exists)
       val instant = math.max(prev.fold(Long.MinValue)(commitInstant(f, _) + 1),
         System.currentTimeMillis())
-      // eqdel lines go LAST: #sidecar/#txn are resolved via bounded
-      // readHead probes and must stay within the first bytes
+      // the definition and eqdel lines go AFTER #txn: #sidecar,
+      // #cursor and #txn are resolved via bounded readHead probes and
+      // must stay within the first bytes (`#cursor` is kept short for
+      // the same reason)
       val eqLines = eqdels
         .map(e => s"#eqdel\t${e.version}\t${e.relDir}\t${e.nKeys}\n").mkString
-      // `#cursor` is kept short so the bounded readHead probes
-      // (#sidecar/#txn) stay in window
       val header = s"#commit-ts\t$instant\n#sidecar\t$tok\n" +
         cursor.map(n => s"#cursor\t$n\n").getOrElse("") +
-        txn.map(t => s"#txn\t${t.id}\t${t.dir}\n").getOrElse("") + eqLines
+        txn.map(t => s"#txn\t${t.id}\t${t.dir}\n").getOrElse("") +
+        meta.header + eqLines
       writeAtomic(f, in(manifestPath(root, v)), header + renderManifest(entries))
       commitEpoch.incrementAndGet()
     } catch {
@@ -533,7 +592,7 @@ object GraftTable {
     * window, if present. A txn line cut off by the window is an error
     * (treating it as absent could surface a half-published
     * transaction; as present-forever would brick the table). */
-  private def txnOf(head: String): Option[(String, String)] = {
+  private[sources] def txnOf(head: String): Option[(String, String)] = {
     val lines = head.split('\n')
     lines.iterator.takeWhile(_.startsWith("#")).flatMap { l =>
       if (!l.startsWith("#txn\t")) Iterator.empty
@@ -592,8 +651,11 @@ object GraftTable {
     * (object-store streams routinely short-read), and a header line
     * truncated mid-number would parse as a WRONG instant — silently
     * corrupting `TIMESTAMP AS OF` and, worse, `vacuumOlderThan`'s
-    * horizon. Loop until the buffer is full or EOF. */
-  private def readHead(f: org.apache.hadoop.fs.FileSystem,
+    * horizon. Loop until the buffer is full or EOF. With [[txnOf]] this
+    * is the one bounded header probe (also [[GraftTxn.abort]]'s), which
+    * is why [[commitManifest]] writes `#sidecar`/`#cursor`/`#txn`
+    * before the definition and eqdel lines. */
+  private[sources] def readHead(f: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, max: Int = 256): String = {
     val in = f.open(p)
     try {
@@ -690,50 +752,22 @@ object GraftTable {
     text
   }
 
-  /** `(version, tokenOption)` for every listed sidecar name of the
-    * given kind — both the token form (`kind-vNNNNN-<tok>.<ext>`) and
-    * the legacy un-suffixed form. */
+  /** `(version, token)` for every listed sidecar name of the given
+    * kind (`kind-vNNNNN-<tok>.<ext>`). */
   private def sidecarVersions(names: Seq[String], kind: String,
-      ext: String): Seq[(Int, Option[String])] = {
+      ext: String): Seq[(Int, String)] = {
     val rx = (java.util.regex.Pattern.quote(kind) +
-      "-v(\\d{5})(?:-([0-9a-f]{8}))?\\." +
+      "-v(\\d{5})-([0-9a-f]{8})\\." +
       java.util.regex.Pattern.quote(ext)).r
-    names.collect { case rx(v, tok) => (v.toInt, Option(tok)) }
+    names.collect { case rx(v, tok) => (v.toInt, tok) }
   }
 
-  /** Schema AS OF `version`: the newest authoritative versioned schema
-    * sidecar at or below it, falling back to the create-time
-    * `_log/schema.json`. Versioning the schema alongside the manifest
-    * is what lets time travel return each snapshot with the column set
-    * it committed under (a v0 read of an evolved table has no ghost
-    * columns). Per candidate version, only the sidecar the winning
-    * manifest's `#sidecar` token names is accepted — a race-losing
-    * DDL attempt's leftover can never serve (the round-14 concurrent
-    * DROP COLUMN corruption). */
+  /** Schema AS OF `version`, from its manifest's `#schema` header: time
+    * travel returns each snapshot with the column set it committed
+    * under (a v0 read of an evolved table has no ghost columns). */
   private[graft] def tableSchema(
-      spark: SparkSession, root: String, version: Int): StructType = {
-    val (f, _) = fs(root, spark)
-    val log = new org.apache.hadoop.fs.Path(root, "_log")
-    val cands = sidecarVersions(
-      f.listStatus(log).map(_.getPath.getName).toSeq, "schema", "json")
-      .filter(_._1 <= version)
-    val p = cands.groupBy(_._1).toSeq.sortBy(-_._1).iterator
-      .flatMap { case (v, files) =>
-        authoritativeSidecar(f, root, v, files.map(_._2),
-          tok => schemaSidecarPath(root, v, tok))
-      }.nextOption()
-      .getOrElse(new org.apache.hadoop.fs.Path(root, "_log/schema.json"))
-    // every column is NULLABLE regardless of what the create-time batch
-    // happened to promise: the format's DML can legally write NULL into
-    // any non-key column (UPDATE SET col = NULL, MERGE INSERT with
-    // unassigned columns), so a create-batch-derived non-null flag
-    // would let codegen skip null checks and NPE on a later read —
-    // the Delta contract (columns nullable absent an explicit
-    // constraint)
-    val raw = org.apache.spark.sql.types.DataType.fromJson(readFully(f, p))
-      .asInstanceOf[StructType]
-    StructType(raw.fields.map(_.copy(nullable = true)))
-  }
+      spark: SparkSession, root: String, version: Int): StructType =
+    tableMeta(spark, root, version).schema
 
   // ---- COLUMN MAPPING (Delta's name-mode contract) ----------------
   //
@@ -963,67 +997,17 @@ object GraftTable {
         .exists(e => eqDelsApplying(e, eq).nonEmpty)
   }
 
-  /** `-<tok>` suffix for token-named sidecars; empty for the legacy
-    * (pre-token) un-suffixed names. */
-  private def tokSuffix(tok: Option[String]): String = tok.fold("")("-" + _)
-
-  private def partitionSpecPath(root: String, v: Int,
-      tok: Option[String] = None) =
-    new org.apache.hadoop.fs.Path(root,
-      f"_log/partition-v$v%05d${tokSuffix(tok)}.json")
-
-  private def schemaSidecarPath(root: String, v: Int,
-      tok: Option[String] = None) =
-    new org.apache.hadoop.fs.Path(root,
-      f"_log/schema-v$v%05d${tokSuffix(tok)}.json")
-
-  /** Among the sidecar files staged at `v` (`toks` = the token options
-    * present in the listing, None = the legacy un-suffixed name), the
-    * AUTHORITATIVE one: the file the winning manifest's `#sidecar`
-    * header names (legacy name for pre-token manifests). A leftover
-    * from a race-losing or crashed attempt never resolves. When the
-    * manifest itself was vacuumed, the surviving file is trusted —
-    * vacuum's token-verified sweep removed non-authoritative leftovers
-    * before it dropped the manifest. */
-  private def authoritativeSidecar(f: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Int, toks: Seq[Option[String]],
-      path: Option[String] => org.apache.hadoop.fs.Path)
-    : Option[org.apache.hadoop.fs.Path] =
-    if (f.exists(manifestPath(root, v))) {
-      val want = sidecarToken(f, root, v)
-      if (toks.contains(want)) Some(path(want)) else None
-    } else {
-      // vacuumed manifest: prefer the legacy name deterministically
-      toks.sortBy(_.isDefined).headOption.map(path)
-    }
-
-  /** Partition transform AS OF `version`: the newest
-    * `_log/partition-v{N}.json` at or below it (the [[tableSchema]]
-    * resolution pattern — partitioning is versioned metadata, so a
+  /** Partition transform AS OF `version`, from its manifest's
+    * `#partition` header — partitioning is versioned metadata, so a
     * time-travel read prunes with the transform that was active when
-    * its files were written). None = unpartitioned (every pre-existing
-    * table). */
+    * its files were written. None = unpartitioned. */
   def partitionSpec(spark: SparkSession, root: String,
-      version: Int): Option[PartitionTransform] = {
-    val (f, _) = fs(root, spark)
-    val log = new org.apache.hadoop.fs.Path(root, "_log")
-    if (!f.exists(log)) return None
-    val cands = sidecarVersions(
-      f.listStatus(log).map(_.getPath.getName).toSeq, "partition", "json")
-      .filter(_._1 <= version)
-    // newest authoritative spec wins (tableSchema's token-verified
-    // resolution — a losing setPartitioning's leftover never activates)
-    cands.groupBy(_._1).toSeq.sortBy(-_._1).iterator
-      .flatMap { case (v, files) =>
-        authoritativeSidecar(f, root, v, files.map(_._2),
-          tok => partitionSpecPath(root, v, tok))
-      }.nextOption()
-      .map(p => PartitionTransform.parse(readFully(f, p)))
-  }
+      version: Int): Option[PartitionTransform] =
+    tableMeta(spark, root, version).spec
 
   /** Declare (or change) the table's partition transform as a
     * METADATA-ONLY commit: the new version carries every data file by
-    * reference and publishes a versioned partition spec. Old files
+    * reference and records the transform in its header. Old files
     * have no recorded range for the new transform's stats column, so
     * they are never skipped (stay readable, prune less); files written
     * from this version on are arranged along the transform and carry
@@ -1038,12 +1022,8 @@ object GraftTable {
       require(snap.schema.fieldNames.contains(transformColumn(transform)),
         s"partition column '${transformColumn(transform)}' is not in the " +
           "table schema")
-      // the spec stages inside commitManifest under this attempt's token
-      // name — a race loser's file is self-deleted and could never have
-      // resolved anyway (token-verified resolution)
       commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
-        snap.cursor,
-        partitionJson = Some(transform.render))
+        snap.cursor, snap.meta.copy(spec = Some(transform)))
       snap.next
     }
 
@@ -1105,56 +1085,28 @@ object GraftTable {
     if (!f.exists(p)) None else Some(readFully(f, p).trim)
   }
 
-  /** HASH-BUCKET LAYOUT declaration (`_log/layout.json`, written once
-    * at [[create]], immutable for the table's lifetime): the bucket
-    * count `n` of `bucket(n, key) = pmod(xxhash64(key as long), n)`.
-    * Every data file of a hash-layout table holds exactly one bucket's
-    * rows (mono-bucket files under `data/vNNNNN-x/b<id>/`), which is
-    * what lets the DSv2 scan report `KeyGroupedPartitioning` and two
-    * co-bucketed tables join with ZERO shuffle on either side (Spark's
-    * storage-partitioned join, the Iceberg `bucket` transform shape) —
-    * at 100 TB the difference between a fact⋈fact join that moves both
-    * tables across the network and one that moves nothing. The trade
-    * (documented, Iceberg's too): per-file key intervals go wide, so
-    * RANGE scans lose file pruning; EQUALITY lookups prune to the one
-    * bucket instead ([[bucketOfKey]]). */
-  private def layoutSidecarPath(root: String, v: Int,
-      tok: Option[String] = None) =
-    new org.apache.hadoop.fs.Path(root,
-      f"_log/layout-v$v%05d${tokSuffix(tok)}.json")
-
-  /** The hash layout AS OF `version` (default: the latest era): the
-    * newest authoritative `_log/layout-v{N}.json` sidecar at or below
-    * `version` — staged token-named WITH a re-bucketing commit
-    * ([[setHashBuckets]]), so layout evolution is atomic with the
-    * manifest that re-laid the files and a time-travel read of an
-    * OLD snapshot buckets/prunes with the count its files were
-    * actually written at (never a mixed-layout view) — falling back
-    * to the create-time `_log/layout.json`. */
+  /** The HASH-BUCKET LAYOUT AS OF `version` (default: the head), from
+    * its manifest's `#layout` header: the bucket count `n` of
+    * `bucket(n, key) = pmod(xxhash64(key as long), n)`, declared at
+    * [[create]] and changed only by a re-bucketing commit
+    * ([[setHashBuckets]]) — so a time-travel read of an OLD snapshot
+    * buckets/prunes with the count its files were actually written at
+    * (never a mixed-layout view). Every data file of a hash-layout
+    * table holds exactly one bucket's rows (mono-bucket files under
+    * `data/vNNNNN-x/b<id>/`), which is what lets the DSv2 scan report
+    * `KeyGroupedPartitioning` and two co-bucketed tables join with ZERO
+    * shuffle on either side (Spark's storage-partitioned join, the
+    * Iceberg `bucket` transform shape) — at 100 TB the difference
+    * between a fact⋈fact join that moves both tables across the network
+    * and one that moves nothing. The trade (documented, Iceberg's too):
+    * per-file key intervals go wide, so RANGE scans lose file pruning;
+    * EQUALITY lookups prune to the one bucket instead
+    * ([[bucketOfKey]]). */
   def hashLayout(spark: SparkSession, root: String,
       version: Int = Int.MaxValue): Option[Int] = {
-    val (f, _) = fs(root, spark)
-    val log = new org.apache.hadoop.fs.Path(root, "_log")
-    if (!f.exists(log)) return None
-    val names = f.listStatus(log).map(_.getPath.getName).toSeq
-    val fromSidecar = sidecarVersions(names, "layout", "json")
-      .filter(_._1 <= version)
-      .groupBy(_._1).toSeq.sortBy(-_._1).iterator
-      .flatMap { case (v0, files) =>
-        authoritativeSidecar(f, root, v0, files.map(_._2),
-          tok => layoutSidecarPath(root, v0, tok))
-      }.nextOption()
-      .map(p => readFully(f, p).trim)
-    fromSidecar.orElse {
-      val p = new org.apache.hadoop.fs.Path(root, "_log/layout.json")
-      if (!f.exists(p)) None else Some(readFully(f, p).trim)
-    } match {
-      case Some(s) => s.split('\t') match {
-        case Array("hash", n) => Some(n.toInt)
-        case _ => None
-      }
-      case None => None
-    }
+    val v =
+      if (version == Int.MaxValue) latestVersion(spark, root) else version
+    if (v < 0) None else tableMeta(spark, root, v).layout
   }
 
   /** The bucket id of key value `k` under an `n`-bucket hash layout —
@@ -1211,9 +1163,8 @@ object GraftTable {
     * ROW-LEVEL operation (merge joins, CDC deletes, eqdel masking)
     * compares the RAW key — hashes only ever decide which FILES to
     * open, so a collision can cost an extra file read, never a wrong
-    * row. Tables created before round 16 with numeric-string keys
-    * keep the legacy cast ledger (no marker → false) — their on-disk
-    * stats stay coherent. */
+    * row. [[create]] marks every string key, so an unmarked key is
+    * integral. */
   private[sources] def keyHashMode(spark: SparkSession,
       root: String): Boolean = {
     val (f, _) = fs(root, spark)
@@ -1276,9 +1227,9 @@ object GraftTable {
     * the transform value is the point (a multi-day backfill must land
     * as day-aligned files, not one file spanning every day, or the
     * one-day read prunes nothing). */
-  private def writeBuckets(spark: SparkSession, root: String, base: Int,
+  private def writeBuckets(snap: TableSnapshot,
       nBuckets: Int, nRewritten: Int): Int =
-    if (partitionSpec(spark, root, base + 1).isDefined) math.max(1, nBuckets)
+    if (snap.meta.spec.isDefined) math.max(1, nBuckets)
     else math.max(1, math.min(nBuckets, nRewritten + 1))
 
   private final case class Written(entries: Seq[FileEntry],
@@ -1290,38 +1241,32 @@ object GraftTable {
     * stats pass re-reads ONLY the newly written files (footer-local
     * column min/max — metadata-grade, not a table scan).
     *
-    * If the table declares a [[PartitionTransform]] (active at
-    * `version`), files are arranged along (transform value, key) —
-    * each file covers a narrow value range — and a per-file
+    * `meta` is the definition the files are written under — the
+    * caller's snapshot's, or the one the commit publishes (create, a
+    * re-bucketing): its schema maps logical to physical column names,
+    * its hash layout buckets the files, and under a declared
+    * [[PartitionTransform]] files are arranged along (transform value,
+    * key) — each file covers a narrow value range — and a per-file
     * [min, max] of the value is returned in `Written.statLines` (the
     * [[readPartitionRange]] skipping stats) for the caller to hand to
     * [[commitManifest]], which stages them token-named with the
     * publish. */
   private def writeDataFiles(spark: SparkSession, root: String, version: Int,
-      df: DataFrame, key: String, nBuckets: Int,
-      zorderBy: Option[org.apache.spark.sql.Column] = None,
-      specOverride: Option[Option[PartitionTransform]] = None,
-      layoutOverride: Option[Option[Int]] = None): Written = {
+      meta: TableMeta, df: DataFrame, key: String, nBuckets: Int,
+      zorderBy: Option[org.apache.spark.sql.Column] = None): Written = {
     // attempt-unique dir: a FAILED commit's orphan files can never
     // collide with (or be read by) the retry — they sit unreferenced
     // until vacuum sweeps them
     val rel = f"data/v$version%05d-" +
       java.util.UUID.randomUUID().toString.take(8)
     val dir = s"$root/$rel"
-    // specOverride: CREATE arranges by its declared transform before
-    // any spec sidecar is committed (the spec publishes WITH v0's
-    // manifest, so disk resolution can't see it yet)
-    val spec = specOverride.getOrElse(partitionSpec(spark, root, version))
+    val spec = meta.spec
     // HASH LAYOUT: every write of the table's lifetime lands
     // mono-bucket files (one `b<id>/` dir per bucket under the
     // attempt-unique dir) so the scan's reported KeyGroupedPartitioning
     // is true of every snapshot — rewrites, MoR fresh files, and
     // compactions re-bucket identically
-    // the era being WRITTEN: the layout sidecar for `version`
-    // publishes with its manifest (not visible yet) — a re-bucketing
-    // commit passes the new count as an override, every other write
-    // resolves the layout active at its base
-    val hashN = layoutOverride.getOrElse(hashLayout(spark, root, version))
+    val hashN = meta.layout
     // hash-ledgered (string) key: stats AND range-bucketing run over
     // xxhash64(key) — files then cover narrow, disjoint HASH intervals,
     // which is what keeps point/IN pruning sharp without key order
@@ -1402,10 +1347,9 @@ object GraftTable {
     // birth), so writes rename logical → physical as the last step and
     // the stats read-back aliases them straight back — everything in
     // between (key bucketing, constraints, null ledger) sees logical
-    // names. The mapping comes from the base snapshot's schema file
-    // (field metadata survives nothing else — joins strip it from
-    // df.schema).
-    val mapping = physMap(tableSchema(spark, root, version - 1))
+    // names. The mapping comes from `meta`'s schema (field metadata
+    // survives nothing else — joins strip it from df.schema).
+    val mapping = physMap(meta.schema)
     def physOf(c: String) = mapping.getOrElse(c, c)
     val logicalNames = df.schema.fieldNames.toSeq
     val needRename = logicalNames.exists(c => physOf(c) != c)
@@ -1566,7 +1510,7 @@ object GraftTable {
         mmCols.flatMap { case (c, v) =>
           Seq(min(v).as(s"__mm_mn_$c"), max(v).as(s"__mm_mx_$c"))
         } ++
-        // partition-value ranges ride the SAME pass (they used to pay a
+        // partition value ranges ride the SAME pass (they used to pay a
         // second full read-back of the new files)
         spec.toSeq.flatMap(p =>
           Seq(min(p.valueCol).as("__pv_mn"), max(p.valueCol).as("__pv_mx")))
@@ -1628,7 +1572,7 @@ object GraftTable {
           files = if (hashN.isDefined) listWrittenFiles() else Seq.empty)
       case _ => ()
     }
-    // partition-value ranges into this version's colstats sidecar —
+    // partition value ranges into this version's colstats sidecar —
     // computed in the single stats pass above (the two trailing agg
     // columns), never a second read of the new files
     val pvBase = 4 + dataCols.size + intCols.size + constraintList.size +
@@ -1682,10 +1626,8 @@ object GraftTable {
     * hash set). ~2 KB per column per file in the sidecar. */
   private[sources] val KmvK = 128
 
-  private def kmvPath(root: String, v: Int,
-      tok: Option[String] = None) =
-    new org.apache.hadoop.fs.Path(root,
-      f"_log/kmv-v$v%05d${tokSuffix(tok)}.tsv")
+  private def kmvPath(root: String, v: Int, tok: String) =
+    new org.apache.hadoop.fs.Path(root, f"_log/kmv-v$v%05d-$tok.tsv")
 
   /** Digest lines for `rels`, (rel, statKey) → ascending hex digests —
     * the [[loadColStats]] resolution rule over `kmv-v*.tsv` sidecars
@@ -1850,9 +1792,8 @@ object GraftTable {
       s"table already exists at $root")
     if (hashLayout) {
       // the layout is a physical contract every subsequent write obeys
-      // and the scan's reported partitioning relies on — declared once,
-      // immutable (changing n would need a full rewrite: that's what
-      // creating a new table and INSERT-selecting into it is for)
+      // and the scan's reported partitioning relies on (changing n is a
+      // full rewrite: [[setHashBuckets]])
       val kt = df.schema.fields.find(_.name == key).map(_.dataType)
       require(kt.exists {
         case org.apache.spark.sql.types.LongType |
@@ -1868,8 +1809,6 @@ object GraftTable {
       require(nBuckets >= 1, s"hash layout needs >= 1 bucket, got $nBuckets")
     }
     f.mkdirs(new org.apache.hadoop.fs.Path(rootP, "_log"))
-    writeAtomic(f, new org.apache.hadoop.fs.Path(root, "_log/schema.json"),
-      df.schema.json)
     // STRING keys ledger as xxhash64 (the `hash` marker — see
     // [[keyHashMode]]); real CDC streams key on UUIDs and natural
     // identifiers, and hashing folds them into the long-based
@@ -1878,9 +1817,6 @@ object GraftTable {
       .exists(_.dataType == org.apache.spark.sql.types.StringType)
     writeAtomic(f, new org.apache.hadoop.fs.Path(root, "_log/key.json"),
       if (stringKey) s"$key\thash" else key)
-    if (hashLayout)
-      writeAtomic(f, new org.apache.hadoop.fs.Path(root, "_log/layout.json"),
-        s"hash\t$nBuckets")
     bloomCol.foreach { bc =>
       require(df.schema.fieldNames.contains(bc), s"no such column: $bc")
       writeAtomic(f, new org.apache.hadoop.fs.Path(root, "_log/bloom.json"), bc)
@@ -1889,13 +1825,13 @@ object GraftTable {
       require(df.schema.fieldNames.contains(transformColumn(t)),
         s"partition column '${transformColumn(t)}' is not in the schema")
     }
-    // the declared transform is passed straight to the writer (the
-    // spec sidecar only publishes WITH v0's manifest below)
-    val w = writeDataFiles(spark, root, 0, df, key, nBuckets,
-      specOverride = partitioning.map(Some(_)))
-    commitManifest(spark, root, 0, w.entries, Seq.empty, cursor,
-      statLines = w.statLines, kmvLines = w.kmvLines,
-      partitionJson = partitioning.map(_.render))
+    // v0's definition: the files are written under it and its manifest
+    // header publishes it
+    val meta = TableMeta(df.schema, partitioning,
+      if (hashLayout) Some(nBuckets) else None)
+    val w = writeDataFiles(spark, root, 0, meta, df, key, nBuckets)
+    commitManifest(spark, root, 0, w.entries, Seq.empty, cursor, meta,
+      statLines = w.statLines, kmvLines = w.kmvLines)
   }
 
   /** SHALLOW CLONE (Delta's zero-copy fork): create `dstRoot` as a new
@@ -1941,8 +1877,6 @@ object GraftTable {
         "deletes — run resolveEqDels first")
     val entries = loadManifest(spark, srcRoot, v)
     f.mkdirs(new org.apache.hadoop.fs.Path(dstRoot, "_log"))
-    writeAtomic(f, new org.apache.hadoop.fs.Path(dstRoot, "_log/schema.json"),
-      tableSchema(spark, srcRoot, v).json)
     // raw file copy, not keyColumn(): the hash-ledger marker (second
     // tab field) must survive the clone or its probes would misread
     // the inherited hash stats as plain key values
@@ -1955,12 +1889,6 @@ object GraftTable {
     }
     bloomColumn(spark, srcRoot).foreach(b => writeAtomic(f,
       new org.apache.hadoop.fs.Path(dstRoot, "_log/bloom.json"), b))
-    // hash layout carries: the clone's absolute-ref files are already
-    // mono-bucket (immutable), and the clone's own rewrites must keep
-    // bucketing or its reported partitioning would lie
-    hashLayout(spark, srcRoot, v).foreach(n => writeAtomic(f,
-      new org.apache.hadoop.fs.Path(dstRoot, "_log/layout.json"),
-      s"hash\t$n"))
     constraints(spark, srcRoot).foreach { case (name, ex) =>
       writeAtomic(f, new org.apache.hadoop.fs.Path(dstRoot,
         s"_log/check-$name.json"), ex) }
@@ -1979,9 +1907,12 @@ object GraftTable {
     val cloned = entries.map(e => e.copy(
       relPath = dataPath(srcRoot, e.relPath),
       dvPath = if (e.hasDv) dataPath(srcRoot, e.dvPath) else ""))
+    // the source version's whole definition carries: the hash layout
+    // too — the clone's absolute-ref files are already mono-bucket
+    // (immutable), and the clone's own rewrites must keep bucketing or
+    // its reported partitioning would lie
     commitManifest(spark, dstRoot, 0, cloned, Seq.empty, None,
-      statLines = statLines,
-      partitionJson = partitionSpec(spark, srcRoot, v).map(_.render))
+      tableMeta(spark, srcRoot, v), statLines = statLines)
   }
 
   /** Snapshot read at `version` (default: latest). */
@@ -2381,14 +2312,15 @@ object GraftTable {
   // directly.
 
   /** The table head one commit attempt plans over: the version, its
-    * file entries, pending equality deletes and `#cursor` (parsed from
-    * ONE read of the manifest), the schema AS OF the version, the
-    * key's ledger mode ([[keyHashMode]]) and the table properties. */
+    * file entries, definition ([[TableMeta]]), pending equality deletes
+    * and `#cursor` (parsed from ONE read of the manifest), the key's
+    * ledger mode ([[keyHashMode]]) and the table properties. */
   private[sources] final case class TableSnapshot(version: Int,
-      entries: Seq[FileEntry], schema: StructType, hashKey: Boolean,
+      entries: Seq[FileEntry], meta: TableMeta, hashKey: Boolean,
       eqdels: Seq[EqDel], cursor: Option[String],
       props: Map[String, String]) {
     def next: Int = version + 1
+    def schema: StructType = meta.schema
   }
 
   private def resolveSnapshot(spark: SparkSession,
@@ -2396,7 +2328,7 @@ object GraftTable {
     val v = latestVersion(spark, root)
     require(v >= 0, s"no graft table at $root")
     val text = manifestText(spark, root, v)
-    TableSnapshot(v, parseManifest(text), tableSchema(spark, root, v),
+    TableSnapshot(v, parseManifest(text), parseMeta(text),
       keyHashMode(spark, root), parseEqDels(text), parseCursor(text),
       tableProperties(spark, root))
   }
@@ -2472,14 +2404,15 @@ object GraftTable {
   private val NoWrite = Written(Seq.empty, Seq.empty)
 
   /** Publish `carried` plus the files `w` wrote (with their stats
-    * sidecar lines) as `snap`'s next version, carrying `snap`'s pending
-    * eqdels and cursor unless `eqdels` / `cursor` replace them. */
+    * sidecar lines) as `snap`'s next version, carrying `snap`'s
+    * definition, and its pending eqdels and cursor unless `eqdels` /
+    * `cursor` replace them. */
   private def commitWritten(spark: SparkSession, root: String,
       snap: TableSnapshot, carried: Seq[FileEntry], w: Written,
       txn: Option[TxnRef] = None, cursor: Option[String] = None,
       eqdels: Option[Seq[EqDel]] = None): Unit =
     commitManifest(spark, root, snap.next, carried ++ w.entries,
-      eqdels.getOrElse(snap.eqdels), cursor.orElse(snap.cursor),
+      eqdels.getOrElse(snap.eqdels), cursor.orElse(snap.cursor), snap.meta,
       statLines = w.statLines, kmvLines = w.kmvLines, txn = txn)
 
   /** THE REWRITE COMMIT of the maintenance verbs ([[optimize]],
@@ -2703,8 +2636,8 @@ object GraftTable {
     val v = snap.next
     // WRITE (stage): files land under an attempt-unique dir, reachable
     // only through a manifest that may never be published
-    val w = writeDataFiles(spark, root, v, merged, key,
-      writeBuckets(spark, root, snap.version, nBuckets, rewrite.size))
+    val w = writeDataFiles(spark, root, v, snap.meta, merged, key,
+      writeBuckets(snap, nBuckets, rewrite.size))
     if (checks.nonEmpty) {
       // AUDIT: every check in one aggregation over the staged files
       val staged = readEntriesNoEq(spark, root, schema, w.entries)
@@ -2817,9 +2750,9 @@ object GraftTable {
     val nKeys = eqObs.get("n").asInstanceOf[Long]
     val rows = opCol.fold(batch)(oc =>
       batch.filter(col(oc) =!= "delete").drop(oc))
-    val w = writeDataFiles(spark, root, v, rows.select(
+    val w = writeDataFiles(spark, root, v, snap.meta, rows.select(
       schema.fieldNames.map(col): _*), key,
-      writeBuckets(spark, root, snap.version, nBuckets, 0))
+      writeBuckets(snap, nBuckets, 0))
     if (w.entries.isEmpty && nKeys == 0L) {
       // nothing inserted, nothing retired: leave the table untouched
       val (f, _) = fs(root, spark)
@@ -3047,8 +2980,8 @@ object GraftTable {
           .otherwise(coalesce(col(s"b.$c"), col(s"t.$c"))).as(c)): _*)
       .join(dels, col(key) === col("__delkey"), "left_anti")
     val v = snap.next
-    val w = writeDataFiles(spark, root, v, merged, key,
-      writeBuckets(spark, root, snap.version, nBuckets, rewrite.size))
+    val w = writeDataFiles(spark, root, v, snap.meta, merged, key,
+      writeBuckets(snap, nBuckets, rewrite.size))
     commitWritten(spark, root, snap, carry, w, cursor = cursor)
     (v, rewrite.size, carry.size)
   }
@@ -3123,8 +3056,8 @@ object GraftTable {
       // no emptiness pre-probe: the write itself is the one action —
       // an all-delete batch writes zero data files and the schema-
       // pinned read-back yields an empty ledger (readBack contract)
-      val w = writeDataFiles(spark, root, v, writeRows, key,
-        writeBuckets(spark, root, snap.version, nBuckets, nRetired))
+      val w = writeDataFiles(spark, root, v, snap.meta, writeRows, key,
+        writeBuckets(snap, nBuckets, nRetired))
       val dvUpdated = foldDvs(spark, root, v, dv,
         j.filter(matched).select(col(DvNameCol), col(DvPosCol)).distinct(),
         touched)
@@ -3274,7 +3207,7 @@ object GraftTable {
       val dvUpdated = foldDvs(spark, root, v, dv, newDel, newCounts)
       val w =
         if (cow.isEmpty) NoWrite
-        else writeDataFiles(spark, root, v,
+        else writeDataFiles(spark, root, v, snap.meta,
           readMaskedWithName(spark, root, snap.schema, cow, snap.eqdels)
             .join(newDel, Seq(DvNameCol, DvPosCol), "left_anti")
             .drop(DvNameCol, DvPosCol),
@@ -3577,13 +3510,12 @@ object GraftTable {
     * copy into a new table. The rewrite is total by construction
     * (every row re-lands mono-bucket at `n` through the same
     * [[writeDataFiles]] contract every write obeys) and the new count
-    * publishes as a VERSIONED, token-named layout sidecar atomically
-    * with the manifest — so a reader of any OLDER snapshot still
-    * buckets/prunes at the count its files were actually written
-    * with, and no reader ever observes a mixed layout (the
-    * correctness trap of mutating the create-time `layout.json` in
-    * place). DVs and pending equality deletes fold in: the rewrite
-    * reads masked content and the fresh files carry no debt. Also
+    * publishes in the manifest header (`#layout`) with the files — so
+    * a reader of any OLDER snapshot still buckets/prunes at the count
+    * its files were actually written with, and no reader ever
+    * observes a mixed layout. DVs and pending equality deletes fold
+    * in: the rewrite reads masked content and the fresh files carry no
+    * debt. Also
     * ADOPTS the layout on a previously range-bucketed table — the
     * co-locate-me-for-joins migration. Racing writers arbitrate
     * through the usual OCC manifest rename. Returns the new
@@ -3604,14 +3536,12 @@ object GraftTable {
         s"$key: ${kt.map(_.simpleString).getOrElse("missing")})")
       // an active partition transform composes: the rewrite re-lands
       // every row mono-bucket AND transform-split (writeDataFiles'
-      // composed arrangement resolves the spec at this version)
-      val w = writeDataFiles(spark, root, snap.next, readEntries(spark, root,
-        snap.schema, snap.entries, snap.eqdels), key, nBuckets = n,
-        layoutOverride = Some(Some(n)))
+      // composed arrangement)
+      val meta = snap.meta.copy(layout = Some(n))
+      val w = writeDataFiles(spark, root, snap.next, meta, readEntries(spark,
+        root, snap.schema, snap.entries, snap.eqdels), key, nBuckets = n)
       commitManifest(spark, root, snap.next, w.entries, Seq.empty,
-        snap.cursor,
-        statLines = w.statLines, kmvLines = w.kmvLines,
-        layoutJson = Some(s"hash\t$n"))
+        snap.cursor, meta, statLines = w.statLines, kmvLines = w.kmvLines)
       snap.next
     }
   }
@@ -3672,7 +3602,7 @@ object GraftTable {
     val (v, _, carried) =
       rewriteCommit(spark, root, snap, rewrite, beforeCommit) { rows =>
         if (rewrite.isEmpty) NoWrite
-        else writeDataFiles(spark, root, snap.next, rows, key,
+        else writeDataFiles(spark, root, snap.next, snap.meta, rows, key,
           compactGroups.size)
       }
     (v, rewrite.size, carried)
@@ -3703,13 +3633,14 @@ object GraftTable {
     * metadata-only commit (the undo every lakehouse ships): the new
     * manifest references the restored version's data files BY
     * REFERENCE (zero data I/O, instantaneous at any table size), and
-    * if schema evolution happened since, the restored version's schema
-    * is re-pinned at the new version so the head reads with exactly
-    * the old column set. History is PRESERVED — the bad versions stay
-    * time-travelable until vacuum; the restore is just one more
-    * commit, visible in `history()` and the change feed like any
-    * other. Requires the target's manifest to still exist (vacuum's
-    * live-set invariant then guarantees its data files do too). */
+    * its header carries the restored version's definition — schema,
+    * partition transform and hash layout — so the head reads and prunes
+    * exactly as the old version did. History is PRESERVED — the bad
+    * versions stay time-travelable until vacuum; the restore is just
+    * one more commit, visible in `history()` and the change feed like
+    * any other. Requires the target's manifest to still exist
+    * (vacuum's live-set invariant then guarantees its data files do
+    * too). */
   def restore(spark: SparkSession, root: String, toVersion: Int): Int =
     occCommit(spark, root, maxRetries = 0) { snap =>
       require(toVersion >= 0 && toVersion <= snap.version,
@@ -3718,28 +3649,17 @@ object GraftTable {
       require(f.exists(manifestPath(root, toVersion)),
         s"cannot restore to $toVersion: manifest gone (vacuumed) — tag " +
           "versions you may need to restore to")
-      // the restored version's pending eqdels come back with its files:
-      // the head's would retire keys the restored content still holds
+      // the restored version's header comes back with its files: its
+      // pending eqdels (the head's would retire keys the restored
+      // content still holds), cursor, and whole definition — the files
+      // are mono-bucket at the restored era's count and arranged by its
+      // transform, so a head that kept the newer layout would
+      // bucket-prune point probes to the wrong file ids (silently
+      // missing rows) and report a false outputPartitioning to
+      // storage-partitioned joins
       val text = manifestText(spark, root, toVersion)
-      val restored = tableSchema(spark, root, toVersion)
-      // LAYOUT drift mirrors schema drift: if a bucket-count evolution
-      // (setHashBuckets) landed between toVersion and head, the restored
-      // entries are mono-bucket files of the OLD count — a head that kept
-      // resolving the NEW count would bucket-prune point probes to the
-      // wrong file ids (silently missing rows) and report a false
-      // outputPartitioning to storage-partitioned joins. Re-pin the
-      // restored era's count as this commit's layout sidecar.
-      val restoredLayout = hashLayout(spark, root, toVersion)
       commitManifest(spark, root, snap.next, parseManifest(text),
-        parseEqDels(text), parseCursor(text),
-        schemaJson = if (restored != snap.schema) Some(restored.json) else None,
-        // `none` expresses "restored era had NO hash layout" (layout was
-        // ADOPTED after toVersion): it masks both newer sidecars and the
-        // create-time fallback — hashLayout parses any non-`hash` payload
-        // as None, so the head neither bucket-prunes nor reports a
-        // partitioning over the unbucketed restored files
-        layoutJson = if (restoredLayout == hashLayout(spark, root, snap.version))
-          None else Some(restoredLayout.map(n => s"hash\t$n").getOrElse("none")))
+        parseEqDels(text), parseCursor(text), parseMeta(text))
       snap.next
     }
 
@@ -3872,7 +3792,7 @@ object GraftTable {
     val dvd = snap.entries.filter(_.hasDv)
     if (dvd.isEmpty) return (snap.version, 0, snap.entries.size)
     val (v, _, carried) = rewriteCommit(spark, root, snap, dvd)(
-      writeDataFiles(spark, root, snap.next, _, key, dvd.size))
+      writeDataFiles(spark, root, snap.next, snap.meta, _, key, dvd.size))
     (v, dvd.size, carried)
   }
 
@@ -4082,7 +4002,13 @@ object GraftTable {
   def upsertBranch(spark: SparkSession, root: String, name: String,
       batch: DataFrame, key: String, nBuckets: Int = 8): Int = {
     val base = branchBase(spark, root, name)
-    val schema = tableSchema(spark, root, base)
+    // the branch's definition is FROZEN at its base: resolving it at
+    // main's head would pick up a rebucket / re-spec that landed on
+    // MAIN after the fork, making branch fresh files bucket mod-NEW
+    // while branch reads prune with the base era (silently missed rows
+    // on point lookups)
+    val meta = tableMeta(spark, root, base)
+    val schema = meta.schema
     require(batch.schema.fieldNames.sorted
       .sameElements(schema.fieldNames.sorted),
       "batch schema must match the branch's (base-version) schema")
@@ -4097,22 +4023,15 @@ object GraftTable {
     val merged = t.join(b, col(s"t.$key") === col(s"b.$key"), "full_outer")
       .select(cols.map(c =>
         coalesce(col(s"b.$c"), col(s"t.$c")).as(c)): _*)
-    // version base+1 pins NAMING + column mapping to the branch's
-    // frozen era; the LAYOUT and PARTITION SPEC are pinned explicitly
-    // at `base` — resolving them at base+1 would pick up a rebucket /
-    // re-spec that landed as MAIN's first post-fork commit, making
-    // branch fresh files bucket mod-NEW while branch reads prune with
-    // the base era (silently missed rows on point lookups)
-    val w = writeDataFiles(spark, root, base + 1, merged, key,
-      math.max(1, math.min(nBuckets, rewrite.size + 1)),
-      specOverride = Some(partitionSpec(spark, root, base)),
-      layoutOverride = Some(hashLayout(spark, root, base)))
+    // files are named after version base+1, the branch's frozen era
+    val w = writeDataFiles(spark, root, base + 1, meta, merged, key,
+      math.max(1, math.min(nBuckets, rewrite.size + 1)))
     val bv = bvPrev + 1
     fs(root, spark)._1.mkdirs(branchDir(root, name))
     // the main-log commit protocol, published into the branch's lineage
     // directory: sidecars stay branch-local, instants monotone within
     // the branch
-    commitManifest(spark, root, bv, carry ++ w.entries, Seq.empty, None,
+    commitManifest(spark, root, bv, carry ++ w.entries, Seq.empty, None, meta,
       statLines = w.statLines, kmvLines = w.kmvLines, branch = Some(name))
     bv
   }
@@ -4164,9 +4083,8 @@ object GraftTable {
     }
     // branches fork without live eqdels; a stale pending list of the
     // base rides every published version, as any commit's would, and
-    // so does the base's cursor
-    val baseText = readFully(f, manifestPath(root, base))
-    val (baseEq, baseCursor) = (parseEqDels(baseText), parseCursor(baseText))
+    // so do the base's cursor and definition
+    val baseText = readHeader(f, manifestPath(root, base))
     bvs.foreach { bv =>
       val v = base + bv
       val entries = branchEntries(spark, root, name, bv)
@@ -4183,11 +4101,12 @@ object GraftTable {
         def branchLines(kind: String): Seq[String] = {
           val btok = sidecarTokenOf(f, branchManifestPath(root, name, bv))
           val p = new org.apache.hadoop.fs.Path(branchDir(root, name),
-            f"$kind-v$bv%05d${tokSuffix(btok)}.tsv")
+            f"$kind-v$bv%05d-$btok.tsv")
           if (!f.exists(p)) Seq.empty
           else readFully(f, p).linesIterator.filter(_.nonEmpty).toSeq
         }
-        try commitManifest(spark, root, v, entries, baseEq, baseCursor,
+        try commitManifest(spark, root, v, entries, parseEqDels(baseText),
+          parseCursor(baseText), parseMeta(baseText),
           statLines = branchLines("colstats"), kmvLines = branchLines("kmv"))
         catch {
           case e: ConcurrentCommitException =>
@@ -4344,13 +4263,12 @@ object GraftTable {
     * Sidecar lifecycle (so a long-lived table's `_log/` stays bounded):
     * vacuum first writes a [[checkpoint]] at the latest version — which
     * preserves the history summary and the colstats of every LIVE file
-    * — then sweeps colstats sidecars and superseded checkpoints below
-    * the retention horizon, and every versioned schema file older than
-    * the newest one at or below the horizon (the one still resolving
-    * retained versions' schemas). 2-D stats for files that die between
-    * a retained old version and latest degrade to "no stats → never
-    * skip" on time-travel reads — pruning loss only, never
-    * correctness. */
+    * — then sweeps stats sidecars and superseded checkpoints below the
+    * retention horizon (a version's definition lives in its manifest
+    * header, so a retained or pinned version needs nothing else). 2-D
+    * stats for files that die between a retained old version and
+    * latest degrade to "no stats → never skip" on time-travel reads —
+    * pruning loss only, never correctness. */
   /** Time-based retention: sweep history older than `retainMillis`
     * before `now` — resolved through the DURABLE commit instants (the
     * manifest `#commit-ts` headers, so a restore that rewrote mtimes
@@ -4442,27 +4360,23 @@ object GraftTable {
           f.delete(st.getPath, true)
       }
     }
-    // token-verified ORPHAN SWEEP, run while every manifest is still
-    // present: a sidecar at a committed version whose token is NOT the
-    // one that version's manifest header names is a race-losing or
-    // crashed attempt's leftover — unreachable by resolution, reaped
-    // here. After this sweep, every surviving sidecar below the
-    // horizon is authoritative, which is what lets resolution trust
-    // files whose manifests the deletion below removes. Versions with
-    // no manifest yet are left alone (an in-flight commit may be
-    // staging there right now).
+    // token-verified ORPHAN SWEEP: a stats sidecar at a committed
+    // version whose token is NOT the one that version's manifest header
+    // names is a race-losing or crashed attempt's leftover — never
+    // read for a live file, reaped here. Versions with no manifest yet
+    // are left alone (an in-flight commit may be staging there right
+    // now).
     val log = new org.apache.hadoop.fs.Path(root, "_log")
     if (f.exists(log)) {
       val present = listManifestVersions(f, root).toSet
       val names0 = f.listStatus(log).map(_.getPath.getName).toSeq
-      val wantCache = scala.collection.mutable.Map[Int, Option[String]]()
-      Seq(("schema", "json"), ("partition", "json"), ("layout", "json"),
-          ("colstats", "tsv"), ("kmv", "tsv")).foreach { case (kind, ext) =>
-        sidecarVersions(names0, kind, ext).foreach { case (sv, tok) =>
-          if (present(sv) &&
-              tok != wantCache.getOrElseUpdate(sv, sidecarToken(f, root, sv)))
+      val wantCache = scala.collection.mutable.Map[Int, String]()
+      Seq("colstats", "kmv").foreach { kind =>
+        sidecarVersions(names0, kind, "tsv").foreach { case (sv, tok) =>
+          if (present(sv) && tok != wantCache.getOrElseUpdate(sv,
+              sidecarTokenOf(f, manifestPath(root, sv))))
             f.delete(new org.apache.hadoop.fs.Path(log,
-              f"$kind%s-v$sv%05d${tokSuffix(tok)}%s.$ext%s"), false)
+              f"$kind%s-v$sv%05d-$tok%s.tsv"), false)
         }
       }
     }
@@ -4470,10 +4384,9 @@ object GraftTable {
       val m = manifestPath(root, v)
       if (f.exists(m)) f.delete(m, false)
     }
-    // sidecar sweep below the horizon: colstats are preserved (for
-    // live files) inside the checkpoint written above; schema files
-    // keep only the newest ≤ horizon (the one resolving every retained
-    // version); superseded checkpoints go entirely
+    // sidecar sweep below the horizon: colstats and digests are
+    // preserved (for live files) inside the checkpoint written above;
+    // superseded checkpoints go entirely
     if (f.exists(log)) {
       val names = f.listStatus(log).map(_.getPath.getName).toSeq
       sidecarVersions(names, "colstats", "tsv")
@@ -4486,60 +4399,16 @@ object GraftTable {
         .filter(_._1 < keepFrom)
         .foreach { case (v, tok) =>
           f.delete(kmvPath(root, v, tok), false) }
-      val schemaVs = sidecarVersions(names, "schema", "json")
-      val horizonSchema = schemaVs.map(_._1).filter(_ <= keepFrom)
-        .foldLeft(-1)(math.max)
-      // a pinned (tagged) version below the horizon still needs the
-      // newest schema file at or below IT, or its time-travel read
-      // would fall back to the create-time schema after evolution
-      val pinnedSchemas = pinned.flatMap { pv =>
-        val vs = schemaVs.map(_._1).filter(_ <= pv)
-        if (vs.isEmpty) None else Some(vs.max)
-      }
-      schemaVs.filter(sv => sv._1 < horizonSchema &&
-          !pinnedSchemas.contains(sv._1))
-        .foreach { case (v, tok) =>
-          f.delete(schemaSidecarPath(root, v, tok), false) }
-      // partition specs retain exactly like schemas: newest ≤ horizon
-      // (resolves every retained version) plus each pinned version's
-      // newest ≤ it
-      val partVs = sidecarVersions(names, "partition", "json")
-      val horizonPart = partVs.map(_._1).filter(_ <= keepFrom)
-        .foldLeft(-1)(math.max)
-      val pinnedParts = pinned.flatMap { pv =>
-        val vs = partVs.map(_._1).filter(_ <= pv)
-        if (vs.isEmpty) None else Some(vs.max)
-      }
-      partVs.filter(pv => pv._1 < horizonPart &&
-          !pinnedParts.contains(pv._1))
-        .foreach { case (v, tok) =>
-          f.delete(partitionSpecPath(root, v, tok), false) }
-      // layout sidecars retain by the same rule (bucket evolution):
-      // the newest ≤ horizon resolves every retained version; pinned
-      // versions keep theirs — a tagged pre-rebucket snapshot must
-      // keep pruning at its own bucket count
-      val layVs = sidecarVersions(names, "layout", "json")
-      val horizonLay = layVs.map(_._1).filter(_ <= keepFrom)
-        .foldLeft(-1)(math.max)
-      val pinnedLays = pinned.flatMap { pv =>
-        val vs = layVs.map(_._1).filter(_ <= pv)
-        if (vs.isEmpty) None else Some(vs.max)
-      }
-      layVs.filter(lv => lv._1 < horizonLay &&
-          !pinnedLays.contains(lv._1))
-        .foreach { case (v, tok) =>
-          f.delete(layoutSidecarPath(root, v, tok), false) }
       val cpVs = names.collect {
         case s if s.matches("checkpoint-v\\d{5}\\.tsv") =>
           (s, s.substring(12, 17).toInt) }
       val newestCp = cpVs.map(_._2).foldLeft(-1)(math.max)
       cpVs.filter(_._2 < newestCp).foreach { case (s, _) =>
         f.delete(new org.apache.hadoop.fs.Path(log, s), false) }
-      // stranded staging files from crashed commits: `.tmp-*` (an
-      // unpublished writeAtomic payload) and `.quarantine-*` (a
-      // pre-token-era sweep aside) are invisible to every reader —
-      // vacuum is their only reaper
-      names.filter(s => s.startsWith(".tmp-") || s.startsWith(".quarantine-"))
+      // stranded staging files from crashed commits (`.tmp-*`, an
+      // unpublished writeAtomic payload) are invisible to every reader
+      // — vacuum is their only reaper
+      names.filter(_.startsWith(".tmp-"))
         .foreach(s => f.delete(new org.apache.hadoop.fs.Path(log, s), false))
     }
     removed
@@ -4548,11 +4417,12 @@ object GraftTable {
   /** Schema evolution: ADD COLUMNS as a METADATA-ONLY commit. The new
     * version carries every data file of the previous one by reference
     * (zero data I/O — the property that makes adding a column to a
-    * 100 TB table instantaneous) and publishes a versioned schema file;
-    * snapshot reads at or after this version see the new columns
-    * (NULL-filled for rows written before — the pinned-schema parquet
-    * read fills them), while time travel BELOW it still returns the old
-    * column set. Added fields must be nullable (there is no backfill).
+    * 100 TB table instantaneous) and records the new schema in its
+    * manifest header; snapshot reads at or after this version see the
+    * new columns (NULL-filled for rows written before — the
+    * pinned-schema parquet read fills them), while time travel BELOW it
+    * still returns the old column set. Added fields must be nullable
+    * (there is no backfill).
     * Returns the new version. */
   def evolveAddColumns(spark: SparkSession, root: String,
       added: Seq[org.apache.spark.sql.types.StructField]): Int =
@@ -4578,12 +4448,11 @@ object GraftTable {
             s"${a.name}__${java.util.UUID.randomUUID().toString.take(8)}")
           .build())
       }
-      // the schema stages inside commitManifest under this attempt's
-      // token — a race-losing DDL writer can never replace the winner's
-      // staged schema (the round-14 corruption)
+      // the schema rides this attempt's manifest header — a race-losing
+      // DDL writer's schema never publishes anywhere
       commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
         snap.cursor,
-        schemaJson = Some(StructType(schema.fields ++ mapped).json))
+        snap.meta.copy(schema = StructType(schema.fields ++ mapped)))
       snap.next
     }
 
@@ -4617,13 +4486,12 @@ object GraftTable {
     * constraint check is conservative: a word-boundary match refuses,
     * never silently proceeds. */
   private def refuseMappedUse(spark: SparkSession, root: String,
-      base: Int, column: String, op: String): Unit = {
+      spec: Option[PartitionTransform], column: String, op: String): Unit = {
     require(!keyColumn(spark, root).contains(column),
       s"cannot $op '$column': it is the table's key column")
     require(!bloomColumn(spark, root).contains(column),
       s"cannot $op '$column': it is the declared bloom column")
-    require(!partitionSpec(spark, root, base)
-        .exists(t => transformColumn(t) == column),
+    require(!spec.exists(t => transformColumn(t) == column),
       s"cannot $op '$column': the active partition transform uses it")
     val rx = ("(?s).*\\b" + java.util.regex.Pattern.quote(column) + "\\b.*").r
     constraints(spark, root).find(c => rx.matches(c._2)).foreach { c =>
@@ -4649,7 +4517,7 @@ object GraftTable {
       require(schema.fieldNames.contains(oldName), s"no such column: $oldName")
       require(!schema.fieldNames.contains(newName),
         s"column '$newName' already exists")
-      refuseMappedUse(spark, root, snap.version, oldName, "rename")
+      refuseMappedUse(spark, root, snap.meta.spec, oldName, "rename")
       val renamed = StructType(schema.fields.map { fld =>
         if (fld.name != oldName) fld
         else fld.copy(name = newName,
@@ -4659,8 +4527,7 @@ object GraftTable {
             .build())
       })
       commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
-        snap.cursor,
-        schemaJson = Some(renamed.json))
+        snap.cursor, snap.meta.copy(schema = renamed))
       snap.next
     }
 
@@ -4676,18 +4543,18 @@ object GraftTable {
     dropColumnWithHook(spark, root, name, () => ())
 
   /** [[dropColumn]] with a test seam: `beforePublish` runs after this
-    * drop's schema sidecar is STAGED and before its manifest rename —
-    * the window a concurrent committer of the same version races into
-    * (the [[optimizeWithHook]] idiom). The concurrency spec drives a
-    * full racing DROP inside the hook to prove a loser can neither
-    * replace nor leak into the winner's staged sidecar. */
+    * drop's tombstone is written and before its manifest rename — the
+    * window a concurrent committer of the same version races into (the
+    * [[optimizeWithHook]] idiom). The concurrency spec drives a full
+    * racing DROP inside the hook to prove a loser's schema never
+    * publishes. */
   private[graft] def dropColumnWithHook(spark: SparkSession, root: String,
       name: String, beforePublish: () => Unit): Int =
     occCommit(spark, root, maxRetries = 0) { snap =>
       val schema = snap.schema
       require(schema.fieldNames.contains(name), s"no such column: $name")
       require(schema.fields.length > 1, "cannot drop the only column")
-      refuseMappedUse(spark, root, snap.version, name, "drop")
+      refuseMappedUse(spark, root, snap.meta.spec, name, "drop")
       // tombstone BEFORE the commit: a crash in between leaves a stray
       // tombstone (a later re-add just gets a needlessly-fresh physical
       // name — safe), where the reverse order could resurrect bytes.
@@ -4699,8 +4566,8 @@ object GraftTable {
         physName(schema.fields.find(_.name == name).get) + "\n")
       commitManifest(spark, root, snap.next, snap.entries, snap.eqdels,
         snap.cursor,
-        schemaJson = Some(StructType(schema.fields.filterNot(_.name == name))
-          .json), beforePublish = beforePublish)
+        snap.meta.copy(schema = StructType(schema.fields.filterNot(
+          _.name == name))), beforePublish = beforePublish)
       snap.next
     }
 
@@ -4864,10 +4731,8 @@ object GraftTable {
     }
   }
 
-  private def colStatsPath(root: String, v: Int,
-      tok: Option[String] = None) =
-    new org.apache.hadoop.fs.Path(root,
-      f"_log/colstats-v$v%05d${tokSuffix(tok)}.tsv")
+  private def colStatsPath(root: String, v: Int, tok: String) =
+    new org.apache.hadoop.fs.Path(root, f"_log/colstats-v$v%05d-$tok.tsv")
 
   private def checkpointPath(root: String, v: Int) =
     new org.apache.hadoop.fs.Path(root, f"_log/checkpoint-v$v%05d.tsv")
@@ -4961,7 +4826,7 @@ object GraftTable {
     // token-agnostic read (the loadKmvDigests rule): stat lines are
     // facts about immutable files, rels-filtered — orphans are inert
     val sidecarVs =
-      if (!f.exists(log)) Seq.empty[(Int, Option[String])]
+      if (!f.exists(log)) Seq.empty[(Int, String)]
       else sidecarVersions(f.listStatus(log).map(_.getPath.getName).toSeq,
         "colstats", "tsv").filter(_._1 <= version)
     val fromSidecars = sidecarVs.flatMap { case (v, tok) =>
@@ -5017,7 +4882,8 @@ object GraftTable {
           graft.operators.ZOrder.quantize(col(c2).cast("long") - mn2,
             lit(mx2 - mn2 + 1), buckets),
           bits)
-        val w = writeDataFiles(spark, root, snap.next, rows, key, nBuckets, Some(z))
+        val w = writeDataFiles(spark, root, snap.next, snap.meta, rows, key,
+          nBuckets, Some(z))
         val freshDf = readLogical(spark, snap.schema,
           w.entries.map(e => dataPath(root, e.relPath)))
         val stats = freshDf.groupBy(input_file_name().as("file"))

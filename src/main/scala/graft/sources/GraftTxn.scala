@@ -187,18 +187,8 @@ object GraftTxn {
         f.listStatus(log).map(_.getPath)
           .filter(_.getName.matches("v\\d{5}\\.manifest"))
           .foreach { p =>
-            val head = {
-              val in = f.open(p)
-              try {
-                val buf = new Array[Byte](512)
-                var off = 0; var n = 0
-                while (off < buf.length &&
-                  { n = in.read(buf, off, buf.length - off); n > 0 }) off += n
-                new String(buf, 0, off,
-                  java.nio.charset.StandardCharsets.UTF_8)
-              } finally in.close()
-            }
-            if (head.linesIterator.exists(_.startsWith(s"#txn\t$id\t")))
+            if (GraftTable.txnOf(GraftTable.readHead(f, p, 512))
+                .exists(_._1 == id))
               f.delete(p, false)
           }
       }

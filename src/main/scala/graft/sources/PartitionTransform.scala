@@ -26,7 +26,8 @@ sealed trait PartitionTransform {
   def statsCol: String
   /** The partition value of a row, as a non-null long Column. */
   def valueCol: Column
-  /** Canonical serialized form stored in `_log/partition-v*.json`. */
+  /** Canonical serialized form, stored as the `#partition` header of
+    * each manifest ([[GraftTable.partitionSpec]]). */
   def render: String
 }
 

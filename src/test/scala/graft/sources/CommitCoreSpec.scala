@@ -127,17 +127,37 @@ class CommitCoreSpec extends SparkSpec {
       .toSet
   }
 
+  /** The definition in a manifest's header: the schema's field names,
+    * the `#partition` transform and the `#layout` bucket count. */
+  private def definition(manifest: String)
+      : (Seq[String], Option[String], Option[String]) = {
+    val src = scala.io.Source.fromFile(manifest)
+    val header = try src.getLines().takeWhile(_.startsWith("#")).map { l =>
+        val (k, v) = l.span(_ != '\t'); k -> v.drop(1) }.toMap
+      finally src.close()
+    (org.apache.spark.sql.types.DataType.fromJson(header("#schema"))
+      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq,
+      header.get("#partition"), header.get("#layout"))
+  }
+
+  private val parityDefinition: (Seq[String], Option[String],
+    Option[String]) = (Seq("k", "name", "v"), None, None)
+
   /** Run `verb` on a fresh parity table and pin what it returns, the
-    * manifest ledger of version `v` in the table's `dir`, the sidecar
-    * kinds staged with that version, and the rows `read` reads back. */
+    * manifest ledger and header definition of version `v` in the
+    * table's `dir`, the sidecar kinds staged with that version, and the
+    * rows `read` reads back. */
   private def pin(name: String, verb: String => Any, result: Any,
       ledger0: Seq[(Long, Long, Long, Long)], sidecars: Set[String],
       want: org.apache.spark.sql.DataFrame, v: Int = 5, dir: String = "_log",
       read: String => org.apache.spark.sql.DataFrame =
-        GraftTable.read(spark, _)): Unit = {
+        GraftTable.read(spark, _),
+      definition0: (Seq[String], Option[String], Option[String]) =
+        parityDefinition): Unit = {
     val root = parityTable()
     assert(verb(root) === result, name)
     assert(ledger(f"$root/$dir/v$v%05d.manifest") === ledger0, name)
+    assert(definition(f"$root/$dir/v$v%05d.manifest") === definition0, name)
     assert(sidecarKinds(s"$root/$dir", v) === sidecars, name)
     assert(sorted(read(root)) === sorted(want), name)
   }
@@ -159,18 +179,21 @@ class CommitCoreSpec extends SparkSpec {
       Seq((1L, 100L, 100L, 0L), (101L, 200L, 100L, 0L)), Set.empty,
       rows(1, 200))
     pin("setPartitioning", GraftTable.setPartitioning(spark, _,
-      TruncatePartition(100, "k")), 5, four, Set("partition"), live)
+      TruncatePartition(100, "k")), 5, four, Set.empty, live,
+      definition0 = (Seq("k", "name", "v"), Some("truncate(100,k)"), None))
     pin("setHashBuckets", GraftTable.setHashBuckets(spark, _, "k", 3), 5,
       Seq((2L, 399L, 139L, 0L), (1L, 388L, 118L, 0L), (5L, 400L, 133L, 0L)),
-      stats + "layout", live)
+      stats, live, definition0 = (Seq("k", "name", "v"), None, Some("3")))
     pin("evolveAddColumns", GraftTable.evolveAddColumns(spark, _,
       Seq(org.apache.spark.sql.types.StructField("extra",
-        org.apache.spark.sql.types.StringType))), 5, four, Set("schema"),
-      live.withColumn("extra", lit(null).cast("string")))
+        org.apache.spark.sql.types.StringType))), 5, four, Set.empty,
+      live.withColumn("extra", lit(null).cast("string")),
+      definition0 = (Seq("k", "name", "v", "extra"), None, None))
     pin("renameColumn", GraftTable.renameColumn(spark, _, "name", "label"),
-      5, four, Set("schema"), live)
+      5, four, Set.empty, live,
+      definition0 = (Seq("k", "label", "v"), None, None))
     pin("dropColumn", GraftTable.dropColumn(spark, _, "name"), 5, four,
-      Set("schema"), live.drop("name"))
+      Set.empty, live.drop("name"), definition0 = (Seq("k", "v"), None, None))
     val branched = live.filter($"k" =!= 5).unionByName(branchBatch)
     def branch(root: String): Int = {
       GraftTable.createBranch(spark, root, "wip")

@@ -279,6 +279,9 @@ class GraftSqlSpec extends SparkSpec {
       Long.MinValue, Long.MaxValue)
     val contentBefore = spark.sql(
       "SELECT sum(v), sum(k), count(*) FROM gmx.mx").collect()(0)
+    // analyzed now (pinning v3), executed after the VACUUM below has
+    // removed v3's manifest
+    val planned = spark.sql("SELECT sum(v), sum(k), count(*) FROM gmx.mx")
     // OPTIMIZE compacts: fewer files, identical content, one version
     val opt = spark.sql("OPTIMIZE gmx.mx TARGET 1000 ROWS").collect()(0)
     assert(opt.getLong(0) === 4L) // v4 after create + 3 upserts
@@ -294,6 +297,7 @@ class GraftSqlSpec extends SparkSpec {
     assert(removed > 0, "vacuum swept nothing")
     assert(spark.sql("SELECT count(*) FROM gmx.mx").as[Long].head()
       === contentBefore.getLong(2))
+    assert(planned.collect()(0) === contentBefore)
     // ZORDER form parses and commits
     val z = spark.sql("OPTIMIZE gmx.mx TARGET 1000 ROWS ZORDER BY (k, v)")
       .collect()(0)

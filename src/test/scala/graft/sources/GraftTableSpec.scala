@@ -514,17 +514,16 @@ class GraftTableSpec extends SparkSpec {
     val root = freshRoot()
     GraftTable.create(spark, root, base(50), "k", nBuckets = 1)
     GraftTable.createBranch(spark, root, "cr")
-    // simulate writers that staged bv=1 sidecars (a pre-token legacy
-    // name AND a foreign token name) and died before the manifest
-    // rename — neither may collide with nor leak into the retry
+    // simulate a writer that staged a bv=1 sidecar under its own
+    // token and died before the manifest rename — it may neither
+    // collide with nor leak into the retry
     val (f, _) = (new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), ())
     val bdir = new org.apache.hadoop.fs.Path(root, "_log/branch-cr")
     f.mkdirs(bdir)
-    Seq("colstats-v00001.tsv", "colstats-v00001-deadbeef.tsv").foreach { n =>
-      val os = f.create(new org.apache.hadoop.fs.Path(bdir, n), false)
-      os.write("data/ghost\t#nulls.x\t0\t0\n".getBytes("UTF-8")); os.close()
-    }
+    val os = f.create(
+      new org.apache.hadoop.fs.Path(bdir, "colstats-v00001-deadbeef.tsv"), false)
+    os.write("data/ghost\t#nulls.x\t0\t0\n".getBytes("UTF-8")); os.close()
     // the next commit at bv=1 stages under its OWN token: no collision
     val bv = GraftTable.upsertBranch(spark, root, "cr",
       Seq((1L, "retry", 0L)).toDF("k", "name", "v"), "k")
@@ -879,38 +878,28 @@ class GraftTableSpec extends SparkSpec {
     assert(now.filter($"name" === "high").count() === 10)
   }
 
-  test("orphan sidecars of a failed evolve never resolve, and vacuum " +
-    "reaps them") {
+  test("a failed evolve stages nothing: its refused publish leaves the " +
+    "head schema and _log unchanged") {
     val root = freshRoot()
     GraftTable.create(spark, root, base(100), "k", nBuckets = 2)
-    // simulate evolve attempts that staged schema sidecars for version
-    // 1 (one legacy-named, one under a foreign token) and crashed
-    // before the manifest rename
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ghostJson = org.apache.spark.sql.types.StructType(
-      base(1).schema.fields :+ org.apache.spark.sql.types.StructField(
-        "ghost", org.apache.spark.sql.types.StringType, nullable = true)).json
-    val orphans = Seq("_log/schema-v00001.json",
-      "_log/schema-v00001-deadbeef.json")
-      .map(n => new org.apache.hadoop.fs.Path(root, n))
-    orphans.foreach(p => GraftTable.writeAtomic(fs, p, ghostJson))
-    // an unrelated upsert publishes manifest 1: it must NOT adopt the
-    // ghost column — resolution accepts only the sidecar the winning
-    // manifest's token header names, and this commit staged none
+    val log = new java.io.File(s"$root/_log")
+    val before = log.list().toSet
+    // the evolve's manifest publish loses as a race; the schema rides
+    // only that manifest's header, so nothing else may land
+    val store = new RefuseManifestsLogStore
+    intercept[GraftTable.ConcurrentCommitException] {
+      GraftTable.withLogStore(store)(GraftTable.evolveAddColumns(spark, root,
+        Seq(org.apache.spark.sql.types.StructField("ghost",
+          org.apache.spark.sql.types.StringType))))
+    }
+    assert(store.attempts.get === 1)
+    assert(log.list().toSet === before)
+    assert(GraftTable.latestVersion(spark, root) === 0)
+    assert(GraftTable.read(spark, root).columns.toSeq === Seq("k", "name", "v"))
+    // an unrelated upsert publishes manifest 1 without the ghost column
     val batch = spark.range(1, 3).select(
       $"id".as("k"), lit("u").as("name"), lit(0L).as("v"))
-    val (v, _, _) = GraftTable.upsert(spark, root, batch, "k")
-    assert(v === 1)
-    assert(GraftTable.read(spark, root).columns.toSeq === Seq("k", "name", "v"))
-    // and a later upsert does not demand the ghost column either
-    GraftTable.upsert(spark, root, batch, "k")
-    assert(GraftTable.read(spark, root).columns.toSeq === Seq("k", "name", "v"))
-    // vacuum's token-verified sweep reaps the unreachable orphans even
-    // though every version is retained
-    GraftTable.vacuum(spark, root, retainVersions = 10)
-    orphans.foreach(p =>
-      assert(!fs.exists(p), s"vacuum should reap orphan sidecar $p"))
+    assert(GraftTable.upsert(spark, root, batch, "k")._1 === 1)
     assert(GraftTable.read(spark, root).columns.toSeq === Seq("k", "name", "v"))
   }
 
