@@ -143,6 +143,11 @@ class CommitCoreSpec extends SparkSpec {
   private val parityDefinition: (Seq[String], Option[String],
     Option[String]) = (Seq("k", "name", "v"), None, None)
 
+  // the parity table's v4 ledger, and the sidecar kinds a data write stages
+  private val four = Seq((1L, 100L, 100L, 10L), (101L, 200L, 100L, 0L),
+    (201L, 300L, 100L, 0L), (301L, 400L, 100L, 0L))
+  private val stats = Set("colstats", "kmv")
+
   /** Run `verb` on a fresh parity table and pin what it returns, the
     * manifest ledger and header definition of version `v` in the
     * table's `dir`, the sidecar kinds staged with that version, and the
@@ -164,9 +169,6 @@ class CommitCoreSpec extends SparkSpec {
 
   test("parity: every verb on the commit core returns, lays out, stages " +
     "and reads back what it always has") {
-    val four = Seq((1L, 100L, 100L, 10L), (101L, 200L, 100L, 0L),
-      (201L, 300L, 100L, 0L), (301L, 400L, 100L, 0L))
-    val stats = Set("colstats", "kmv")
     pin("optimize", GraftTable.optimize(spark, _, "k", targetRows = 250),
       (5, 3, 1), Seq((301L, 400L, 100L, 0L), (1L, 300L, 290L, 0L)), stats,
       live)
@@ -211,6 +213,104 @@ class CommitCoreSpec extends SparkSpec {
     }, Right((6, 2L)), four.updated(0, (1L, 100L, 100L, 11L)) :+
       ((5L, 405L, 2L, 0L)), stats, branched.filter($"k" =!= 305)
       .unionByName(rows(305, 305).withColumn("name", lit("main"))), v = 6)
+  }
+
+  // the keyed-merge batch of the parity spec, over the parity table:
+  //   - file 1: key 10 is a DV'd key, so the batch hits the file and
+  //     matches none of its live rows (an insert);
+  //   - file 2 (lightly touched, 4 %): 150 upsert with NULL cells, 160
+  //     delete, 170 replace with a NULL cell, 180 both upserted and
+  //     deleted (it is deleted);
+  //   - file 3 (past the dirty ratio, 70 %): 201..270 replaced;
+  //   - 450 inserts past every file, 455 deletes an absent key.
+  private def mergeBatch = {
+    val some = Seq[(Long, Option[String], Option[Long], String)](
+      (10L, Some("cdc10"), Some(100L), "upsert"),
+      (150L, None, Some(-1L), "upsert"), (160L, None, None, "delete"),
+      (170L, None, Some(-2L), "replace"),
+      (180L, Some("both"), Some(1L), "upsert"), (180L, None, None, "delete"),
+      (450L, Some("row450"), Some(4500L), "upsert"),
+      (455L, None, None, "delete"))
+    some.toDF("k", "name", "v", "_op").unionByName(rows(201, 270)
+      .withColumn("name", lit("hot")).withColumn("v", $"k")
+      .withColumn("_op", lit("replace")))
+  }
+
+  private def mergeWant = live.filter(!$"k".isin(150, 160, 170, 180) &&
+      !($"k" > 200 && $"k" <= 270))
+    .unionByName(Seq[(Long, Option[String], Option[Long])](
+      (10L, Some("cdc10"), Some(100L)), (150L, Some("row150"), Some(-1L)),
+      (170L, None, Some(-2L)), (450L, Some("row450"), Some(4500L)))
+      .toDF("k", "name", "v"))
+    .unionByName(rows(201, 270).withColumn("name", lit("hot"))
+      .withColumn("v", $"k"))
+
+  // the all-upsert batch: 150 with NULL cells, 201..270, an insert of 450
+  private def upsertBatch = Seq[(Long, Option[String], Option[Long])](
+      (150L, None, Some(-1L)), (450L, Some("row450"), Some(4500L)))
+    .toDF("k", "name", "v")
+    .unionByName(rows(201, 270).withColumn("name", lit("hot")))
+
+  private def upsertWant = live.filter($"k" =!= 150 &&
+      !($"k" > 200 && $"k" <= 270))
+    .unionByName(Seq((150L, "row150", -1L), (450L, "row450", 4500L))
+      .toDF("k", "name", "v"))
+    .unionByName(rows(201, 270).withColumn("name", lit("hot")))
+
+  private def withMode(mode: String)(verb: String => Any): String => Any = {
+    root =>
+      GraftTable.setTableProperty(spark, root, "graft.dml.mode", mode)
+      verb(root)
+  }
+
+  test("parity: the keyed-merge verbs return, lay out, stage and read " +
+    "back what they always have") {
+    // upsert, auditedUpsert, insertBatch under cow and a GraftTxn
+    // staged upsert rewrite files 2 and 3 and lay out the same files
+    val upserted = Seq((1L, 100L, 100L, 10L), (301L, 400L, 100L, 0L),
+      (101L, 167L, 67L, 0L), (168L, 234L, 67L, 0L), (235L, 450L, 67L, 0L))
+    pin("upsert", GraftTable.upsert(spark, _, upsertBatch, "k"), (5, 2, 2),
+      upserted, stats, upsertWant)
+    pin("auditedUpsert", GraftTable.auditedUpsert(spark, _, upsertBatch, "k",
+      Seq("v_known" -> $"v".isNotNull)), Right((5, 2, 2)), upserted, stats,
+      upsertWant)
+    // rejected: nothing published, the head is still v4
+    pin("auditedUpsert rejected", r => (GraftTable.auditedUpsert(spark, r,
+      upsertBatch, "k", Seq("v_nonneg" -> ($"v" >= 0))),
+      GraftTable.latestVersion(spark, r)), (Left(Map("v_nonneg" -> 1L)), 4),
+      four, Set.empty, live, v = 4)
+    pin("insertBatch@cow", withMode("cow")(
+      GraftTable.insertBatch(spark, _, upsertBatch, "k")), (), upserted,
+      stats, upsertWant)
+    pin("GraftTxn", { r =>
+      GraftTxn.publishAll(spark, s"$r-txn",
+        Seq(GraftTxn.TableWrite(r, upsertBatch, "k")))
+      GraftTable.latestVersion(spark, r)
+    }, 5, upserted, stats, upsertWant)
+    // auto: file 2 takes a 1-row DV, file 3 (70 % dirty) is rewritten
+    pin("insertBatch@auto", withMode("auto")(
+      GraftTable.insertBatch(spark, _, upsertBatch, "k")), (),
+      Seq((1L, 100L, 100L, 10L), (101L, 200L, 100L, 1L),
+        (301L, 400L, 100L, 0L), (150L, 250L, 51L, 0L), (251L, 450L, 51L, 0L)),
+      stats, upsertWant)
+    // cow rewrites every probe-hit file, file 1 (no live key matched)
+    // included
+    pin("applyCdcBatch@cow", withMode("cow")(
+      GraftTable.applyCdcBatch(spark, _, mergeBatch, "k")), (5, 3, 1),
+      Seq((301L, 400L, 100L, 0L), (1L, 79L, 73L, 0L), (81L, 154L, 72L, 0L),
+        (155L, 229L, 73L, 0L), (230L, 450L, 72L, 0L)), stats, mergeWant)
+    // dv: files 2 and 3 take DVs, file 1 is carried as it is
+    pin("applyCdcBatch@dv", withMode("dv")(
+      GraftTable.applyCdcBatch(spark, _, mergeBatch, "k")), (5, 0, 4),
+      Seq((1L, 100L, 100L, 10L), (101L, 200L, 100L, 4L),
+        (201L, 300L, 100L, 70L), (301L, 400L, 100L, 0L),
+        (10L, 450L, 74L, 0L)), stats, mergeWant)
+    // auto: file 2 takes a DV, file 3 is rewritten with the fresh rows
+    pin("applyCdcBatch@auto", withMode("auto")(
+      GraftTable.applyCdcBatch(spark, _, mergeBatch, "k")), (5, 1, 3),
+      Seq((1L, 100L, 100L, 10L), (101L, 200L, 100L, 4L),
+        (301L, 400L, 100L, 0L), (10L, 249L, 52L, 0L), (250L, 450L, 52L, 0L)),
+      stats, mergeWant)
   }
 
   // the branch change of the parity spec: update key 5, insert key 405

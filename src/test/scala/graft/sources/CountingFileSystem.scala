@@ -27,10 +27,18 @@ final class CountingFileSystem extends FilterFileSystem(new LocalFileSystem) {
 
   private def local(p: Path) = new Path("file", null, p.toUri.getPath)
 
+  private def counted(p: Path) = new Path(Scheme, null, p.toUri.getPath)
+
   private def counted(st: FileStatus): FileStatus = {
-    st.setPath(new Path(Scheme, null, st.getPath.toUri.getPath))
+    st.setPath(counted(st.getPath))
     st
   }
+
+  /** Qualified paths keep the `count://` scheme: the local filesystem
+    * refuses them as a "Wrong FS", which fails a query's planning when
+    * it qualifies the data-file paths of a table under the scheme. */
+  override def makeQualified(p: Path): Path =
+    counted(fs.makeQualified(local(p)))
 
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
     record("open", p)

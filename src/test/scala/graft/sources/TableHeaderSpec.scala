@@ -214,4 +214,28 @@ class TableHeaderSpec extends SparkSpec {
     assert(CountingFileSystem.calls("open", "_log") === 3)
     assert(CountingFileSystem.calls("status", "_log") === 0)
   }
+
+  test("planning one catalog point query on a two-version table: the " +
+      "_log listings, opens and status probes it makes today") {
+    val local = freshBase()
+    GraftTable.create(spark, s"$local/t", rows(1, 400), "k", nBuckets = 4)
+    GraftTable.upsert(spark, s"$local/t", rows(5, 5), "k")
+    val cat = "graft_count_" + java.util.UUID.randomUUID().toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.base",
+      CountingFileSystem.root(spark.sparkContext.hadoopConfiguration, local))
+    def plan(): Unit = {
+      spark.sql(s"SELECT v FROM $cat.t WHERE k = 5").queryExecution
+        .executedPlan; ()
+    }
+    plan() // the first planning also loads the catalog and the classes
+    CountingFileSystem.reset()
+    plan()
+    val counted = Seq("list", "open", "status").map(kind =>
+      kind -> CountingFileSystem.calls(kind, "_log")).toMap
+    // a version cache would bring these to one listing and one open
+    assert(counted === Map("list" -> 4, "open" -> 17, "status" -> 7))
+    assert(spark.sql(s"SELECT v FROM $cat.t WHERE k = 5").as[Long]
+      .collect().toSeq === Seq(50L))
+  }
 }
