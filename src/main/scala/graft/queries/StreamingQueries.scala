@@ -1529,27 +1529,35 @@ object StreamingQueries {
         .unionAll(agg("b_source_head", GraftTable.read(s, srcRoot), nSrc))
         .orderBy("stage")
     },
+    // the three upserts as one keyed merge onto `c` (their key sets
+    // are disjoint): update when matched — a NULL cell keeps the old
+    // value — insert when not. concat_ws skips NULL cells, as Spark's
+    // does (an inserted LATE row has NULL cents).
     Some("""WITH c AS (
            |  SELECT CAST(c_custkey AS BIGINT) AS k, c_name AS name,
            |    CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
            |  FROM customer),
-           |fin AS (
-           |  SELECT k,
-           |    CASE WHEN k BETWEEN 100 AND 150 THEN 'LATE'
-           |         ELSE name END AS name,
-           |    CASE WHEN k < 100 THEN CAST(-1 AS BIGINT)
-           |         ELSE cents END AS cents
-           |  FROM c
+           |b AS (
+           |  SELECT k, CAST(NULL AS VARCHAR) AS name,
+           |    CAST(-1 AS BIGINT) AS cents
+           |  FROM c WHERE k < 100
            |  UNION ALL
-           |  SELECT 9000 + i, 'NEW', CAST(-7 AS BIGINT)
-           |  FROM range(10) AS t(i)),
+           |  SELECT CAST(i AS BIGINT), 'LATE', CAST(NULL AS BIGINT)
+           |  FROM range(100, 151) AS t(i)
+           |  UNION ALL
+           |  SELECT CAST(i AS BIGINT), 'NEW', CAST(-7 AS BIGINT)
+           |  FROM range(9000, 9010) AS t(i)),
+           |fin AS (
+           |  SELECT coalesce(b.k, c.k) AS k, coalesce(b.name, c.name) AS name,
+           |    coalesce(b.cents, c.cents) AS cents
+           |  FROM c FULL OUTER JOIN b ON c.k = b.k),
            |stages AS (
            |  SELECT 'a_replica_head' AS stage, * FROM fin
            |  UNION ALL SELECT 'b_source_head', * FROM fin)
            |SELECT stage, count(*) AS n_rows,
            |  CAST(sum(cents) AS BIGINT) AS cents_sum,
-           |  CAST(sum(('0x' || substr(md5(CAST(k AS VARCHAR) || '|' ||
-           |    name || '|' || CAST(cents AS VARCHAR)), 1, 8))::BIGINT)
+           |  CAST(sum(('0x' || substr(md5(concat_ws('|', CAST(k AS VARCHAR),
+           |    name, CAST(cents AS VARCHAR))), 1, 8))::BIGINT)
            |    AS BIGINT) AS row_sum,
            |  CAST(4 AS BIGINT) AS n_versions
            |FROM stages GROUP BY stage ORDER BY stage""".stripMargin))

@@ -969,13 +969,6 @@ object GraftTable {
         .drop(DvNameCol, DvPosCol))
   }
 
-  /** [[readEntries]] for an eqdel-free context (branch lineages —
-    * fork refuses under pending eqdels; staged-file audits — fresh
-    * files postdate every pending eqdel by construction). */
-  private def readEntriesNoEq(spark: SparkSession, root: String,
-      schema: StructType, entries: Seq[FileEntry]): DataFrame =
-    readEntries(spark, root, schema, entries, Seq.empty)
-
   /** Whether any live file at `version` carries a deletion vector —
     * the guard metadata-exact answers check before trusting per-file
     * ledgers that describe PHYSICAL file content. */
@@ -2297,7 +2290,8 @@ object GraftTable {
   // commit attempt, and ONE optimistic-concurrency loop ([[occCommit]])
   // — the Delta `Snapshot` / `OptimisticTransaction` split:
   //   - [[batchCommit]] (schema alignment + batch-cache ownership):
-  //     upsert, auditedUpsert, appendUpsert, applyCdcBatch;
+  //     upsert, auditedUpsert, insertBatch, appendUpsert,
+  //     applyCdcBatch;
   //   - [[rewriteCommit]] (re-encode inputs once, rebase over a
   //     disjoint race): optimize, absorbDvs, optimizeZOrder;
   //   - a retrying body over one snapshot: mergeBranch, and the MV
@@ -2307,6 +2301,13 @@ object GraftTable {
   //     setPartitioning, setHashBuckets, restore, evolveAddColumns,
   //     renameColumn, dropColumn — a retry of the layout and schema
   //     verbs would carry files written under another era.
+  // Every keyed write is ONE plan, [[keyedMerge]] (Delta's single
+  // MERGE): upsert, auditedUpsert, upsertOnce, insertBatch and
+  // upsertBranch merge with no op column, the CDC apply (applyCdcBatch,
+  // the MV refresh, mergeBranch, SQL MERGE) with one. upsert always
+  // copies on write; insertBatch, the CDC apply and deleteWhereAuto
+  // read `graft.dml.mode` from the snapshot. The merge returns what to
+  // publish: [[mergeAttempt]] publishes it on main.
   // Only create/cloneTable (version 0), fastForward (a branch replay)
   // and upsertBranch (a branch lineage) call [[commitManifest]]
   // directly.
@@ -2542,9 +2543,11 @@ object GraftTable {
 
   /** Copy-on-write upsert: batch rows REPLACE same-key table rows
     * column-wise (a NULL batch cell falls back to the target's value —
-    * partial-update semantics); unmatched batch keys insert. Only
-    * files whose key interval contains a batch key are rewritten; all
-    * others are carried forward by reference into the new manifest.
+    * partial-update semantics); unmatched batch keys insert. It is the
+    * [[keyedMerge]] with no op column, always copy-on-write whatever
+    * `graft.dml.mode` says: only files whose key interval contains a
+    * batch key are rewritten; all others are carried forward by
+    * reference into the new manifest.
     *
     * Optimistic concurrency through the commit core
     * ([[occCommit]]): a racing committer that loses the manifest
@@ -2559,7 +2562,8 @@ object GraftTable {
       key: String, nBuckets: Int = 8,
       cacheBatch: Boolean = true): (Int, Int, Int) =
     batchCommit(spark, root, batch, Some(Seq.empty), cacheBatch,
-      CommitRetries)(upsertAttempt(spark, root, _, _, key, nBuckets))
+      CommitRetries)(mergeAttempt(spark, root, _, _, key, None, None,
+        nBuckets))
 
   /** FILE-HIT PROBE shared by the merge commits: which manifest files
     * could contain a batch key — the batch's key stats interval-joined
@@ -2571,11 +2575,15 @@ object GraftTable {
     * distinct→join→distinct shape. `badRow`, when given, rides the
     * SAME pass (left-outer so a bad row that hits no file still
     * counts) — the op-domain probe that used to be its own action.
+    * The ledger is `entries`' (rel_path, mn, mx) key intervals.
     * Returns (hit rel_paths, any bad row). */
-  private def probeHitFiles(batch: DataFrame,
-      keyExpr: org.apache.spark.sql.Column, ledger: DataFrame,
-      badRow: Option[org.apache.spark.sql.Column] = None)
+  private def probeHitFiles(spark: SparkSession, batch: DataFrame,
+      keyExpr: org.apache.spark.sql.Column, entries: Seq[FileEntry],
+      badRow: Option[org.apache.spark.sql.Column])
       : (Set[String], Boolean) = {
+    import spark.implicits._
+    val ledger = entries.map(e => (e.relPath, e.minKey, e.maxKey))
+      .toDF("rel_path", "mn", "mx")
     val probe = batch.select(keyExpr.as("__probe_k"),
       badRow.getOrElse(lit(false)).as("__probe_bad"))
     val joined = probe.join(broadcast(ledger),
@@ -2588,15 +2596,6 @@ object GraftTable {
     (hit, rows.exists(r => r.getLong(1) > 0L))
   }
 
-  /** The (rel_path, mn, mx) key-interval ledger [[probeHitFiles]]
-    * probes. */
-  private def hitLedger(spark: SparkSession,
-      entries: Seq[FileEntry]): DataFrame = {
-    import spark.implicits._
-    entries.map(e => (e.relPath, e.minKey, e.maxKey))
-      .toDF("rel_path", "mn", "mx")
-  }
-
   /** One single-attempt upsert of `batch` as it stands (no alignment,
     * no cache) — the staging primitive of [[GraftTxn]], whose `txn`
     * reference keeps the manifest invisible until the coordinator
@@ -2605,55 +2604,189 @@ object GraftTable {
       batch: DataFrame, key: String, nBuckets: Int,
       txn: Option[TxnRef] = None): (Int, Int, Int) =
     occCommit(spark, root, maxRetries = 0)(
-      upsertAttempt(spark, root, _, batch, key, nBuckets, txn))
+      mergeAttempt(spark, root, _, batch, key, None, None, nBuckets, txn))
 
   /** Thrown by an audited upsert attempt whose staged rows fail a
     * check — never a retry signal. */
   private final class AuditRejected(val violations: Map[String, Long])
     extends RuntimeException(s"write audit rejected: $violations")
 
-  private def upsertAttempt(spark: SparkSession, root: String,
-      snap: TableSnapshot, batch: DataFrame, key: String, nBuckets: Int,
-      txn: Option[TxnRef] = None,
-      checks: Seq[(String, org.apache.spark.sql.Column)] = Seq.empty)
-      : (Int, Int, Int) = {
+  /** The rows of `rows` failing each (name, predicate) check — false or
+    * NULL — counted in ONE aggregation; only failing checks appear. */
+  private def auditViolations(rows: DataFrame,
+      checks: Seq[(String, org.apache.spark.sql.Column)]): Map[String, Long] = {
+    val aggs = checks.map { case (name, pred) =>
+      sum(when(pred.isNull || !pred, 1L).otherwise(0L)).as(name) }
+    val counts = rows.agg(aggs.head, aggs.tail: _*).collect()(0)
+    checks.map(_._1).zipWithIndex.collect {
+      case (name, i) if !counts.isNullAt(i) && counts.getLong(i) > 0 =>
+        name -> counts.getLong(i)
+    }.toMap
+  }
+
+  /** What a [[keyedMerge]] hands its caller to publish: the entries it
+    * keeps (carried as they are, or re-pointed at a fresh deletion
+    * vector — the files it reports carried), the files it wrote, and
+    * how many of `snap`'s files it rewrote. */
+  private final case class Merged(kept: Seq[FileEntry], written: Written,
+      rewritten: Int)
+
+  /** THE KEYED MERGE, the one plan of every keyed write — upsert,
+    * auditedUpsert, upsertOnce, insertBatch, the CDC apply (and through
+    * it the MV refresh, mergeBranch and SQL MERGE) and upsertBranch:
+    * probe which of `snap`'s files could hold a batch key, full-outer
+    * join their live rows with the batch on `key` (q204's shape), and
+    * write the merged rows as fresh files of version `snap.next`.
+    * Nothing is published: the caller commits `kept ++ written` to its
+    * lineage.
+    *
+    * `opCol`, when given, names each row's op: `upsert` merges
+    * column-wise (a NULL batch cell keeps the target's value — the
+    * partial-update contract); `replace` lands the row VERBATIM, NULLs
+    * included (SQL `SET col = NULL` must null the column); `delete`
+    * drops the key (an absent key no-ops, the idempotent CDC
+    * contract). A key both upserted and deleted in one batch is
+    * deleted. Without `opCol` every row is an `upsert`: no op probe,
+    * no replace column, no delete anti-join.
+    *
+    * `maxDirty` chooses how changed rows retire:
+    *   - None, COPY-ON-WRITE: every probe-hit file is rewritten, one
+    *     with no matched key too — a key inserted inside a file's
+    *     interval lands in its rewrite, which keeps file intervals
+    *     disjoint;
+    *   - Some(ratio), MERGE-ON-READ: a matched row retires its OLD
+    *     POSITION in a deletion vector (an update is a delete plus an
+    *     insert, the Iceberg MoR shape) and its postimage lands in a
+    *     fresh file; the touched files split by dirty ratio
+    *     ([[classifyDirty]]) — past `ratio` a file is rewritten whole
+    *     (its survivors join the fresh files), fully dead it drops. At
+    *     100 TB a k-row MERGE writes O(k) positions and O(k) fresh
+    *     rows, never the touched files' bytes. */
+  private def keyedMerge(spark: SparkSession, root: String,
+      snap: TableSnapshot, batch: DataFrame, key: String,
+      opCol: Option[String], maxDirty: Option[Double],
+      nBuckets: Int): Merged = {
     val schema = snap.schema
-    require(batch.schema.fieldNames.sorted.sameElements(schema.fieldNames.sorted),
-      "batch schema must match table schema")
-    // file-level pruning: interval-probe the batch's keys against the
-    // broadcast (metadata-sized) ledger — one pass, one exchange
-    val (hit, _) = probeHitFiles(batch,
-      keyStatExpr(col(key), snap.hashKey), hitLedger(spark, snap.entries))
+    require(opCol.forall(batch.columns.contains) && batch.columns
+      .filterNot(opCol.contains).sorted.sameElements(schema.fieldNames.sorted),
+      "batch schema must be table schema" + opCol.fold("")(op => s" + $op"))
+    // ONE action probes both planes: the file-hit interval join against
+    // the broadcast (metadata-sized) ledger AND the op-domain check (a
+    // NULL op would silently drop the row, a typo'd one silently apply
+    // as an upsert). The probe is the one full clean pass over the
+    // (persisted) batch, so it also materializes the cache for every
+    // later evaluation.
+    val badOp = opCol.map(op =>
+      col(op).isNull || !col(op).isin("upsert", "replace", "delete"))
+    val (hit, anyBadOp) = probeHitFiles(spark, batch,
+      keyStatExpr(col(key), snap.hashKey), snap.entries, badOp)
+    // error path only: re-scan (the probe materialized the cache, so
+    // this reads the same rows) for the offending value
+    if (anyBadOp) throw new IllegalArgumentException(s"applyCdcBatch: " +
+      s"unknown ${opCol.get} value ${batch.filter(badOp.get).first()
+        .getAs[Any](opCol.get)} — every row must carry 'upsert', " +
+      "'replace' or 'delete'")
     val (rewrite, carry) = snap.entries.partition(e => hit(e.relPath))
-    val current = readEntries(spark, root, schema, rewrite, snap.eqdels)
-    // MERGE: one hash full-outer join on the key (q204's shape) —
-    // batch wins where matched, inserts where not
-    val cols = schema.fieldNames
-    val t = current.as("t"); val b = batch.as("b")
-    val merged = t.join(b, col(s"t.$key") === col(s"b.$key"), "full_outer")
-      .select(cols.map(c =>
-        coalesce(col(s"b.$c"), col(s"t.$c")).as(c)): _*)
-    val v = snap.next
+    val tMark = "__graft_t"; val bMark = "__graft_b"
+    // The join's two sides. Copy-on-write reads the hit rows as they
+    // are, and drops the op column for a boolean: every column added
+    // to the join changes the bytes AQE coalesces, and with them the
+    // write's range sample and file boundaries. Merge-on-read keeps
+    // each row's file and position, and marks both sides.
+    val rep = "__graft_replace"
+    val (t, b, replace) = maxDirty match {
+      case None =>
+        (readEntries(spark, root, schema, rewrite, snap.eqdels),
+          opCol.fold(batch)(op => batch.filter(col(op) =!= "delete")
+            .withColumn(rep, col(op) === "replace").drop(op)),
+          opCol.map(_ => col(rep) === true))
+      case Some(_) =>
+        (readMaskedWithName(spark, root, schema, rewrite, snap.eqdels)
+            .withColumn(tMark, lit(true)),
+          batch.withColumn(bMark, lit(true)),
+          opCol.map(op => col(s"b.$op") === "replace"))
+    }
+    val j = t.as("t").join(b.as("b"), col(s"t.$key") === col(s"b.$key"),
+      "full_outer")
+    def upserted(c: String) = {
+      val merged = coalesce(col(s"b.$c"), col(s"t.$c"))
+      replace.fold(merged)(when(_, col(s"b.$c")).otherwise(merged))
+    }
+    // RAW-key anti-join (exact for integral and string keys alike —
+    // never a hash, which could delete a colliding row): the tie rule
+    def dropDeleted(rows: DataFrame): DataFrame = opCol.fold(rows)(op =>
+      rows.join(batch.filter(col(op) === "delete")
+        .select(col(key).as("__graft_delkey")).distinct(),
+        col(key) === col("__graft_delkey"), "left_anti"))
+    val cols = schema.fieldNames.toSeq
     // WRITE (stage): files land under an attempt-unique dir, reachable
     // only through a manifest that may never be published
-    val w = writeDataFiles(spark, root, v, snap.meta, merged, key,
-      writeBuckets(snap, nBuckets, rewrite.size))
+    def write(rows: DataFrame, nRetired: Int) = writeDataFiles(spark, root,
+      snap.next, snap.meta, dropDeleted(rows), key,
+      writeBuckets(snap, nBuckets, nRetired))
+    maxDirty match {
+      case None =>
+        Merged(carry, write(j.select(cols.map(c => upserted(c).as(c)): _*),
+          rewrite.size), rewrite.size)
+      case Some(ratio) =>
+        // ONE evaluation feeds the counts, the sidecars AND the written
+        // rows — a nondeterministic source can't diverge between them
+        // (an uncached join here was also measured SLOWER on the
+        // replica sink, r19)
+        j.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val matched = col(tMark).isNotNull && col(bMark).isNotNull
+          // distinct positions: the ledger's dvRows must equal the
+          // sidecar's line count even if a batch repeats a key
+          val touched = j.filter(matched).groupBy(col(DvNameCol))
+            .agg(countDistinct(col(DvPosCol)).as("n"))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          val d = classifyDirty(rewrite, touched, ratio)
+          val bPresent = col(bMark).isNotNull
+          // a row with no batch side is a target row
+          val rewritten = !bPresent &&
+            col(DvNameCol).isin(d.rewrite.map(nameOf): _*)
+          val bWrites = opCol.fold(bPresent)(op =>
+            bPresent && col(s"b.$op") =!= "delete")
+          // fresh files: every post-action row plus the survivors of
+          // the files rewritten whole, bucketed by how many files'
+          // content is re-laid (rewrites + dead files) — a narrow MERGE
+          // lands one small file. No emptiness pre-probe: an all-delete
+          // batch writes zero data files (readBack contract)
+          val w = write(j.filter(bWrites || rewritten)
+            .select(cols.map(c => when(bPresent, upserted(c))
+              .otherwise(col(s"t.$c")).as(c)): _*),
+            d.rewrite.size + d.dead.size)
+          val dvs = foldDvs(spark, root, snap.next, d.dv,
+            j.filter(matched).select(col(DvNameCol), col(DvPosCol))
+              .distinct(), touched)
+          Merged(carry ++ d.clean ++ dvs, w, d.rewrite.size)
+        } finally j.unpersist()
+    }
+  }
+
+  /** One keyed write attempt on the main lineage: the [[keyedMerge]]
+    * over `snap`, the write audit when `checks` are given, then the
+    * publish (with `txn` / `cursor`). Returns (newVersion,
+    * nFilesRewritten, nFilesCarried). */
+  private def mergeAttempt(spark: SparkSession, root: String,
+      snap: TableSnapshot, batch: DataFrame, key: String,
+      opCol: Option[String], maxDirty: Option[Double], nBuckets: Int,
+      txn: Option[TxnRef] = None, cursor: Option[String] = None,
+      checks: Seq[(String, org.apache.spark.sql.Column)] = Seq.empty)
+      : (Int, Int, Int) = {
+    val m = keyedMerge(spark, root, snap, batch, key, opCol, maxDirty,
+      nBuckets)
     if (checks.nonEmpty) {
-      // AUDIT: every check in one aggregation over the staged files
-      val staged = readEntriesNoEq(spark, root, schema, w.entries)
-      val aggs = checks.map { case (name, pred) =>
-        sum(when(pred.isNull || !pred, 1L).otherwise(0L)).as(name)
-      }
-      val counts = staged.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val violations = checks.zipWithIndex.collect {
-        case ((name, _), i) if counts.getLong(i) > 0 =>
-          name -> counts.getLong(i)
-      }.toMap
+      // AUDIT the staged files (fresh files postdate every pending eqdel)
+      val violations = auditViolations(readEntries(spark, root, snap.schema,
+        m.written.entries, Seq.empty), checks)
       if (violations.nonEmpty) throw new AuditRejected(violations)
     }
     // PUBLISH: the create-if-absent manifest rename, as every commit
-    commitWritten(spark, root, snap, carry, w, txn = txn)
-    (v, rewrite.size, carry.size)
+    commitWritten(spark, root, snap, m.kept, m.written, txn = txn,
+      cursor = cursor)
+    (snap.next, m.rewritten, m.kept.size)
   }
 
   /** APPEND-ONLY UPSERT via EQUALITY DELETES — the streaming-ingest
@@ -2890,13 +3023,16 @@ object GraftTable {
 
   /** Apply a CDC batch in ONE commit — the full MERGE shape (matched
     * delete + matched update + unmatched insert): `batch` carries the
-    * table's columns plus an `opCol` ∈ upsert | replace | delete.
-    * Upsert rows merge column-wise exactly like [[upsert]] (NULL batch
-    * cell keeps the target's value); replace rows land VERBATIM,
-    * NULLs included — the op SQL UPDATE / MERGE assignments ride,
-    * where `SET col = NULL` must actually write NULL; delete rows drop
-    * their key if present (absent keys no-op, the idempotent CDC
-    * contract).
+    * table's columns plus an `opCol` ∈ upsert | replace | delete, and
+    * is the [[keyedMerge]] with that op column. Upsert rows merge
+    * column-wise exactly like [[upsert]] (NULL batch cell keeps the
+    * target's value); replace rows land VERBATIM, NULLs included — the
+    * op SQL UPDATE / MERGE assignments ride, where `SET col = NULL`
+    * must actually write NULL; delete rows drop their key if present
+    * (absent keys no-op, the idempotent CDC contract). The table's
+    * `graft.dml.mode` ([[dmlMode]]) picks copy-on-write (`cow`) or
+    * merge-on-read (`dv`, `auto`: deletion vectors, postimages in
+    * fresh files).
     * File pruning covers BOTH op kinds with one ledger interval join —
     * a mixed 1,000-row CDC batch against a 100 TB table still touches
     * only the files whose key interval contains a batch key. This is
@@ -2916,156 +3052,15 @@ object GraftTable {
       CommitRetries)(applyCdcAttempt(spark, root, _, _, key, opCol,
         nBuckets))
 
-  /** One [[applyCdcBatch]] attempt over `snap`, publishing `cursor`
-    * with it when given (the MV refresh) and `snap`'s otherwise. */
+  /** One [[applyCdcBatch]] attempt over `snap`: the [[keyedMerge]] in
+    * the form the snapshot's `graft.dml.mode` names ([[mergeDirty]]),
+    * publishing `cursor` with it when given (the MV refresh) and
+    * `snap`'s otherwise. */
   private[sources] def applyCdcAttempt(spark: SparkSession, root: String,
       snap: TableSnapshot, batch: DataFrame, key: String, opCol: String,
-      nBuckets: Int, cursor: Option[String] = None): (Int, Int, Int) = {
-    val schema = snap.schema
-    require(batch.columns.contains(opCol), s"batch must carry $opCol")
-    require((batch.columns.toSet - opCol) == schema.fieldNames.toSet,
-      "batch schema must be table schema + the op column")
-    // ONE action probes both planes: the file-hit interval join AND
-    // the op-domain validation (a NULL op would silently drop the row
-    // from both branches, a typo'd op would silently apply as an
-    // upsert — either way the replica diverges with no error). The
-    // probe is the one full clean pass over the (persisted) batch, so
-    // it also materializes the cache for every later evaluation; the
-    // fused op check costs no extra pass where the old limit(1) probe
-    // was a second action per commit.
-    val (hit, anyBadOp) = probeHitFiles(batch,
-      keyStatExpr(col(key), snap.hashKey), hitLedger(spark, snap.entries),
-      badRow = Some(col(opCol).isNull ||
-        !col(opCol).isin("upsert", "replace", "delete")))
-    if (anyBadOp) {
-      // error path only: re-scan (the probe materialized the cache, so
-      // this reads the same rows) for the offending value so the
-      // message stays as diagnostic as the old dedicated probe's
-      val badOp = batch
-        .filter(col(opCol).isNull ||
-          !col(opCol).isin("upsert", "replace", "delete"))
-        .select(col(opCol)).limit(1).collect()
-      throw new IllegalArgumentException(
-        s"applyCdcBatch: unknown $opCol value ${badOp.headOption.map(_.get(0))
-          .orNull} — every row must carry 'upsert', 'replace' or 'delete'")
-    }
-    val (rewrite, carry) = snap.entries.partition(e => hit(e.relPath))
-    // policy routing (`graft.dml.mode`, see [[dmlMode]]): `dv` / `auto`
-    // take the merge-on-read path — deletes and update PREIMAGES become
-    // position sidecars, postimages and inserts land in fresh files,
-    // zero barely-touched data files rewritten
-    val (mode, maxDirty) = dmlMode(snap.props)
-    if (mode != "cow")
-      return applyCdcBatchMoR(spark, root, snap, batch, key, opCol,
-        nBuckets, rewrite, carry, if (mode == "dv") 1.0 else maxDirty, cursor)
-    val current = readEntries(spark, root, schema, rewrite, snap.eqdels)
-    val cols = schema.fieldNames
-    // 'upsert' merges column-wise (NULL batch cell keeps the target's
-    // value — the partial-update CDC contract); 'replace' writes the
-    // batch row VERBATIM, NULLs included — what SQL UPDATE / MERGE
-    // assignment semantics require (`SET col = NULL` must null the
-    // column, not silently keep the old value)
-    val rep = "__graft_replace"
-    val ups = batch.filter(col(opCol) =!= "delete")
-      .withColumn(rep, col(opCol) === "replace").drop(opCol).as("b")
-    // RAW-key anti-join (type-agnostic: batch schema equals table
-    // schema, so the equality is exact for integral and string keys
-    // alike — never a hash, which could delete a colliding row)
-    val dels = batch.filter(col(opCol) === "delete")
-      .select(col(key).as("__delkey")).distinct()
-    val t = current.as("t")
-    val merged = t.join(ups, col(s"t.$key") === col(s"b.$key"), "full_outer")
-      .select(cols.map(c =>
-        when(col(rep) === true, col(s"b.$c"))
-          .otherwise(coalesce(col(s"b.$c"), col(s"t.$c"))).as(c)): _*)
-      .join(dels, col(key) === col("__delkey"), "left_anti")
-    val v = snap.next
-    val w = writeDataFiles(spark, root, v, snap.meta, merged, key,
-      writeBuckets(snap, nBuckets, rewrite.size))
-    commitWritten(spark, root, snap, carry, w, cursor = cursor)
-    (v, rewrite.size, carry.size)
-  }
-
-  /** MERGE-ON-READ CDC apply (the `dv`/`auto` half of
-    * [[applyCdcAttempt]]): matched rows retire their OLD POSITION
-    * via a deletion-vector sidecar (delete and update alike — an
-    * update is delete + insert, the Iceberg MoR shape); postimages,
-    * column-wise upsert merges, and plain inserts land in FRESH data
-    * files. Per-file dirty-ratio classification as in
-    * [[deleteWhereHybrid]]: a file past `maxDirty` rewrites outright
-    * (its survivors flow into the fresh files too), a fully-dead file
-    * drops. ONE commit; at 100 TB a k-row MERGE writes O(k) positions
-    * + O(k) fresh rows, never the touched files' bytes. */
-  private def applyCdcBatchMoR(spark: SparkSession, root: String,
-      snap: TableSnapshot, batch: DataFrame, key: String, opCol: String,
-      nBuckets: Int, hit: Seq[FileEntry], carry: Seq[FileEntry],
-      maxDirty: Double, cursor: Option[String]): (Int, Int, Int) = {
-    val v = snap.next
-    val cols = snap.schema.fieldNames
-    val tMark = "__graft_t"; val bMark = "__graft_b"
-    val old = readMaskedWithName(spark, root, snap.schema, hit, snap.eqdels)
-      .withColumn(tMark, lit(true)).as("t")
-    val b = batch.withColumn(bMark, lit(true)).as("b")
-    // ONE evaluation feeds the counts, the sidecars, AND the written
-    // rows — a nondeterministic source can't diverge between them
-    // (an uncached join here was also measured SLOWER on the replica
-    // sink, r19 — batch 0 ships a snapshot, and 3 consumers re-read it)
-    val j = old.join(b, col(s"t.$key") === col(s"b.$key"), "full_outer")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val matched = col(tMark).isNotNull && col(bMark).isNotNull
-      // distinct positions: the ledger's dvRows must equal the
-      // sidecar's line count even if a batch carries a duplicate key
-      val touched = j.filter(matched).groupBy(col(DvNameCol))
-        .agg(countDistinct(col(DvPosCol)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val (hitTouched, hitClean) =
-        hit.partition(e => touched.contains(nameOf(e)))
-      // fully-dead files (every live row retired) drop from the
-      // manifest — neither a rewrite nor a sidecar
-      val alive = hitTouched.filter(e =>
-        touched(nameOf(e)) + e.dvRows < e.nRows)
-      val (cow, dv) = alive.partition(e =>
-        (touched(nameOf(e)) + e.dvRows).toDouble / e.nRows > maxDirty)
-      val cowNames = cow.map(nameOf)
-      val inCow =
-        if (cowNames.isEmpty) lit(false)
-        else col(DvNameCol).isin(cowNames: _*)
-      val bPresent = col(bMark).isNotNull
-      val tOnly = col(tMark).isNotNull && col(bMark).isNull
-      val rep = col(s"b.$opCol") === "replace"
-      val valueCols = cols.map(c =>
-        when(bPresent, when(rep, col(s"b.$c"))
-          .otherwise(coalesce(col(s"b.$c"), col(s"t.$c"))))
-          .otherwise(col(s"t.$c")).as(c))
-      // fresh files: every post-action row (never deletes) plus the
-      // untouched survivors of files being rewritten outright. The
-      // trailing anti-join keeps the CoW path's tie rule: a key both
-      // upserted AND deleted in one batch DELETES (its position is
-      // retired above; its postimage must not land)
-      val delKeys = batch.filter(col(opCol) === "delete")
-        .select(col(key).as("__graft_delkey")).distinct()
-      val writeRows = j.filter(
-        (bPresent && col(s"b.$opCol") =!= "delete") || (tOnly && inCow))
-        .select(valueCols.toSeq: _*)
-        .join(delKeys, col(key) === col("__graft_delkey"), "left_anti")
-      // bucket the fresh files by how many files' CONTENT is being
-      // re-laid (rewrites + fully-dead replacements) — a narrow MERGE
-      // lands one small file, a wholesale replace keeps the layout
-      val nRetired = cow.size + (hitTouched.size - alive.size)
-      // no emptiness pre-probe: the write itself is the one action —
-      // an all-delete batch writes zero data files and the schema-
-      // pinned read-back yields an empty ledger (readBack contract)
-      val w = writeDataFiles(spark, root, v, snap.meta, writeRows, key,
-        writeBuckets(snap, nBuckets, nRetired))
-      val dvUpdated = foldDvs(spark, root, v, dv,
-        j.filter(matched).select(col(DvNameCol), col(DvPosCol)).distinct(),
-        touched)
-      commitWritten(spark, root, snap, carry ++ hitClean ++ dvUpdated, w,
-        cursor = cursor)
-      (v, cow.size, carry.size + hitClean.size + dv.size)
-    } finally j.unpersist()
-  }
+      nBuckets: Int, cursor: Option[String] = None): (Int, Int, Int) =
+    mergeAttempt(spark, root, snap, batch, key, Some(opCol),
+      mergeDirty(snap.props), nBuckets, cursor = cursor)
 
   /** WRITE-AUDIT-PUBLISH upsert: stage the commit's data files, audit
     * the rows BEING WRITTEN against declarative expectations, and
@@ -3079,7 +3074,7 @@ object GraftTable {
     * the rewritten files (the WAP granularity that stays batch-sized
     * at 100 TB — table-wide invariants belong in a scheduled audit,
     * not the write path), and all checks fold into ONE aggregation
-    * pass. It is [[upsert]]'s attempt with that audit before the
+    * pass. It is [[upsert]]'s merge with that audit before the
     * publish, under the same commit core. Returns
     * Right((version, rewritten, carried)) on publish, Left(violations
     * per failing check) on rejection. */
@@ -3089,22 +3084,23 @@ object GraftTable {
     require(checks.nonEmpty, "auditedUpsert without checks is upsert")
     try Right(batchCommit(spark, root, batch, Some(Seq.empty),
       cacheBatch = true, CommitRetries)(
-      upsertAttempt(spark, root, _, _, key, nBuckets, checks = checks)))
+      mergeAttempt(spark, root, _, _, key, None, None, nBuckets,
+        checks = checks)))
     catch { case r: AuditRejected => Left(r.violations) }
   }
 
   /** Copy-on-write delete: rewrite only the files that CONTAIN a
     * matching row (found with one snapshot scan grouped by
     * `input_file_name` — metadata-sized result), carry the rest. It
-    * is [[deleteWhereHybrid]] at `maxDirty = 0.0`: every touched file
+    * is [[hybridDeleteAttempt]] at `maxDirty = 0.0`: every touched file
     * that keeps a live row rewrites, none takes a DV. Single attempt.
     * Returns (newVersion, nFilesRewritten, nFilesCarried); a fully
     * emptied file counts as rewritten. */
   def deleteWhere(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column,
       key: String): (Int, Int, Int) = {
-    val (v, _, rewritten, dead, carried) =
-      deleteWhereHybrid(spark, root, predicate, key, maxDirty = 0.0)
+    val (v, _, rewritten, dead, carried) = occCommit(spark, root,
+      maxRetries = 0)(hybridDeleteAttempt(spark, root, _, predicate, key, 0.0))
     (v, rewritten + dead, carried)
   }
 
@@ -3124,20 +3120,21 @@ object GraftTable {
     * rewrites. Metadata-exact aggregate serving degrades honestly on
     * DV'd files (count stays exact from `nRows − dvRows`; min/max/
     * null/sum answers refuse and fall back to the scan).
-    * It is [[deleteWhereHybrid]] at `maxDirty = 1.0`: a live file's
+    * It is [[hybridDeleteAttempt]] at `maxDirty = 1.0`: a live file's
     * dirty ratio is always below 1, so nothing rewrites (and no key is
     * needed).
     * Returns (newVersion, nFilesDvd, nFilesCarried); a fully emptied
     * file counts as DV'd. */
   def deleteWhereDv(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column): (Int, Int, Int) = {
-    val (v, dvd, _, dead, carried) =
-      deleteWhereHybrid(spark, root, predicate, key = "", maxDirty = 1.0)
+    val (v, dvd, _, dead, carried) = occCommit(spark, root,
+      maxRetries = 0)(hybridDeleteAttempt(spark, root, _, predicate, "", 1.0))
     (v, dvd + dead, carried)
   }
 
   /** POLICY-ROUTED delete — what SQL `DELETE FROM` actually hits
-    * (`graft.dml.mode` table property; see [[dmlMode]]): `cow` →
+    * (`graft.dml.mode` table property, read from the commit's snapshot;
+    * see [[dmlMode]]): `cow` →
     * [[deleteWhere]] (physical removal — the right-to-erasure mode,
     * q249's contract); `dv` → [[deleteWhereDv]] (zero rewrites
     * always); `auto` (default) → per-file dirty-ratio hybrid in ONE
@@ -3148,29 +3145,22 @@ object GraftTable {
   def deleteWhereAuto(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column, key: String)
     : (Int, Int, Int, Int) =
-    dmlMode(tableProperties(spark, root)) match {
-      case ("cow", _) =>
-        val (v, rw, ca) = deleteWhere(spark, root, predicate, key)
-        (v, 0, rw, ca)
-      case ("dv", _) =>
-        val (v, dvd, ca) = deleteWhereDv(spark, root, predicate)
-        (v, dvd, 0, ca)
-      case (_, maxDirty) =>
-        val (v, dvd, rw, _, ca) =
-          deleteWhereHybrid(spark, root, predicate, key, maxDirty)
-        (v, dvd, rw, ca)
+    occCommit(spark, root, maxRetries = 0) { snap =>
+      val (mode, _) = dmlMode(snap.props)
+      val (v, dvd, rw, dead, ca) = hybridDeleteAttempt(spark, root, snap,
+        predicate, key, mergeDirty(snap.props).getOrElse(0.0))
+      // a fully emptied file counts as rewritten under `cow` and as
+      // DV'd under `dv` (what deleteWhere / deleteWhereDv report)
+      if (mode == "cow") (v, 0, rw + dead, ca)
+      else if (mode == "dv") (v, dvd + dead, 0, ca)
+      else (v, dvd, rw, ca)
     }
 
-  /** The per-file dirty-ratio delete, single attempt: drop the fully
-    * dead files, rewrite the files past `maxDirty`, DV the barely
-    * touched. Returns (newVersion, nFilesDvd, nFilesRewritten,
-    * nFilesDropped, nFilesCarried). */
-  private def deleteWhereHybrid(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column, key: String,
-      maxDirty: Double): (Int, Int, Int, Int, Int) =
-    occCommit(spark, root, maxRetries = 0)(
-      hybridDeleteAttempt(spark, root, _, predicate, key, maxDirty))
-
+  /** The per-file dirty-ratio delete over `snap`, the one plan of the
+    * delete verbs: drop the fully dead files, rewrite the files past
+    * `maxDirty`, DV the barely touched ([[classifyDirty]]). Returns
+    * (newVersion, nFilesDvd, nFilesRewritten, nFilesDropped,
+    * nFilesCarried). */
   private def hybridDeleteAttempt(spark: SparkSession, root: String,
       snap: TableSnapshot, predicate: org.apache.spark.sql.Column,
       key: String, maxDirty: Double): (Int, Int, Int, Int, Int) = {
@@ -3198,23 +3188,37 @@ object GraftTable {
       // per-file deletion counts: metadata-sized (≤ one row per file)
       val newCounts = newDel.groupBy(DvNameCol).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val (hit, carried) =
-        entries.partition(e => newCounts.contains(nameOf(e)))
-      val (dead, alive) = hit.partition(e =>
-        newCounts(nameOf(e)) + e.dvRows >= e.nRows)
-      val (cow, dv) = alive.partition(e =>
-        (newCounts(nameOf(e)) + e.dvRows).toDouble / e.nRows > maxDirty)
-      val dvUpdated = foldDvs(spark, root, v, dv, newDel, newCounts)
+      val d = classifyDirty(entries, newCounts, maxDirty)
+      val dvUpdated = foldDvs(spark, root, v, d.dv, newDel, newCounts)
       val w =
-        if (cow.isEmpty) NoWrite
+        if (d.rewrite.isEmpty) NoWrite
         else writeDataFiles(spark, root, v, snap.meta,
-          readMaskedWithName(spark, root, snap.schema, cow, snap.eqdels)
+          readMaskedWithName(spark, root, snap.schema, d.rewrite, snap.eqdels)
             .join(newDel, Seq(DvNameCol, DvPosCol), "left_anti")
             .drop(DvNameCol, DvPosCol),
-          key, math.max(1, cow.size))
-      commitWritten(spark, root, snap, carried ++ dvUpdated, w)
-      (v, dv.size, cow.size, dead.size, carried.size)
+          key, math.max(1, d.rewrite.size))
+      commitWritten(spark, root, snap, d.clean ++ dvUpdated, w)
+      (v, d.dv.size, d.rewrite.size, d.dead.size, d.clean.size)
     } finally newDel.unpersist()
+  }
+
+  /** The split of `files` by their newly retired rows (`retired`, by
+    * file name): `clean` files retire none; a `dead` file retires its
+    * every live row and drops from the manifest; of the rest, a file
+    * whose dirty ratio ((retired + already-DV'd rows) / physical rows)
+    * is past `maxDirty` is rewritten whole (`rewrite`) and the others
+    * take a deletion vector (`dv`). Order within each part is kept. */
+  private final case class Dirtied(clean: Seq[FileEntry],
+      dead: Seq[FileEntry], rewrite: Seq[FileEntry], dv: Seq[FileEntry])
+
+  private def classifyDirty(files: Seq[FileEntry], retired: Map[String, Long],
+      maxDirty: Double): Dirtied = {
+    def dirty(e: FileEntry) = retired(nameOf(e)) + e.dvRows
+    val (touched, clean) = files.partition(e => retired.contains(nameOf(e)))
+    val (dead, alive) = touched.partition(e => dirty(e) >= e.nRows)
+    val (rewrite, dv) =
+      alive.partition(e => dirty(e).toDouble / e.nRows > maxDirty)
+    Dirtied(clean, dead, rewrite, dv)
   }
 
   /** Write one `<dataFileName>.dv` sidecar per distinct file in
@@ -3476,30 +3480,26 @@ object GraftTable {
   }
 
   /** Keyed upsert of a full-schema batch THROUGH THE DML POLICY
-    * (`graft.dml.mode`) — the shared write path of the streaming sink
-    * and SQL `INSERT INTO`: under `dv`/`auto` a key-hitting batch
-    * takes the MERGE-ON-READ route (old positions retire via DV
-    * sidecars, postimages land in fresh files — O(changed rows) per
-    * micro-batch instead of rewriting every touched file every
-    * trigger, the write-amplification difference that decides whether
-    * minute-trigger CDC is viable at 100 TB); `cow` restores the
-    * rewrite path per table. Pure appends write only fresh files in
-    * either mode. Upsert semantics are identical across modes
-    * (column-wise coalesce merge). */
+    * (`graft.dml.mode`, read from the commit's snapshot) — the shared
+    * write path of the streaming sink and SQL `INSERT INTO`: the
+    * [[keyedMerge]] with no op column, copy-on-write under `cow`; under
+    * `dv`/`auto` a key-hitting batch takes the MERGE-ON-READ route (old
+    * positions retire via DV sidecars, postimages land in fresh files
+    * — O(changed rows) per micro-batch instead of rewriting every
+    * touched file every trigger, the write-amplification difference
+    * that decides whether minute-trigger CDC is viable at 100 TB).
+    * Pure appends write only fresh files in either mode. Upsert
+    * semantics are identical across modes (column-wise coalesce
+    * merge). */
   def insertBatch(spark: SparkSession, root: String, batch: DataFrame,
       key: String, nBuckets: Int = 8): Unit = {
-    val (mode, _) = dmlMode(tableProperties(spark, root))
     // micro-batch batches are trivial scans of the trigger's files —
     // re-scanning them per probe beats caching them per commit
     // (measured on the sink gates, see OPTIMIZATION_r18.md)
-    if (mode == "cow") {
-      upsert(spark, root, batch, key, nBuckets, cacheBatch = false); ()
-    } else {
-      val op = "__graft_ingest_op"
-      applyCdcBatch(spark, root, batch.withColumn(op, lit("upsert")),
-        key, op, nBuckets, cacheBatch = false)
-      ()
-    }
+    batchCommit(spark, root, batch, Some(Seq.empty), cacheBatch = false,
+      CommitRetries)((snap, b) => mergeAttempt(spark, root, snap, b, key,
+        None, mergeDirty(snap.props), nBuckets))
+    ()
   }
 
   /** BUCKET-COUNT EVOLUTION — `ALTER TABLE … SET LAYOUT HASH BUCKETS
@@ -3777,6 +3777,14 @@ object GraftTable {
     (mode, ratio)
   }
 
+  /** [[dmlMode]] as the [[keyedMerge]]'s `maxDirty`: None (copy-on-write)
+    * under `cow`, 1.0 (no file is ever past it) under `dv`, the ratio
+    * under `auto`. */
+  private def mergeDirty(props: Map[String, String]): Option[Double] = {
+    val (mode, ratio) = dmlMode(props)
+    if (mode == "cow") None else Some(if (mode == "dv") 1.0 else ratio)
+  }
+
   /** Absorb every DELETION VECTOR back into clean data files: ONLY
     * the DV'd files rewrite (masked read → fresh files, a scoped
     * OPTIMIZE over exactly the merge-on-read debt), everything clean
@@ -3990,8 +3998,8 @@ object GraftTable {
       else Seq.empty)
   }
 
-  /** Keyed-MERGE upsert onto branch `name` — the same pruned
-    * copy-on-write merge as [[upsert]], committed to the BRANCH
+  /** Keyed-MERGE upsert onto branch `name` — [[upsert]]'s copy-on-write
+    * [[keyedMerge]] over the branch head, committed to the BRANCH
     * lineage: main readers see nothing, main writers never collide
     * (separate manifest namespaces), and the written files sit in the
     * shared `data/` dir pinned by the branch against [[vacuum]] until
@@ -4002,38 +4010,26 @@ object GraftTable {
   def upsertBranch(spark: SparkSession, root: String, name: String,
       batch: DataFrame, key: String, nBuckets: Int = 8): Int = {
     val base = branchBase(spark, root, name)
-    // the branch's definition is FROZEN at its base: resolving it at
-    // main's head would pick up a rebucket / re-spec that landed on
-    // MAIN after the fork, making branch fresh files bucket mod-NEW
-    // while branch reads prune with the base era (silently missed rows
-    // on point lookups)
-    val meta = tableMeta(spark, root, base)
-    val schema = meta.schema
-    require(batch.schema.fieldNames.sorted
-      .sameElements(schema.fieldNames.sorted),
-      "batch schema must match the branch's (base-version) schema")
     val bvPrev = branchHeadVersion(spark, root, name)
-    val entries = branchEntries(spark, root, name, bvPrev)
-    val (hit, _) = probeHitFiles(batch,
-      keyStatExpr(col(key), keyHashMode(spark, root)), hitLedger(spark, entries))
-    val (rewrite, carry) = entries.partition(e => hit(e.relPath))
-    val current = readEntriesNoEq(spark, root, schema, rewrite)
-    val cols = schema.fieldNames
-    val t = current.as("t"); val b = batch.as("b")
-    val merged = t.join(b, col(s"t.$key") === col(s"b.$key"), "full_outer")
-      .select(cols.map(c =>
-        coalesce(col(s"b.$c"), col(s"t.$c")).as(c)): _*)
-    // files are named after version base+1, the branch's frozen era
-    val w = writeDataFiles(spark, root, base + 1, meta, merged, key,
-      math.max(1, math.min(nBuckets, rewrite.size + 1)))
-    val bv = bvPrev + 1
+    // the branch head as a snapshot of version `base`, so its files are
+    // named after base+1. Its definition is FROZEN at the base:
+    // resolving it at main's head would pick up a rebucket / re-spec
+    // that landed on MAIN after the fork, making branch fresh files
+    // bucket mod-NEW while branch reads prune with the base era
+    // (silently missed rows on point lookups). Branches fork without
+    // live eqdels.
+    val snap = TableSnapshot(base, branchEntries(spark, root, name, bvPrev),
+      tableMeta(spark, root, base), keyHashMode(spark, root), Seq.empty,
+      None, Map.empty)
+    val m = keyedMerge(spark, root, snap, batch, key, None, None, nBuckets)
     fs(root, spark)._1.mkdirs(branchDir(root, name))
     // the main-log commit protocol, published into the branch's lineage
     // directory: sidecars stay branch-local, instants monotone within
     // the branch
-    commitManifest(spark, root, bv, carry ++ w.entries, Seq.empty, None, meta,
-      statLines = w.statLines, kmvLines = w.kmvLines, branch = Some(name))
-    bv
+    commitManifest(spark, root, bvPrev + 1, m.kept ++ m.written.entries,
+      Seq.empty, None, snap.meta, statLines = m.written.statLines,
+      kmvLines = m.written.kmvLines, branch = Some(name))
+    bvPrev + 1
   }
 
   /** FAST-FORWARD PUBLISH: audit the branch head, then replay the
@@ -4057,14 +4053,7 @@ object GraftTable {
     if (bvs.isEmpty) return Right((latestVersion(spark, root), 0))
     require(bvs == (1 to bvs.max), s"branch '$name' lineage has gaps: $bvs")
     if (audits.nonEmpty) {
-      val head = readBranch(spark, root, name)
-      val aggs = audits.map { case (n, p) =>
-        sum(when(p.isNull || !p, 1L).otherwise(0L)).as(n) }
-      val counts = head.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val violations = audits.zipWithIndex.collect {
-        case ((n, _), i) if !counts.isNullAt(i) && counts.getLong(i) > 0 =>
-          n -> counts.getLong(i)
-      }.toMap
+      val violations = auditViolations(readBranch(spark, root, name), audits)
       if (violations.nonEmpty) return Left(violations)
     }
     val mainLatest = latestVersion(spark, root)

@@ -317,6 +317,26 @@ class CommitCoreSpec extends SparkSpec {
   private def branchBatch = rows(5, 5).withColumn("name", lit("branch"))
     .unionByName(rows(405, 405))
 
+  test("a branch upsert on a partitioned table lands the same ledger as " +
+    "the same batch through main's upsert") {
+    val root = freshRoot()
+    GraftTable.create(spark, root, rows(1, 400), "k", nBuckets = 4,
+      partitioning = Some(TruncatePartition(100, "k")))
+    GraftTable.createBranch(spark, root, "backfill")
+    // one row in each of the four transform values
+    val batch = Seq(5, 150, 250, 350).map(k => rows(k, k)).reduce(_ unionByName _)
+      .withColumn("name", lit("backfill"))
+    assert(GraftTable.upsertBranch(spark, root, "backfill", batch, "k") === 1)
+    GraftTable.upsert(spark, root, batch, "k")
+    val main = ledger(s"$root/_log/v00001.manifest").sorted
+    assert(ledger(s"$root/_log/branch-backfill/v00001.manifest").sorted ===
+      main)
+    // every file spans at most one transform value of 100 keys
+    assert(main.forall { case (mn, mx, _, _) => (mn - 1) / 100 == (mx - 1) / 100 })
+    assert(sorted(GraftTable.readBranch(spark, root, "backfill")) ===
+      sorted(GraftTable.read(spark, root)))
+  }
+
   /** Run `verb` with a copy-on-write upsert of `racer` rows committed
     * just before its first manifest publish. */
   private def racedBy[T](root: String, racer: org.apache.spark.sql.DataFrame)(
